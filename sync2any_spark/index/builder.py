@@ -204,20 +204,40 @@ class IndexPaths:
         return self.stats if n == 0 else os.path.join(self.root, f"stats_v{n:05d}")
 
 
+def fs_and_path(uri: str):
+    """(pyarrow FileSystem, path) for a local path or any URI pyarrow
+    resolves (``file://``, ``s3://``, ...)."""
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+
+    try:
+        return pafs.FileSystem.from_uri(uri)
+    except pa.ArrowInvalid:  # a relative local path has no scheme
+        return pafs.LocalFileSystem(), os.path.abspath(uri)
+
+
 def _has_parquet(d: str) -> bool:
     """True if the dir holds any parquet data file (including inside hive
-    partition subdirs like bucket=K/)."""
-    if not os.path.isdir(d):
+    partition subdirs like bucket=K/). Depth-first, stopping at the first
+    dir that holds one."""
+    import pyarrow.fs as pafs
+
+    fs, path = fs_and_path(d)
+    if fs.get_file_info(path).type != pafs.FileType.Directory:
         return False
-    for _root, _dirs, files in os.walk(d):
-        if any(n.endswith(".parquet") for n in files):
+    stack = [path]
+    while stack:
+        infos = fs.get_file_info(pafs.FileSelector(stack.pop()))
+        if any(i.is_file and i.path.endswith(".parquet") for i in infos):
             return True
+        stack += [i.path for i in infos if i.type == pafs.FileType.Directory]
     return False
 
 
 def read_index_meta(index_dir: str) -> dict:
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        return json.load(f)
+    fs, path = fs_and_path(index_dir)
+    with fs.open_input_stream(path.rstrip("/") + "/meta.json") as f:
+        return json.loads(f.read())
 
 
 def postings_sources(index_dir: str, meta: dict) -> "list[str]":
@@ -2440,6 +2460,7 @@ def build_index(
     Returns a summary dict with stage timings (also appended to the metrics
     table — the analog of the reference's tpq/lag stats, A24).
     """
+    t_start = time.time()  # build.wall_s covers the whole call
     paths = IndexPaths(index_dir)
     metrics: list[tuple[str, str, float]] = []
 
@@ -2666,7 +2687,7 @@ def build_index(
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1)
 
-    wall = time.time() - t0
+    wall = time.time() - t_start
     metrics.append(("build", "wall_s", wall))
     metrics.append(("build", "docs_per_s", float(n_docs) / max(wall, 1e-9)))
     append_metrics_driver(paths.metrics, metrics)

@@ -3,16 +3,17 @@
 Two physical strategies for the same logical operator (B6), mirroring how
 ES picks between query phases:
 
-- ``IndexSearcher.search`` — low-latency path. The query's term list is tiny,
-  so ``bucket IN (…) AND term IN (…)`` prunes postings partitions and pushes
-  predicates into the parquet scan; the surviving blocks (only the query
-  terms' postings) come to the driver where numpy block-max WAND prunes
-  blocks by upper bound and exact-scores survivors. This is the path a
-  search tier would serve QPS from.
-- ``search_distributed`` — scale path for huge candidate sets: the same
-  pruned scan feeds ``mapInPandas`` (vectorized per-block exact scoring →
-  (doc_id, contrib) partials) → ``groupBy(doc_id).sum`` →
-  ``ORDER BY score DESC LIMIT k`` (TakeOrderedAndProject — no global sort).
+- ``IndexSearcher.search`` — low-latency path. The query's term list is tiny:
+  its terms' buckets select the ``bucket=K`` dirs, and a per-(postings root,
+  bucket) term directory held by the searcher names the files and row groups
+  that hold the terms, so only those are read (no footer parse per query).
+  The surviving blocks (only the query terms' postings) are scored on the
+  driver with numpy. This is the path a search tier would serve QPS from.
+- ``search_distributed`` — scale path for huge candidate sets: the Spark
+  ``bucket IN (…) AND term IN (…)`` pruned scan feeds ``mapInPandas``
+  (vectorized per-block exact scoring → (doc_id, contrib) partials) →
+  ``groupBy(doc_id).sum`` → ``ORDER BY score DESC LIMIT k``
+  (TakeOrderedAndProject — no global sort).
 
 Both return exactly the same ranking as the BM25 oracle: exact Lucene
 formula, float64, ties by doc_id ascending.
@@ -29,6 +30,7 @@ import heapq
 import math
 import os
 from dataclasses import dataclass, field
+from functools import cached_property
 
 import numpy as np
 import pandas as pd
@@ -344,6 +346,93 @@ def _score_pool():
     return _SCORE_POOL
 
 
+def _data_files(fs, path: str) -> "list[str]":
+    """Files under ``path`` that ``pyarrow.dataset`` discovery would read:
+    recursive, skipping any name that starts with ``_`` or ``.``."""
+    import pyarrow.fs as pafs
+
+    sel = pafs.FileSelector(path, recursive=True, allow_not_found=True)
+    base = len(path.rstrip("/")) + 1
+    return sorted(
+        i.path
+        for i in fs.get_file_info(sel)
+        if i.is_file
+        and not any(c[:1] in ("_", ".") for c in i.path[base:].split("/"))
+    )
+
+
+class _TermDirectory:
+    """Which files and row groups of one committed (postings root, bucket)
+    dir hold which terms — the per-segment terms index a Lucene reader
+    keeps in memory. Built once: each file's footer is parsed and its
+    ``term`` column read; what stays is the parsed ``FileMetaData`` per file
+    and the sorted distinct (term, file, row group) triples. A fetch
+    binary-searches its terms here and reads only the row groups that hold
+    them, so per-query work does not grow with the bucket's file count.
+    File names carry no meaning: the two postings writers hash ``sub``
+    differently (md5 vs xxhash64), so only the contents say where a term
+    lives."""
+
+    def __init__(self, fs, path: str) -> None:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        self.fs = fs
+        self.files = _data_files(fs, path)
+        self.metas = []
+        parts = []
+        for fid, f in enumerate(self.files):
+            with fs.open_input_file(f) as src:
+                pf = pq.ParquetFile(src)
+                terms = pf.read(columns=["term"]).column("term")
+            md = pf.metadata
+            rows = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
+            self.metas.append(md)
+            parts.append(
+                pa.table(
+                    {
+                        "term": terms,
+                        "file": np.full(len(terms), fid, dtype=np.int32),
+                        "rg": np.repeat(np.arange(len(rows), dtype=np.int32), rows),
+                    }
+                )
+            )
+        self.terms = np.array([], dtype=object)
+        self.file = self.rg = np.array([], dtype=np.int32)
+        if parts:
+            tbl = (
+                pa.concat_tables(parts, promote_options="permissive")
+                .group_by(["term", "file", "rg"])
+                .aggregate([])
+                .sort_by("term")
+            )
+            self.terms = tbl.column("term").to_numpy(zero_copy_only=False)
+            self.file = tbl.column("file").to_numpy()
+            self.rg = tbl.column("rg").to_numpy()
+
+    def lookup(self, terms: np.ndarray) -> "list[tuple[int, list[int]]]":
+        """[(file index, sorted row groups)] holding any of ``terms``."""
+        lo = np.searchsorted(self.terms, terms, side="left")
+        hi = np.searchsorted(self.terms, terms, side="right")
+        by_file: "dict[int, set]" = {}
+        for a, b in zip(lo, hi):
+            for f, g in zip(self.file[a:b], self.rg[a:b]):
+                by_file.setdefault(int(f), set()).add(int(g))
+        return [(f, sorted(g)) for f, g in sorted(by_file.items())]
+
+    def read(self, fid: int, row_groups: "list[int]", cols: "list[str]", keep):
+        """The ``keep`` terms' rows of ``row_groups`` of one file, read with
+        its cached footer."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        with self.fs.open_input_file(self.files[fid]) as src:
+            tbl = pq.ParquetFile(src, metadata=self.metas[fid]).read_row_groups(
+                row_groups, columns=cols
+            )
+        return tbl.filter(pc.is_in(tbl.column("term"), value_set=keep))
+
+
 class IndexSearcher:
     """Query-side handle on an index directory built by index.builder.
 
@@ -357,14 +446,27 @@ class IndexSearcher:
     (doc_id, contrib) partials — so a hot-term query can never pull an
     unbounded posting list across the driver (round-2 What's-wrong #1).
 
-    The driver path issues ZERO Spark jobs by default: bucket list driver-
-    side (md5, no job), df from the term dictionary, N/avgdl from meta.json
-    at init, and the pruned blocks fetched by a direct pyarrow read
-    (``scan="pyarrow"`` — bucket partitions + term row-group pruning, any
-    pyarrow filesystem). ``scan="spark"`` keeps the Spark scan; with
+    The driver path issues ZERO Spark jobs by default, and opening the
+    searcher starts none either: bucket list driver-side (md5, no job), df
+    from the term dictionary, N/avgdl read with pyarrow at open, and the
+    pruned blocks fetched by a direct pyarrow read (``scan="pyarrow"``, any
+    pyarrow filesystem). The committed postings roots are resolved once at
+    open — the searcher is a snapshot of that commit. The first query that
+    touches a (root, bucket) builds its ``_TermDirectory`` (one footer parse
+    and one ``term``-column read per file); every fetch after that reads
+    only the files and row groups that hold the query's terms, with their
+    cached footers. ``scan="spark"`` keeps the Spark scan; with
     ``cache=True`` that relation is pinned in executor memory — the "warm
-    index" a serving tier would hold.
+    index" a serving tier would hold. The Spark relations (``_postings``,
+    ``_postings_full``, ``_docs``) are built on first use by the
+    distributed route, ``scan="spark"`` and ``fetch``; ``cache=True``
+    builds them at open.
     """
+
+    _block_cols = [
+        "term", "salt", "block_id", "min_doc", "max_doc",
+        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "n_docs",
+    ]
 
     def __init__(
         self,
@@ -374,9 +476,11 @@ class IndexSearcher:
         route_budget: int = ROUTE_BUDGET,
         buckets: "list[int] | None" = None,
     ) -> None:
+        import pyarrow.dataset as ds
+
         from ..index.builder import (
             deletes_sources,
-            docs_sources,
+            fs_and_path,
             postings_sources,
             read_index_meta,
             IndexPaths,
@@ -396,61 +500,67 @@ class IndexSearcher:
         tv = int(self.meta.get("terms_version", 0))
         self._terms_path = paths.terms_v(tv)
         self._df_map: "pd.Series | None" = None  # lazy term dictionary
-        # lazy pyarrow handles, one per (segment root, bucket) partition dir
-        # — a query opens only its terms' buckets (fragment work stays
-        # O(query), not O(index)); remote (non-local-path) roots fall back
-        # to whole-root hive datasets
-        self._bucket_datasets: dict = {}
-        self._root_datasets: dict = {}
         # live corpus stats from the committed stats version (increments
         # commit a new version atomically via meta.json)
-        st = spark.read.parquet(paths.stats_v(tv)).first()
-        self.n_docs = int(st.n_docs)
-        self.avgdl = float(st.avgdl)
-        pdirs = postings_sources(index_dir, self.meta)
-        if pdirs:
-            # each segment dir is its own hive-partitioned table root —
-            # union them (Spark refuses multi-root partition discovery)
-            from functools import reduce
-
-            parts = [spark.read.parquet(d) for d in pdirs]
-            self._postings = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-        else:
-            # an all-empty corpus writes no postings files — valid index
-            from ..index.builder import BLOCK_SCHEMA
-
-            self._postings = spark.createDataFrame([], BLOCK_SCHEMA)
-        self._block_cols = [
-            "term", "salt", "block_id", "min_doc", "max_doc",
-            "doc_ids", "tfs", "dls", "max_tf", "min_dl", "n_docs",
-        ]
-        # positional reads (match_phrase) go through the UNCACHED relation:
-        # the serving cache pins only the scoring columns, so the pos
-        # column stays on disk until a phrase query prunes-and-reads it
-        self._postings_full = self._postings
+        st = ds.dataset(paths.stats_v(tv)).to_table().to_pylist()[0]
+        self.n_docs = int(st["n_docs"])
+        self.avgdl = float(st["avgdl"])
+        # the committed postings roots, resolved once: the base plus every
+        # committed delta segment (staging dirs are never listed)
+        self._pdirs = postings_sources(index_dir, self.meta)
+        self._roots = [fs_and_path(d) for d in self._pdirs]
+        # lazy (root index, bucket) → _TermDirectory
+        self._dirs: "dict[tuple[int, int], _TermDirectory]" = {}
         # with a pinned relation the Spark scan is the path that benefits —
         # make it the default so callers don't pay cache materialization
         # for a cache the pyarrow path would never touch
+        self._cache = cache
         self._default_scan = "spark" if cache else "pyarrow"
-        if cache:
-            self._postings = self._postings.select(*self._block_cols, "bucket").cache()
-            self._postings.count()  # materialize
-        self._terms = spark.read.parquet(paths.terms_v(tv))
-        ddirs = docs_sources(index_dir, self.meta)
-        if ddirs:
-            from functools import reduce
-
-            dparts = [spark.read.parquet(d) for d in ddirs]
-            self._docs = reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dparts)
-        else:
-            from ..index.builder import DOCS_SCHEMA
-
-            self._docs = spark.createDataFrame([], DOCS_SCHEMA)
+        if cache:  # a warm serving index builds (and pins) them at open
+            for name in ("_postings", "_docs"):
+                getattr(self, name)
         # tombstones (Lucene live-docs analog): a SORTED numpy doc-id array
         # loaded via pyarrow (no Spark job, no Python set) — 8 bytes per
         # deleted doc, sharded alongside the index at serving scale;
         # membership is a binary search
         self.deleted = _load_deletes(deletes_sources(index_dir, self.meta))
+
+    # -- Spark relations (distributed route, scan="spark", fetch) ----------
+    def _union(self, dirs: "list[str]", empty_schema) -> DataFrame:
+        """Each segment dir is its own hive-partitioned table root — union
+        them (Spark refuses multi-root partition discovery). No dirs (an
+        all-empty corpus writes no files) → an empty relation."""
+        from functools import reduce
+
+        if not dirs:
+            return self.spark.createDataFrame([], empty_schema)
+        parts = [self.spark.read.parquet(d) for d in dirs]
+        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+    @cached_property
+    def _postings_full(self) -> DataFrame:
+        """All postings columns, never cached: positional reads
+        (match_phrase) go through it, so the pos column stays on disk until
+        a phrase query prunes-and-reads it."""
+        from ..index.builder import BLOCK_SCHEMA
+
+        return self._union(self._pdirs, BLOCK_SCHEMA)
+
+    @cached_property
+    def _postings(self) -> DataFrame:
+        """The scoring relation; with ``cache=True`` only the scoring
+        columns are pinned in executor memory."""
+        if not self._cache:
+            return self._postings_full
+        rel = self._postings_full.select(*self._block_cols, "bucket").cache()
+        rel.count()  # materialize
+        return rel
+
+    @cached_property
+    def _docs(self) -> DataFrame:
+        from ..index.builder import DOCS_SCHEMA, docs_sources
+
+        return self._union(docs_sources(self.index_dir, self.meta), DOCS_SCHEMA)
 
     # -- helpers ---------------------------------------------------------
     def _qterms(self, query: str) -> list[str]:
@@ -490,67 +600,51 @@ class IndexSearcher:
             F.col("bucket").isin(buckets) & F.col("term").isin(qterms)
         )
 
+    def _directory(self, root: int, bucket: int) -> _TermDirectory:
+        # two threads racing on a first touch both build the same
+        # directory; either one may stay
+        key = (root, bucket)
+        d = self._dirs.get(key)
+        if d is None:
+            fs, path = self._roots[root]
+            d = self._dirs[key] = _TermDirectory(fs, f"{path}/bucket={bucket}")
+        return d
+
+    def _fetch_plan(
+        self, qterms: "list[str]"
+    ) -> "list[tuple[_TermDirectory, int, list[int]]]":
+        """[(directory, file index, row groups)] that hold the query's
+        terms, over every committed root of the terms' buckets."""
+        from ..index.bucketing import bucket_of
+
+        buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
+        keys = np.array(sorted(qterms), dtype=object)
+        plan = []
+        for r in range(len(self._roots)):
+            for b in buckets:
+                d = self._directory(r, b)
+                plan += [(d, f, rgs) for f, rgs in d.lookup(keys)]
+        return plan
+
     def _pruned_blocks_arrow(self, qterms: "list[str]", with_pos: bool = False):
         """Pruned blocks fetched with a DIRECT pyarrow read — no Spark job,
         no JVM→Python serialization, and (returned as an Arrow table) no
         Python ``bytes`` materialization either: the scoring path decodes
-        straight off the Arrow binary buffers. The same pruning the Spark
-        scan gets: ``bucket=`` hive partitions limit the files touched, the
-        term predicate prunes row groups via parquet column stats (merge
-        output is term-sorted within each file, so the stats are tight).
-        This is metadata-scale I/O — only the query terms' blocks are read —
-        and works against any pyarrow filesystem (local, S3, GCS). Bounded
-        by the route budget: above it the query never takes this path."""
+        straight off the Arrow binary buffers. The term directories
+        (``_fetch_plan``) name the files and row groups that hold the
+        query's terms; only those are read, with their cached footers, on
+        the calling thread. Works against any pyarrow filesystem (local,
+        S3, GCS). Bounded by the route budget: above it the query never
+        takes this path."""
         import pyarrow as pa
-        import pyarrow.dataset as ds
-
-        from ..index.builder import postings_sources
-        from ..index.bucketing import bucket_of
 
         cols = self._block_cols + (["pos"] if with_pos else [])
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
-        # one lazily-cached dataset PER (segment root, bucket) dir: the
-        # query only ever opens its terms' buckets, so per-call fragment
-        # work is O(files in those buckets), not O(files in the index) —
-        # a light query's fetch is a handful of footer-pruned row groups
-        filt = ds.field("term").isin(qterms)
-        reads = []  # (dataset, filter) pairs, resolved on this thread
-        for root in postings_sources(self.index_dir, self.meta):
-            if "://" in root:
-                # remote root: one hive dataset over the whole root (the
-                # partition expression prunes buckets; no local listdir)
-                if root not in self._root_datasets:
-                    self._root_datasets[root] = ds.dataset(root, partitioning="hive")
-                reads.append(
-                    (
-                        self._root_datasets[root],
-                        ds.field("bucket").isin(buckets) & filt,
-                    )
-                )
-                continue
-            for b in buckets:
-                key = (root, b)
-                if key not in self._bucket_datasets:
-                    p = os.path.join(root, f"bucket={b}")
-                    self._bucket_datasets[key] = (
-                        ds.dataset(p) if os.path.isdir(p) else None
-                    )
-                d = self._bucket_datasets[key]
-                if d is not None:
-                    reads.append((d, filt))
-        if not reads:
+        keep = pa.array(qterms, pa.string())
+        parts = [d.read(f, rgs, cols, keep) for d, f, rgs in self._fetch_plan(qterms)]
+        if not parts:
             return pa.table({c: [] for c in cols})
-        if len(reads) == 1:
-            return reads[0][0].to_table(columns=cols, filter=reads[0][1])
-        # fan the per-(root, bucket) pruned reads out on the score pool —
-        # each is an independent footer-pruned C++ read that releases the
-        # GIL, and multi-term/multi-segment fetches were serialized on
-        # this loop (guide §2.6 applied driver-side)
-        futs = [
-            _score_pool().submit(d.to_table, columns=cols, filter=f)
-            for d, f in reads
-        ]
-        parts = [f.result() for f in futs]
+        if len(parts) == 1:
+            return parts[0]
         return pa.concat_tables(parts, promote_options="permissive")
 
     def _pruned_blocks_pandas(
@@ -578,9 +672,10 @@ class IndexSearcher:
         ``"pyarrow"`` normally, ``"spark"`` when the searcher was built with
         ``cache=True`` (otherwise the pinned relation would never be
         touched). ``scan="pyarrow"`` reads the pruned blocks directly
-        (bucket partitions + term row-group pruning, C++ reader, no Spark
-        job — the budget-bounded fetch is a few MB) and the vectorized
-        engine scores straight off the Arrow buffers (no Python bytes);
+        (only the files and row groups the term directories name, C++
+        reader, no Spark job — the budget-bounded fetch is a few MB) and
+        the vectorized engine scores straight off the Arrow buffers (no
+        Python bytes);
         ``scan="spark"`` keeps the Spark scan (the cached-relation path).
         Engines: ``engine="vectorized"`` (default) decodes every pruned
         block and scores with numpy — optimal when the blocks were fetched

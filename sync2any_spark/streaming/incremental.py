@@ -1037,13 +1037,10 @@ COMPACT_SPLICE_ROWS = int(
 
 _CORPUS_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
-# diagnostics: why the last _splice_live_sorted call declined (None = engaged)
-_LAST_SPLICE_DECLINE: "str | None" = None
-
 
 def _splice_live_sorted(
     spark: SparkSession, index_dir: str, meta: dict, tmp: str
-) -> bool:
+) -> "tuple[bool, str | None]":
     """Write the conv-sorted live temp corpus with ZERO shuffle: the base
     docs store is already (conv_id, turn_idx)-sorted on disk (doc ids were
     assigned in key order), deletes are an id set, and delta segments are
@@ -1054,10 +1051,12 @@ def _splice_live_sorted(
     so the fused build's sorted-source fast path consumes it unchanged
     (and its boundary verifier still audits the result downstream).
 
-    Returns False when preconditions fail — no base store, footer stats
-    missing or out of order, delta/tombstone rows past the driver budget,
-    or the row-conservation check after the merge — in which case the
-    caller falls back to the distributed range-shuffle path.
+    Returns ``(engaged, decline_reason)``: ``(True, None)`` when the temp
+    corpus was written, ``(False, reason)`` when preconditions fail — no
+    base store, footer stats missing or out of order, delta/tombstone rows
+    past the driver budget, or the row-conservation check after the merge
+    — in which case the caller falls back to the distributed range-shuffle
+    path.
     """
     import glob as _glob
 
@@ -1065,14 +1064,10 @@ def _splice_live_sorted(
     import pyarrow.dataset as pds
     import pyarrow.parquet as pq
 
-    global _LAST_SPLICE_DECLINE
-    _LAST_SPLICE_DECLINE = None
-
     paths = IndexPaths(index_dir)
     base_files = sorted(_glob.glob(os.path.join(paths.docs, "*.parquet")))
     if not base_files:
-        _LAST_SPLICE_DECLINE = "no base docs files"
-        return False
+        return False, "no base docs files"
     seg_dirs = [d for d in docs_sources(index_dir, meta) if d != paths.docs]
     del_dirs = deletes_sources(index_dir, meta)
     try:
@@ -1095,8 +1090,7 @@ def _splice_live_sorted(
             else 0
         )
         if n_delta_raw + n_dead_raw > COMPACT_SPLICE_ROWS:
-            _LAST_SPLICE_DECLINE = "delta+dead rows over budget"
-            return False
+            return False, "delta+dead rows over budget"
 
         # Footer walk: file-granular conv ordering (equality allowed — a
         # conversation may straddle files) + the exact (conv, turn) key of
@@ -1116,8 +1110,7 @@ def _splice_live_sorted(
                 for j in range(md.num_columns)
             }
             if "conv_id" not in idx or "doc_id" not in idx:
-                _LAST_SPLICE_DECLINE = "missing columns in base footer"
-                return False
+                return False, "missing columns in base footer"
             st_lo = md.row_group(0).column(idx["conv_id"]).statistics
             st_hi = md.row_group(md.num_row_groups - 1).column(
                 idx["conv_id"]
@@ -1128,22 +1121,18 @@ def _splice_live_sorted(
                 or not st_lo.has_min_max
                 or not st_hi.has_min_max
             ):
-                _LAST_SPLICE_DECLINE = f"absent conv stats in {f}"
-                return False
+                return False, f"absent conv stats in {f}"
             if prev_max is not None and st_lo.min < prev_max:
-                _LAST_SPLICE_DECLINE = f"file conv order violated at {f}"
-                return False
+                return False, f"file conv order violated at {f}"
             prev_max = st_hi.max if prev_max is None else max(prev_max, st_hi.max)
             head = pf.read_row_group(0, columns=["conv_id", "turn_idx"])
             firsts.append((head.column(0)[0].as_py(), int(head.column(1)[0].as_py())))
             n_base += md.num_rows
             kept_files.append(f)
         if not kept_files:
-            _LAST_SPLICE_DECLINE = "all base files empty"
-            return False
+            return False, "all base files empty"
         if any(firsts[i] >= firsts[i + 1] for i in range(len(firsts) - 1)):
-            _LAST_SPLICE_DECLINE = "first-row keys not increasing"
-            return False
+            return False, "first-row keys not increasing"
 
         # Tombstone ids: one sorted driver array (the delete-bitmap analog;
         # budget-gated above).
@@ -1197,16 +1186,14 @@ def _splice_live_sorted(
                 )
         expected_live = n_base + n_delta_raw - int(dead.size)
         if expected_live <= 0:
-            _LAST_SPLICE_DECLINE = "no live rows"
-            return False
+            return False, "no live rows"
     except Exception as e:  # precondition probing over arbitrary layouts —
         # decline to the shuffle path, but keep the reason inspectable
-        _LAST_SPLICE_DECLINE = repr(e)
         if os.environ.get("SPARK_GRAFT_DEBUG"):
             import traceback
 
             traceback.print_exc()
-        return False
+        return False, repr(e)
 
     os.makedirs(tmp, exist_ok=True)
     from ..index.builder import _packed_partitions
@@ -1307,11 +1294,10 @@ def _splice_live_sorted(
     try:
         got = flist.mapInPandas(kern, "span long, rows long").toPandas()
     except Exception as e:
-        _LAST_SPLICE_DECLINE = repr(e)
         if os.environ.get("SPARK_GRAFT_DEBUG"):
             raise
         shutil.rmtree(tmp, ignore_errors=True)
-        return False
+        return False, repr(e)
     finally:
         sc.setJobDescription(None)
         dead_bc.unpersist()
@@ -1326,12 +1312,11 @@ def _splice_live_sorted(
     written = int(got["rows"].sum())
     if written != expected_live:
         # row conservation failed — wipe and let the shuffle path recompute
-        _LAST_SPLICE_DECLINE = f"row conservation {written} != {expected_live}"
         shutil.rmtree(tmp, ignore_errors=True)
-        return False
+        return False, f"row conservation {written} != {expected_live}"
     if delta_path:
         os.remove(delta_path)
-    return True
+    return True, None
 
 
 def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
@@ -1367,7 +1352,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     # Zero-shuffle LSM splice of the sorted base + small deltas when the
     # preconditions hold; distributed range shuffle otherwise (large
     # backfills, missing footer stats, budget overruns).
-    spliced = _splice_live_sorted(spark, index_dir, meta, tmp)
+    spliced, splice_decline = _splice_live_sorted(spark, index_dir, meta, tmp)
     if not spliced:
         live = live_docs(spark, index_dir).select(*_CORPUS_COLS)
         (
@@ -1411,4 +1396,5 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     )
     out["wall_s"] = time.time() - t0
     out["live_spliced"] = bool(spliced)
+    out["splice_decline"] = splice_decline
     return out

@@ -157,7 +157,8 @@ def test_crash_mid_apply_then_retry(
     build_index(spark, transcripts_sf0001, clean, resume=False, **PARAMS)
 
     pre = _index_state(spark, crashed)
-    pre_top = IndexSearcher(spark, crashed).search("ok", 10)
+    snapshot = IndexSearcher(spark, crashed)
+    pre_top = snapshot.search("ok", 10)
 
     real_write = inc_mod._write_meta
 
@@ -171,11 +172,25 @@ def test_crash_mid_apply_then_retry(
 
     # pre-commit: readers see exactly the previous commit
     assert _index_state(spark, crashed) == pre
-    assert IndexSearcher(spark, crashed).search("ok", 10) == pre_top
+    after_crash = IndexSearcher(spark, crashed)
+    assert after_crash.search("ok", 10) == pre_top
+    # the staged segment's postings are on disk, but no searcher root and
+    # no term directory reaches them
+    from sync2any_spark.index.builder import IndexPaths, _has_parquet
+
+    staged = IndexPaths(crashed).postings_seg(1)
+    assert _has_parquet(staged)
+    assert not any(d.startswith(staged) for d in after_crash._pdirs)
+    assert after_crash._fetch_plan(["freshterm"]) == []
+    assert after_crash.search("freshterm", 10) == []
 
     # retry converges to the clean single-apply state
     apply_increments(spark, crashed, increments)
     apply_increments(spark, clean, increments)
+    # a searcher is a snapshot of the commit it opened: after the retry
+    # commits, the one opened before the crash still answers as before
+    assert snapshot.search("ok", 10) == pre_top
+    assert snapshot.search("freshterm", 10) == []
     assert _index_state(spark, crashed) == _index_state(spark, clean)
     s_crashed = IndexSearcher(spark, crashed)
     s_clean = IndexSearcher(spark, clean)
@@ -473,17 +488,19 @@ def test_compact_splice_equals_shuffle_path(
 
     out_splice = str(tmp_path_factory.mktemp("idx_c_splice"))
     r1 = compact(spark, base2, out_splice)
-    assert r1["live_spliced"] is True, inc_mod._LAST_SPLICE_DECLINE
+    assert r1["live_spliced"] is True, r1["splice_decline"]
+    assert r1["splice_decline"] is None
 
     # the two-pass-built `base` fixture store (Spark-written files, no
     # global lexical order guarantee) must decline to the shuffle path
     r0 = compact(spark, base, str(tmp_path_factory.mktemp("idx_c_twopass")))
-    assert r0["live_spliced"] is False
+    assert r0["live_spliced"] is False and r0["splice_decline"]
 
     out_shuffle = str(tmp_path_factory.mktemp("idx_c_shuffle"))
     monkeypatch.setattr(inc_mod, "COMPACT_SPLICE_ROWS", 0)
     r2 = compact(spark, base2, out_shuffle)
     assert r2["live_spliced"] is False
+    assert r2["splice_decline"] == "delta+dead rows over budget"
 
     def docs_pdf(d):
         pdf = (

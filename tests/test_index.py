@@ -802,3 +802,38 @@ def test_sorted_fast_path_offsets_stays_metadata_scale(spark, tmp_path_factory):
     assert stages["offsets"] < 0.5, stages
     fused = m[(m.stage == "spimi") & (m.key == "fused")]
     assert len(fused) == 1 and float(fused.value.iloc[0]) == 1.0
+
+
+def test_build_wall_covers_every_stage(spark, tmp_path_factory, monkeypatch):
+    """``build.wall_s`` is timed from function entry: it covers span
+    planning and a failed fused attempt, so it is at least the sum of the
+    stage ``wall_s`` rows even when the sorted fast path is retried."""
+    import time
+
+    import pyarrow.dataset as pads
+
+    from sync2any_spark.generator import ensure_transcripts
+    from sync2any_spark.index import builder
+
+    real_plan = builder.plan_spans
+
+    def slow_plan(*a, **kw):
+        time.sleep(0.2)
+        return real_plan(*a, **kw)
+
+    monkeypatch.setattr(builder, "plan_spans", slow_plan)
+    monkeypatch.setattr(builder, "verify_sorted_manifests", lambda mans: False)
+    src = ensure_transcripts("sf0.001")
+    out = str(tmp_path_factory.mktemp("idx_wall"))
+    res = build_index(
+        spark, spark.read.parquet(src), out, n_partitions=2, n_buckets=4,
+        resume=False, source_path=src, span_mb=4,
+    )
+    m = pads.dataset(out + "/metrics").to_table().to_pandas()
+    walls = m[m.key == "wall_s"]
+    assert list(m[m.key == "sorted_retry"].stage) == ["offsets"]  # retried
+    stages = walls[walls.stage != "build"]
+    assert len(stages[stages.stage == "offsets"]) == 2
+    build_wall = float(walls[walls.stage == "build"].value.iloc[0])
+    assert build_wall == pytest.approx(res["wall_s"])
+    assert build_wall >= float(stages.value.sum())

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Round-6 query-path profiler: per-stage breakdown (fetch / decode+score /
-merge+topk) of IndexSearcher.search driver-path latency on a bench index.
+"""Query-path profiler: per-stage breakdown (fetch / decode+score /
+merge+topk) of IndexSearcher.search driver-path latency on a bench index,
+with the number of postings files each fetch reads.
 
 Usage: python tools/profile_queries.py <index_dir> [qids...]
 """
@@ -30,8 +31,8 @@ def main() -> None:
     for q in queries.itertuples(index=False):
         s.search(q.query_text, int(q.k))
 
-    print(f"{'qid':>4} {'query':<28} {'total':>8} {'fetch':>8} {'score':>8} "
-          f"{'blocks':>7} {'postings':>9}")
+    print(f"{'qid':>4} {'query':<28} {'total':>8} {'fetch':>8} {'files':>5} "
+          f"{'score':>8} {'blocks':>7} {'postings':>9}")
     for q in queries.itertuples(index=False):
         if want and int(q.query_id) not in want:
             continue
@@ -41,6 +42,7 @@ def main() -> None:
         if not qterms:
             continue
         tot = sum(dfs[t] for t in qterms)
+        n_files = len(s._fetch_plan(qterms))
         best = (9e9, 9e9, 9e9, 0)
         for _ in range(5):
             t0 = time.time()
@@ -52,7 +54,8 @@ def main() -> None:
             if t2 - t0 < best[0]:
                 best = (t2 - t0, t1 - t0, t2 - t1, tbl.num_rows)
         print(f"{q.query_id:>4} {q.query_text[:28]:<28} {best[0]*1e3:8.2f} "
-              f"{best[1]*1e3:8.2f} {best[2]*1e3:8.2f} {best[3]:>7} {tot:>9}")
+              f"{best[1]*1e3:8.2f} {n_files:>5} {best[2]*1e3:8.2f} {best[3]:>7} "
+              f"{tot:>9}")
     spark.stop()
 
 
