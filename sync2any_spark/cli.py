@@ -45,10 +45,9 @@ def cmd_build(args) -> int:
         n_salts=args.salts,
         heavy_df_threshold=args.heavy_df,
         resume=not args.no_resume,
-        tokenizer=args.tokenizer,
-        # fused one-pass build when the input is a plain path and turn_idx
-        # is dense (build_index falls back automatically otherwise)
-        source_path=args.input if args.tokenizer == "files" else None,
+        # fused one-pass build when the input allows it; build_index falls
+        # back to the two-pass build by itself otherwise
+        source_path=args.input,
     )
     print(json.dumps(summary))
     return 0
@@ -66,7 +65,7 @@ def cmd_query(args) -> int:
             for r in searcher.search_distributed(args.query, args.topk).collect()
         ]
     else:
-        hits = searcher.search(args.query, args.topk, engine=args.engine)
+        hits = searcher.search(args.query, args.topk)
     wall = time.time() - t0
     rows = searcher.fetch(hits).orderBy("score", ascending=False).collect()
     out = {
@@ -145,12 +144,13 @@ def cmd_stream(args) -> int:
 
 
 def cmd_status(args) -> int:
-    """Control-plane view over manifests/metrics (reference §3.3 dashboard)."""
+    """Control-plane view over manifests/metrics (reference §3.3 dashboard).
+    Each ``stage.key`` metric shows its latest run's value (the row with
+    the greatest ``ts``). Reads with pyarrow; starts no SparkSession."""
     import os
 
-    from pyspark.sql import functions as F
+    import pyarrow.dataset as ds
 
-    spark = _spark(args.cpus)
     out = {}
     meta_path = os.path.join(args.index, "meta.json")
     if os.path.exists(meta_path):
@@ -158,13 +158,14 @@ def cmd_status(args) -> int:
             out["meta"] = json.load(f)
     metrics_dir = os.path.join(args.index, "metrics")
     if os.path.isdir(metrics_dir):
-        rows = (
-            spark.read.parquet(metrics_dir)
-            .groupBy("stage", "key")
-            .agg(F.round(F.sum("value"), 3).alias("value"))
-            .collect()
+        pdf = ds.dataset(metrics_dir).to_table().to_pandas()
+        latest = pdf.sort_values("ts", kind="stable").drop_duplicates(
+            ["stage", "key"], keep="last"
         )
-        out["metrics"] = {f"{r.stage}.{r.key}": r.value for r in rows}
+        out["metrics"] = {
+            f"{r.stage}.{r.key}": round(float(r.value), 3)
+            for r in latest.itertuples(index=False)
+        }
     from .index.builder import completed_partitions
 
     out["completed_partitions"] = len(
@@ -187,18 +188,12 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--salts", type=int, default=8)
     b.add_argument("--heavy-df", type=int, default=20_000)
     b.add_argument("--no-resume", action="store_true")
-    b.add_argument(
-        "--tokenizer",
-        choices=["files", "pandas", "jvm", "python"],
-        default="files",
-    )
     b.set_defaults(fn=cmd_build)
 
     q = sub.add_parser("query", help="BM25 top-k")
     q.add_argument("--index", required=True)
     q.add_argument("--query", required=True)
     q.add_argument("--topk", type=int, default=10)
-    q.add_argument("--engine", choices=["vectorized", "bmw"], default="vectorized")
     q.add_argument("--distributed", action="store_true")
     q.add_argument("--cache", action="store_true")
     q.set_defaults(fn=cmd_query)

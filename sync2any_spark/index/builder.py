@@ -12,14 +12,16 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    *is* the row, as in the reference's parameter projection
    (``transform/RecordsTransform.java:54-76``); per-turn text equality vs the
    source is asserted in tests.
-3. **SPIMI chunks** — shuffle-free in the default ``files`` mode: one task
-   per docs-store file (the same unit Spark's scan planner uses); the task
-   reads its file with pyarrow, tokenizes + tf-counts + varbyte-encodes in
-   one vectorized pandas/numpy pass, and writes one chunk parquet with an
-   atomic tmp→rename plus a per-partition manifest JSON. A re-run skips
-   completed partitions (the analog of the reference's offset-reset /
-   checkpoint-ack recovery, ``extract/KafkaMsgListener.java:76-79,312-330``);
-   a changed docs layout invalidates the manifests via ``_filelist.json``.
+3. **SPIMI chunks** — shuffle-free: one task per source span (fused
+   build) or per docs-store file (two-pass fallback); the task reads its
+   input with pyarrow, tokenizes + tf-counts + varbyte-encodes in one
+   vectorized numpy pass (one kernel, ``_spimi_rows_for_texts``), and
+   writes one chunk parquet with an atomic tmp→rename plus a
+   per-partition manifest JSON; CDC delta segments run the same kernel. A
+   re-run skips completed partitions (the analog of the reference's
+   offset-reset / checkpoint-ack recovery,
+   ``extract/KafkaMsgListener.java:76-79,312-330``); a changed docs layout
+   invalidates the manifests via ``_filelist.json``.
 4. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
    hot terms are sums of few-hundred-byte rows, not row explosions; parquet
    column pruning keeps the posting binaries out of this scan).
@@ -27,9 +29,9 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    order and re-cut into 128-posting blocks with exact per-block max-score
    bounds. Terms with df above a threshold are salted into ``n_salts``
    disjoint sub-streams (a doc lives in exactly one stream, so BM25 sums
-   stay exact) to keep the merge balanced under Zipf skew (B3). This is the
-   ONLY corpus-wide shuffle in the whole build, and it moves compressed
-   chunk bytes (~10× smaller than the token stream).
+   stay exact) to keep the merge balanced under Zipf skew (B3). The chunk
+   files are sorted by merge group, so each merge task reads its own
+   group's row groups directly — no shuffle (``build_postings_direct``).
 6. **Postings layout** — parquet partitioned by ``bucket`` (md5-based:
    first 15 hex chars of ``md5(term)`` mod ``n_buckets``, see
    ``index/bucketing.py`` — md5 so the driver AND the DuckDB oracle can
@@ -38,7 +40,7 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    scan. The merge tasks hold whole (bucket, sub, salt) groups, so the
    partitioned write emits directly from the merge — no extra shuffle.
 
-Scale posture: one corpus shuffle total (the merge); nothing collects more
+Scale posture: no corpus shuffle on the fused path; nothing collects more
 than per-partition counts (ints) to the driver. Knobs: ``n_partitions``
 (SPIMI group size ≈ corpus/n_partitions must fit an executor),
 ``n_buckets`` (query-side pruning granularity), ``n_salts`` ×
@@ -50,6 +52,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import uuid
 from dataclasses import dataclass
 
 import numpy as np
@@ -60,8 +63,6 @@ from pyspark.sql import types as T
 
 from .. import B, BLOCK_SIZE, K1
 from ..query.algebra import SPARK_TOKEN_RE
-from ..tokenize import tokenize_series
-from .codec import encode_doc_ids, encode_tfs
 
 # groups per bucket in the compaction merge — parallelism knob, independent
 # of the bucket count (a term always lands in exactly one (bucket, sub))
@@ -508,33 +509,40 @@ def build_docs(transcripts: DataFrame) -> DataFrame:
 
 def _write_chunk(
     chunks_dir: str, prefix: str, part_id: int, rows: dict,
-    n_rows_docs: int, n_terms: int, t0: float, sum_dl: int = 0,
-    wfs=None, n_buckets: "int | None" = None, n_salts: int = 8,
+    n_rows_docs: int, n_terms: int, t0: float, *, n_buckets: int,
+    n_salts: int, sum_dl: int = 0, wfs=None,
     span_keys: "tuple | None" = None,
 ) -> pd.DataFrame:
     """Write one SPIMI chunk parquet, then its manifest (data first,
     manifest LAST — the per-partition commit order the fswrite protocol
-    relies on); returns the manifest row (shared by all tokenizer
-    kernels). ``wfs`` is the filesystem adapter (None = local POSIX).
+    relies on); returns the manifest row. ``wfs`` is the filesystem
+    adapter (None = local POSIX).
 
-    With ``n_buckets`` set, every term row carries its (bucket, sub,
-    salt) merge key and the file is SORTED by (bucket, sub, salt, term)
-    with small row groups — the layout the ZERO-SHUFFLE merge needs: a
-    merge task later reads exactly its group's contiguous span from each
-    chunk file via parquet row-group stats, so the corpus never crosses a
-    Spark shuffle or the JVM→Python Arrow hop (round-3 What's-wrong #1:
-    the merge's shuffle+IPC scaled at ~0.63 and capped build scaling at
-    ~0.73). The salt (hash of the row's min_doc) is written for EVERY
-    row; the merge planner uses it only for heavy-term groups."""
+    Every term row carries its (bucket, sub, salt) merge key and the file
+    is SORTED by (bucket, sub, salt, term) with small row groups — the
+    layout the ZERO-SHUFFLE merge needs: a merge task later reads exactly
+    its group's contiguous span from each chunk file via parquet row-group
+    stats, so the corpus never crosses a Spark shuffle or the JVM→Python
+    Arrow hop (round-3 What's-wrong #1: the merge's shuffle+IPC scaled at
+    ~0.63 and capped build scaling at ~0.73). The salt is
+    ``salt_of_part(part_id, n_salts)`` — constant per file — and is
+    written for EVERY row; the merge planner uses it only for heavy-term
+    groups. ``n_buckets``/``n_salts`` are recorded in the manifest and
+    must match the merge's, or it falls back to the shuffle merge."""
     import pyarrow as pa
 
-    from .bucketing import bucket_sub_arrays
+    from .bucketing import bucket_sub_arrays, salt_of_part
     from .fswrite import LOCAL
 
     wfs = wfs or LOCAL
     wfs.makedirs(chunks_dir)
     path = os.path.join(chunks_dir, f"{prefix}part-{part_id:05d}.parquet")
-    fields = [
+    b, s = bucket_sub_arrays(
+        np.asarray(rows["term"], dtype=object), n_buckets, MERGE_SUBSPLIT
+    )
+    salt = np.full(len(b), salt_of_part(part_id, n_salts), dtype=np.int32)
+    rows = {**rows, "bucket": b, "sub": s, "salt": salt}
+    schema = pa.schema([
         ("term", pa.string()),
         ("part_id", pa.int32()),
         ("min_doc", pa.int64()),
@@ -545,29 +553,19 @@ def _write_chunk(
         ("tfs", pa.binary()),
         ("dls", pa.binary()),
         ("pos", pa.binary()),
-    ]
-    row_group_size = None
-    if n_buckets:
-        from .bucketing import salt_of_part
-
-        b, s = bucket_sub_arrays(
-            np.asarray(rows["term"], dtype=object), n_buckets, MERGE_SUBSPLIT
-        )
-        salt = np.full(len(b), salt_of_part(part_id, n_salts), dtype=np.int32)
-        rows = {**rows, "bucket": b, "sub": s, "salt": salt}
-        fields += [("bucket", pa.int32()), ("sub", pa.int32()), ("salt", pa.int32())]
-        n = len(b)
-        row_group_size = max(512, -(-n // 64))  # ≤ ~64 groups per file
-    table = pa.table(rows, schema=pa.schema(fields))
-    if n_buckets:
-        table = table.sort_by(
-            [
-                ("bucket", "ascending"), ("sub", "ascending"),
-                ("salt", "ascending"), ("term", "ascending"),
-            ]
-        )
+        ("bucket", pa.int32()),
+        ("sub", pa.int32()),
+        ("salt", pa.int32()),
+    ])
+    table = pa.table(rows, schema=schema).sort_by(
+        [
+            ("bucket", "ascending"), ("sub", "ascending"),
+            ("salt", "ascending"), ("term", "ascending"),
+        ]
+    )
     wfs.write_table(
-        table, path, compression=CHUNK_COMPRESSION, row_group_size=row_group_size
+        table, path, compression=CHUNK_COMPRESSION,
+        row_group_size=max(512, -(-len(b) // 64)),  # ≤ ~64 groups per file
     )
     manifest = {
         "partition_id": part_id,
@@ -579,12 +577,11 @@ def _write_chunk(
         "attempt": 1,
     }
     ret = pd.DataFrame([manifest])  # MANIFEST_SCHEMA columns only
-    if n_buckets:
-        # layout keys ride in the json sidecar (the merge planner verifies
-        # them) but NOT in the applyInPandas return row
-        manifest["n_buckets"] = int(n_buckets)
-        manifest["n_subs"] = MERGE_SUBSPLIT
-        manifest["n_salts"] = int(n_salts)
+    # layout keys ride in the json sidecar (the merge planner verifies
+    # them) but NOT in the applyInPandas return row
+    manifest["n_buckets"] = int(n_buckets)
+    manifest["n_subs"] = MERGE_SUBSPLIT
+    manifest["n_salts"] = int(n_salts)
     if span_keys is not None:
         # sorted-source fast path: the sorted span's boundary PKs ride in
         # the json sidecar so the driver can verify global key disjointness
@@ -786,23 +783,14 @@ def _spimi_rows_for_texts(
     return rows, n_terms, dls
 
 
-def _chunk_builder_pandas(chunks_dir: str, prefix: str = "",
-                          store_positions: bool = False, wfs=None,
-                          n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel: tokenize, tf-count, and varbyte-encode entirely
-    inside the Arrow batch — C-speed regex + factorize/unique, no per-token
-    Python objects beyond one flat list.
-
-    Compared to the ``jvm`` kernel this moves tokenization out of the JVM:
-    the only shuffle is the docs rows themselves (``groupBy(part_id)`` over
-    ~100-byte rows), not the exploded token stream — at 10^12 turns that is
-    the difference between shuffling the corpus once and shuffling ~50× the
-    corpus in (doc, term, tf) rows. tf-counting: factorize terms to codes,
-    combine ``code * n_rows + row_pos`` into one int64 key, one
-    ``np.unique(return_counts)`` gives (term, doc) → tf sorted by
-    (term_code, doc) — doc ascending within a term because rows are
-    pre-sorted by doc_id.
-    """
+def _chunk_builder_pandas(chunks_dir: str, prefix: str = "", *,
+                          n_buckets: int, n_salts: int,
+                          store_positions: bool = False, wfs=None):
+    """The SPIMI kernel over one partition's docs rows: tokenize, tf-count
+    and varbyte-encode entirely inside the Arrow batch (byte-level
+    tokenizer, regex fallback — ``_spimi_rows_for_texts``), then write the
+    chunk + manifest. Shared by the two-pass build (one docs file per
+    call) and the CDC delta segments (``build_chunks``)."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.time()
@@ -819,73 +807,6 @@ def _chunk_builder_pandas(chunks_dir: str, prefix: str = "",
             chunks_dir, prefix, part_id, rows, len(pdf), n_terms, t0,
             sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
             n_salts=n_salts,
-        )
-
-    return build
-
-
-def _chunk_builder(chunks_dir: str, prefix: str = "",
-                   n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel: one SPIMI chunk per stable partition id.
-
-    Writes its own parquet + manifest with tmp→rename so a killed job leaves
-    only complete partitions behind; returns the manifest row.
-    """
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        part_id = int(pdf["part_id"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        inv: dict[str, list[list[int]]] = {}
-        for i, toks in enumerate(tokenize_series(pdf["text"])):
-            if not toks:
-                continue
-            counts: dict[str, int] = {}
-            for t in toks:
-                counts[t] = counts.get(t, 0) + 1
-            d, dl = int(doc_ids[i]), int(dls[i])
-            for term, tf in counts.items():
-                e = inv.get(term)
-                if e is None:
-                    inv[term] = [[d], [tf], [dl]]
-                else:
-                    e[0].append(d)
-                    e[1].append(tf)
-                    e[2].append(dl)
-
-        terms = sorted(inv)
-        rows = {
-            "term": terms,
-            "part_id": [part_id] * len(terms),
-            "min_doc": [],
-            "max_doc": [],
-            "n_docs": [],
-            "cf": [],
-            "doc_ids": [],
-            "tfs": [],
-            "dls": [],
-            "pos": [],
-        }
-        for term in terms:
-            ds, tfs, ds_dl = inv[term]
-            d = np.asarray(ds, dtype=np.int64)  # ascending: input doc-sorted
-            rows["min_doc"].append(int(d[0]))
-            rows["max_doc"].append(int(d[-1]))
-            rows["n_docs"].append(len(d))
-            rows["cf"].append(int(sum(tfs)))
-            rows["doc_ids"].append(encode_doc_ids(d))
-            rows["tfs"].append(encode_tfs(np.asarray(tfs, dtype=np.int64)))
-            rows["dls"].append(encode_tfs(np.asarray(ds_dl, dtype=np.int64)))
-            rows["pos"].append(b"")
-
-        return _write_chunk(
-            chunks_dir, prefix, part_id, rows, len(pdf), len(terms), t0,
-            sum_dl=int(dls.sum()), n_buckets=n_buckets, n_salts=n_salts,
         )
 
     return build
@@ -908,145 +829,31 @@ def completed_partitions(
     return done
 
 
-def _chunk_builder_tf(chunks_dir: str, prefix: str = "",
-                      n_buckets: "int | None" = None, n_salts: int = 8):
-    """applyInPandas kernel over pre-counted (doc_id, dl, term, tf) rows.
-
-    Tokenization and tf-counting happened JVM-side (whole-stage codegen);
-    this kernel only sorts (pandas C sort), slices term runs, and varbyte-
-    encodes — vectorized numpy throughout, no per-token Python. Writes the
-    same chunk + manifest files as the python-tokenizer kernel.
-    """
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        part_id = int(pdf["part_id"].iloc[0])
-        n_rows_docs = int(pdf["doc_id"].nunique())
-        pdf = pdf.sort_values(["term", "doc_id"], kind="stable")
-        terms_arr = pdf["term"].to_numpy()
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        n = len(terms_arr)
-        if n == 0:
-            starts = np.array([], dtype=np.int64)
-        else:
-            change = np.concatenate(
-                ([True], terms_arr[1:] != terms_arr[:-1])
-            )
-            starts = np.flatnonzero(change)
-        ends = np.append(starts[1:], n)
-        bounds = np.append(starts, n)
-
-        # all-segments-at-once encoding (one vectorized pass per column)
-        from .codec import encode_doc_id_segments, vb_encode_segments
-
-        enc_ids = encode_doc_id_segments(ids, bounds)
-        enc_tfs = vb_encode_segments(tfs, bounds)
-        enc_dls = vb_encode_segments(dls, bounds)
-        seg_cf = np.add.reduceat(tfs, starts) if n else np.array([], dtype=np.int64)
-
-        rows = {
-            "term": terms_arr[starts],
-            "part_id": np.full(len(starts), part_id, dtype=np.int32),
-            "min_doc": ids[starts],
-            "max_doc": ids[ends - 1],
-            "n_docs": (ends - starts).astype(np.int32),
-            "cf": seg_cf.astype(np.int64),
-            "doc_ids": enc_ids,
-            "tfs": enc_tfs,
-            "dls": enc_dls,
-            "pos": [b""] * len(starts),
-        }
-
-        sum_dl = int(pdf[["doc_id", "dl"]].drop_duplicates("doc_id")["dl"].sum())
-        return _write_chunk(
-            chunks_dir, prefix, part_id, rows, n_rows_docs, len(starts), t0,
-            sum_dl=sum_dl, n_buckets=n_buckets, n_salts=n_salts,
-        )
-
-    return build
-
-
 def build_chunks(
     docs: DataFrame,
     chunks_dir: str,
     n_partitions: int,
-    resume: bool = True,
+    *,
+    n_buckets: int,
+    n_salts: int,
     prefix: str = "",
-    tokenizer: str = "jvm",
     store_positions: bool = False,
-    n_buckets: "int | None" = None,
-    n_salts: int = 8,
 ) -> DataFrame:
-    """SPIMI pass. Returns the manifest DataFrame (one row per partition built).
-
-    ``part_id = xxhash64(conv_id) % n_partitions`` is a pure function of the
-    data, so a resumed run regenerates exactly the missing partitions.
-
-    Three equivalent kernels (tests assert identical output):
-
-    - ``tokenizer="pandas"`` (default): tokenize + tf-count + encode all
-      inside the Arrow batch (C regex, factorize/unique) — the ONLY shuffle
-      is the docs rows into part_id groups. Measured fastest and the best
-      thread-scaler: the jvm path shuffles the exploded token stream (~50×
-      the corpus in (doc,term,tf) rows) and its hash-agg dominates GC.
-    - ``tokenizer="jvm"``: ``lower`` + ``regexp_extract_all`` + ``explode``
-      + ``groupBy(doc, term)`` inside whole-stage codegen; the pandas kernel
-      only slices and varbyte-encodes.
-    - ``tokenizer="python"``: per-token Python dicts inside the kernel (the
-      naive pandas-UDF spelling; kept as a cross-check).
-    """
-    if store_positions and tokenizer not in ("pandas",):
-        # the jvm/python kernels pre-aggregate (doc, term, tf) and never see
-        # token positions — a silent pos=b"" chunk would crash much later in
-        # _merge_group with an opaque IndexError (ADVICE round 2)
-        raise ValueError(
-            f"store_positions=True requires tokenizer='pandas' (or the files/"
-            f"fused paths); tokenizer={tokenizer!r} cannot produce positions"
-        )
+    """SPIMI pass over a docs relation (the CDC delta segment): rows are
+    grouped by ``part_id = xxhash64(conv_id) % n_partitions`` and each
+    group runs the chunk kernel. Returns the manifest DataFrame (one row
+    per partition built). Callers own the ``prefix`` chunk namespace and
+    wipe it first; ``n_buckets``/``n_salts`` must be the index's, so the
+    chunks pass the zero-shuffle merge's layout check."""
     part = F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
-    done = completed_partitions(chunks_dir, prefix) if resume else set()
-
-    if tokenizer in ("python", "pandas"):
-        src = docs.select(
-            "doc_id", "conv_id", "text", "dl", part.alias("part_id")
-        )
-        if done:
-            src = src.where(~F.col("part_id").isin([int(x) for x in done]))
-        if tokenizer == "pandas":
-            kern = _chunk_builder_pandas(
-                chunks_dir, prefix, store_positions=store_positions,
-                n_buckets=n_buckets, n_salts=n_salts,
-            )
-        else:
-            kern = _chunk_builder(
-                chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts
-            )
-        return src.groupBy("part_id").applyInPandas(
-            kern, schema=MANIFEST_SCHEMA
-        )
-
-    toks = docs.select(
-        "doc_id",
-        "dl",
-        part.alias("part_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(SPARK_TOKEN_RE), 0)
-        ).alias("term"),
+    kern = _chunk_builder_pandas(
+        chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts,
+        store_positions=store_positions,
     )
-    if done:
-        toks = toks.where(~F.col("part_id").isin([int(x) for x in done]))
-    tf = toks.groupBy("part_id", "doc_id", "dl", "term").agg(
-        F.count("*").cast("long").alias("tf")
-    )
-    return tf.groupBy("part_id").applyInPandas(
-        _chunk_builder_tf(chunks_dir, prefix, n_buckets=n_buckets,
-                          n_salts=n_salts),
-        schema=MANIFEST_SCHEMA,
+    return (
+        docs.select("doc_id", "text", part.alias("part_id"))
+        .groupBy("part_id")
+        .applyInPandas(kern, schema=MANIFEST_SCHEMA)
     )
 
 
@@ -1066,12 +873,13 @@ def build_chunks_files(
     spark: SparkSession,
     docs_dir: str,
     chunks_dir: str,
+    *,
+    n_buckets: int,
+    n_salts: int,
     resume: bool = True,
     prefix: str = "",
     store_positions: bool = False,
     filesystem=None,
-    n_buckets: "int | None" = None,
-    n_salts: int = 8,
 ) -> DataFrame:
     """SPIMI pass, shuffle-free: one task per docs-store file.
 
@@ -1097,8 +905,8 @@ def build_chunks_files(
     if not todo:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
     inner = _chunk_builder_pandas(
-        chunks_dir, prefix, store_positions=store_positions, wfs=filesystem,
-        n_buckets=n_buckets, n_salts=n_salts,
+        chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts,
+        store_positions=store_positions, wfs=filesystem,
     )
 
     def kern(batches):
@@ -1314,12 +1122,13 @@ def build_segments(
     source_path: str,
     index_dir: str,
     offsets: "pd.Series | None",
+    *,
+    n_buckets: int,
+    n_salts: int,
     resume: bool = True,
     span_mb: int = 8,
     store_positions: bool = False,
     filesystem=None,
-    n_buckets: "int | None" = None,
-    n_salts: int = 8,
     span_bases: "list[int] | None" = None,
     spans: "list[tuple[str, int, int]] | None" = None,
 ) -> DataFrame:
@@ -1824,21 +1633,6 @@ def _blocks_from_sorted(
     return out
 
 
-def _reblocker(avgdl: float, store_positions: bool = False):
-    """applyInPandas kernel wrapper around ``_merge_group`` returning block
-    ROWS (the delta-segment path, where the blocks land in a Spark write)."""
-
-    def reblock(key, pdf):
-        return pd.DataFrame(
-            _merge_group(
-                pdf, avgdl, int(key[0]), int(key[-1]),
-                store_positions=store_positions,
-            )
-        )
-
-    return reblock
-
-
 def _postings_writer(avgdl: float, out_dir: str, store_positions: bool = False,
                      wfs=None):
     """applyInPandas kernel wrapper around ``_merge_group`` that writes its
@@ -1924,18 +1718,19 @@ def _salted_chunks(
 # tasks). Python workers are reused across tasks, so the parsed
 # ParquetFile handles + per-row-group (bucket, sub, salt) stats live for
 # the whole stage and each task prunes row groups with one numpy compare.
-# Bounded: distinct file lists are rare (one per build); the cache clears
-# itself past 4 entries. At 10^5+ chunk files per segment the cache should
-# hold parsed metadata rather than open handles - the merge then runs per
-# segment group, which bounds the list (SCALE.md).
+# Keyed by one id per merge call, never by file names: a rewritten chunk
+# file keeps its name (a CDC segment retried with another batch, a rebuild
+# in place), and a name key would hand the retry the old file's handle.
+# Bounded: the cache clears itself past 4 entries. At 10^5+ chunk files per
+# segment the cache should hold parsed metadata rather than open handles -
+# the merge then runs per segment group, which bounds the list (SCALE.md).
 _MERGE_READER_CACHE: dict = {}
 
 
-def _chunk_readers(files: "list[str]", fs=None):
+def _chunk_readers(files: "list[str]", merge_id: str, fs=None):
     import pyarrow.parquet as pq
 
-    key = (files[0], files[-1], len(files), id(fs) if fs is not None else 0)
-    got = _MERGE_READER_CACHE.get(key)
+    got = _MERGE_READER_CACHE.get(merge_id)
     if got is not None:
         return got
     out = []
@@ -1965,7 +1760,7 @@ def _chunk_readers(files: "list[str]", fs=None):
         out.append((pf, stats))
     if len(_MERGE_READER_CACHE) >= 4:
         _MERGE_READER_CACHE.clear()
-    _MERGE_READER_CACHE[key] = out
+    _MERGE_READER_CACHE[merge_id] = out
     return out
 
 
@@ -2179,6 +1974,7 @@ def build_postings_direct(
     if store_positions:
         cols.append("pos")
     _fs = wfs.fs
+    merge_id = uuid.uuid4().hex  # the tasks' reader-cache key
     # part_id (→ salt class) straight off the file name: {prefix}part-NNNNN
     import re
 
@@ -2213,7 +2009,7 @@ def build_postings_direct(
                 b, s, salt, k = (
                     int(row.bucket), int(row.sub), int(row.salt), int(row.k)
                 )
-                readers = _chunk_readers(files, fs=_fs)
+                readers = _chunk_readers(files, merge_id, fs=_fs)
                 if s < 0:
                     # sub-range task: one span read, subs sliced in
                     # memory; split (b, sub) groups are owned by their
@@ -2393,27 +2189,6 @@ def force_merge_postings(
     }
 
 
-def build_postings(
-    spark: SparkSession,
-    chunks_dir: str,
-    terms: DataFrame,
-    avgdl: float,
-    n_buckets: int,
-    n_salts: int = 8,
-    heavy_df_threshold: int = 10_000,
-    glob: str = "part-*.parquet",
-    store_positions: bool = False,
-) -> DataFrame:
-    """Salted compaction merge (B3) → block-table DataFrame (the delta-
-    segment path; the snapshot build uses ``build_postings_direct``)."""
-    salted = _salted_chunks(
-        spark, chunks_dir, terms, n_buckets, n_salts, heavy_df_threshold, glob
-    )
-    return salted.groupBy("bucket", "sub", "salt").applyInPandas(
-        _reblocker(avgdl, store_positions=store_positions), schema=BLOCK_SCHEMA
-    )
-
-
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -2423,7 +2198,6 @@ def build_index(
     n_salts: int = 8,
     heavy_df_threshold: int = 10_000,
     resume: bool = True,
-    tokenizer: str = "files",
     input_split_mb: "int | None" = None,
     source_path: "str | None" = None,
     span_mb: int = 8,
@@ -2441,15 +2215,15 @@ def build_index(
 
     Physical strategies, picked by data shape (same logical output):
 
-    - **fused** (``source_path`` given + dense PK + conversations fit the
-      broadcast limit): ONE corpus pass — each task reads its source span
-      and flushes a complete mini-segment (docs file + SPIMI chunk), Lucene
-      segment-flush style. Corpus stats come from the manifests. The only
-      corpus-wide shuffle in the whole build is the salted compaction merge.
-    - ``tokenizer="files"`` without ``source_path``: two passes (docs store
-      write, then shuffle-free SPIMI over the docs files).
-    - ``tokenizer="pandas"|"jvm"|"python"``: the shuffle-based SPIMI
-      (groupBy(part_id)); also the fallback for non-dense turn_idx.
+    - **fused** (``source_path`` given + enough source spans + sorted
+      source or dense PK): ONE corpus pass — each task reads its source
+      span and flushes a complete mini-segment (docs file + SPIMI chunk),
+      Lucene segment-flush style. Corpus stats come from the manifests.
+    - **two-pass** ``files`` (no ``source_path``, too few spans, or
+      non-dense PKs): the docs store is written first, then a
+      shuffle-free SPIMI pass runs one task per docs file.
+
+    Both feed the same zero-shuffle postings merge.
 
     ``input_split_mb`` narrows ``spark.sql.files.maxPartitionBytes`` for the
     docs stage of the two-pass path — needed when the source sits in a few
@@ -2471,7 +2245,7 @@ def build_index(
         )
     try:
         fused = False
-        if tokenizer == "files" and source_path:
+        if source_path:
             # the fused pass can't split below row-group granularity: when
             # the source has fewer spans than the requested parallelism
             # (tiny corpora / coarse row groups), the two-pass path fans out
@@ -2585,15 +2359,13 @@ def build_index(
                 pass
             else:
                 docs = build_docs(transcripts)
-                if tokenizer == "files":
-                    # the docs files are the SPIMI work units: if the source
-                    # splits into fewer than n_partitions scan tasks (tiny
-                    # corpora, or one giant unsplittable file), spend one
-                    # shuffle to fan out — otherwise stay map-only (the
-                    # 100 TB regime: splits ≫ cores)
-                    n_input = transcripts.rdd.getNumPartitions()
-                    if n_input < n_partitions:
-                        docs = docs.repartition(n_partitions, "conv_id")
+                # the docs files are the SPIMI work units: if the source
+                # splits into fewer than n_partitions scan tasks (tiny
+                # corpora, or one giant unsplittable file), spend one
+                # shuffle to fan out — otherwise stay map-only (the
+                # 100 TB regime: splits ≫ cores)
+                if transcripts.rdd.getNumPartitions() < n_partitions:
+                    docs = docs.repartition(n_partitions, "conv_id")
                 # snappy: the docs store is a full corpus copy — compression
                 # CPU would dominate this stage; read-heavy postings stay zstd
                 docs.write.mode("overwrite").option(
@@ -2611,18 +2383,11 @@ def build_index(
             metrics.append(("stats", "wall_s", time.time() - t1))
 
             t2 = time.time()
-            if tokenizer == "files":
-                manifest = build_chunks_files(
-                    spark, paths.docs, paths.chunks, resume=resume,
-                    store_positions=store_positions, filesystem=filesystem,
-                    n_buckets=n_buckets, n_salts=n_salts,
-                )
-            else:
-                manifest = build_chunks(
-                    docs, paths.chunks, n_partitions, resume=resume,
-                    tokenizer=tokenizer, store_positions=store_positions,
-                    n_buckets=n_buckets, n_salts=n_salts,
-                )
+            manifest = build_chunks_files(
+                spark, paths.docs, paths.chunks, n_buckets=n_buckets,
+                n_salts=n_salts, resume=resume,
+                store_positions=store_positions, filesystem=filesystem,
+            )
             built = manifest.count()  # action: runs the SPIMI pass
             metrics.append(("spimi", "wall_s", time.time() - t2))
             metrics.append(("spimi", "partitions_built", float(built)))

@@ -297,7 +297,7 @@ def phrase_topk_positional(
         return [(int(r.doc_id), float(r.score)) for r in top]
     # driver leg: direct pyarrow fetch of the pos-bearing pruned blocks —
     # no Spark job; the budget above bounds the fetch
-    pdf = searcher._pruned_blocks_pandas(uniq, with_pos=True)
+    pdf = searcher._pruned_blocks_arrow(uniq, with_pos=True).to_pandas()
     if pdf.empty or pdf["term"].nunique() < len(uniq):
         return []  # some phrase term absent entirely
 

@@ -22,9 +22,9 @@ import numpy as np
 import pandas as pd
 
 from .. import B, K1
-from ..index.codec import decode_block_batch, decode_doc_ids, decode_tfs
+from ..index.codec import decode_block_batch
 from ..tokenize import tokenize
-from .wand import _Cursor, _bmw_topk, bm25_contrib, idf
+from .wand import bm25_contrib, idf, topk_sorted
 
 BLOCK_COLS = [
     "term", "salt", "block_id", "min_doc", "max_doc",
@@ -41,17 +41,6 @@ _PAR_SERVE_POSTINGS = int(os.environ.get("SPARK_GRAFT_PAR_SERVE_POSTINGS", "2000
 # pruned plan is abandoned for the exhaustive slice-parallel scorer
 _PRUNE_SEED_POSTINGS = int(os.environ.get("SPARK_GRAFT_PRUNE_SEED", "50000"))
 _PRUNE_KEEP_MAX = float(os.environ.get("SPARK_GRAFT_PRUNE_KEEP_MAX", "0.7"))
-
-
-def _topk(uniq: np.ndarray, scores: np.ndarray, k: int) -> "list[tuple[int, float]]":
-    """Exact top-k with the engine-wide tie-break (score desc, doc asc)."""
-    if k < len(uniq):
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        cand = np.flatnonzero(scores >= kth)
-    else:
-        cand = np.arange(len(uniq))
-    order = cand[np.lexsort((uniq[cand], -scores[cand]))][:k]
-    return [(int(uniq[i]), float(scores[i])) for i in order]
 
 
 class _ReplicaGroup:
@@ -264,7 +253,7 @@ class ShardedSearcher:
         from .wand import _group_sum
 
         uniq, scores = _group_sum(ids, contrib)
-        return _topk(uniq, scores, k)
+        return topk_sorted(uniq, scores, k)
 
     def _owner(self, term: str) -> "LocalSearcher | None":
         """The shard holding a term's bucket (a term's WHOLE posting list
@@ -353,7 +342,7 @@ class ShardedSearcher:
         scores = idf_sum * ptfs / (
             ptfs + K1 * (1.0 - B + B * dl / node.avgdl)
         )
-        return _topk(cand, scores, k)
+        return topk_sorted(cand, scores, k)
 
 
 class LocalSearcher:
@@ -557,16 +546,12 @@ class LocalSearcher:
             pdf, terms, uniq, dfs, self.n_docs, self.avgdl, deleted, k
         )
 
-    def search(
-        self, query: str, k: int = 10, engine: str = "vectorized"
-    ) -> "list[tuple[int, float]]":
+    def search(self, query: str, k: int = 10) -> "list[tuple[int, float]]":
         qterms = list(dict.fromkeys(tokenize(query)))
         groups = [(t, self._term_blocks(t)) for t in qterms]
         groups = [(t, g) for t, g in groups if g is not None]
         if not groups:
             return []
-        if engine == "bmw":
-            return self._bmw(groups, k)
         return self._vectorized(groups, k)
 
     def partial_scores(self, query: str) -> "tuple[np.ndarray, np.ndarray]":
@@ -624,7 +609,7 @@ class LocalSearcher:
             from .wand import _group_sum
 
             uniq, scores = _group_sum(ids, contrib)
-        return _topk(uniq, scores, k)
+        return topk_sorted(uniq, scores, k)
 
     def _decode_contrib(self, w: float, sl) -> "tuple[np.ndarray, np.ndarray]":
         """Decode one slice of block rows → (doc_ids, BM25 contributions),
@@ -651,12 +636,13 @@ class LocalSearcher:
 
     def _vectorized_pruned(self, groups, k: int) -> "list[tuple[int, float]]":
         """Hot-query leg with a vectorized block-max pruning pre-pass
-        (the BMW idea reshaped for batch execution — the Python
-        document-at-a-time BMW traversal is 30× SLOWER than exhaustive
+        (the block-max WAND idea reshaped for batch execution — a Python
+        document-at-a-time traversal was 30× SLOWER than exhaustive
         decode on multi-stop-word queries, measured at 19M docs):
 
         1. per-block upper bounds from the drift-safe (max_tf, min_dl)
-           metadata under CURRENT (df, avgdl) — the same bound `_bmw` uses;
+           metadata under CURRENT (df, avgdl) — tf/(tf+k1·norm) grows with
+           tf and shrinks with dl, so the pair bounds every posting;
         2. seed a threshold θ: decode each term's top-ub blocks
            (~``_PRUNE_SEED_POSTINGS`` postings/term) and take the k-th best
            partial sum — partial ≤ true score, so θ lower-bounds the true
@@ -783,7 +769,7 @@ class LocalSearcher:
         doc ids decode ONLY for the blocks holding postings at or above
         the k-th contribution. Valid only with no tombstones; None when
         boundary ties make the candidate set large (full path cheaper).
-        Rank- and score-identical (shared ``_topk`` tie-break)."""
+        Rank- and score-identical (shared ``topk_sorted`` tie-break)."""
         from ..index.codec import decode_block_batch, vb_decode
 
         if self.deleted.size:
@@ -809,7 +795,7 @@ class LocalSearcher:
         )
         sub_bounds = np.concatenate(([0], np.cumsum(counts[ublk])))
         sub_pos = sub_bounds[np.searchsorted(ublk, blk)] + (cand - bounds[blk])
-        return _topk(ids_sub[sub_pos], contrib[cand], k)
+        return topk_sorted(ids_sub[sub_pos], contrib[cand], k)
 
     def _score_or_fast(self, pairs, k: int) -> "list[tuple[int, float]]":
         if len(pairs) == 1:
@@ -868,28 +854,5 @@ class LocalSearcher:
             np.concatenate([p[0] for p in parts]),
             np.concatenate([p[1] for p in parts]),
         )
-        return _topk(uniq, scores, k)
+        return topk_sorted(uniq, scores, k)
 
-    def _bmw(self, groups, k: int) -> "list[tuple[int, float]]":
-        cursors: list[_Cursor] = []
-        for term, g in groups:
-            df = self._df_of(term, g)
-            if df <= 0:
-                continue
-            w = idf(self.n_docs, df)
-            for _salt, gs in g.groupby("salt", sort=True):
-                gs = gs.sort_values("min_doc")
-                blocks = [
-                    (r.min_doc, r.max_doc, r.doc_ids, r.tfs, r.dls, r.max_tf, r.min_dl)
-                    for r in gs.itertuples(index=False)
-                ]
-                cur = _Cursor(weight=w, blocks=blocks, max_ub=0.0, avgdl=self.avgdl)
-                cur.max_ub = max(
-                    w * float(b[5]) / (float(b[5]) + K1 * (1.0 - B + B * float(b[6]) / self.avgdl))
-                    for b in blocks
-                )
-                cursors.append(cur)
-        return _bmw_topk(
-            cursors, k, self.avgdl,
-            deleted=self.deleted if self.deleted.size else None,
-        )

@@ -1,4 +1,4 @@
-"""Top-k retrieval over the compressed index — block-max WAND + distributed path.
+"""Top-k retrieval over the compressed index — driver and distributed paths.
 
 Two physical strategies for the same logical operator (B6), mirroring how
 ES picks between query phases:
@@ -19,17 +19,15 @@ Both return exactly the same ranking as the BM25 oracle: exact Lucene
 formula, float64, ties by doc_id ascending.
 
 A term's postings may be split across several salted sub-streams (builder
-B3). Each doc lives in exactly one sub-stream, so WAND treats every
-(term, salt) stream as an independent cursor carrying the term's idf — the
-disjoint union scores identically to one merged list.
+B3). Each doc lives in exactly one sub-stream, so every (term, salt) stream
+is scored with the term's idf — the disjoint union scores identically to
+one merged list.
 """
 
 from __future__ import annotations
 
-import heapq
 import math
 import os
-from dataclasses import dataclass, field
 from functools import cached_property
 
 import numpy as np
@@ -62,82 +60,6 @@ def bm25_contrib(w, tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarra
     out = w * tfs
     out /= denom
     return out
-
-
-@dataclass
-class _Cursor:
-    """One (term, salt) posting stream: doc-ordered blocks, decoded lazily.
-
-    Block upper bounds are recomputed from the stored (max_tf, min_dl) with
-    the LIVE avgdl — tf/(tf+k1·norm) is increasing in tf and decreasing in
-    dl, so the pair bounds every posting in the block even after increments
-    shift avgdl away from its build-time value.
-    """
-
-    weight: float  # idf of the term
-    blocks: list  # sorted by min_doc: (min_doc, max_doc, ids, tfs, dls, max_tf, min_dl)
-    max_ub: float  # weight * max block bound — WAND global upper bound
-    avgdl: float = 1.0
-    b_idx: int = 0
-    off: int = 0
-    _ids: np.ndarray | None = field(default=None, repr=False)
-    _tfs: np.ndarray | None = field(default=None, repr=False)
-    _dls: np.ndarray | None = field(default=None, repr=False)
-
-    def _load(self) -> None:
-        blk = self.blocks[self.b_idx]
-        self._ids = decode_doc_ids(blk[2])
-        self._tfs = decode_tfs(blk[3])
-        self._dls = decode_tfs(blk[4])
-
-    @property
-    def exhausted(self) -> bool:
-        return self.b_idx >= len(self.blocks)
-
-    @property
-    def doc(self) -> int:
-        if self._ids is None:
-            self._load()
-        return int(self._ids[self.off])
-
-    def block_ub(self) -> float:
-        blk = self.blocks[self.b_idx]
-        mt, mdl = float(blk[5]), float(blk[6])
-        return self.weight * mt / (mt + K1 * (1.0 - B + B * mdl / self.avgdl))
-
-    def block_max_doc(self) -> int:
-        return self.blocks[self.b_idx][1]
-
-    def next_geq(self, target: int) -> None:
-        """Advance to the first posting with doc >= target (block-skipping)."""
-        while not self.exhausted and self.blocks[self.b_idx][1] < target:
-            self.b_idx += 1
-            self.off = 0
-            self._ids = None
-        if self.exhausted:
-            return
-        if self._ids is None:
-            self._load()
-        # in-block binary search from the current offset
-        pos = int(np.searchsorted(self._ids[self.off :], target, side="left"))
-        self.off += pos
-        if self.off >= len(self._ids):  # target falls in a gap past this block
-            self.b_idx += 1
-            self.off = 0
-            self._ids = None
-            self.next_geq(target)
-
-    def advance(self) -> None:
-        self.off += 1
-        if self._ids is not None and self.off >= len(self._ids):
-            self.b_idx += 1
-            self.off = 0
-            self._ids = None
-
-    def score_current(self, avgdl: float) -> float:
-        tf = float(self._tfs[self.off])
-        dl = float(self._dls[self.off])
-        return self.weight * tf / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 def _is_deleted(deleted: "np.ndarray | None", doc: int) -> bool:
@@ -184,90 +106,6 @@ def _group_sum(ids: np.ndarray, contrib: np.ndarray) -> "tuple[np.ndarray, np.nd
     change = np.concatenate(([True], sids[1:] != sids[:-1]))
     starts = np.flatnonzero(change)
     return sids[starts], np.add.reduceat(svals, starts)
-
-
-def _bmw_topk(
-    cursors: list[_Cursor],
-    k: int,
-    avgdl: float,
-    deleted: "np.ndarray | None" = None,
-) -> list[tuple[int, float]]:
-    """Block-max WAND over disjoint posting streams → [(doc_id, score)].
-
-    Docs are fully scored in ascending doc order; the heap replaces only on
-    strictly-greater score, so ties resolve to the lowest doc_id — the same
-    deterministic tie-break the oracle pins (SURVEY.md §7.3). Tombstoned
-    docs (``deleted``, a SORTED doc-id array) are advanced past without
-    scoring — the Lucene live-docs analog for pre-compaction queries.
-    """
-    heap: list[tuple[float, int]] = []  # min-heap of (score, -doc) — size ≤ k
-    theta = 0.0
-
-    live = [c for c in cursors if not c.exhausted]
-    while live:
-        live.sort(key=lambda c: c.doc)
-        # find pivot: smallest prefix whose summed global UBs reach theta
-        acc = 0.0
-        pivot_i = -1
-        for i, c in enumerate(live):
-            acc += c.max_ub
-            if acc > theta or (len(heap) < k and acc > 0.0):
-                pivot_i = i
-                break
-        if pivot_i < 0:
-            break  # no prefix can beat theta — done
-        pivot_doc = live[pivot_i].doc
-
-        if live[0].doc == pivot_doc:
-            # block-max check: refine with per-block bounds at pivot_doc
-            block_acc = 0.0
-            for c in live:
-                if c.doc > pivot_doc:
-                    break
-                block_acc += c.block_ub()
-            if len(heap) >= k and block_acc <= theta:
-                # Skip (Ding & Suel GetNewCandidate): jump the pivot-group
-                # cursors past the minimal current-block boundary, clamped
-                # by the next non-group cursor's doc — docs in between can
-                # only be matched by the group's current blocks, whose
-                # summed bounds just failed the theta test.
-                adv = [c for c in live if c.doc <= pivot_doc]
-                rest = [c for c in live if c.doc > pivot_doc]
-                target = min(c.block_max_doc() for c in adv) + 1
-                if rest:
-                    target = min(target, min(c.doc for c in rest))
-                if target <= pivot_doc:
-                    target = pivot_doc + 1
-                for c in adv:
-                    c.next_geq(target)
-            elif _is_deleted(deleted, pivot_doc):
-                for c in live:
-                    if not c.exhausted and c.doc == pivot_doc:
-                        c.advance()
-            else:
-                score = 0.0
-                for c in live:
-                    if not c.exhausted and c.doc == pivot_doc:
-                        score += c.score_current(avgdl)
-                for c in live:
-                    if not c.exhausted and c.doc == pivot_doc:
-                        c.advance()
-                if len(heap) < k:
-                    heapq.heappush(heap, (score, -pivot_doc))
-                    if len(heap) == k:
-                        theta = heap[0][0]
-                elif score > heap[0][0]:
-                    heapq.heapreplace(heap, (score, -pivot_doc))
-                    theta = heap[0][0]
-            live = [c for c in live if not c.exhausted]
-        else:
-            # advance all cursors before the pivot up to pivot_doc
-            for c in live[:pivot_i]:
-                c.next_geq(pivot_doc)
-            live = [c for c in live if not c.exhausted]
-
-    out = sorted(heap, key=lambda t: (-t[0], -t[1]))
-    return [(-nd, s) for s, nd in out]
 
 
 def _load_deletes(dirs: "list[str]") -> np.ndarray:
@@ -647,17 +485,10 @@ class IndexSearcher:
             return parts[0]
         return pa.concat_tables(parts, promote_options="permissive")
 
-    def _pruned_blocks_pandas(
-        self, qterms: "list[str]", with_pos: bool = False
-    ) -> pd.DataFrame:
-        """Pandas spelling of ``_pruned_blocks_arrow`` (the BMW-engine and
-        positional-phrase driver legs group per term in pandas)."""
-        return self._pruned_blocks_arrow(qterms, with_pos=with_pos).to_pandas()
-
     # -- low-latency path -------------------------------------------------
     def search(
-        self, query: str, k: int = 10, engine: str = "vectorized",
-        route: str = "auto", scan: "str | None" = None,
+        self, query: str, k: int = 10, route: str = "auto",
+        scan: "str | None" = None,
     ) -> list[tuple[int, float]]:
         """Top-k → [(doc_id, score)] rank-ordered, self-dispatching.
 
@@ -677,11 +508,8 @@ class IndexSearcher:
         the vectorized engine scores straight off the Arrow buffers (no
         Python bytes);
         ``scan="spark"`` keeps the Spark scan (the cached-relation path).
-        Engines: ``engine="vectorized"`` (default) decodes every pruned
-        block and scores with numpy — optimal when the blocks were fetched
-        anyway. ``engine="bmw"``: block-max WAND with block skipping — the
-        algorithm a serving tier runs when block metadata lets it avoid
-        *fetching* blocks. All paths return identical rankings (tested).
+        Every path decodes the fetched blocks and scores them with numpy;
+        all return identical rankings (tested).
         """
         qterms = self._qterms(query)
         if not qterms:
@@ -698,40 +526,14 @@ class IndexSearcher:
         if scan is None:
             scan = self._default_scan
         if scan == "pyarrow":
-            if engine == "vectorized":
-                tbl = self._pruned_blocks_arrow(qterms)
-                if tbl.num_rows == 0:
-                    return []
-                return self._vectorized_topk_arrow(tbl, qterms, dfs, k)
-            pdf = self._pruned_blocks_pandas(qterms)
-        else:
-            pdf = self._pruned_blocks(qterms).select(*self._block_cols).toPandas()
+            tbl = self._pruned_blocks_arrow(qterms)
+            if tbl.num_rows == 0:
+                return []
+            return self._vectorized_topk_arrow(tbl, qterms, dfs, k)
+        pdf = self._pruned_blocks(qterms).select(*self._block_cols).toPandas()
         if pdf.empty:
             return []
-        if engine == "vectorized":
-            return self._vectorized_topk(pdf, dfs, k)
-        cursors: list[_Cursor] = []
-        for (term, _salt), g in pdf.groupby(["term", "salt"], sort=True):
-            if dfs.get(term, 0) <= 0:
-                continue  # every posting of the term is tombstoned
-            g = g.sort_values("min_doc")
-            w = idf(self.n_docs, dfs[term])
-            blocks = [
-                (r.min_doc, r.max_doc, r.doc_ids, r.tfs, r.dls, r.max_tf, r.min_dl)
-                for r in g.itertuples(index=False)
-            ]
-            cur = _Cursor(weight=w, blocks=blocks, max_ub=0.0, avgdl=self.avgdl)
-            cur.max_ub = max(
-                cur.weight
-                * float(b[5])
-                / (float(b[5]) + K1 * (1.0 - B + B * float(b[6]) / self.avgdl))
-                for b in blocks
-            )
-            cursors.append(cur)
-        return _bmw_topk(
-            cursors, k, self.avgdl,
-            deleted=self.deleted if self.deleted.size else None,
-        )
+        return self._vectorized_topk(pdf, dfs, k)
 
     def _topk_from_postings(
         self, ids: np.ndarray, contrib: np.ndarray, single_term: bool, k: int
@@ -844,7 +646,7 @@ class IndexSearcher:
         sub_pos = (
             sub_bounds[np.searchsorted(ublk, blk)] + (cand - bounds[blk])
         )
-        return self._topk_sorted(ids_sub[sub_pos], contrib[cand], k)
+        return topk_sorted(ids_sub[sub_pos], contrib[cand], k)
 
     def _vectorized_topk_arrow(
         self, tbl, qterms: "list[str]", dfs: dict[str, int], k: int
@@ -918,7 +720,7 @@ class IndexSearcher:
             # one posting per doc (salted sub-streams are doc-disjoint) —
             # no cross-slice merge needed
             ids = np.concatenate([p[0] for p in parts])
-            return self._topk_sorted(ids, np.concatenate([p[1] for p in parts]), k)
+            return topk_sorted(ids, np.concatenate([p[1] for p in parts]), k)
         lo = min(int(p[0].min()) for p in parts)
         hi = max(int(p[0].max()) for p in parts)
         span = hi - lo + 1
@@ -935,11 +737,11 @@ class IndexSearcher:
             full = futs[0].result()
             for f in futs[1:]:
                 full += f.result()
-            return self._topk_dense(full, lo, k)
+            return topk_dense(full, lo, k)
         ids = np.concatenate([p[0] for p in parts])
         contrib = np.concatenate([p[1] for p in parts])
         uniq, scores = _group_sum(ids, contrib)
-        return self._topk_sorted(uniq, scores, k)
+        return topk_sorted(uniq, scores, k)
 
     def _topk_postsums(
         self, ids: np.ndarray, contrib: np.ndarray, single: bool, k: int
@@ -952,16 +754,6 @@ class IndexSearcher:
             uniq, scores = ids, contrib
         else:
             uniq, scores = _group_sum(ids, contrib)
-        return self._topk_sorted(uniq, scores, k)
-
-    def _topk_dense(
-        self, full: np.ndarray, lo: int, k: int
-    ) -> list[tuple[int, float]]:
-        return topk_dense(full, lo, k)
-
-    def _topk_sorted(
-        self, uniq: np.ndarray, scores: np.ndarray, k: int
-    ) -> list[tuple[int, float]]:
         return topk_sorted(uniq, scores, k)
 
     def _vectorized_topk(

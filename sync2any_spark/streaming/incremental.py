@@ -48,15 +48,17 @@ from pyspark.sql import functions as F
 
 from ..index.builder import (
     IndexPaths,
+    append_metrics_driver,
     build_chunks,
     build_index,
-    build_postings,
+    build_postings_direct,
     build_term_stats,
     deletes_sources,
     docs_sources,
     read_index_meta,
+    write_stats_driver,
 )
-from ..query.algebra import SPARK_TOKEN_RE, term_stats
+from ..query.algebra import SPARK_TOKEN_RE
 
 
 # batches at or below this row count rank their fresh doc ids driver-side
@@ -284,6 +286,37 @@ def _update_terms_driver(
     return True
 
 
+def _update_terms_spark(
+    spark: SparkSession, paths: IndexPaths, meta: dict, segment: int,
+    delta: DataFrame,
+) -> None:
+    """terms_v(segment) = old terms ± ``delta`` (term, d_df, d_cf) as a
+    distributed full-outer join — for old tables over the driver budget
+    and for backfill-scale batches."""
+    from ..index.bucketing import bucket_expr
+
+    old_terms = spark.read.parquet(paths.terms_v(meta.get("terms_version", 0)))
+    (
+        old_terms.select("term", "df", "cf")
+        .join(delta, "term", "full")
+        .select(
+            "term",
+            (
+                F.coalesce(F.col("df"), F.lit(0))
+                + F.coalesce(F.col("d_df"), F.lit(0))
+            ).alias("df"),
+            (
+                F.coalesce(F.col("cf"), F.lit(0))
+                + F.coalesce(F.col("d_cf"), F.lit(0))
+            ).alias("cf"),
+        )
+        .where(F.col("df") > 0)
+        .withColumn("bucket", bucket_expr("term", meta["n_buckets"]))
+        .write.mode("overwrite")
+        .parquet(paths.terms_v(segment))
+    )
+
+
 def _write_deletes_driver(out_dir: str, doc_ids: np.ndarray) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -303,6 +336,103 @@ def _write_deletes_driver(out_dir: str, doc_ids: np.ndarray) -> None:
                 os.remove(os.path.join(out_dir, n))
             except OSError:
                 pass
+
+
+def _seg_prefix(segment: int) -> str:
+    """Chunk-file prefix of delta segment ``segment``."""
+    return f"seg{segment:03d}-"
+
+
+def _write_delta_chunks(
+    new_docs: "DataFrame | None", paths: IndexPaths, meta: dict,
+    segment: int, n_new: int,
+) -> None:
+    """SPIMI pass over a batch's new rows into segment ``segment``'s chunk
+    namespace (``seg{N}-part-*``). A crashed apply may have left chunk
+    files for this (uncommitted) segment number behind, and a retry with a
+    DIFFERENT batch must not mix them in, so the namespace is wiped first.
+    The chunks carry the index's (n_buckets, n_salts) layout, so the delta
+    merge below is always the zero-shuffle one."""
+    import glob as globmod
+
+    prefix = _seg_prefix(segment)
+    for stale in globmod.glob(os.path.join(paths.chunks, prefix + "*")):
+        os.remove(stale)
+    if n_new == 0:
+        return
+    # delta partition count sized to the batch (≥ ~4k docs per SPIMI task):
+    # a 40k-doc delta through the full snapshot partition count spends its
+    # wall on empty-task scheduling, not tokenizing
+    n_delta_parts = max(1, min(int(meta["n_partitions"]), n_new // 4000 + 1))
+    build_chunks(
+        new_docs, paths.chunks, n_delta_parts, prefix=prefix,
+        n_buckets=int(meta["n_buckets"]), n_salts=int(meta["n_salts"]),
+        store_positions=bool(meta.get("store_positions", False)),
+    ).count()
+
+
+def _write_delta_postings(
+    spark: SparkSession, paths: IndexPaths, meta: dict, segment: int,
+    delta_terms: "DataFrame | None", avgdl: float,
+) -> None:
+    """Delta postings: the zero-shuffle merge of the segment's chunks into
+    its own postings dir (overwrite = retry-safe). ``delta_terms`` None
+    means the batch added no docs; the dir is removed."""
+    import shutil
+
+    out = paths.postings_seg(segment)
+    if delta_terms is None:
+        shutil.rmtree(out, ignore_errors=True)
+        return
+    build_postings_direct(
+        spark, paths.chunks, delta_terms, avgdl, int(meta["n_buckets"]), out,
+        n_salts=int(meta["n_salts"]),
+        heavy_df_threshold=int(meta["heavy_df_threshold"]),
+        glob=_seg_prefix(segment) + "part-*.parquet",
+        store_positions=bool(meta.get("store_positions", False)),
+    )
+
+
+def _read_stats(paths: IndexPaths, meta: dict):
+    """The committed corpus-stats row (n_docs, avgdl, total_tokens)."""
+    import pyarrow.dataset as pads
+
+    tv = meta.get("terms_version", 0)
+    return pads.dataset(paths.stats_v(tv)).to_table().to_pandas().iloc[0]
+
+
+def _commit_segment(
+    index_dir: str, paths: IndexPaths, meta: dict, segment: int, *,
+    n_docs_live: int, avgdl: float, next_id: int, n_new: int,
+    n_tombstones: int, t0: float, laps: "dict[str, float]",
+) -> dict:
+    """Commit point of both apply strategies: ONE atomic meta.json
+    replace, then the run's metrics row. Returns the apply summary."""
+    meta["segments"] = meta.get("segments", []) + [segment]
+    meta["terms_version"] = segment
+    meta["last_segment"] = segment
+    meta["n_docs"] = n_docs_live
+    meta["avgdl"] = avgdl
+    meta["next_doc_id"] = int(next_id) + int(n_new)
+    _write_meta(index_dir, meta)
+
+    wall = time.time() - t0
+    append_metrics_driver(
+        paths.metrics,
+        [
+            ("increment", "segment", float(segment)),
+            ("increment", "tombstones", float(n_tombstones)),
+            ("increment", "new_docs", float(n_new)),
+            ("increment", "wall_s", wall),
+        ],
+    )
+    return {
+        "tombstones": n_tombstones,
+        "new_docs": n_new,
+        "segment": segment,
+        "wall_s": wall,
+        "stage_walls": laps,
+    }
 
 
 def apply_increments(
@@ -330,6 +460,10 @@ def apply_increments(
     - larger backfills: the distributed path (shuffle join + signed
       tokenize union + full-outer terms join), whose every stage scales
       out.
+
+    Both write the delta segment with the same writers — SPIMI chunks in
+    the index's (n_buckets, n_salts) layout, the zero-shuffle postings
+    merge, driver-side stats — and commit through ``_commit_segment``.
     """
     paths = IndexPaths(index_dir)
     meta = read_index_meta(index_dir)
@@ -453,32 +587,12 @@ def apply_increments(
     _lap("new_doc_ids")
 
     # --- delta segment + removed-row stats, independent jobs overlapped ---
-    prefix = f"seg{segment:03d}-"
-    import glob as globmod
-
-    for stale in globmod.glob(os.path.join(paths.chunks, f"{prefix}*")):
-        os.remove(stale)
-    store_pos = bool(meta.get("store_positions", False))
-    n_delta_parts = max(1, min(int(meta["n_partitions"]), n_new // 4000 + 1))
     from concurrent.futures import ThreadPoolExecutor
 
-    from ..index.builder import (
-        append_metrics_driver,
-        build_postings_direct,
-        build_term_stats_driver,
-        read_manifests,
-        write_stats_driver,
-    )
+    from ..index.builder import build_term_stats_driver, read_manifests
 
     def job_chunks():
-        if n_new == 0:
-            return
-        manifest = build_chunks(
-            new_docs, paths.chunks, n_delta_parts, resume=True, prefix=prefix,
-            tokenizer="pandas", store_positions=store_pos,
-            n_buckets=int(meta["n_buckets"]),
-        )
-        manifest.count()
+        _write_delta_chunks(new_docs, paths, meta, segment, n_new)
 
     def job_docs_seg():
         if n_new == 0:
@@ -523,7 +637,7 @@ def apply_increments(
         removed_stats = f_removed.result()
 
         # added-side stats from the delta chunks (tokenized ONCE, above)
-        delta_glob = f"{prefix}part-*.parquet"
+        delta_glob = _seg_prefix(segment) + "part-*.parquet"
         delta_terms_pdf = build_term_stats_driver(
             paths.chunks, meta["n_buckets"], glob=delta_glob
         )
@@ -533,18 +647,11 @@ def apply_increments(
                     spark, paths.chunks, meta["n_buckets"], glob=delta_glob
                 ).toPandas()
             )
-        mans = read_manifests(paths.chunks, prefix) if n_new else []
+        mans = read_manifests(paths.chunks, _seg_prefix(segment)) if n_new else []
         added_tok = int(sum(m.get("sum_dl", 0) for m in mans))
 
         # --- stats (exact, no job) ---------------------------------------
-        import pyarrow.dataset as pads
-
-        st = (
-            pads.dataset(paths.stats_v(meta.get("terms_version", 0)))
-            .to_table()
-            .to_pandas()
-            .iloc[0]
-        )
+        st = _read_stats(paths, meta)
         n_docs_live = int(st.n_docs) - removed_n + n_new
         total_tokens = int(st.total_tokens) - removed_tok + added_tok
         avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
@@ -573,58 +680,23 @@ def apply_increments(
                 .groupby("term", sort=False, as_index=False)
                 .sum()
             )
-        old_terms_dir = paths.terms_v(meta.get("terms_version", 0))
         if not _update_terms_driver(
-            old_terms_dir, delta, meta["n_buckets"], paths.terms_v(segment)
+            paths.terms_v(meta.get("terms_version", 0)), delta,
+            meta["n_buckets"], paths.terms_v(segment),
         ):
-            from ..index.bucketing import bucket_expr
-
-            delta_df = spark.createDataFrame(
-                delta, schema="term string, d_df long, d_cf long"
+            _update_terms_spark(
+                spark, paths, meta, segment,
+                spark.createDataFrame(
+                    delta, schema="term string, d_df long, d_cf long"
+                ),
             )
-            old_terms = spark.read.parquet(old_terms_dir)
-            new_terms = (
-                old_terms.select("term", "df", "cf")
-                .join(delta_df, "term", "full")
-                .select(
-                    "term",
-                    (
-                        F.coalesce(F.col("df"), F.lit(0))
-                        + F.coalesce(F.col("d_df"), F.lit(0))
-                    ).alias("df"),
-                    (
-                        F.coalesce(F.col("cf"), F.lit(0))
-                        + F.coalesce(F.col("d_cf"), F.lit(0))
-                    ).alias("cf"),
-                )
-                .where(F.col("df") > 0)
-                .withColumn("bucket", bucket_expr("term", meta["n_buckets"]))
-            )
-            new_terms.write.mode("overwrite").parquet(paths.terms_v(segment))
         _lap("term_deltas_and_stats")
 
         # --- delta postings: zero-shuffle direct merge into the seg dir ---
-        if n_new:
-            delta_terms_df = spark.createDataFrame(
-                delta_terms_pdf,
-                schema="term string, df long, cf long, bucket int",
-            )
-            build_postings_direct(
-                spark,
-                paths.chunks,
-                delta_terms_df,
-                avgdl,
-                meta["n_buckets"],
-                paths.postings_seg(segment),
-                n_salts=meta["n_salts"],
-                heavy_df_threshold=meta["heavy_df_threshold"],
-                glob=delta_glob,
-                store_positions=store_pos,
-            )
-        else:
-            import shutil as _sh
-
-            _sh.rmtree(paths.postings_seg(segment), ignore_errors=True)
+        delta_terms_df = spark.createDataFrame(
+            delta_terms_pdf, schema="term string, df long, cf long, bucket int"
+        ) if n_new else None
+        _write_delta_postings(spark, paths, meta, segment, delta_terms_df, avgdl)
         _lap("delta_postings")
 
         # --- segment deletes (driver write) + docs write join -------------
@@ -632,35 +704,15 @@ def apply_increments(
         f_docs.result()
         _lap("segment_writes")
 
-    # --- COMMIT: one atomic meta.json replace ------------------------------
-    meta["segments"] = meta.get("segments", []) + [segment]
-    meta["terms_version"] = segment
-    meta["last_segment"] = segment
-    meta["n_docs"] = n_docs_live
-    meta["avgdl"] = avgdl
-    meta["next_doc_id"] = int(next_id) + int(n_new)
-    _write_meta(index_dir, meta)
-
-    wall = time.time() - t0
-    append_metrics_driver(
-        paths.metrics,
-        [
-            ("increment", "segment", float(segment)),
-            ("increment", "tombstones", float(n_tombstones)),
-            ("increment", "new_docs", float(n_new)),
-            ("increment", "wall_s", wall),
-        ],
+    out = _commit_segment(
+        index_dir, paths, meta, segment, n_docs_live=n_docs_live,
+        avgdl=avgdl, next_id=next_id, n_new=n_new,
+        n_tombstones=n_tombstones, t0=t0, laps=laps,
     )
     joined.unpersist()
     if new_docs is not None:
         new_docs.unpersist()
-    return {
-        "tombstones": n_tombstones,
-        "new_docs": n_new,
-        "segment": segment,
-        "wall_s": wall,
-        "stage_walls": laps,
-    }
+    return out
 
 
 def _apply_increments_distributed(
@@ -673,8 +725,10 @@ def _apply_increments_distributed(
     laps: "dict[str, float]",
     _lap,
 ) -> dict:
-    """Backfill-scale path: every stage distributed (shuffle join, signed
-    tokenize union, full-outer terms join) — the round-5 shape."""
+    """Backfill-scale path: the join, the signed tokenize union and the
+    full-outer terms join run distributed; the delta segment goes through
+    the same chunk writer, zero-shuffle merge and commit as the driver
+    path."""
     live = live_docs(spark, index_dir).select(
         "conv_id", "turn_idx", F.col("doc_id").alias("old_doc_id"),
         F.col("text").alias("cur_text"), F.col("role").alias("cur_role"),
@@ -805,31 +859,11 @@ def _apply_increments_distributed(
             F.sum(F.col("sign") * F.col("tf")).alias("d_cf"),
         )
     )
-    old_terms = spark.read.parquet(paths.terms_v(meta.get("terms_version", 0)))
-    from ..index.bucketing import bucket_expr
-
-    new_terms = (
-        old_terms.select("term", "df", "cf")
-        .join(delta_stats, "term", "full")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("d_df"), F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce(F.col("cf"), F.lit(0))
-                + F.coalesce(F.col("d_cf"), F.lit(0))
-            ).alias("cf"),
-        )
-        .where(F.col("df") > 0)
-        .withColumn("bucket", bucket_expr("term", meta["n_buckets"]))
-    )
-    new_terms.write.mode("overwrite").parquet(paths.terms_v(segment))
+    _update_terms_spark(spark, paths, meta, segment, delta_stats)
     _lap("term_deltas")
 
     # --- stats (exact, one grouped agg over the signed union) --------------
-    st = spark.read.parquet(paths.stats_v(meta.get("terms_version", 0))).first()
+    st = _read_stats(paths, meta)
     deltas = {
         int(r.sign): r
         for r in signed.groupBy("sign")
@@ -848,50 +882,16 @@ def _apply_increments_distributed(
         + int(ad.tok if ad else 0)
     )
     avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
-    spark.createDataFrame(
-        [(n_docs_live, avgdl, total_tokens)],
-        "n_docs long, avgdl double, total_tokens long",
-    ).write.mode("overwrite").parquet(paths.stats_v(segment))
+    write_stats_driver(paths.stats_v(segment), n_docs_live, avgdl, total_tokens)
     _lap("stats")
 
-    # --- delta segment postings (segment-owned dir, overwrite = retry-safe)
-    prefix = f"seg{segment:03d}-"
-    # a crashed apply may have left chunk files for this (uncommitted)
-    # segment number behind; a retry with a DIFFERENT batch must not mix
-    # them in via resume (the manifests would mark those partitions done),
-    # so the segment's chunk namespace is wiped first — the delta rebuild
-    # is small by construction (ADVICE round 2)
-    import glob as globmod
-
-    for stale in globmod.glob(os.path.join(paths.chunks, f"{prefix}*")):
-        os.remove(stale)
-    store_pos = bool(meta.get("store_positions", False))
-    # delta partition count sized to the batch (≥ ~4k docs per SPIMI task):
-    # a 40k-doc delta through the full snapshot partition count spends its
-    # wall on empty-task scheduling, not tokenizing
-    n_delta_parts = max(1, min(int(meta["n_partitions"]), n_new // 4000 + 1))
-    manifest = build_chunks(
-        new_docs, paths.chunks, n_delta_parts, resume=True, prefix=prefix,
-        tokenizer="pandas", store_positions=store_pos,
-        n_buckets=int(meta["n_buckets"]),
-    )
-    manifest.count()
-    delta_glob = f"{prefix}part-*.parquet"
-    delta_terms = build_term_stats(spark, paths.chunks, meta["n_buckets"], glob=delta_glob)
-    delta_blocks = build_postings(
-        spark,
-        paths.chunks,
-        delta_terms,
-        avgdl,
-        meta["n_buckets"],
-        n_salts=meta["n_salts"],
-        heavy_df_threshold=meta["heavy_df_threshold"],
-        glob=delta_glob,
-        store_positions=store_pos,
-    )
-    delta_blocks.write.mode("overwrite").partitionBy("bucket").parquet(
-        paths.postings_seg(segment)
-    )
+    # --- delta segment postings: the driver path's chunk + merge writers --
+    _write_delta_chunks(new_docs, paths, meta, segment, n_new)
+    delta_terms = build_term_stats(
+        spark, paths.chunks, meta["n_buckets"],
+        glob=_seg_prefix(segment) + "part-*.parquet",
+    ) if n_new else None
+    _write_delta_postings(spark, paths, meta, segment, delta_terms, avgdl)
     _lap("delta_postings")
 
     # --- segment docs + tombstones (segment-owned dirs) --------------------
@@ -899,26 +899,10 @@ def _apply_increments_distributed(
     all_tombstones.write.mode("overwrite").parquet(paths.deletes_seg(segment))
     _lap("segment_writes")
 
-    # --- COMMIT: one atomic meta.json replace ------------------------------
-    meta["segments"] = meta.get("segments", []) + [segment]
-    meta["terms_version"] = segment
-    meta["last_segment"] = segment
-    meta["n_docs"] = n_docs_live
-    meta["avgdl"] = avgdl
-    meta["next_doc_id"] = int(next_id) + int(n_new)
-    _write_meta(index_dir, meta)
-
-    wall = time.time() - t0
-    spark.createDataFrame(
-        [
-            ("increment", "segment", float(segment)),
-            ("increment", "tombstones", float(n_tombstones)),
-            ("increment", "new_docs", float(n_new)),
-            ("increment", "wall_s", wall),
-        ],
-        "stage string, key string, value double",
-    ).withColumn("ts", F.current_timestamp()).write.mode("append").parquet(
-        paths.metrics
+    out = _commit_segment(
+        index_dir, paths, meta, segment, n_docs_live=n_docs_live,
+        avgdl=avgdl, next_id=next_id, n_new=n_new,
+        n_tombstones=n_tombstones, t0=t0, laps=laps,
     )
     # a CDC session applies batches forever: release this batch's cached
     # partitions so storage memory can't accumulate across applies
@@ -926,13 +910,7 @@ def _apply_increments_distributed(
     all_tombstones.unpersist()
     new_docs.unpersist()
     signed.unpersist()
-    return {
-        "tombstones": n_tombstones,
-        "new_docs": n_new,
-        "segment": segment,
-        "wall_s": wall,
-        "stage_walls": laps,
-    }
+    return out
 
 
 def vacuum(index_dir: str) -> "list[str]":
@@ -1388,8 +1366,6 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         store_positions=bool(meta.get("store_positions", False)),
     )
     shutil.rmtree(tmp, ignore_errors=True)
-    from ..index.builder import append_metrics_driver
-
     append_metrics_driver(
         os.path.join(out_dir, "metrics"),
         [("live_splice" if spliced else "live_sort", "wall_s", sort_wall)],

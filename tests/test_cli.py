@@ -73,3 +73,36 @@ def test_increment_and_compact_roundtrip(spark, paths, tmp_path_factory, capsys)
     assert rc == 0
     out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert [h["conv_id"] for h in out2["hits"]] == ["conv_cli00001"]
+
+
+def test_status_reports_latest_run(spark, tmp_path_factory, capsys, monkeypatch):
+    """``status`` shows each metric's latest run, not a sum over runs, and
+    reads it without starting Spark."""
+    import datetime
+
+    src = ensure_transcripts("sf0.001")
+    idx = str(tmp_path_factory.mktemp("cli_status_idx"))
+    assert cli.main(
+        ["build", "--input", src, "--index", idx, "--partitions", "4",
+         "--buckets", "4", "--salts", "2", "--heavy-df", "500"]
+    ) == 0
+    ts = datetime.datetime(2026, 8, 3)
+    for i in range(2):
+        inc_dir = str(tmp_path_factory.mktemp(f"cli_status_inc{i}"))
+        spark.createDataFrame(
+            [(f"conv_status{i:05d}", 0, "user", "statusmarker insert", "", ts, "I")],
+            "conv_id string, turn_idx int, role string, text string, "
+            "tool string, ts timestamp, op string",
+        ).write.mode("overwrite").parquet(inc_dir)
+        assert cli.main(["increment", "--index", idx, "--input", inc_dir]) == 0
+    capsys.readouterr()
+
+    def no_spark(cpus):
+        raise AssertionError("status started a SparkSession")
+
+    monkeypatch.setattr(cli, "_spark", no_spark)
+    assert cli.main(["status", "--index", idx]) == 0
+    st = json.loads(capsys.readouterr().out)
+    assert st["meta"]["last_segment"] == 2
+    assert st["metrics"]["increment.segment"] == 2
+    assert st["metrics"]["increment.new_docs"] == 1

@@ -70,8 +70,6 @@ def test_identical_docs_tiebreak(spark, tmp_path):
     got = s.search("same", 3)
     # perfect ties → lowest doc ids win, ascending
     assert [g[0] for g in got] == [0, 1, 2]
-    bmw = s.search("same", 3, engine="bmw")
-    assert bmw == got
 
 
 def test_increment_into_zero_doc_index(spark, tmp_path):
@@ -138,7 +136,7 @@ def test_fetch_schema_consistent_on_empty(spark, tmp_path):
 def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
     """Property test: on randomized corpora (mixed Latin/digit/CJK words,
     duplicated texts, skewed repetition, multi-conversation), every query
-    engine — pyarrow driver scan, Spark scan, block-max WAND, distributed,
+    route — pyarrow driver scan, Spark scan, distributed,
     and the RAM serving tier — returns the numpy oracle's exact ranking.
     Deterministic seeds; each round builds a real index."""
     import numpy as np
@@ -176,7 +174,6 @@ def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
             paths = {
                 "pyarrow": s.search(q, 5),
                 "spark": s.search(q, 5, scan="spark"),
-                "bmw": s.search(q, 5, engine="bmw"),
                 "dist": s.search(q, 5, route="distributed"),
                 "serving": local.search(q, 5),
             }

@@ -83,9 +83,9 @@ def _all_queries(queries) -> "list[str]":
     return [q for group in queries.values() for q in group]
 
 
-def _check_oracle(searcher, oracle, qs, **kw) -> None:
+def _check_oracle(searcher, oracle, qs) -> None:
     for q in qs:
-        got = searcher.search(q, 10, **kw)
+        got = searcher.search(q, 10)
         want = oracle.topk(q, 10)
         assert got, q
         assert [g[0] for g in got] == [w[0] for w in want], q
@@ -126,11 +126,10 @@ def test_fetch_opens_only_files_holding_terms(spark, index, queries):
 
 def test_directory_answers_match_oracle_and_spark_scan(spark, index, oracle, queries):
     """Delta-only, base-only and mixed queries: rank- and score-identical to
-    the oracle on both engines, and bit-identical to the Spark scan."""
+    the oracle, and bit-identical to the Spark scan."""
     s = IndexSearcher(spark, index, route_budget=1 << 60)
     qs = _all_queries(queries)
     _check_oracle(s, oracle, qs)
-    _check_oracle(s, oracle, qs, engine="bmw")
     for q in qs:
         assert s.search(q, 10) == s.search(q, 10, scan="spark"), q
 

@@ -198,6 +198,98 @@ def test_crash_mid_apply_then_retry(
         assert s_crashed.search(q, 10) == s_clean.search(q, 10), q
 
 
+@pytest.fixture(scope="module")
+def pristine(spark, transcripts_sf0001, tmp_path_factory):
+    """A base index no test mutates; tests apply batches to copies."""
+    d = str(tmp_path_factory.mktemp("idx_pristine"))
+    build_index(spark, transcripts_sf0001, d, resume=False, **PARAMS)
+    return d
+
+
+def _copy_index(src, tmp_path_factory, name):
+    import shutil
+
+    dst = str(tmp_path_factory.mktemp(name)) + "/idx"
+    shutil.copytree(src, dst)
+    return dst
+
+
+def _no_shuffle_merge(*args, **kwargs):
+    raise AssertionError("delta postings fell back to the shuffle merge")
+
+
+def test_driver_apply_merges_delta_without_shuffle(
+    spark, pristine, increments, tmp_path_factory, monkeypatch
+):
+    """The index is built with n_salts=4; a driver-path apply must write
+    its delta chunks in that layout, so the delta postings go through the
+    zero-shuffle merge and never reach the shuffle fallback."""
+    import sync2any_spark.index.builder as builder
+
+    idx = _copy_index(pristine, tmp_path_factory, "idx_zero_shuffle")
+    assert builder.read_index_meta(idx)["n_salts"] == PARAMS["n_salts"]
+    monkeypatch.setattr(builder, "_build_postings_direct_shuffle", _no_shuffle_merge)
+    summary = apply_increments(spark, idx, increments)
+    assert summary["new_docs"] > 0
+    assert builder._has_parquet(
+        builder.IndexPaths(idx).postings_seg(summary["segment"])
+    )
+
+
+def test_distributed_apply_equals_driver_apply(
+    spark, pristine, increments, tmp_path_factory, monkeypatch
+):
+    """The backfill-scale apply (forced with DRIVER_RANK_ROWS = 0) commits
+    the same doc ids, terms and stats as the driver-path apply of the same
+    batch, through the same zero-shuffle delta merge, and both searchers
+    answer it rank- and score-identically to the oracle."""
+    import pyarrow.dataset as pads
+
+    import sync2any_spark.index.builder as builder
+    import sync2any_spark.streaming.incremental as inc_mod
+    from sync2any_spark.query.serving import LocalSearcher
+
+    drv = _copy_index(pristine, tmp_path_factory, "idx_apply_drv")
+    dist = _copy_index(pristine, tmp_path_factory, "idx_apply_dist")
+    monkeypatch.setattr(builder, "_build_postings_direct_shuffle", _no_shuffle_merge)
+    s_drv = apply_increments(spark, drv, increments)
+    monkeypatch.setattr(inc_mod, "DRIVER_RANK_ROWS", 0)
+    s_dist = apply_increments(spark, dist, increments)
+    assert "stats" in s_dist["stage_walls"]  # the distributed path ran
+    for key in ("segment", "new_docs", "tombstones"):
+        assert s_dist[key] == s_drv[key], key
+
+    def state(idx):
+        meta = builder.read_index_meta(idx)
+        paths = builder.IndexPaths(idx)
+        ids = {
+            (r.conv_id, r.turn_idx): r.doc_id
+            for r in live_docs(spark, idx)
+            .select("conv_id", "turn_idx", "doc_id")
+            .collect()
+        }
+        tv = meta["terms_version"]
+        terms = (
+            pads.dataset(paths.terms_v(tv))
+            .to_table(columns=["term", "df", "cf"])
+            .sort_by("term")
+            .to_pylist()
+        )
+        stats = pads.dataset(paths.stats_v(tv)).to_table().to_pylist()
+        return ids, terms, stats
+
+    assert state(dist) == state(drv)
+
+    oracle = _merged_oracle(spark, dist)
+    for searcher in (IndexSearcher(spark, dist), LocalSearcher(dist)):
+        for q in QUERIES:
+            got = searcher.search(q, 10)
+            want = oracle.topk(q, 10)
+            assert [g[0] for g in got] == [w[0] for w in want], q
+            for (_, gs), (_, ws) in zip(got, want):
+                assert gs == pytest.approx(ws, rel=1e-9), q
+
+
 def test_compact_equals_fresh_build(spark, base, applied, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx_compacted"))
     compact(spark, base, out)
@@ -344,6 +436,27 @@ def test_crash_then_retry_with_different_batch(
     got = IndexSearcher(spark, crashed).search("beta", 10)
     want = IndexSearcher(spark, clean).search("beta", 10)
     assert got == want and len(got) == 1
+
+
+def test_merge_reader_cache_is_per_merge(tmp_path):
+    """A retried segment rewrites its chunk files under the same names; a
+    Python worker reused across merges must read the new files, not the
+    handles it cached for the crashed attempt's merge."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sync2any_spark.index.builder import _chunk_readers
+
+    f = str(tmp_path / "seg001-part-00000.parquet")
+
+    def write(n):
+        cols = {c: pa.array([0] * n, pa.int32()) for c in ("bucket", "sub", "salt")}
+        pq.write_table(pa.table(cols), f)
+
+    write(1)
+    assert _chunk_readers([f], "crashed")[0][0].metadata.num_rows == 1
+    write(2)
+    assert _chunk_readers([f], "retry")[0][0].metadata.num_rows == 2
 
 
 def test_maybe_compact_policy(spark, transcripts_sf0001, tmp_path_factory):

@@ -167,23 +167,21 @@ def test_salting_applied_and_balanced(spark, index_dir):
     assert (light["salt"] == 0).all()
 
 
-@pytest.mark.parametrize("engine", ["vectorized", "bmw"])
-def test_topk_matches_oracle_full_query_set(spark, index_dir, oracle, engine):
+def test_topk_matches_oracle_full_query_set(spark, index_dir, oracle):
     """FIXTURES invariant 3: rank-identical top-k (ids AND scores) for all
-    50 reference queries — both the vectorized path and block-max WAND."""
+    50 reference queries."""
     o, key_of = oracle
     searcher = IndexSearcher(spark, index_dir)
     queries = pq.read_table(ensure_queries()).to_pandas()
     for q in queries.itertuples(index=False):
-        got = searcher.search(q.query_text, int(q.k), engine=engine)
+        got = searcher.search(q.query_text, int(q.k))
         want = o.topk(q.query_text, int(q.k))
         assert [g[0] for g in got] == [w[0] for w in want], q.query_text
         for (_, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-9), q.query_text
 
 
-@pytest.mark.parametrize("engine", ["vectorized", "bmw"])
-def test_local_searcher_matches_oracle(spark, index_dir, oracle, engine):
+def test_local_searcher_matches_oracle(spark, index_dir, oracle):
     """The RAM-resident serving tier returns identical rankings from the
     same block files (no Spark in the query path)."""
     from sync2any_spark.query.serving import LocalSearcher
@@ -192,7 +190,7 @@ def test_local_searcher_matches_oracle(spark, index_dir, oracle, engine):
     searcher = LocalSearcher(index_dir)
     queries = pq.read_table(ensure_queries()).to_pandas()
     for q in queries.itertuples(index=False):
-        got = searcher.search(q.query_text, int(q.k), engine=engine)
+        got = searcher.search(q.query_text, int(q.k))
         want = o.topk(q.query_text, int(q.k))
         assert [g[0] for g in got] == [w[0] for w in want], q.query_text
         for (_, gs), (_, ws) in zip(got, want):
@@ -439,7 +437,7 @@ def test_replicated_serving_failover(spark, index_dir):
 def test_pyarrow_scan_equals_spark_scan(spark, index_dir):
     """The default driver fetch is a direct pyarrow read (zero Spark jobs);
     it must return exactly the Spark-scan path's blocks → identical
-    rankings and scores for the full query set, both engines."""
+    rankings and scores for the full query set."""
     searcher = IndexSearcher(spark, index_dir, route_budget=1 << 60)
     queries = pq.read_table(ensure_queries()).to_pandas()
     for q in queries.itertuples(index=False):

@@ -3,15 +3,7 @@ of N partition manifests, then re-run, equals a single-run build."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
-from sync2any_spark.index.builder import (
-    build_chunks,
-    build_docs,
-    build_index,
-    completed_partitions,
-)
+from sync2any_spark.index.builder import build_index, completed_partitions
 
 PARAMS = dict(n_partitions=12, n_buckets=8, n_salts=4, heavy_df_threshold=500)
 
@@ -57,51 +49,6 @@ def test_resume_equals_single_run(spark, transcripts_sf0001, tmp_path_factory):
     assert summary["partitions_built"] == n_total - len(done)
 
     assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
-
-
-def test_resume_hash_mode_equals_single_run(
-    spark, transcripts_sf0001, tmp_path_factory
-):
-    """shuffle-mode resume (part_id = hash(conv_id) % n): the round-1
-    semantics still hold when a custom tokenizer is requested."""
-    single = str(tmp_path_factory.mktemp("idx_single_h"))
-    build_index(
-        spark, transcripts_sf0001, single, resume=False, tokenizer="pandas",
-        **PARAMS,
-    )
-
-    resumed = str(tmp_path_factory.mktemp("idx_resumed_h"))
-    docs = build_docs(transcripts_sf0001)
-    partial = docs.where(
-        F.pmod(F.xxhash64("conv_id"), F.lit(PARAMS["n_partitions"])) < 5
-    )
-    build_chunks(
-        partial, f"{resumed}/chunks", PARAMS["n_partitions"], tokenizer="pandas",
-        n_buckets=PARAMS["n_buckets"], n_salts=PARAMS["n_salts"],
-    ).count()
-    done = completed_partitions(f"{resumed}/chunks")
-    assert 0 < len(done) < PARAMS["n_partitions"]
-
-    summary = build_index(
-        spark, transcripts_sf0001, resumed, resume=True, tokenizer="pandas",
-        **PARAMS,
-    )
-    assert summary["partitions_built"] == PARAMS["n_partitions"] - len(done)
-    assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
-
-
-def test_jvm_and_python_kernels_build_identical_index(
-    spark, transcripts_sf0001, tmp_path_factory
-):
-    """The JVM-tokenized SPIMI path (production) and the pandas-UDF
-    Python-tokenizer path must produce byte-identical indexes."""
-    a = str(tmp_path_factory.mktemp("idx_jvm"))
-    b = str(tmp_path_factory.mktemp("idx_py"))
-    build_index(spark, transcripts_sf0001, a, resume=False, tokenizer="jvm", **PARAMS)
-    build_index(
-        spark, transcripts_sf0001, b, resume=False, tokenizer="python", **PARAMS
-    )
-    assert _fingerprint(spark, a) == _fingerprint(spark, b)
 
 
 def test_doc_ids_stable_across_rebuilds(spark, transcripts_sf0001, tmp_path_factory):

@@ -4,9 +4,11 @@
 Replays build_postings_direct (the ZERO-SHUFFLE merge) against an existing
 chunks dir and prints per-group wall_ms plus the stage wall, so N-vs-4N
 merge scaling can be decomposed into (task skew, substrate, overhead).
+The merge layout (n_buckets, n_salts, heavy_df_threshold) is read from the
+index's meta.json: a mismatch with the chunks' layout would replay the
+shuffle fallback instead of the zero-shuffle merge.
 
-Usage: taskset -c 0-N python tools/merge_profile.py <index_dir> <cpus> \
-           [n_buckets] [n_salts] [heavy_df]
+Usage: taskset -c 0-N python tools/merge_profile.py <index_dir> <cpus>
 """
 import json
 import os
@@ -19,14 +21,17 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main():
     idx, cpus = sys.argv[1], int(sys.argv[2])
-    n_buckets = int(sys.argv[3]) if len(sys.argv) > 3 else 32
-    n_salts = int(sys.argv[4]) if len(sys.argv) > 4 else 8
-    heavy = int(sys.argv[5]) if len(sys.argv) > 5 else 20_000
     from sync2any_spark.session import get_spark
     from sync2any_spark.index.builder import (
         IndexPaths, build_postings_direct, build_term_stats_driver,
+        read_index_meta,
     )
     import pyarrow.dataset as ds
+
+    meta = read_index_meta(idx)
+    n_buckets = int(meta["n_buckets"])
+    n_salts = int(meta["n_salts"])
+    heavy = int(meta["heavy_df_threshold"])
 
     spark = get_spark(f"merge_prof_c{cpus}", cpus=cpus, shuffle_partitions=96)
     paths = IndexPaths(idx)
