@@ -45,8 +45,8 @@ def cmd_build(args) -> int:
         n_salts=args.salts,
         heavy_df_threshold=args.heavy_df,
         resume=not args.no_resume,
-        # fused one-pass build when the input allows it; build_index falls
-        # back to the two-pass build by itself otherwise
+        # used as-is when key-sorted; build_index range-sorts a copy first
+        # by itself otherwise
         source_path=args.input,
     )
     print(json.dumps(summary))

@@ -3,36 +3,37 @@
 Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
 
 1. **Stable doc ids** — ``doc_id`` = global rank of ``(conv_id, turn_idx)``,
-   computed with a scalable two-level prefix sum over per-conversation turn
-   counts (no single-partition window, no ``monotonically_increasing_id`` —
-   the id is a pure function of the data, never of task scheduling;
-   SURVEY.md §7.3). Mirrors the reference's composite-PK doc identity
-   (``transform/RecordsTransform.java:110-125``).
-2. **Docs store** — transcripts + ``doc_id`` + ``dl`` (token count). The doc
-   *is* the row, as in the reference's parameter projection
-   (``transform/RecordsTransform.java:54-76``); per-turn text equality vs the
-   source is asserted in tests.
-3. **SPIMI chunks** — shuffle-free: one task per source span (fused
-   build) or per docs-store file (two-pass fallback); the task reads its
-   input with pyarrow, tokenizes + tf-counts + varbyte-encodes in one
-   vectorized numpy pass (one kernel, ``_spimi_rows_for_texts``), and
-   writes one chunk parquet with an atomic tmp→rename plus a
-   per-partition manifest JSON; CDC delta segments run the same kernel. A
-   re-run skips completed partitions (the analog of the reference's
+   the reference's composite-PK doc identity
+   (``transform/RecordsTransform.java:110-125``, ``model/mysql/IndexMeta.java``),
+   so the id is a pure function of the data, never of task scheduling
+   (SURVEY.md §7.3). The build reads a source SORTED by that key: a span's
+   base id is the prefix row count from the parquet footers and a row's id
+   is base + its rank within the span. A source that is not provably sorted
+   (a DataFrame, too few spans, out-of-order footer conv ranges, or span
+   key ranges that overlap after the pass) is range-sorted once into
+   ``_sorted_src`` first. A duplicated key raises, naming the key.
+2. **One fused pass** — shuffle-free: one task per source span reads its
+   rows with pyarrow and writes a complete mini-segment: the docs-store
+   file (source row + ``doc_id`` + ``dl``; the doc *is* the row, as in the
+   reference's parameter projection, ``transform/RecordsTransform.java:54-76``)
+   and the SPIMI chunk (tokenize + tf-count + varbyte-encode in one
+   vectorized numpy kernel, ``_spimi_rows_for_texts``), committed by a
+   per-span manifest JSON written last; CDC delta segments run the same
+   kernel. A re-run skips completed spans (the analog of the reference's
    offset-reset / checkpoint-ack recovery,
-   ``extract/KafkaMsgListener.java:76-79,312-330``); a changed docs layout
+   ``extract/KafkaMsgListener.java:76-79,312-330``); a changed span list
    invalidates the manifests via ``_filelist.json``.
-4. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
+3. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
    hot terms are sums of few-hundred-byte rows, not row explosions; parquet
    column pruning keeps the posting binaries out of this scan).
-5. **Salted compaction merge** — chunks of a term are concatenated in doc-id
+4. **Salted compaction merge** — chunks of a term are concatenated in doc-id
    order and re-cut into 128-posting blocks with exact per-block max-score
    bounds. Terms with df above a threshold are salted into ``n_salts``
    disjoint sub-streams (a doc lives in exactly one stream, so BM25 sums
    stay exact) to keep the merge balanced under Zipf skew (B3). The chunk
    files are sorted by merge group, so each merge task reads its own
    group's row groups directly — no shuffle (``build_postings_direct``).
-6. **Postings layout** — parquet partitioned by ``bucket`` (md5-based:
+5. **Postings layout** — parquet partitioned by ``bucket`` (md5-based:
    first 15 hex chars of ``md5(term)`` mod ``n_buckets``, see
    ``index/bucketing.py`` — md5 so the driver AND the DuckDB oracle can
    compute buckets without a Spark job) so a query's ``bucket IN … AND
@@ -40,9 +41,10 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    scan. The merge tasks hold whole (bucket, sub, salt) groups, so the
    partitioned write emits directly from the merge — no extra shuffle.
 
-Scale posture: no corpus shuffle on the fused path; nothing collects more
-than per-partition counts (ints) to the driver. Knobs: ``n_partitions``
-(SPIMI group size ≈ corpus/n_partitions must fit an executor),
+Scale posture: at most one corpus exchange (the re-sort, only for a source
+that is not already sorted); nothing collects more than per-span counts
+and boundary keys to the driver. Knobs: ``n_partitions`` (the re-sort's
+file count, and the span floor an as-is source must reach),
 ``n_buckets`` (query-side pruning granularity), ``n_salts`` ×
 ``heavy_df_threshold`` (merge-group upper bound ≈ heavy-term df / n_salts).
 """
@@ -51,6 +53,8 @@ from __future__ import annotations
 
 import json
 import os
+import re
+import shutil
 import time
 import uuid
 from dataclasses import dataclass
@@ -78,6 +82,11 @@ MERGE_SUBSPLIT = 8
 # same input yields the identical job at every parallelism level (the
 # N-vs-4N methodology's invariant). Env-overridable.
 TASK_PACK = int(os.environ.get("SPARK_GRAFT_TASK_PACK", "3"))
+
+
+# the fused pass's duplicate-key error prefix; the driver re-raises a
+# task's message under it as a plain ValueError
+_DUP_KEY = "duplicate (conv_id, turn_idx) key"
 
 
 def _packed_partitions(n_units: int) -> int:
@@ -181,6 +190,11 @@ class IndexPaths:
     @property
     def metrics(self) -> str:
         return os.path.join(self.root, "metrics")
+
+    @property
+    def sorted_src(self) -> str:
+        # the build's range-sorted copy of a source it cannot use as-is
+        return os.path.join(self.root, "_sorted_src")
 
     @property
     def deletes(self) -> str:
@@ -299,9 +313,8 @@ def _conv_offsets(
     # density needs all four: count, min=0, max=n-1 AND countDistinct=n —
     # without the distinct check a duplicated key (turn_idx [0,1,1,3])
     # passes and the broadcast fast path would assign duplicate doc_ids.
-    # countDistinct costs a distinct-pair shuffle of the two PK columns;
-    # the fused build avoids it entirely via the exact driver-side check
-    # in _conv_offsets_driver.
+    # countDistinct costs a distinct-pair shuffle of the two PK columns
+    # (the snapshot build needs no offsets: it reads a key-sorted source).
     convs = (
         transcripts.groupBy("conv_id")
         .agg(
@@ -357,105 +370,6 @@ def _conv_offsets(
 BROADCAST_CONV_LIMIT = 20_000_000
 
 
-# sources at or below this row count compute conversation offsets with one
-# driver-side pyarrow read of the two PK columns (exact density check, no
-# Spark job, no job-latency floor); above it, the distributed agg path runs
-DRIVER_OFFSET_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_OFFSET_ROWS", 30_000_000))
-
-
-def source_row_count(source_path: str) -> int:
-    """Total rows of a parquet source from footer metadata only (one footer
-    read per file — the same metadata pass any scan planner pays). The file
-    list comes from ``ds.dataset(...).files`` so it covers EXACTLY the files
-    a subsequent ``ds.dataset(source_path)`` read would touch — a
-    nested/partitioned source counts fully, and the DRIVER_OFFSET_ROWS
-    budget can never under-price the read (round-3 ADVICE)."""
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    files = ds.dataset(source_path).files
-    return sum(pq.ParquetFile(p).metadata.num_rows for p in files)
-
-
-def _offsets_from_pk(conv, turn: np.ndarray) -> "pd.Series | None":
-    """Exact conversation offsets from raw (conv_id, turn_idx) arrays, or
-    None when turn_idx is not dense 0..n-1 per conversation (gaps AND
-    duplicates both fail: after the per-conv sort the turn sequence must
-    equal 0,1,…,n-1 exactly)."""
-    codes, uniq = pd.factorize(conv, sort=True)
-    order = np.lexsort((turn, codes))
-    t_sorted = np.asarray(turn, dtype=np.int64)[order]
-    c_sorted = codes[order]
-    change = np.concatenate(([True], c_sorted[1:] != c_sorted[:-1]))
-    starts_idx = np.flatnonzero(change)
-    n_turns = np.diff(np.append(starts_idx, len(c_sorted)))
-    run_pos = np.arange(len(t_sorted), dtype=np.int64) - np.repeat(
-        starts_idx, n_turns
-    )
-    if not np.array_equal(t_sorted, run_pos):
-        return None
-    starts = np.zeros(len(uniq), dtype=np.int64)
-    if len(uniq) > 1:
-        starts[1:] = np.cumsum(n_turns)[:-1]
-    return pd.Series(starts, index=np.asarray(uniq), dtype=np.int64)
-
-
-def _conv_offsets_driver(
-    transcripts: DataFrame, source_path: "str | None" = None
-) -> "pd.Series | None":
-    """conv_id → first-doc-id offsets as a pandas Series, or None when the
-    fused path doesn't apply (non-dense or duplicated turn_idx, or too many
-    conversations to hold driver-side).
-
-    Two executions by source size:
-
-    - ``source_path`` given and ≤ DRIVER_OFFSET_ROWS rows (footer count):
-      ONE driver-side pyarrow read of the two PK columns; sort + cumsum in
-      numpy. Exact density check including duplicates (the sorted per-conv
-      turn sequence must be 0..n-1). No Spark job at all — this removes a
-      ~2 s fixed job floor per build at bench scale.
-    - otherwise: a 2-column ``groupBy(conv_id)`` (map-side combined) with a
-      ``countDistinct(turn_idx)`` duplicate guard; the prefix sum runs in
-      numpy on the driver for ≤BROADCAST_CONV_LIMIT conversations.
-    """
-    if source_path is not None:
-        try:
-            n_rows = source_row_count(source_path)
-        except Exception:
-            n_rows = None
-        if n_rows is not None and n_rows <= DRIVER_OFFSET_ROWS:
-            import pyarrow.dataset as ds
-
-            tbl = ds.dataset(source_path).to_table(columns=["conv_id", "turn_idx"])
-            conv = tbl.column("conv_id").to_numpy(zero_copy_only=False)
-            turn = tbl.column("turn_idx").to_numpy(zero_copy_only=False)
-            return _offsets_from_pk(conv, turn)
-    agg = (
-        transcripts.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.min("turn_idx").alias("mn"),
-            F.max("turn_idx").alias("mx"),
-            F.countDistinct("turn_idx").alias("nd"),
-        )
-        .limit(BROADCAST_CONV_LIMIT + 1)
-        .toPandas()
-    )
-    if len(agg) > BROADCAST_CONV_LIMIT:
-        return None
-    if len(agg) and (
-        (agg["mn"] != 0).any()
-        or (agg["mx"] != agg["n_turns"] - 1).any()
-        or (agg["nd"] != agg["n_turns"]).any()
-    ):
-        return None
-    agg = agg.sort_values("conv_id", kind="stable")
-    starts = np.zeros(len(agg), dtype=np.int64)
-    if len(agg) > 1:
-        starts[1:] = np.cumsum(agg["n_turns"].to_numpy(dtype=np.int64))[:-1]
-    return pd.Series(starts, index=agg["conv_id"].to_numpy(), dtype=np.int64)
-
-
 def assign_doc_ids(transcripts: DataFrame, n_range_parts: int = 64) -> DataFrame:
     """transcripts + dense stable ``doc_id`` (global (conv_id, turn_idx) rank).
 
@@ -489,7 +403,10 @@ BASE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
 def build_docs(transcripts: DataFrame) -> DataFrame:
-    """Docs store: source row + doc_id + dl (JVM-side token count).
+    """The docs-store relation as one Spark plan: source row + doc_id + dl
+    (JVM-side token count). The snapshot build writes the same rows from
+    its fused pass; this plan serves the DuckDB contract query
+    ``docs_table_transcripts``.
 
     Schema evolution (A6/§1.3): the reference's contract is new-columns-
     appended-only (``transform/RecordsTransform.java:25-38`` re-pulls the
@@ -583,9 +500,9 @@ def _write_chunk(
     manifest["n_subs"] = MERGE_SUBSPLIT
     manifest["n_salts"] = int(n_salts)
     if span_keys is not None:
-        # sorted-source fast path: the sorted span's boundary PKs ride in
-        # the json sidecar so the driver can verify global key disjointness
-        # after the pass (verify_sorted_manifests)
+        # fused pass: the sorted span's boundary PKs ride in the json
+        # sidecar so the driver can verify global key disjointness after
+        # the pass (span_key_overlap)
         fc, ft, lc, lt = span_keys
         manifest["first_conv"] = fc
         manifest["first_turn"] = int(ft)
@@ -785,12 +702,12 @@ def _spimi_rows_for_texts(
 
 def _chunk_builder_pandas(chunks_dir: str, prefix: str = "", *,
                           n_buckets: int, n_salts: int,
-                          store_positions: bool = False, wfs=None):
-    """The SPIMI kernel over one partition's docs rows: tokenize, tf-count
-    and varbyte-encode entirely inside the Arrow batch (byte-level
-    tokenizer, regex fallback — ``_spimi_rows_for_texts``), then write the
-    chunk + manifest. Shared by the two-pass build (one docs file per
-    call) and the CDC delta segments (``build_chunks``)."""
+                          store_positions: bool = False):
+    """The SPIMI kernel over one CDC delta partition's docs rows
+    (``build_chunks``): tokenize, tf-count and varbyte-encode entirely
+    inside the Arrow batch (byte-level tokenizer, regex fallback —
+    ``_spimi_rows_for_texts``, the kernel the snapshot build's fused pass
+    runs too), then write the chunk + manifest."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
         t0 = time.time()
@@ -805,8 +722,7 @@ def _chunk_builder_pandas(chunks_dir: str, prefix: str = "", *,
         )
         return _write_chunk(
             chunks_dir, prefix, part_id, rows, len(pdf), n_terms, t0,
-            sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
-            n_salts=n_salts,
+            sum_dl=int(dls.sum()), n_buckets=n_buckets, n_salts=n_salts,
         )
 
     return build
@@ -857,88 +773,6 @@ def build_chunks(
     )
 
 
-def docs_files(docs_dir: str) -> "list[str]":
-    """Sorted data-file list of a docs store — the SPIMI work list in
-    ``files`` mode. Sorting pins part_id = list index across re-runs (the
-    docs store is immutable once written, so this is a pure function of the
-    build)."""
-    return sorted(
-        os.path.join(docs_dir, f)
-        for f in os.listdir(docs_dir)
-        if f.endswith(".parquet")
-    )
-
-
-def build_chunks_files(
-    spark: SparkSession,
-    docs_dir: str,
-    chunks_dir: str,
-    *,
-    n_buckets: int,
-    n_salts: int,
-    resume: bool = True,
-    prefix: str = "",
-    store_positions: bool = False,
-    filesystem=None,
-) -> DataFrame:
-    """SPIMI pass, shuffle-free: one task per docs-store file.
-
-    The docs store's files are the partition unit (exactly how Spark's own
-    scan planner schedules parquet work); each task opens ITS file with
-    pyarrow directly, so the corpus never moves through a shuffle or an
-    extra JVM→Python Arrow hop. part_id = index in the sorted file list —
-    stable, so resume skips completed files via their manifests. On a real
-    cluster the docs store lives on the shared FS/S3 and this degenerates
-    to the normal "executors read their assigned files" pattern.
-    """
-    files = docs_files(docs_dir)
-    # resume is only sound against the SAME docs layout: pin the work list
-    # in the chunks dir and invalidate stale manifests if it changed
-    names = [os.path.basename(p) for p in files]
-    resume = _pin_worklist(chunks_dir, names, resume, prefix, wfs=filesystem)
-    done = (
-        completed_partitions(chunks_dir, prefix, wfs=filesystem)
-        if resume
-        else set()
-    )
-    todo = [(i, p) for i, p in enumerate(files) if i not in done]
-    if not todo:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
-    inner = _chunk_builder_pandas(
-        chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts,
-        store_positions=store_positions, wfs=filesystem,
-    )
-
-    def kern(batches):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        # one compute thread per task — 32 concurrent tasks × a default
-        # all-cores Arrow pool thrashes (measured 8× kernel-time inflation)
-        pa.set_cpu_count(1)
-        pa.set_io_thread_count(2)
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                sub = pq.read_table(
-                    r.path, columns=["doc_id", "text", "dl"]
-                ).to_pandas()
-                if len(sub) == 0:
-                    # an empty docs file (tiny corpus fan-out) still gets a
-                    # manifest so resume sees the partition as complete
-                    yield _write_chunk(
-                        chunks_dir, prefix, int(r.part_id),
-                        dict(_EMPTY_CHUNK_ROWS), 0, 0, time.time(),
-                        wfs=filesystem, n_buckets=n_buckets, n_salts=n_salts,
-                    )
-                    continue
-                sub["part_id"] = r.part_id
-                yield inner(sub)
-
-    rdd = spark.sparkContext.parallelize(todo, _packed_partitions(len(todo)))
-    flist = spark.createDataFrame(rdd, "part_id int, path string")
-    return flist.mapInPandas(kern, schema=MANIFEST_SCHEMA)
-
-
 def read_manifests(chunks_dir: str, prefix: str = "", wfs=None) -> "list[dict]":
     """All committed partition manifests (the lineage/metrics sidecars),
     resolved through ``wfs`` (object-store deployments read them back from
@@ -953,6 +787,18 @@ def read_manifests(chunks_dir: str, prefix: str = "", wfs=None) -> "list[dict]":
     return out
 
 
+def _source_files(source_path: str) -> "list[str]":
+    """The parquet files of a source, in lexical order — the order the
+    span list and the doc ids follow."""
+    if not os.path.isdir(source_path):
+        return [source_path]
+    return sorted(
+        os.path.join(source_path, f)
+        for f in os.listdir(source_path)
+        if f.endswith(".parquet")
+    )
+
+
 def plan_spans(source_path: str, span_mb: int = 8) -> "list[tuple[str, int, int]]":
     """Work list for the fused segment build: (file, rg_lo, rg_hi) spans of
     ~span_mb (uncompressed) bytes. Row groups are parquet's atomic read
@@ -962,18 +808,10 @@ def plan_spans(source_path: str, span_mb: int = 8) -> "list[tuple[str, int, int]
     pass any planner pays)."""
     import pyarrow.parquet as pq
 
-    if os.path.isdir(source_path):
-        files = sorted(
-            os.path.join(source_path, f)
-            for f in os.listdir(source_path)
-            if f.endswith(".parquet")
-        )
-    else:
-        files = [source_path]
     spans: list[tuple[str, int, int]] = []
     # span_mb <= 0 → one row group per span (finest possible granularity)
     budget = max(span_mb, 0) << 20
-    for path in files:
+    for path in _source_files(source_path):
         md = pq.ParquetFile(path).metadata
         lo, acc = 0, 0
         for g in range(md.num_row_groups):
@@ -987,51 +825,47 @@ def plan_spans(source_path: str, span_mb: int = 8) -> "list[tuple[str, int, int]
 
 
 def sorted_span_bases(
-    source_path: str, spans: "list[tuple[str, int, int]]"
+    source_path: str, spans: "list[tuple[str, int, int]]",
+    check_order: bool = True,
 ) -> "list[int] | None":
-    """Per-span base doc ids for the SORTED-SOURCE fast path, or None.
+    """Per-span base doc ids for the sorted fused pass, or None.
 
-    When the source is already globally ordered by ``conv_id`` at row-group
-    granularity (footer min/max stats: ``max_conv(g) <= min_conv(g+1)``
-    across the whole file sequence), the dense ``doc_id`` — the global
-    (conv_id, turn_idx) rank — is simply the global row index: each span's
-    base is the prefix row count from the footers, and a task's local rank
-    within its sorted span completes the id. Cost: the SAME footer walk
-    ``plan_spans`` already paid (no column read, no Spark job) — this
-    replaces the 1–2.6 s driver-side PK-column read that showed up as the
-    anti-scaling ``offsets`` stage in BENCH_r04.
+    When the source is globally ordered by ``(conv_id, turn_idx)``, the
+    dense ``doc_id`` — the global key rank — is simply the global row
+    index: each span's base is the prefix row count from the footers, and
+    a task's local rank within its sorted span completes the id. Cost: the
+    same footer walk ``plan_spans`` already paid (no column read, no Spark
+    job).
 
-    This is a *precheck*: group-granular conv ordering plus task-side
-    within-span verification (strict (conv, turn) ordering after the local
-    sort) plus the post-pass manifest boundary check (last key of span i <
-    first key of span i+1, see ``verify_sorted_manifests``) together prove
-    the global ranking exactly. Equality of conv stats across a boundary is
-    allowed here — a conversation may straddle row groups; the manifest
-    check settles the turn order at every span boundary.
+    ``check_order`` is a *precheck* for a source used as-is: the footer
+    ``conv_id`` min/max stats must show group-granular order
+    (``max_conv(g) <= min_conv(g+1)`` across the whole file sequence),
+    else None. Equality across a boundary is allowed — a conversation may
+    straddle row groups. The authority is the post-pass boundary check
+    (last key of span i < first key of span i+1, see
+    ``span_key_overlap``) together with each task's local sort.
+    The build's own re-sorted copy skips the precheck: it is sorted by
+    construction.
     """
     import pyarrow.parquet as pq
 
-    if os.path.isdir(source_path):
-        files = sorted(
-            os.path.join(source_path, f)
-            for f in os.listdir(source_path)
-            if f.endswith(".parquet")
-        )
-    else:
-        files = [source_path]
     prev_max = None
     group_rows: "dict[tuple[str, int], int]" = {}
-    for path in files:
+    for path in _source_files(source_path):
         md = pq.ParquetFile(path).metadata
-        names = {
-            md.row_group(0).column(i).path_in_schema: i
-            for i in range(md.row_group(0).num_columns)
-        } if md.num_row_groups else {}
-        if "conv_id" not in names:
-            return None
-        ci = names["conv_id"]
+        if check_order and md.num_row_groups:
+            rg0 = md.row_group(0)
+            names = {
+                rg0.column(i).path_in_schema: i for i in range(rg0.num_columns)
+            }
+            if "conv_id" not in names:
+                return None
+            ci = names["conv_id"]
         for g in range(md.num_row_groups):
             rg = md.row_group(g)
+            group_rows[(path, g)] = rg.num_rows
+            if not check_order:
+                continue
             st = rg.column(ci).statistics
             if st is None or not st.has_min_max:
                 return None
@@ -1041,7 +875,6 @@ def sorted_span_bases(
             if prev_max is not None and mn < prev_max:
                 return None  # overlapping conv ranges — not sorted
             prev_max = mx
-            group_rows[(path, g)] = rg.num_rows
     bases, acc = [], 0
     for path, lo, hi in spans:
         bases.append(acc)
@@ -1051,8 +884,8 @@ def sorted_span_bases(
 
 def _wipe_dir(wfs, path: str) -> None:
     """Remove every file directly under ``path`` through the WriteFS
-    adapter (fallback-path cleanup; subdirectories are left — the fused
-    build writes flat dirs only)."""
+    adapter (the outputs of a rejected as-is pass; subdirectories are
+    left — the fused pass writes flat dirs only)."""
     from .fswrite import LOCAL
 
     _wfs = wfs or LOCAL
@@ -1063,18 +896,19 @@ def _wipe_dir(wfs, path: str) -> None:
             pass
 
 
-def verify_sorted_manifests(mans: "list[dict]") -> bool:
-    """Post-pass authority for the sorted-source fast path: every committed
-    span manifest carries its sorted span's first/last (conv_id, turn_idx)
-    keys; the global ranking is exact iff consecutive spans' key ranges are
-    disjoint and ascending. Empty spans (no rows) are skipped — but a
-    NON-empty manifest without boundary keys (a resumed chunk from an
-    earlier offsets-path or pre-round-5 run) fails verification outright:
-    the boundaries adjacent to an unkeyed span would otherwise go
-    unchecked (ADVICE r5 #1)."""
-    for m in mans:
-        if m.get("rows", 0) > 0 and m.get("first_conv") is None:
-            return False
+def span_key_overlap(mans: "list[dict]") -> "tuple | None":
+    """Post-pass authority for the sorted fused pass: None when every
+    committed span manifest carries its sorted span's first/last
+    (conv_id, turn_idx) keys and consecutive spans' key ranges are disjoint
+    and ascending (the global ranking is then exact), else the first span
+    key that breaks this. Empty spans (no rows) are skipped; a non-empty
+    manifest without boundary keys (a resumed chunk of an older build)
+    fails with ``(None, None)``, since the boundaries next to it would
+    otherwise go unchecked (ADVICE r5 #1). On a source sorted by
+    construction the only possible failure is a key repeated across a span
+    boundary."""
+    if any(m.get("rows", 0) > 0 and m.get("first_conv") is None for m in mans):
+        return (None, None)
     keyed = sorted(
         (m for m in mans if m.get("first_conv") is not None),
         key=lambda m: m["partition_id"],
@@ -1082,18 +916,15 @@ def verify_sorted_manifests(mans: "list[dict]") -> bool:
     prev = None
     for m in keyed:
         first = (m["first_conv"], m["first_turn"])
-        last = (m["last_conv"], m["last_turn"])
         if prev is not None and first <= prev:
-            return False
-        if last < first:
-            return False
-        prev = last
-    return True
+            return first
+        prev = (m["last_conv"], m["last_turn"])
+    return None
 
 
 def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
-                  prefix: str = "", wfs=None) -> bool:
-    """Pin the span/file work list under the chunks dir; returns the
+                  wfs=None) -> bool:
+    """Pin the span work list under the chunks dir; returns the
     effective resume flag (False wipes stale outputs — manifests from a
     different layout cannot be trusted as span indices). All I/O goes
     through ``wfs`` so the worklist and the wiped files live on the SAME
@@ -1102,7 +933,7 @@ def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
 
     _wfs = wfs or LOCAL
     _wfs.makedirs(chunks_dir)
-    flist_path = os.path.join(chunks_dir, f"{prefix}_filelist.json")
+    flist_path = os.path.join(chunks_dir, "_filelist.json")
     if resume:
         if _wfs.exists(flist_path):
             if _wfs.read_json(flist_path) != names:
@@ -1111,7 +942,7 @@ def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
             resume = False
     if not resume:
         for n in _wfs.listdir(chunks_dir):
-            if n.startswith(f"{prefix}part-"):
+            if n.startswith("part-"):
                 _wfs.remove(os.path.join(chunks_dir, n))
     _wfs.write_json(names, flist_path)
     return resume
@@ -1119,18 +950,15 @@ def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
 
 def build_segments(
     spark: SparkSession,
-    source_path: str,
     index_dir: str,
-    offsets: "pd.Series | None",
+    spans: "list[tuple[str, int, int]]",
+    span_bases: "list[int]",
     *,
     n_buckets: int,
     n_salts: int,
     resume: bool = True,
-    span_mb: int = 8,
     store_positions: bool = False,
     filesystem=None,
-    span_bases: "list[int] | None" = None,
-    spans: "list[tuple[str, int, int]] | None" = None,
 ) -> DataFrame:
     """Fused segment build — ONE corpus pass writes docs store + SPIMI chunk.
 
@@ -1139,103 +967,76 @@ def build_segments(
     written by Arrow C++, which handles string-heavy parquet several times
     faster than the JVM writer) and the postings chunk — then commits via
     its manifest (written last, so a crash leaves only complete segments).
-    ``doc_id = conv_offset[conv_id] + turn_idx`` per row (dense-PK fast
-    path), so no shuffle touches the corpus at all.
 
-    ``offsets`` is the conversation-offset table as a pandas Series
-    (conv_id → first doc id), broadcast to every task. Above
-    ``BROADCAST_CONV_LIMIT`` conversations, callers must use the two-pass
-    path (``build_docs`` + ``build_chunks_files``) instead.
-
-    ``span_bases`` (from ``sorted_span_bases``) switches to the
-    SORTED-SOURCE fast path: ``doc_id = span_base + local (conv, turn)
-    rank`` — no conversation-offset table at all, no per-row dict map, and
-    no driver-side PK-column read before the pass. Tasks verify strict
-    within-span key ordering (duplicates raise) and record their boundary
-    keys in the manifest for the driver's global disjointness check. This
-    also drops the broadcast-conversation-table memory bound entirely: the
-    10^9-conversation regime needs only one long per span.
+    The source is sorted by ``(conv_id, turn_idx)``, so ``doc_id =
+    span_bases[i] + local (conv, turn) rank`` (``sorted_span_bases``): no
+    conversation-offset table, no shuffle, and one long per span on the
+    driver. Each task sorts its span, raises on a duplicated key (naming
+    it) and records its first/last keys in the manifest for the driver's
+    global disjointness check (``span_key_overlap``).
     """
     paths = IndexPaths(index_dir)
-    if spans is None:
-        spans = plan_spans(source_path, span_mb)
     names = [f"{os.path.basename(p)}:{lo}-{hi}" for p, lo, hi in spans]
     resume = _pin_worklist(paths.chunks, names, resume, wfs=filesystem)
     done = completed_partitions(paths.chunks, wfs=filesystem) if resume else set()
-    # the docs dir must hold EXACTLY one part file per span: anything else
-    # (a shrunk source, a changed span_mb, or a prior two-pass build with
-    # Spark-UUID file names) is stale and would serve duplicate rows that
-    # disagree with the manifest-derived n_docs/avgdl (ADVICE round 2).
-    # Listed/removed through WriteFS so a filesystem= deployment cleans the
-    # store the tasks actually wrote to (round-3 ADVICE).
-    from .fswrite import LOCAL as _LOCAL_FS
+    from .fswrite import LOCAL
 
-    _wfs0 = filesystem or _LOCAL_FS
+    wfs = filesystem or LOCAL
+    # the docs dir must hold EXACTLY one part file per span: anything else
+    # (a shrunk source, a changed span_mb, a pass over a different source)
+    # is stale and would serve duplicate rows that disagree with the
+    # manifest-derived n_docs/avgdl (ADVICE round 2). Listed/removed
+    # through WriteFS so a filesystem= deployment cleans the store the
+    # tasks actually wrote to (round-3 ADVICE).
     expected = {f"part-{i:05d}.parquet" for i in range(len(spans))}
-    for n in _wfs0.listdir(paths.docs):
+    for n in wfs.listdir(paths.docs):
         if n not in expected:
             try:
-                _wfs0.remove(os.path.join(paths.docs, n))
+                wfs.remove(os.path.join(paths.docs, n))
             except (IsADirectoryError, PermissionError, OSError):
                 pass  # subdirectory or non-file entry — not stale docs data
-    bases = span_bases if span_bases is not None else [-1] * len(spans)
     todo = [
-        (i, p, lo, hi, bases[i])
+        (i, p, lo, hi, span_bases[i])
         for i, (p, lo, hi) in enumerate(spans)
         if i not in done
     ]
     if not todo:
         return spark.createDataFrame([], MANIFEST_SCHEMA)
-    from .fswrite import LOCAL
-
-    wfs = filesystem or LOCAL
     wfs.makedirs(paths.docs)
-    bc = spark.sparkContext.broadcast(offsets)
     chunks_dir, docs_dir = paths.chunks, paths.docs
 
     def kern(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
+        # one compute thread per task — concurrent tasks × a default
+        # all-cores Arrow pool thrash (measured 8× kernel-time inflation)
         pa.set_cpu_count(1)
         pa.set_io_thread_count(2)
-        off = bc.value
         for pdf in batches:
             for r in pdf.itertuples(index=False):
                 t0 = time.time()
                 part_id = int(r.part_id)
-                base = int(r.base)
                 pf = pq.ParquetFile(r.path)
                 tbl = pf.read_row_groups(list(range(int(r.lo), int(r.hi))))
-                conv = tbl.column("conv_id").to_pandas()
+                conv = tbl.column("conv_id").to_pandas().to_numpy()
                 turn = tbl.column("turn_idx").to_numpy().astype(np.int64)
+                codes = pd.factorize(conv, sort=True)[0]
+                order = np.lexsort((turn, codes))
+                c_s, t_s = codes[order], turn[order]
+                dup = np.flatnonzero((c_s[1:] == c_s[:-1]) & (t_s[1:] == t_s[:-1]))
+                if dup.size:
+                    i = order[dup[0]]
+                    raise ValueError(
+                        f"{_DUP_KEY} ({str(conv[i])!r}, {int(turn[i])})"
+                    )
+                doc_ids = int(r.base) + np.arange(len(order), dtype=np.int64)
                 span_keys = None
-                if base >= 0:
-                    # sorted-source fast path: doc_id = span base + local
-                    # (conv, turn) rank; strict-ordering check catches
-                    # duplicate PKs (the driver verifies span disjointness
-                    # from the manifest boundary keys afterwards)
-                    codes = pd.factorize(conv, sort=True)[0]
-                    order = np.lexsort((turn, codes))
-                    c_s, t_s = codes[order], turn[order]
-                    if len(c_s) > 1 and np.any(
-                        (c_s[1:] == c_s[:-1]) & (t_s[1:] <= t_s[:-1])
-                    ):
-                        raise ValueError(
-                            "sorted-source fast path: duplicate "
-                            "(conv_id, turn_idx) key within span"
-                        )
-                    doc_ids = base + np.arange(len(order), dtype=np.int64)
-                    if len(order):
-                        conv_np = conv.to_numpy()
-                        span_keys = (
-                            str(conv_np[order[0]]), int(t_s[0]),
-                            str(conv_np[order[-1]]), int(t_s[-1]),
-                        )
-                else:
-                    doc_ids = conv.map(off).to_numpy(dtype=np.int64) + turn
-                    order = np.argsort(doc_ids, kind="stable")
-                    doc_ids = doc_ids[order]
+                if len(order):
+                    span_keys = (
+                        str(conv[order[0]]), int(t_s[0]),
+                        str(conv[order[-1]]), int(t_s[-1]),
+                    )
                 tbl = tbl.take(order)
                 rows, n_terms, dls = _spimi_rows_for_texts(
                     part_id, doc_ids, tbl.column("text"),
@@ -2189,6 +1990,48 @@ def force_merge_postings(
     }
 
 
+def _plan_build_spans(
+    source_path: str, span_mb: int, par: int, n_partitions: int
+) -> "list[tuple[str, int, int]]":
+    """The fused pass's span list. ``span_mb`` is an UPPER bound (guide
+    §2.2/§6: derive the partitioning from input size AND available
+    parallelism, never a fixed constant): below ~12 spans per core the
+    plan is re-cut finer — smaller fused tasks keep their tokenize/encode
+    working set cache-resident (measured 1.5× on the SPIMI stage at
+    local[32]) and the task tail packs better — and below
+    ``n_partitions`` spans it falls to row-group granularity. Row groups
+    stay the atomic unit, so a source with huge row groups keeps coarse
+    spans."""
+    spans = plan_spans(source_path, span_mb)
+    for cand in (2, 1):
+        if len(spans) >= 12 * par or cand >= span_mb:
+            break
+        finer = plan_spans(source_path, cand)
+        if len(finer) > len(spans):
+            spans = finer
+    if len(spans) < n_partitions:
+        finest = plan_spans(source_path, 0)
+        if len(finest) > len(spans):
+            spans = finest
+    return spans
+
+
+def _range_sort(transcripts: DataFrame, out: str, n_partitions: int) -> None:
+    """Write ``transcripts`` sorted by (conv_id, turn_idx) as ``n_partitions``
+    files — one range exchange, then a local sort, so lexical file order is
+    key order and a conversation never spans two files. Snappy (a
+    transient full corpus copy: compression CPU would dominate) with 4 MB
+    row groups, so the span planner cuts cache-resident fused tasks."""
+    (
+        transcripts.repartitionByRange(n_partitions, "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
+        .write.mode("overwrite")
+        .option("compression", "snappy")
+        .option("parquet.block.size", str(4 << 20))
+        .parquet(out)
+    )
+
+
 def build_index(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -2207,29 +2050,36 @@ def build_index(
 ) -> dict:
     """Full snapshot build (reference entry point 1, SURVEY.md §3.1).
 
+    One physical path: the sorted fused pass (``build_segments``) — each
+    task reads one span of a (conv_id, turn_idx)-sorted source and flushes
+    a complete mini-segment (docs file + SPIMI chunk), Lucene segment-flush
+    style; corpus stats come from the manifests — then the terms stage and
+    the zero-shuffle postings merge.
+
+    The source at ``source_path`` is used as-is when it plans at least
+    ``max(n_partitions // 2, min(cores, n_partitions))`` spans and its
+    footers prove conv order (``sorted_span_bases``). Otherwise
+    ``transcripts`` is range-sorted once into ``<index_dir>/_sorted_src``
+    (``n_partitions`` files) and the same pass runs over that copy. The
+    summary's ``resort_reason`` (also a ``("resort", reason, 1.0)`` metrics
+    row) says why: ``"no source_path"``, ``"too few spans"``, ``"footer
+    conv order"``, or ``"span key ranges overlap"`` — the as-is pass ran
+    but its span boundary keys overlap, so its outputs are wiped and the
+    build re-sorts and retries, once. It is None when the source was used
+    as-is. A duplicated (conv_id, turn_idx) key raises ``ValueError``
+    naming the key. With ``resume`` a committed copy (``_SUCCESS``) is
+    reused, so the span list and the manifests of a crashed run stay
+    valid; the copy is removed once ``meta.json`` is written.
+
     ``filesystem`` (an ``index.fswrite.WriteFS``) redirects every TASK-SIDE
     direct write (docs files, SPIMI chunks, postings blocks, manifests)
     through a pyarrow filesystem — the object-store deployment path; None
     keeps plain local I/O. Commit protocol per fswrite.py: data files
     first, manifest last, snapshot visibility via the meta.json swap.
 
-    Physical strategies, picked by data shape (same logical output):
-
-    - **fused** (``source_path`` given + enough source spans + sorted
-      source or dense PK): ONE corpus pass — each task reads its source
-      span and flushes a complete mini-segment (docs file + SPIMI chunk),
-      Lucene segment-flush style. Corpus stats come from the manifests.
-    - **two-pass** ``files`` (no ``source_path``, too few spans, or
-      non-dense PKs): the docs store is written first, then a
-      shuffle-free SPIMI pass runs one task per docs file.
-
-    Both feed the same zero-shuffle postings merge.
-
     ``input_split_mb`` narrows ``spark.sql.files.maxPartitionBytes`` for the
-    docs stage of the two-pass path — needed when the source sits in a few
-    large files and the map-only docs write would otherwise produce too few
-    files for SPIMI / query parallelism (a bench-scale artifact; a 100 TB
-    source has orders of magnitude more files than cores).
+    re-sort's scan of ``transcripts`` (a source in a few large files would
+    otherwise feed the range exchange from too few scan tasks).
 
     Returns a summary dict with stage timings (also appended to the metrics
     table — the analog of the reference's tpq/lag stats, A24).
@@ -2237,6 +2087,24 @@ def build_index(
     t_start = time.time()  # build.wall_s covers the whole call
     paths = IndexPaths(index_dir)
     metrics: list[tuple[str, str, float]] = []
+    par = spark.sparkContext.defaultParallelism
+
+    def fused_pass(spans, bases, resume):
+        t = time.time()
+        manifest = build_segments(
+            spark, index_dir, spans, bases, resume=resume, n_buckets=n_buckets,
+            n_salts=n_salts, store_positions=store_positions,
+            filesystem=filesystem,
+        )
+        try:
+            built = manifest.count()  # action: the fused corpus pass
+        except Exception as e:  # a task's duplicate-key raise, re-raised
+            dup = re.search(re.escape(_DUP_KEY) + ".*", str(e))
+            if dup is None:
+                raise
+            raise ValueError(dup.group(0)) from None
+        metrics.append(("spimi", "wall_s", time.time() - t))
+        return built, read_manifests(paths.chunks, wfs=filesystem)
 
     prev_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     if input_split_mb:
@@ -2244,153 +2112,47 @@ def build_index(
             "spark.sql.files.maxPartitionBytes", str(input_split_mb * 1024 * 1024)
         )
     try:
-        fused = False
+        t0 = time.time()
+        reason = "no source_path"
         if source_path:
-            # the fused pass can't split below row-group granularity: when
-            # the source has fewer spans than the requested parallelism
-            # (tiny corpora / coarse row groups), the two-pass path fans out
-            # with one shuffle instead
-            t0 = time.time()
-            par = spark.sparkContext.defaultParallelism
-            spans = plan_spans(source_path, span_mb)
-            # Scale-adaptive span refinement (guide §2.2/§6: derive the
-            # partitioning from input size AND available parallelism, never
-            # a fixed constant): span_mb is an UPPER bound. When the plan
-            # yields fewer than ~12 spans per core, re-plan finer — smaller
-            # fused tasks keep their tokenize/encode working set
-            # cache-resident (measured 1.5× on the SPIMI stage at local[32])
-            # and the task tail packs better. Row groups stay the atomic
-            # unit, so a source with huge row groups keeps coarse spans;
-            # levels with few cores (the N-vs-4N pair) are unaffected
-            # because their plans already exceed 12 spans/core.
-            for cand in (2, 1):
-                if len(spans) >= 12 * par or cand >= span_mb:
-                    break
-                finer = plan_spans(source_path, cand)
-                if len(finer) > len(spans):
-                    spans = finer
-            # fused-path coverage: a source whose row groups allow at least
-            # half the requested partition count (and at least the core
-            # count) is still far cheaper through the ONE fused pass than
-            # through the two-pass docs-write + SPIMI fallback — re-plan at
-            # row-group granularity before giving up on the fused path.
-            fused_floor = max(n_partitions // 2, min(par, n_partitions))
-            if len(spans) < n_partitions:
-                finest = plan_spans(source_path, 0)
-                if len(finest) > len(spans):
-                    spans = finest
-            strategies: "list[tuple[str, list | None]]" = []
-            if len(spans) >= fused_floor:
-                bases = sorted_span_bases(source_path, spans)
-                if bases is not None:
-                    # footer stats prove group-granular conv ordering: no
-                    # PK-column read at all (kills the anti-scaling
-                    # ``offsets`` stage of BENCH_r04: 0.97/1.27/2.57 s at
-                    # local[2/8/32] → footer-walk milliseconds)
-                    strategies.append(("sorted", bases))
-                strategies.append(("conv_offsets", None))
-            for strat, bases_i in strategies:
-                if strat == "conv_offsets":
-                    offsets = _conv_offsets_driver(
-                        transcripts, source_path=source_path
-                    )
-                    if offsets is None:
-                        break  # non-dense PKs → two-pass path below
-                else:
-                    offsets = None
-                metrics.append(("offsets", "wall_s", time.time() - t0))
-                t2 = time.time()
-                try:
-                    manifest = build_segments(
-                        spark, source_path, index_dir, offsets,
-                        resume=resume, span_mb=span_mb,
-                        store_positions=store_positions, filesystem=filesystem,
-                        n_buckets=n_buckets, n_salts=n_salts,
-                        span_bases=bases_i if strat == "sorted" else None,
-                        spans=spans,
-                    )
-                    built = manifest.count()  # action: the fused corpus pass
-                    mans = read_manifests(paths.chunks, wfs=filesystem)
-                    if strat == "sorted" and not verify_sorted_manifests(mans):
-                        raise ValueError(
-                            "sorted-source fast path: span key ranges overlap"
-                        )
-                except Exception as e:
-                    if strat != "sorted":
-                        raise
-                    # ONLY the fast path's own validation failures retry
-                    # (within-span duplicate key, cross-span overlap —
-                    # every such raise carries the 'sorted-source fast
-                    # path' marker). Transient IO / OOM / executor loss
-                    # re-raises instead of masking itself behind a silent
-                    # doubled rebuild (ADVICE r5 #2).
-                    if "sorted-source fast path" not in str(e):
-                        raise
-                    # wipe the partial outputs and retry with the
-                    # conversation-offset table; record the retry as its
-                    # own metric instead of a duplicate 'offsets' row
-                    _wipe_dir(filesystem, paths.chunks)
-                    _wipe_dir(filesystem, paths.docs)
-                    metrics.append(("offsets", "sorted_retry", 1.0))
-                    t0 = time.time()
-                    continue
-                fused = True
-                break
-            if fused:
-                metrics.append(("spimi", "wall_s", time.time() - t2))
-                metrics.append(("spimi", "partitions_built", float(built)))
-                metrics.append(("spimi", "fused", 1.0))
-
-                t1 = time.time()
-                n_docs = sum(m["rows"] for m in mans)
-                total_tokens = sum(m.get("sum_dl", 0) for m in mans)
-                avgdl = float(total_tokens) / n_docs if n_docs else 0.0
-                write_stats_driver(paths.stats, n_docs, avgdl, total_tokens)
-                metrics.append(("stats", "wall_s", time.time() - t1))
-
-        if not fused:
-            t0 = time.time()
-            docs_done = os.path.exists(os.path.join(paths.docs, "_SUCCESS"))
-            if resume and docs_done:
-                # a committed docs store is immutable for this build:
-                # resuming must not rewrite it (new file names would orphan
-                # the SPIMI manifests, and the corpus copy is the most
-                # expensive IO stage)
-                pass
+            spans = _plan_build_spans(source_path, span_mb, par, n_partitions)
+            bases = None
+            if len(spans) < max(n_partitions // 2, min(par, n_partitions)):
+                reason = "too few spans"
             else:
-                docs = build_docs(transcripts)
-                # the docs files are the SPIMI work units: if the source
-                # splits into fewer than n_partitions scan tasks (tiny
-                # corpora, or one giant unsplittable file), spend one
-                # shuffle to fan out — otherwise stay map-only (the
-                # 100 TB regime: splits ≫ cores)
-                if transcripts.rdd.getNumPartitions() < n_partitions:
-                    docs = docs.repartition(n_partitions, "conv_id")
-                # snappy: the docs store is a full corpus copy — compression
-                # CPU would dominate this stage; read-heavy postings stay zstd
-                docs.write.mode("overwrite").option(
-                    "compression", "snappy"
-                ).parquet(paths.docs)
-            docs = spark.read.parquet(paths.docs)
-            metrics.append(("docs", "wall_s", time.time() - t0))
-
+                # footer stats only: no PK-column read, no Spark job
+                bases = sorted_span_bases(source_path, spans)
+                reason = "footer conv order" if bases is None else None
+        metrics.append(("offsets", "wall_s", time.time() - t0))
+        if reason is None:
+            built, mans = fused_pass(spans, bases, resume)
+            if span_key_overlap(mans) is not None:
+                _wipe_dir(filesystem, paths.chunks)
+                _wipe_dir(filesystem, paths.docs)
+                reason = "span key ranges overlap"
+        if reason is not None:
             t1 = time.time()
-            n_docs, avgdl, total_tokens = docs.agg(
-                F.count("*"), F.avg("dl"), F.sum("dl")
-            ).first()
-            avgdl = float(avgdl or 0.0)
-            write_stats_driver(paths.stats, n_docs, avgdl, int(total_tokens or 0))
-            metrics.append(("stats", "wall_s", time.time() - t1))
+            src = paths.sorted_src
+            if not (resume and os.path.exists(os.path.join(src, "_SUCCESS"))):
+                _range_sort(transcripts, src, n_partitions)
+            metrics.append(("resort", "wall_s", time.time() - t1))
+            metrics.append(("resort", reason, 1.0))
+            t0 = time.time()
+            spans = _plan_build_spans(src, span_mb, par, n_partitions)
+            bases = sorted_span_bases(src, spans, check_order=False)
+            metrics.append(("offsets", "wall_s", time.time() - t0))
+            built, mans = fused_pass(spans, bases, resume)
+            dup = span_key_overlap(mans)
+            if dup is not None:  # sorted by construction: a repeated key
+                raise ValueError(f"{_DUP_KEY} {dup!r} across spans")
+        metrics.append(("spimi", "partitions_built", float(built)))
 
-            t2 = time.time()
-            manifest = build_chunks_files(
-                spark, paths.docs, paths.chunks, n_buckets=n_buckets,
-                n_salts=n_salts, resume=resume,
-                store_positions=store_positions, filesystem=filesystem,
-            )
-            built = manifest.count()  # action: runs the SPIMI pass
-            metrics.append(("spimi", "wall_s", time.time() - t2))
-            metrics.append(("spimi", "partitions_built", float(built)))
+        t1 = time.time()
+        n_docs = sum(m["rows"] for m in mans)
+        total_tokens = sum(m.get("sum_dl", 0) for m in mans)
+        avgdl = float(total_tokens) / n_docs if n_docs else 0.0
+        write_stats_driver(paths.stats, n_docs, avgdl, total_tokens)
+        metrics.append(("stats", "wall_s", time.time() - t1))
 
         t3 = time.time()
         # terms stage: driver pyarrow aggregation under the manifest-derived
@@ -2451,6 +2213,7 @@ def build_index(
     }
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         json.dump(meta, f, indent=1)
+    shutil.rmtree(paths.sorted_src, ignore_errors=True)
 
     wall = time.time() - t_start
     metrics.append(("build", "wall_s", wall))
@@ -2463,4 +2226,5 @@ def build_index(
         "wall_s": wall,
         "docs_per_s": float(n_docs) / max(wall, 1e-9),
         "partitions_built": int(built),
+        "resort_reason": reason,
     }

@@ -762,9 +762,9 @@ def _apply_increments_distributed(
     _lap("join_and_tombstones")
 
     # fresh doc ids above the current max — never reused. Batch-internal
-    # rank comes from the same scalable two-level prefix sum the snapshot
-    # build uses (assign_doc_ids), so arbitrarily large backfill batches
-    # don't funnel through a single-partition window. The id high-water
+    # rank comes from a scalable two-level prefix sum (assign_doc_ids), so
+    # arbitrarily large backfill batches don't funnel through a
+    # single-partition window. The id high-water
     # mark rides in meta.json (round 5) — the snapshot build and every
     # commit maintain it, so no full docs-store scan prices the next id;
     # the agg below is only the migration fallback for pre-round-5 metas.
@@ -1007,8 +1007,8 @@ def maybe_compact(
 
 # The live-splice temp-corpus path holds every delta doc row and tombstone
 # id on the driver for its planning pre-pass; past this row budget compact
-# falls back to the distributed range-shuffle path (large backfills /
-# delta-heavy indexes keep the scale-safe plan).
+# hands the live docs to build_index, which range-sorts them (large
+# backfills / delta-heavy indexes keep the scale-safe plan).
 COMPACT_SPLICE_ROWS = int(
     os.environ.get("SPARK_GRAFT_COMPACT_SPLICE_ROWS", "2000000")
 )
@@ -1026,15 +1026,15 @@ def _splice_live_sorted(
     One task per base file reads its span, drops tombstoned rows, splices
     in the (driver-pre-sorted) delta rows of its key interval, and writes
     the merged span; lexical output order preserves the global key order,
-    so the fused build's sorted-source fast path consumes it unchanged
-    (and its boundary verifier still audits the result downstream).
+    so the build's fused pass consumes it as-is (and its boundary
+    verifier still audits the result downstream).
 
     Returns ``(engaged, decline_reason)``: ``(True, None)`` when the temp
     corpus was written, ``(False, reason)`` when preconditions fail — no
     base store, footer stats missing or out of order, delta/tombstone rows
     past the driver budget, or the row-conservation check after the merge
-    — in which case the caller falls back to the distributed range-shuffle
-    path.
+    — in which case the caller hands the live docs to ``build_index``,
+    which range-sorts them.
     """
     import glob as _glob
 
@@ -1166,7 +1166,7 @@ def _splice_live_sorted(
         if expected_live <= 0:
             return False, "no live rows"
     except Exception as e:  # precondition probing over arbitrary layouts —
-        # decline to the shuffle path, but keep the reason inspectable
+        # decline to the re-sort path, but keep the reason inspectable
         if os.environ.get("SPARK_GRAFT_DEBUG"):
             import traceback
 
@@ -1289,7 +1289,7 @@ def _splice_live_sorted(
             pass
     written = int(got["rows"].sum())
     if written != expected_live:
-        # row conservation failed — wipe and let the shuffle path recompute
+        # row conservation failed — wipe and let the re-sort path recompute
         shutil.rmtree(tmp, ignore_errors=True)
         return False, f"row conservation {written} != {expected_live}"
     if delta_path:
@@ -1301,74 +1301,65 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     """Force-merge analog: rebuild the index from the live corpus. Purges
     tombstones, re-densifies doc ids, restores exact block-max bounds.
 
-    Round 6 shape: ONE range shuffle writes a conv-sorted temp corpus
-    (small row groups, exact footer stats), then the FUSED one-pass build
-    runs over it via the sorted-source fast path. The old route fed the
-    live-docs DataFrame straight into the two-pass build, where deletes'
-    turn-idx gaps broke the dense-PK offsets path and doc-id assignment
-    fell to the window fallback — three full shuffles of the text corpus
-    (measured 92–119 s vs 15.7 s for a fresh build at sf0.1). Now the text
-    crosses exactly one exchange: shuffle-sort → fused pass → salted merge
-    of compressed chunks (compact ≡ fresh build, rank-identity pytest)."""
+    The live corpus reaches the fresh build's sorted fused pass sorted by
+    key: through the zero-shuffle LSM splice of the sorted base store and
+    the small deltas when its preconditions hold, else as the live-docs
+    DataFrame, which ``build_index`` range-sorts once (compact ≡ fresh
+    build, rank-identity pytest). The decline reason is returned as
+    ``splice_decline`` and written as a ``("splice_decline", reason, 1.0)``
+    metrics row."""
     import shutil
 
     meta = read_index_meta(index_dir)
     t0 = time.time()
-    par = spark.sparkContext.defaultParallelism
-    # temp-corpus partition count from the LIVE DOC COUNT (scale-adaptive,
-    # guide §2): ~6k-doc files keep each fused task's tokenize/encode
-    # working set cache-resident under full task concurrency, floored at
-    # 4 partitions/core and capped so tiny-file overhead can't dominate
-    n_docs_live = int(meta.get("n_docs", 0)) or 1
-    n_parts = max(
-        int(meta["n_partitions"]),
-        4 * par,
-        min(64 * par, -(-n_docs_live // 6000)),
-    )
     shutil.rmtree(out_dir, ignore_errors=True)
     tmp = os.path.join(out_dir, "_live_src")
-    # Zero-shuffle LSM splice of the sorted base + small deltas when the
-    # preconditions hold; distributed range shuffle otherwise (large
-    # backfills, missing footer stats, budget overruns).
     spliced, splice_decline = _splice_live_sorted(spark, index_dir, meta, tmp)
-    if not spliced:
-        live = live_docs(spark, index_dir).select(*_CORPUS_COLS)
-        (
-            live.repartitionByRange(n_parts, "conv_id")
-            .sortWithinPartitions("conv_id", "turn_idx")
-            .write.mode("overwrite")
-            .option("compression", "snappy")
-            # small row groups → span planner cuts cache-resident fused tasks
-            .option("parquet.block.size", str(4 * 1024 * 1024))
-            .parquet(tmp)
+    splice_wall = time.time() - t0
+    if spliced:
+        # the spliced temp mirrors the BASE store's file geometry (one
+        # merged span per base file), so the fresh-build partition count
+        # from meta keeps span planning at the proven fresh-build
+        # granularity — a ~6k-doc-derived count here would push
+        # `len(spans) < n_partitions` at large corpora and trigger the
+        # row-group-finest re-plan (measured at sf1: 9,378 micro-spans,
+        # compact 509 s vs ~100 s fresh-build-shaped)
+        corpus, source = spark.read.parquet(tmp), tmp
+        n_parts = int(meta["n_partitions"])
+    else:
+        # re-sort partition count from the LIVE DOC COUNT (scale-adaptive,
+        # guide §2): ~6k-doc files keep each fused task's tokenize/encode
+        # working set cache-resident under full task concurrency, floored
+        # at 4 partitions/core and capped so tiny-file overhead can't
+        # dominate
+        par = spark.sparkContext.defaultParallelism
+        n_docs_live = int(meta.get("n_docs", 0)) or 1
+        n_parts = max(
+            int(meta["n_partitions"]),
+            4 * par,
+            min(64 * par, -(-n_docs_live // 6000)),
         )
-    sort_wall = time.time() - t0
-    # Partitioning for the rebuild: the spliced temp mirrors the BASE store's
-    # file geometry (one merged span per base file), so the fresh-build
-    # partition count from meta keeps span planning at the proven fresh-build
-    # granularity — passing the ~6k-doc-derived n_parts here would push
-    # `len(spans) < n_partitions` at large corpora and trigger the
-    # row-group-finest re-plan (measured at sf1: 9,378 micro-spans/chunks,
-    # compact 509 s vs ~100 s fresh-build-shaped). The shuffle temp is
-    # WRITTEN with n_parts files, so its span count already matches n_parts.
-    build_parts = int(meta["n_partitions"]) if spliced else n_parts
+        corpus = live_docs(spark, index_dir).select(*_CORPUS_COLS)
+        source = None
     out = build_index(
         spark,
-        spark.read.parquet(tmp),
+        corpus,
         out_dir,
-        n_partitions=build_parts,
+        n_partitions=n_parts,
         n_buckets=meta["n_buckets"],
         n_salts=meta["n_salts"],
         heavy_df_threshold=meta["heavy_df_threshold"],
         resume=False,
-        source_path=tmp,
+        source_path=source,
         span_mb=4,
         store_positions=bool(meta.get("store_positions", False)),
     )
     shutil.rmtree(tmp, ignore_errors=True)
     append_metrics_driver(
         os.path.join(out_dir, "metrics"),
-        [("live_splice" if spliced else "live_sort", "wall_s", sort_wall)],
+        [("live_splice", "wall_s", splice_wall)]
+        if spliced
+        else [("splice_decline", splice_decline, 1.0)],
     )
     out["wall_s"] = time.time() - t0
     out["live_spliced"] = bool(spliced)

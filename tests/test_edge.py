@@ -183,3 +183,55 @@ def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
                 )
                 for (_, gs), (_, ws) in zip(got, want):
                     assert gs == pytest.approx(ws, rel=1e-9), (round_i, q, name)
+
+
+def _sorted_file(tmp_path, keys, row_group_size):
+    """A (conv_id, turn_idx)-sorted source file with the given keys."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "src.parquet")
+    n = len(keys)
+    pq.write_table(
+        pa.table({
+            "conv_id": pa.array([k[0] for k in keys], pa.string()),
+            "turn_idx": pa.array([k[1] for k in keys], pa.int32()),
+            "role": pa.array(["user"] * n, pa.string()),
+            "text": pa.array([f"tok{i % 3} ok" for i in range(n)], pa.string()),
+            "tool": pa.array([""] * n, pa.string()),
+            "ts": pa.array([TS] * n, pa.timestamp("us", tz="UTC")),
+        }),
+        path, row_group_size=row_group_size,
+    )
+    return path
+
+
+def test_duplicate_key_within_span_raises(spark, tmp_path):
+    """A key repeated inside one span of a sorted source raises at once,
+    naming the key — doc ids never depend on how ties are broken."""
+    import os
+
+    keys = [("c1", 0), ("c1", 1), ("c1", 1), ("c2", 0), ("c2", 1), ("c3", 0)]
+    src = _sorted_file(tmp_path, keys, row_group_size=3)  # 2 spans
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match=r"duplicate \(conv_id, turn_idx\) key \('c1', 1\)"):
+        build_index(spark, spark.read.parquet(src), d, n_partitions=2,
+                    n_buckets=2, n_salts=2, span_mb=0, source_path=src,
+                    resume=False)
+    assert not os.path.exists(os.path.join(d, "_sorted_src"))  # no re-sort
+
+
+def test_duplicate_key_across_spans_raises(spark, tmp_path):
+    """A key repeated across a span boundary: the as-is pass's boundary
+    check rejects the spans, the build re-sorts, and the pass over the
+    copy raises, naming the key."""
+    import os
+
+    keys = [("c1", 0), ("c1", 1), ("c2", 0), ("c2", 0), ("c2", 1), ("c3", 0)]
+    src = _sorted_file(tmp_path, keys, row_group_size=3)  # dup straddles spans
+    d = str(tmp_path / "idx")
+    with pytest.raises(ValueError, match=r"duplicate \(conv_id, turn_idx\) key \('c2', 0\)"):
+        build_index(spark, spark.read.parquet(src), d, n_partitions=2,
+                    n_buckets=2, n_salts=2, span_mb=0, source_path=src,
+                    resume=False)
+    assert os.path.exists(os.path.join(d, "_sorted_src", "_SUCCESS"))

@@ -561,22 +561,22 @@ def test_compact_splice_equals_shuffle_path(
     spark, base, increments, applied, tmp_path_factory, monkeypatch
 ):
     """Round 6: the zero-shuffle LSM splice temp-corpus path must produce an
-    index identical to the distributed range-shuffle path — same dense doc
+    index identical to the re-sort path — same dense doc
     ids (both key-sorted totals), same docs store, terms, and search results
     including score ties — with delta keys landing before the first and
     after the last base key, mid-span updates, and tombstones in play."""
     import os
+    import shutil
 
     import pandas as pd
+    import pyarrow.dataset as pads
     import pyarrow.parquet as pq
 
     import sync2any_spark.streaming.incremental as inc_mod
     from sync2any_spark.generator import ensure_transcripts
 
-    # the splice needs the production store shape — a FUSED-built docs store
-    # (lexical file order == key order, which the two-pass Spark write does
-    # not guarantee; the `base` fixture's tiny corpus takes the two-pass
-    # path and the splice rightly declines there — asserted at the end)
+    # the splice input: a fused-built docs store from a source file with
+    # small row groups (lexical file order == key order)
     src = os.path.join(str(tmp_path_factory.mktemp("splice_src")), "corpus.parquet")
     pq.write_table(pq.read_table(ensure_transcripts("sf0.001")), src, row_group_size=128)
     base2 = str(tmp_path_factory.mktemp("idx_splice_base"))
@@ -604,10 +604,23 @@ def test_compact_splice_equals_shuffle_path(
     assert r1["live_spliced"] is True, r1["splice_decline"]
     assert r1["splice_decline"] is None
 
-    # the two-pass-built `base` fixture store (Spark-written files, no
-    # global lexical order guarantee) must decline to the shuffle path
-    r0 = compact(spark, base, str(tmp_path_factory.mktemp("idx_c_twopass")))
-    assert r0["live_spliced"] is False and r0["splice_decline"]
+    # a store whose lexical file order is not key order must decline to
+    # the re-sort path: swap the names of two base docs files of a copy
+    unordered = str(tmp_path_factory.mktemp("idx_unordered")) + "/idx"
+    shutil.copytree(base, unordered)
+    ddir = unordered + "/docs"
+    parts = sorted(f for f in os.listdir(ddir) if f.endswith(".parquet"))
+    first, last = (os.path.join(ddir, parts[i]) for i in (0, -1))
+    os.rename(first, first + ".swap")
+    os.rename(last, first)
+    os.rename(first + ".swap", last)
+    out_unordered = str(tmp_path_factory.mktemp("idx_c_unordered"))
+    r0 = compact(spark, unordered, out_unordered)
+    assert r0["live_spliced"] is False
+    assert r0["splice_decline"].startswith("file conv order violated")
+    m = pads.dataset(out_unordered + "/metrics").to_table().to_pandas()
+    assert list(m[m.stage == "splice_decline"].key) == [r0["splice_decline"]]
+    assert r0["resort_reason"] == "no source_path"
 
     out_shuffle = str(tmp_path_factory.mktemp("idx_c_shuffle"))
     monkeypatch.setattr(inc_mod, "COMPACT_SPLICE_ROWS", 0)

@@ -222,8 +222,8 @@ def test_schema_evolution_appended_column(spark, transcripts_sf0001, tmp_path_fa
     """A6/§1.3 (reference: transform/RecordsTransform.java:25-38 — new
     columns appended only): an extra source column must not break the build
     nor change doc ids, and rides through to the docs store. Covers BOTH
-    physical paths: the fused segment build (source_path) and the two-pass
-    DataFrame build."""
+    sources of the fused pass: a sorted file used as-is (source_path) and
+    a DataFrame, re-sorted into a copy first."""
     import pyarrow.parquet as pq_mod
     import pyarrow as pa
 
@@ -258,7 +258,7 @@ def test_schema_evolution_appended_column(spark, transcripts_sf0001, tmp_path_fa
     )
     assert got == want_ids
 
-    # two-pass path (DataFrame input, no source_path)
+    # re-sort path (DataFrame input, no source_path)
     twop = str(tmp_path_factory.mktemp("idx_twop_ev"))
     build_index(spark, spark.read.parquet(aug), twop, resume=False, **PARAMS)
     tdocs = spark.read.parquet(f"{twop}/docs")
@@ -625,23 +625,29 @@ def test_zero_shuffle_merge_equals_shuffle_merge(
 def test_sorted_source_fast_path_identical_and_fallbacks(
     spark, tmp_path_factory
 ):
-    """Round-5: the sorted-source fast path (doc_id = span base + local
-    rank, zero driver-side PK reads) must (a) engage on a sorted source and
-    produce the exact index the conversation-offset path produces, (b) fall
-    back cleanly when the manifest boundary check catches a turn-order
-    violation the footer stats cannot see, and (c) decline upfront when
+    """The sorted fused pass (doc_id = span base + local rank, zero
+    driver-side PK reads) must (a) use a sorted source as-is and produce
+    the exact index the re-sort path produces, (b) re-sort and retry when
+    the manifest boundary check catches a turn-order violation the footer
+    stats cannot see, and (c) decline upfront when
     footer stats show conv_id overlap."""
     import os
 
     import pandas as pd
     import pyarrow as pa
 
+    import pyarrow.dataset as pads
+
     from sync2any_spark.index.builder import (
         plan_spans,
         read_manifests,
         sorted_span_bases,
-        verify_sorted_manifests,
+        span_key_overlap,
     )
+
+    def resort_rows(d):
+        m = pads.dataset(d + "/metrics").to_table().to_pandas()
+        return list(m[(m.stage == "resort") & (m.key != "wall_s")].key)
 
     def write_src(dirname, pdf, rg=64):
         p = os.path.join(str(tmp_path_factory.mktemp(dirname)), "t.parquet")
@@ -667,20 +673,23 @@ def test_sorted_source_fast_path_identical_and_fallbacks(
             rows.append((f"c{c:04d}", t, f"w{int(rng.integers(0, 40)):04d} ok"))
     pdf = pd.DataFrame(rows, columns=["conv_id", "turn_idx", "text"])
 
-    # (a) sorted source: fast path engages, index identical to offsets path
+    # (a) sorted source: used as-is, index identical to the re-sort path
     src = write_src("sorted_src", pdf)
     spans = plan_spans(src, 0)
     assert len(spans) > 2 and sorted_span_bases(src, spans) is not None
     d_fast = str(tmp_path_factory.mktemp("idx_fast"))
-    build_index(spark, spark.read.parquet(src), d_fast, n_partitions=2,
-                n_buckets=4, span_mb=0, source_path=src, resume=False)
-    mans = read_manifests(f"{d_fast}/chunks")
-    assert all("first_conv" in m for m in mans)  # fast path actually ran
-    assert verify_sorted_manifests(mans)
+    res = build_index(spark, spark.read.parquet(src), d_fast, n_partitions=2,
+                      n_buckets=4, span_mb=0, source_path=src, resume=False)
+    assert res["resort_reason"] is None and resort_rows(d_fast) == []
+    assert span_key_overlap(read_manifests(f"{d_fast}/chunks")) is None
     d_slow = str(tmp_path_factory.mktemp("idx_slow"))
-    # huge span_mb → 1 span < n_partitions → two-pass (offsets) path
-    build_index(spark, spark.read.parquet(src), d_slow, n_partitions=2,
-                n_buckets=4, span_mb=4096, source_path=src, resume=False)
+    # one row group → 1 span < n_partitions → re-sort path
+    src_one = write_src("one_group_src", pdf, rg=len(pdf))
+    res = build_index(spark, spark.read.parquet(src_one), d_slow,
+                      n_partitions=2, n_buckets=4, span_mb=0,
+                      source_path=src_one, resume=False)
+    assert res["resort_reason"] == "too few spans"
+    assert resort_rows(d_slow) == ["too few spans"]
     fast = spark.read.parquet(f"{d_fast}/docs").orderBy("doc_id").toPandas()
     slow = spark.read.parquet(f"{d_slow}/docs").orderBy("doc_id").toPandas()
     pd.testing.assert_frame_equal(
@@ -731,11 +740,13 @@ def test_sorted_source_fast_path_identical_and_fallbacks(
     )
     src_b = write_src("boundary_src", pdf_b)
     d_b = str(tmp_path_factory.mktemp("idx_boundary"))
-    build_index(spark, spark.read.parquet(src_b), d_b, n_partitions=2,
-                n_buckets=4, span_mb=0, source_path=src_b, resume=False)
-    # fallback (conv-offsets leg) writes NO span keys — proves the manifest
-    # check rejected the fast path rather than silently accepting it
-    assert not any("first_conv" in m for m in read_manifests(f"{d_b}/chunks"))
+    res = build_index(spark, spark.read.parquet(src_b), d_b, n_partitions=2,
+                      n_buckets=4, span_mb=0, source_path=src_b, resume=False)
+    # the manifest check rejected the as-is pass rather than silently
+    # accepting it, and the retry over the re-sorted copy succeeded
+    assert res["resort_reason"] == "span key ranges overlap"
+    assert resort_rows(d_b) == ["span key ranges overlap"]
+    assert span_key_overlap(read_manifests(f"{d_b}/chunks")) is None
     docs_b = spark.read.parquet(f"{d_b}/docs").orderBy("doc_id").toPandas()
     want = (
         pdf_b.sort_values(["conv_id", "turn_idx"], kind="stable")
@@ -749,6 +760,16 @@ def test_sorted_source_fast_path_identical_and_fallbacks(
     pdf_c = pdf.sample(frac=1.0, random_state=3).reset_index(drop=True)
     src_c = write_src("shuffled_src", pdf_c)
     assert sorted_span_bases(src_c, plan_spans(src_c, 0)) is None
+    d_c = str(tmp_path_factory.mktemp("idx_shuffled"))
+    res = build_index(spark, spark.read.parquet(src_c), d_c, n_partitions=2,
+                      n_buckets=4, span_mb=0, source_path=src_c, resume=False)
+    assert res["resort_reason"] == "footer conv order"
+    assert resort_rows(d_c) == ["footer conv order"]
+    docs_c = spark.read.parquet(f"{d_c}/docs").orderBy("doc_id").toPandas()
+    pd.testing.assert_frame_equal(
+        docs_c[["doc_id", "conv_id", "turn_idx", "dl"]],
+        fast[["doc_id", "conv_id", "turn_idx", "dl"]],
+    )
 
 
 def test_driver_single_term_fast_paths_identity(spark, index_dir, monkeypatch):
@@ -776,10 +797,10 @@ def test_driver_single_term_fast_paths_identity(spark, index_dir, monkeypatch):
 
 
 def test_sorted_fast_path_offsets_stays_metadata_scale(spark, tmp_path_factory):
-    """Round 6 (r5 VERDICT Next #4): the round-5 scaling win rides on the
-    sorted-source fast path — doc ids from footer stats alone. Pin it: a
-    sorted source must take the fused path (no 'docs' two-pass stage) with
-    an 'offsets' wall that is a footer walk (well under a second), not a
+    """Round 6 (r5 VERDICT Next #4): the round-5 scaling win rides on
+    using a sorted source as-is — doc ids from footer stats alone. Pin it:
+    a sorted source must skip the re-sort (no 'resort' stage) with an
+    'offsets' wall that is a footer walk (well under a second), not a
     PK-column read or a Spark job."""
     import pyarrow.dataset as pads
 
@@ -788,7 +809,7 @@ def test_sorted_fast_path_offsets_stays_metadata_scale(spark, tmp_path_factory):
 
     src = ensure_transcripts("sf0.001")
     out = str(tmp_path_factory.mktemp("idx_sorted_pin"))
-    build_index(
+    res = build_index(
         spark, spark.read.parquet(src), out, n_partitions=2, n_buckets=4,
         resume=False, source_path=src, span_mb=4,
     )
@@ -796,16 +817,15 @@ def test_sorted_fast_path_offsets_stays_metadata_scale(spark, tmp_path_factory):
     stages = dict(
         m[m.key == "wall_s"][["stage", "value"]].itertuples(index=False)
     )
-    assert "docs" not in stages, "sorted source fell to the two-pass path"
+    assert "resort" not in stages, "sorted source was re-sorted"
+    assert res["resort_reason"] is None
     assert stages["offsets"] < 0.5, stages
-    fused = m[(m.stage == "spimi") & (m.key == "fused")]
-    assert len(fused) == 1 and float(fused.value.iloc[0]) == 1.0
 
 
 def test_build_wall_covers_every_stage(spark, tmp_path_factory, monkeypatch):
     """``build.wall_s`` is timed from function entry: it covers span
-    planning and a failed fused attempt, so it is at least the sum of the
-    stage ``wall_s`` rows even when the sorted fast path is retried."""
+    planning and a failed as-is pass, so it is at least the sum of the
+    stage ``wall_s`` rows even when the build re-sorts and retries."""
     import time
 
     import pyarrow.dataset as pads
@@ -819,8 +839,15 @@ def test_build_wall_covers_every_stage(spark, tmp_path_factory, monkeypatch):
         time.sleep(0.2)
         return real_plan(*a, **kw)
 
+    real_overlap = builder.span_key_overlap
+    calls = []
+
+    def overlap_once(mans):  # reject the as-is pass only
+        calls.append(1)
+        return ("c", 0) if len(calls) == 1 else real_overlap(mans)
+
     monkeypatch.setattr(builder, "plan_spans", slow_plan)
-    monkeypatch.setattr(builder, "verify_sorted_manifests", lambda mans: False)
+    monkeypatch.setattr(builder, "span_key_overlap", overlap_once)
     src = ensure_transcripts("sf0.001")
     out = str(tmp_path_factory.mktemp("idx_wall"))
     res = build_index(
@@ -829,9 +856,12 @@ def test_build_wall_covers_every_stage(spark, tmp_path_factory, monkeypatch):
     )
     m = pads.dataset(out + "/metrics").to_table().to_pandas()
     walls = m[m.key == "wall_s"]
-    assert list(m[m.key == "sorted_retry"].stage) == ["offsets"]  # retried
+    retried = m[(m.stage == "resort") & (m.key != "wall_s")]
+    assert list(retried.key) == ["span key ranges overlap"]
+    assert res["resort_reason"] == "span key ranges overlap"
     stages = walls[walls.stage != "build"]
     assert len(stages[stages.stage == "offsets"]) == 2
+    assert len(stages[stages.stage == "spimi"]) == 2
     build_wall = float(walls[walls.stage == "build"].value.iloc[0])
     assert build_wall == pytest.approx(res["wall_s"])
     assert build_wall >= float(stages.value.sum())

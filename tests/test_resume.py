@@ -1,7 +1,11 @@
 """Resume-from-checkpoint (FIXTURES.md invariant 6): a build killed after K
-of N partition manifests, then re-run, equals a single-run build."""
+of N partition manifests, then re-run, equals a single-run build; and the
+index does not depend on the source's row order."""
 
 from __future__ import annotations
+
+import numpy as np
+import pytest
 
 from sync2any_spark.index.builder import build_index, completed_partitions
 
@@ -25,17 +29,31 @@ def _fingerprint(spark, index_dir):
     return terms, postings, docs
 
 
-def test_resume_equals_single_run(spark, transcripts_sf0001, tmp_path_factory):
-    """files-mode resume: kill after K of N file manifests, re-run, compare."""
+def test_resume_equals_single_run(
+    spark, transcripts_sf0001, tmp_path_factory, monkeypatch
+):
+    """Kill a build after its SPIMI pass, drop the chunks of parts >= 5,
+    re-run with resume: only the dropped parts are rebuilt (over the
+    reused sorted copy) and the index equals a single run's."""
     import os
+
+    from sync2any_spark.index import builder
 
     single = str(tmp_path_factory.mktemp("idx_single"))
     build_index(spark, transcripts_sf0001, single, resume=False, **PARAMS)
+    assert not os.path.exists(f"{single}/_sorted_src")  # removed on success
 
-    # simulate a crash mid-SPIMI: full build, then erase chunks of parts >= 5
-    # and every downstream table (they are rebuilt after the chunk stage)
+    # a real crash: the terms stage raises after the SPIMI pass committed
+    # every span, leaving the sorted copy and the manifests behind
+    def crash(*a, **kw):
+        raise RuntimeError("simulated crash after the SPIMI pass")
+
     resumed = str(tmp_path_factory.mktemp("idx_resumed"))
-    build_index(spark, transcripts_sf0001, resumed, resume=False, **PARAMS)
+    with monkeypatch.context() as mp:
+        mp.setattr(builder, "build_term_stats_driver", crash)
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            build_index(spark, transcripts_sf0001, resumed, resume=False, **PARAMS)
+    assert os.path.exists(f"{resumed}/_sorted_src/_SUCCESS")
     chunks_dir = f"{resumed}/chunks"
     n_total = len(completed_partitions(chunks_dir))
     for name in os.listdir(chunks_dir):
@@ -47,6 +65,7 @@ def test_resume_equals_single_run(spark, transcripts_sf0001, tmp_path_factory):
     # re-run the full build with resume=True — must only build the rest
     summary = build_index(spark, transcripts_sf0001, resumed, resume=True, **PARAMS)
     assert summary["partitions_built"] == n_total - len(done)
+    assert not os.path.exists(f"{resumed}/_sorted_src")
 
     assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
 
@@ -69,52 +88,56 @@ def test_doc_ids_stable_across_rebuilds(spark, transcripts_sf0001, tmp_path_fact
     assert da == db
 
 
-def test_fused_equals_twopass(spark, transcripts_sf0001, tmp_path_factory):
-    """The fused one-pass segment build and the two-pass files build are
-    the SAME logical operator: identical doc ids, identical term stats,
-    identical rankings (postings bytes may differ — chunk partitioning
-    differs, so salted sub-stream assignment differs, which is rank-neutral
-    by construction)."""
+def test_source_order_does_not_change_the_index(
+    spark, transcripts_sf0001, tmp_path_factory
+):
+    """A sorted source file used as-is, a DataFrame and a row-shuffled
+    source file (both re-sorted into a copy first) give the same index:
+    identical doc ids, identical term stats, identical rankings on the
+    reference queries (postings bytes may differ — span partitioning
+    differs, so salted sub-stream assignment differs, which is
+    rank-neutral by construction)."""
     import pyarrow.parquet as pq_mod
 
-    from sync2any_spark.generator import ensure_transcripts
+    from sync2any_spark.generator import ensure_queries, ensure_transcripts
     from sync2any_spark.query.wand import IndexSearcher
 
-    src = ensure_transcripts("sf0.001")
-    # re-write with tiny row groups so the fused planner gets enough spans
-    fine = str(tmp_path_factory.mktemp("fine")) + "/transcripts.parquet"
-    pq_mod.write_table(pq_mod.read_table(src), fine, row_group_size=128)
+    tbl = pq_mod.read_table(ensure_transcripts("sf0.001"))
+    # tiny row groups so the sorted file plans enough spans to be used as-is
+    sorted_src = str(tmp_path_factory.mktemp("sorted")) + "/transcripts.parquet"
+    pq_mod.write_table(tbl, sorted_src, row_group_size=128)
+    shuffled_src = str(tmp_path_factory.mktemp("shuffled")) + "/transcripts.parquet"
+    order = np.random.default_rng(11).permutation(tbl.num_rows)
+    pq_mod.write_table(tbl.take(order), shuffled_src, row_group_size=128)
 
-    fused = str(tmp_path_factory.mktemp("idx_fu"))
-    twop = str(tmp_path_factory.mktemp("idx_tp"))
-    build_index(
-        spark, spark.read.parquet(fine), fused, resume=False,
-        source_path=fine, span_mb=0, **PARAMS,
-    )
-    from sync2any_spark.index.builder import read_index_meta
-
-    # guard: the fused path actually ran (spans >= n_partitions)
-    assert read_index_meta(fused)  # meta exists
-    build_index(spark, spark.read.parquet(fine), twop, resume=False, **PARAMS)
-
-    docs_a = sorted(
-        (r.doc_id, r.conv_id, r.turn_idx, r.dl)
-        for r in spark.read.parquet(f"{fused}/docs").collect()
-    )
-    docs_b = sorted(
-        (r.doc_id, r.conv_id, r.turn_idx, r.dl)
-        for r in spark.read.parquet(f"{twop}/docs").collect()
-    )
-    assert docs_a == docs_b
-    terms_a = sorted(
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(f"{fused}/terms").collect()
-    )
-    terms_b = sorted(
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(f"{twop}/terms").collect()
-    )
-    assert terms_a == terms_b
-    sa, sb = IndexSearcher(spark, fused), IndexSearcher(spark, twop)
-    for q in ("ok", "w0000", "ok w0000", "中 文"):
-        assert sa.search(q, 10) == sb.search(q, 10), q
+    legs = {
+        "sorted file": (sorted_src, None),
+        "DataFrame": (None, "no source_path"),
+        "shuffled file": (shuffled_src, "footer conv order"),
+    }
+    fingerprints, searchers = {}, {}
+    for name, (src, reason) in legs.items():
+        d = str(tmp_path_factory.mktemp("idx_order"))
+        res = build_index(
+            spark, transcripts_sf0001 if src is None else spark.read.parquet(src),
+            d, resume=False, source_path=src, span_mb=0, **PARAMS,
+        )
+        assert res["resort_reason"] == reason, name
+        docs = sorted(
+            (r.doc_id, r.conv_id, r.turn_idx, r.dl)
+            for r in spark.read.parquet(f"{d}/docs").collect()
+        )
+        terms = sorted(
+            (r.term, r.df, r.cf)
+            for r in spark.read.parquet(f"{d}/terms").collect()
+        )
+        fingerprints[name] = (docs, terms)
+        searchers[name] = IndexSearcher(spark, d)
+    assert fingerprints["DataFrame"] == fingerprints["sorted file"]
+    assert fingerprints["shuffled file"] == fingerprints["sorted file"]
+    queries = pq_mod.read_table(ensure_queries()).to_pandas()
+    for q in queries.itertuples(index=False):
+        want = searchers["sorted file"].search(q.query_text, int(q.k))
+        for name in ("DataFrame", "shuffled file"):
+            got = searchers[name].search(q.query_text, int(q.k))
+            assert got == want, (name, q.query_text)

@@ -8,9 +8,11 @@ Captures, for the query paths round 6 touched:
   - increment_join: the apply_increments batch-vs-live-store join
     (before: SortMergeJoin shuffling the full docs store; after:
     broadcast-inner + batch-sized left join)
-  - compact_docs: the plan that moves the text corpus during compact()
-    (before: assign_doc_ids window fallback inside the two-pass build;
-    after: one repartitionByRange + sortWithinPartitions write)
+  - compact_docs: the plan that moves the text corpus when compact()'s
+    splice declines (before: the round-5 route, live docs through
+    build_docs — the assign_doc_ids window fallback of the since-deleted
+    two-pass build; after: build_index's re-sort, one repartitionByRange
+    + sortWithinPartitions write)
   - bm25_topk_distributed_transcripts: the declared distributed query
     (plan shape must be unchanged — included as the no-regression proof)
 """
