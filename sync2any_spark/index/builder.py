@@ -824,6 +824,48 @@ def plan_spans(source_path: str, span_mb: int = 8) -> "list[tuple[str, int, int]
     return spans
 
 
+def footer_conv_walk(
+    files: "list[str]", check_order: bool = True
+) -> "tuple[dict[tuple[str, int], int], str | None]":
+    """One footer pass over ``files``: the row count of every (file, row
+    group), and — with ``check_order`` — why the ``conv_id`` min/max stats
+    do NOT show group-granular order across the file sequence
+    (``max_conv(g) <= min_conv(g+1)``; equality allowed, a conversation
+    may straddle groups), or None when they do. The reason names the file:
+    ``"file conv order violated at f"`` when ``f``'s first group breaks
+    order, ``"row-group conv order violated at f"`` when a later one does."""
+    import pyarrow.parquet as pq
+
+    prev_max, prev_file = None, None
+    group_rows: "dict[tuple[str, int], int]" = {}
+    for path in files:
+        md = pq.ParquetFile(path).metadata
+        if check_order and md.num_row_groups:
+            rg0 = md.row_group(0)
+            names = {
+                rg0.column(i).path_in_schema: i for i in range(rg0.num_columns)
+            }
+            if "conv_id" not in names:
+                return group_rows, f"no conv_id column in {path}"
+            ci = names["conv_id"]
+        for g in range(md.num_row_groups):
+            rg = md.row_group(g)
+            group_rows[(path, g)] = rg.num_rows
+            if not check_order or rg.num_rows == 0:
+                continue
+            st = rg.column(ci).statistics
+            if st is None or not st.has_min_max:
+                return group_rows, f"absent conv stats in {path}"
+            mn, mx = st.min, st.max
+            if isinstance(mn, bytes):
+                mn, mx = mn.decode(), mx.decode()
+            if prev_max is not None and mn < prev_max:
+                where = "row-group" if prev_file == path else "file"
+                return group_rows, f"{where} conv order violated at {path}"
+            prev_max, prev_file = mx, path
+    return group_rows, None
+
+
 def sorted_span_bases(
     source_path: str, spans: "list[tuple[str, int, int]]",
     check_order: bool = True,
@@ -847,34 +889,11 @@ def sorted_span_bases(
     The build's own re-sorted copy skips the precheck: it is sorted by
     construction.
     """
-    import pyarrow.parquet as pq
-
-    prev_max = None
-    group_rows: "dict[tuple[str, int], int]" = {}
-    for path in _source_files(source_path):
-        md = pq.ParquetFile(path).metadata
-        if check_order and md.num_row_groups:
-            rg0 = md.row_group(0)
-            names = {
-                rg0.column(i).path_in_schema: i for i in range(rg0.num_columns)
-            }
-            if "conv_id" not in names:
-                return None
-            ci = names["conv_id"]
-        for g in range(md.num_row_groups):
-            rg = md.row_group(g)
-            group_rows[(path, g)] = rg.num_rows
-            if not check_order:
-                continue
-            st = rg.column(ci).statistics
-            if st is None or not st.has_min_max:
-                return None
-            mn, mx = st.min, st.max
-            if isinstance(mn, bytes):
-                mn, mx = mn.decode(), mx.decode()
-            if prev_max is not None and mn < prev_max:
-                return None  # overlapping conv ranges — not sorted
-            prev_max = mx
+    group_rows, unsorted = footer_conv_walk(
+        _source_files(source_path), check_order
+    )
+    if unsorted is not None:
+        return None
     bases, acc = [], 0
     for path, lo, hi in spans:
         bases.append(acc)
@@ -1113,7 +1132,7 @@ DRIVER_TERMS_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_TERMS_ROWS", 30_000_0
 
 
 def build_term_stats_driver(
-    chunks_dir: str, n_buckets: int, glob: str = "part-*.parquet", wfs=None
+    chunks_dir: str, n_buckets: int, wfs=None
 ) -> "pd.DataFrame | None":
     """terms(term, df, cf, bucket) aggregated driver-side with pyarrow, or
     None when the chunk-term row count (from the manifests) exceeds
@@ -1130,14 +1149,13 @@ def build_term_stats_driver(
     from .fswrite import LOCAL
 
     _wfs = wfs or LOCAL
-    prefix = glob.split("part-")[0]
-    mans = read_manifests(chunks_dir, prefix, wfs=_wfs)
+    mans = read_manifests(chunks_dir, wfs=_wfs)
     if mans and sum(m.get("n_terms", 0) for m in mans) > DRIVER_TERMS_ROWS:
         return None
     files = sorted(
         os.path.join(chunks_dir, n)
         for n in _wfs.listdir(chunks_dir)
-        if fnmatch.fnmatch(n, glob)
+        if fnmatch.fnmatch(n, "part-*.parquet")
     )
     if not files:
         return pd.DataFrame(
@@ -1253,6 +1271,54 @@ def write_terms_driver(terms_pdf: "pd.DataFrame", out_dir: str) -> None:
         tmp, compression="zstd",
     )
     os.replace(tmp, path)
+
+
+def write_postings_driver(
+    rows: dict, avgdl: float, n_buckets: int, out_dir: str,
+    store_positions: bool = False,
+) -> int:
+    """Encode and write the postings of ONE doc-ordered SPIMI chunk (the
+    rows ``_spimi_rows_for_texts`` returns: term-sorted, one row per term)
+    driver-side: one ``_blocks_from_sorted`` pass over every term, then one
+    term-sorted file per bucket (``bucket=K/part-00000.parquet``) — the
+    layout ``force_merge_postings`` writes, which every reader serves. The
+    CDC driver apply's delta writer. ``out_dir`` is wiped first, so no part
+    file of an earlier attempt survives; returns the block count."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from .bucketing import bucket_of
+
+    shutil.rmtree(out_dir, ignore_errors=True)
+    terms = np.asarray(rows["term"], dtype=object)
+    if not len(terms):
+        return 0
+    n_docs = np.asarray(rows["n_docs"], dtype=np.int64)
+    blocks = _blocks_from_sorted(
+        terms, n_docs, b"".join(rows["doc_ids"]), b"".join(rows["tfs"]),
+        b"".join(rows["dls"]),
+        b"".join(rows["pos"]) if store_positions else None,
+        avgdl, 0, 0, store_positions,
+    )
+    term_bucket = np.fromiter(
+        (bucket_of(t, n_buckets) for t in terms), np.int32, len(terms)
+    )
+    blk_bucket = np.repeat(term_bucket, -(-n_docs // BLOCK_SIZE))
+    order = np.argsort(blk_bucket, kind="stable")  # term order per bucket
+    tbl = pa.table({k: v for k, v in blocks.items() if k != "bucket"})
+    tbl = tbl.take(order)
+    lo = 0
+    for b, n in enumerate(np.bincount(blk_bucket, minlength=n_buckets)):
+        if n:
+            d = os.path.join(out_dir, f"bucket={b}")
+            os.makedirs(d, exist_ok=True)
+            pq.write_table(
+                tbl.slice(lo, n), os.path.join(d, "part-00000.parquet"),
+                compression=POSTINGS_COMPRESSION,
+                row_group_size=2048,  # force_merge_postings' row groups
+            )
+        lo += n
+    return tbl.num_rows
 
 
 # Postings parquet: the varbyte columns ARE the compression (delta-gap +

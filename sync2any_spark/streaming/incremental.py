@@ -1,4 +1,4 @@
-"""Incremental index maintenance — the CDC half of the reference, Spark-first.
+"""Incremental index maintenance — the CDC half of the reference.
 
 The reference applies binlog changes row-at-a-time as ES upserts/deletes by
 ``_id`` (``load/impl/EsLoadServiceImpl.java:51-110``); redelivery is
@@ -12,10 +12,9 @@ Lucene segment model:
 - updates/deletes tombstone the old ``doc_id`` (deletes table = Lucene
   live-docs); inserts/updates append fresh doc ids ABOVE the current max —
   ids are never reused, so all existing postings stay valid;
-- new rows are tokenized into a delta segment (same SPIMI path, prefixed
-  chunk files) whose postings land in a segment-owned dir: delta doc ids
-  sort strictly after base ids, so every (term, salt) stream stays
-  doc-ordered;
+- new rows are tokenized into a delta segment whose postings land in a
+  segment-owned dir: delta doc ids sort strictly after base ids, so every
+  term's stream stays doc-ordered;
 - terms/stats tables are maintained *exactly* (old ± added ∓ removed, with
   removed term counts recomputed from the tombstoned rows' stored text), so
   BM25 over the live corpus stays rank-identical to a fresh build — unlike
@@ -23,16 +22,22 @@ Lucene segment model:
 - ``compact()`` rebuilds the index from the live docs (force-merge analog),
   purging tombstones and re-densifying doc ids.
 
+A batch whose text fits ``DRIVER_APPLY_BYTES`` is applied in-process after
+one Arrow collect (two Spark jobs per batch: the shape aggregate and the
+collect); bigger batches take the distributed path. Each apply records
+its route and the reason it declined the in-process one.
+
 Crash atomicity (the write-ahead shape the reference gets from ES bulk
 acks + Kafka offset commits, ``extract/KafkaMsgListener.java:312-330``):
 every artifact of segment N — postings_segs/segN, docs_segs/segN,
 deletes_segs/segN, terms_vN, stats_vN — is written with deterministic names
-and ``overwrite`` mode, and readers resolve ONLY through ``meta.json``
-(``segments`` + ``terms_version``). The single atomic ``os.replace`` of
-meta.json is the commit point: a crash anywhere before it leaves the index
-exactly at the previous commit, and a retry of the same batch overwrites
-the orphaned segment artifacts in place (no duplicate postings, no double
-counting — tested by killing the apply before commit).
+into a dir its writer wipes first, and readers resolve ONLY through
+``meta.json`` (``segments`` + ``terms_version``). The single atomic
+``os.replace`` of meta.json is the commit point: a crash anywhere before it
+leaves the index exactly at the previous commit, and a retry of the same
+(or a different) batch rewrites the orphaned segment artifacts (no
+duplicate postings, no double counting — tested by killing the apply
+before commit).
 """
 
 from __future__ import annotations
@@ -43,11 +48,14 @@ import time
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.builder import (
     IndexPaths,
+    _spimi_rows_for_texts,
     append_metrics_driver,
     build_chunks,
     build_index,
@@ -56,14 +64,22 @@ from ..index.builder import (
     deletes_sources,
     docs_sources,
     read_index_meta,
+    write_postings_driver,
     write_stats_driver,
 )
 from ..query.algebra import SPARK_TOKEN_RE
 
 
-# batches at or below this row count rank their fresh doc ids driver-side
-# (one 2-column toPandas + a broadcast id map); larger backfills use the
-# distributed two-level prefix sum
+# driver memory budget, in bytes of text: a batch whose text fits is
+# applied in-process (the tokenizer's transient memory is ~21x the text
+# bytes, so ~170 MB at the budget), and so is compact's delta pre-pass when
+# the delta docs and deletes footers fit it; past it, the distributed apply
+# and the re-sort compact run, and the decline reason is recorded
+DRIVER_APPLY_BYTES = 8 << 20
+
+# the distributed apply ranks fresh doc ids driver-side (one 2-column
+# toPandas + a broadcast id map) up to this many new rows; larger backfills
+# use the distributed two-level prefix sum
 DRIVER_RANK_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_RANK_ROWS", 1_000_000))
 
 
@@ -156,70 +172,6 @@ def read_segment_changes(
         else spark.createDataFrame([], "doc_id long")
     )
     return added, removed
-
-
-def _term_freq_stats(texts) -> pd.DataFrame:
-    """(term, d_df, d_cf) for one batch of raw texts — the per-partition
-    kernel of the removed-rows stat pass. Byte-level tokenizer when the
-    bytes allow it, regex fallback otherwise; no chunk encode, no per-token
-    Python strings on the fast path."""
-    import pyarrow as pa
-
-    from ..tokenize import tokenize_arrow_codes, tokenize_series
-
-    col = pa.array(texts, pa.string(), from_pandas=True)
-    empty = pd.DataFrame(
-        {"term": pd.Series([], dtype=object),
-         "d_df": pd.Series([], dtype=np.int64),
-         "d_cf": pd.Series([], dtype=np.int64)}
-    )
-    fast = tokenize_arrow_codes(col)
-    if fast is not None:
-        codes, doc_lens, uniq = fast
-        if codes.size == 0:
-            return empty
-        row_pos = np.repeat(
-            np.arange(len(doc_lens), dtype=np.int32), doc_lens
-        )
-        order = np.argsort(codes.astype(np.int32), kind="stable")
-        c_s, r_s = codes[order], row_pos[order]
-        pch = np.concatenate(
-            ([True], (c_s[1:] != c_s[:-1]) | (r_s[1:] != r_s[:-1]))
-        )
-        pstarts = np.flatnonzero(pch)
-        tf = np.diff(np.append(pstarts, c_s.size))
-        t_code = c_s[pstarts]
-        tch = np.concatenate(([True], t_code[1:] != t_code[:-1]))
-        ts_ = np.flatnonzero(tch)
-        return pd.DataFrame(
-            {
-                "term": uniq[t_code[ts_]],
-                "d_df": np.diff(np.append(ts_, t_code.size)).astype(np.int64),
-                "d_cf": np.add.reduceat(tf, ts_).astype(np.int64),
-            }
-        )
-    agg: "dict[str, list[int]]" = {}
-    for toks in tokenize_series(pd.Series(texts)):
-        seen: dict[str, int] = {}
-        for t in toks:
-            seen[t] = seen.get(t, 0) + 1
-        for t, c in seen.items():
-            e = agg.get(t)
-            if e is None:
-                agg[t] = [1, c]
-            else:
-                e[0] += 1
-                e[1] += c
-    if not agg:
-        return empty
-    terms = sorted(agg)
-    return pd.DataFrame(
-        {
-            "term": np.asarray(terms, dtype=object),
-            "d_df": np.asarray([agg[t][0] for t in terms], dtype=np.int64),
-            "d_cf": np.asarray([agg[t][1] for t in terms], dtype=np.int64),
-        }
-    )
 
 
 # old terms tables at or below this row count (parquet footer metadata)
@@ -317,25 +269,21 @@ def _update_terms_spark(
     )
 
 
-def _write_deletes_driver(out_dir: str, doc_ids: np.ndarray) -> None:
-    import pyarrow as pa
+def _write_seg_table(out_dir: str, tbl) -> None:
+    """Write one segment-owned table (docs or deletes) as a single pyarrow
+    file. The dir is wiped first, so the part files of a crashed earlier
+    attempt — Spark-written ones included — never survive; an empty table
+    leaves no dir."""
+    import shutil
+
     import pyarrow.parquet as pq
 
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "part-00000.parquet")
-    tmp = path + f".tmp-{os.getpid()}"
-    pq.write_table(
-        pa.table({"doc_id": pa.array(np.sort(doc_ids), pa.int64())}),
-        tmp,
-        compression="zstd",
-    )
-    os.replace(tmp, path)
-    for n in os.listdir(out_dir):  # stale files from a crashed Spark write
-        if n.endswith(".parquet") and n != "part-00000.parquet":
-            try:
-                os.remove(os.path.join(out_dir, n))
-            except OSError:
-                pass
+    shutil.rmtree(out_dir, ignore_errors=True)
+    if tbl.num_rows:
+        os.makedirs(out_dir)
+        pq.write_table(
+            tbl, os.path.join(out_dir, "part-00000.parquet"), compression="zstd"
+        )
 
 
 def _seg_prefix(segment: int) -> str:
@@ -347,8 +295,8 @@ def _write_delta_chunks(
     new_docs: "DataFrame | None", paths: IndexPaths, meta: dict,
     segment: int, n_new: int,
 ) -> None:
-    """SPIMI pass over a batch's new rows into segment ``segment``'s chunk
-    namespace (``seg{N}-part-*``). A crashed apply may have left chunk
+    """Distributed apply: SPIMI pass over a batch's new rows into segment
+    ``segment``'s chunk namespace (``seg{N}-part-*``). A crashed apply may have left chunk
     files for this (uncommitted) segment number behind, and a retry with a
     DIFFERENT batch must not mix them in, so the namespace is wiped first.
     The chunks carry the index's (n_buckets, n_salts) layout, so the delta
@@ -375,9 +323,10 @@ def _write_delta_postings(
     spark: SparkSession, paths: IndexPaths, meta: dict, segment: int,
     delta_terms: "DataFrame | None", avgdl: float,
 ) -> None:
-    """Delta postings: the zero-shuffle merge of the segment's chunks into
-    its own postings dir (overwrite = retry-safe). ``delta_terms`` None
-    means the batch added no docs; the dir is removed."""
+    """Distributed apply's delta postings: the zero-shuffle merge of the
+    segment's chunks into its own postings dir (overwrite = retry-safe).
+    ``delta_terms`` None means the batch added no docs; the dir is
+    removed."""
     import shutil
 
     out = paths.postings_seg(segment)
@@ -401,13 +350,27 @@ def _read_stats(paths: IndexPaths, meta: dict):
     return pads.dataset(paths.stats_v(tv)).to_table().to_pandas().iloc[0]
 
 
+def _noop(route: str, decline: "str | None" = None,
+          store_rows_scanned: "int | None" = None) -> dict:
+    """Summary of an apply that commits nothing (empty or no-op batch)."""
+    return {
+        "tombstones": 0, "new_docs": 0, "segment": None, "wall_s": 0.0,
+        "route": route, "decline": decline,
+        "store_rows_scanned": store_rows_scanned,
+    }
+
+
 def _commit_segment(
     index_dir: str, paths: IndexPaths, meta: dict, segment: int, *,
     n_docs_live: int, avgdl: float, next_id: int, n_new: int,
-    n_tombstones: int, t0: float, laps: "dict[str, float]",
+    n_tombstones: int, t0: float, laps: "dict[str, float]", route: str,
+    decline: "str | None" = None, store_rows_scanned: "int | None" = None,
 ) -> dict:
-    """Commit point of both apply strategies: ONE atomic meta.json
-    replace, then the run's metrics row. Returns the apply summary."""
+    """Commit point of both apply routes: ONE atomic meta.json replace,
+    then the run's ``increment`` metrics rows — counts, wall, the route
+    (``route=<route>``), the decline reason (``decline=<reason>``), the
+    store rows probed and every stage lap (``<lap>_s``). Returns the apply
+    summary."""
     meta["segments"] = meta.get("segments", []) + [segment]
     meta["terms_version"] = segment
     meta["last_segment"] = segment
@@ -417,16 +380,21 @@ def _commit_segment(
     _write_meta(index_dir, meta)
 
     wall = time.time() - t0
-    append_metrics_driver(
-        paths.metrics,
-        [
-            ("increment", "segment", float(segment)),
-            ("increment", "tombstones", float(n_tombstones)),
-            ("increment", "new_docs", float(n_new)),
-            ("increment", "wall_s", wall),
-        ],
-    )
+    rows = [
+        ("increment", "segment", float(segment)),
+        ("increment", "tombstones", float(n_tombstones)),
+        ("increment", "new_docs", float(n_new)),
+        ("increment", "wall_s", wall),
+        ("increment", f"route={route}", 1.0),
+        *(("increment", f"{lap}_s", v) for lap, v in laps.items()),
+    ]
+    if decline is not None:
+        rows.append(("increment", f"decline={decline}", 1.0))
+    if store_rows_scanned is not None:
+        rows.append(("increment", "store_rows_scanned", float(store_rows_scanned)))
+    append_metrics_driver(paths.metrics, rows)
     return {
+        **_noop(route, decline, store_rows_scanned),
         "tombstones": n_tombstones,
         "new_docs": n_new,
         "segment": segment,
@@ -435,35 +403,133 @@ def _commit_segment(
     }
 
 
+# the batch as the in-process apply holds it, and the stored columns it
+# reads for a matched key; ts is normalised on both sides to the one
+# timestamp flavor every writer lineage of the docs store casts to
+_TS = pa.timestamp("us", tz="UTC")
+_BATCH_SCHEMA = pa.schema([
+    ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
+    ("text", pa.string()), ("tool", pa.string()), ("ts", _TS),
+    ("op", pa.string()),
+])
+_OLD_SCHEMA = pa.schema([
+    ("doc_id", pa.int64()), ("text", pa.string()), ("role", pa.string()),
+    ("tool", pa.string()), ("ts", _TS), ("dl", pa.int64()),
+])
+_KEY_SCHEMA = pa.schema([("conv_id", pa.string()), ("turn_idx", pa.int32())])
+
+
+def _probe_store(
+    index_dir: str, meta: dict, batch: pa.Table, key_lo, key_hi
+) -> "tuple[pa.Table | None, int]":
+    """Keys-first probe of the docs store for the batch's keys. Per file:
+    row groups whose ``conv_id`` stats miss ``[key_lo, key_hi]`` are
+    skipped, only ``conv_id, turn_idx`` are read and hash-joined to the
+    batch keys, and the stored columns are read only for the row groups
+    that hold a match, keeping only the matched rows; tombstoned ids drop
+    out. Returns (the live matched rows — ``_OLD_SCHEMA`` plus the batch
+    row index ``bi`` — and the store rows whose keys were read), or
+    (None, rows read) once the matched text passes DRIVER_APPLY_BYTES."""
+    import pyarrow.dataset as pds
+    import pyarrow.parquet as pq
+
+    from ..query.wand import _load_deletes
+
+    dead = _load_deletes(deletes_sources(index_dir, meta))
+    keys = batch.select(_KEY_SCHEMA.names).append_column(
+        "bi", pa.array(np.arange(batch.num_rows, dtype=np.int64))
+    )
+    parts, scanned, text_bytes = [], 0, 0
+    files = [f for d in docs_sources(index_dir, meta) for f in pds.dataset(d).files]
+    for f in files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        ci = pf.schema_arrow.get_field_index("conv_id")
+        rgs = []
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(ci).statistics
+            if (
+                st is not None and st.has_min_max and key_lo is not None
+                and (st.max < key_lo or st.min > key_hi)
+            ):
+                continue
+            rgs.append(g)
+        if not rgs:
+            continue
+        fk = pf.read_row_groups(rgs, columns=_KEY_SCHEMA.names)
+        scanned += fk.num_rows
+        hit = (
+            fk.select(_KEY_SCHEMA.names).cast(_KEY_SCHEMA)
+            .append_column("pos", pa.array(np.arange(fk.num_rows, dtype=np.int64)))
+            .join(keys, _KEY_SCHEMA.names, join_type="inner")
+        )
+        if not hit.num_rows:
+            continue
+        sizes = np.array([md.row_group(g).num_rows for g in rgs], dtype=np.int64)
+        starts = np.cumsum(sizes) - sizes
+        pos, bi = hit["pos"].to_numpy(), hit["bi"].to_numpy()
+        grp = np.searchsorted(starts, pos, side="right") - 1
+        for g in np.unique(grp):
+            sel = grp == g
+            old = (
+                pf.read_row_group(rgs[g], columns=_OLD_SCHEMA.names)
+                .take(pos[sel] - starts[g])
+                .select(_OLD_SCHEMA.names)
+                .cast(_OLD_SCHEMA, safe=False)
+                .append_column("bi", pa.array(bi[sel]))
+            )
+            if dead.size:
+                old = old.filter(pa.array(~np.isin(old["doc_id"].to_numpy(), dead)))
+            text_bytes += pc.sum(pc.binary_length(old["text"])).as_py() or 0
+            if text_bytes > DRIVER_APPLY_BYTES:
+                return None, scanned
+            parts.append(old)
+    if not parts:
+        return _OLD_SCHEMA.append(pa.field("bi", pa.int64())).empty_table(), scanned
+    return pa.concat_tables(parts), scanned
+
+
+def _null_safe_eq(a, b) -> np.ndarray:
+    """Spark's ``eqNullSafe`` over two aligned Arrow columns."""
+    eq = pc.or_(
+        pc.fill_null(pc.equal(a, b), False),
+        pc.and_(pc.is_null(a), pc.is_null(b)),
+    )
+    return eq.to_numpy(zero_copy_only=False)
+
+
 def apply_increments(
     spark: SparkSession, index_dir: str, increments: DataFrame
 ) -> dict:
-    """Apply one I/U/D batch (SURVEY.md §3.2 analog). Returns summary stats.
+    """Apply one I/U/D batch (SURVEY.md §3.2 analog). Returns the summary:
+    ``tombstones``, ``new_docs``, ``segment``, ``wall_s``, ``stage_walls``,
+    ``route`` (``"driver"`` or ``"distributed"``), ``decline`` (None, or
+    why the in-process route was declined) and ``store_rows_scanned``
+    (docs-store rows whose keys the in-process probe read; None on the
+    distributed route).
 
     Batch contract (mirrors one-binlog-row-per-message): at most one op per
     (conv_id, turn_idx) — enforced, because apply order within a batch would
     otherwise be undefined.
 
-    Two physical strategies, same logical output (round 6):
+    Two routes, same committed state:
 
-    - batches ≤ DRIVER_RANK_ROWS: the docs store is SCANNED once and never
-      shuffled (broadcast-inner of the batch keys against the live store,
-      then a batch-sized left join); every per-row decision column comes to
-      the driver in ONE narrow collect; removed-row stat deltas reuse the
-      STORED dl column (never recomputed — ADVICE r5 #5 fix) plus one
-      tokenize pass over just the removed texts; the added side's stat
-      deltas are read from the delta-segment SPIMI manifests/chunks, so
-      changed rows are tokenized exactly ONCE (r5 VERDICT Next #1); the
-      terms table updates driver-side under a row budget; stats, deletes
-      and metrics write via pyarrow (no Spark job); the independent docs/
-      chunk/removed-stat jobs overlap on driver threads (guide §2.6).
-    - larger backfills: the distributed path (shuffle join + signed
-      tokenize union + full-outer terms join), whose every stage scales
-      out.
+    - ``driver``: a batch whose text is at most DRIVER_APPLY_BYTES runs two
+      Spark jobs — the shape aggregate and one ``toArrow`` collect — and
+      nothing else touches Spark. The docs store is probed keys-first with
+      pyarrow (``_probe_store``); the new rows are tokenized ONCE
+      (``_spimi_rows_for_texts``), giving the added (df, cf), the docs
+      segment's ``dl`` and the delta postings' chunk; the removed side is
+      the same kernel over the stored texts plus the stored ``dl``;
+      terms, stats, postings (``write_postings_driver``: one term-sorted
+      file per bucket), docs and deletes are written with pyarrow.
+    - ``distributed``: bigger batches, or batches whose matched stored text
+      passes the same budget (shuffle join + signed tokenize union +
+      full-outer terms join, SPIMI chunks and the zero-shuffle merge), whose
+      every stage scales out.
 
-    Both write the delta segment with the same writers — SPIMI chunks in
-    the index's (n_buckets, n_salts) layout, the zero-shuffle postings
-    merge, driver-side stats — and commit through ``_commit_segment``.
+    Both commit through ``_commit_segment``, which records the route, the
+    decline reason and the stage laps as ``increment`` metrics rows.
     """
     paths = IndexPaths(index_dir)
     meta = read_index_meta(index_dir)
@@ -476,11 +542,15 @@ def apply_increments(
         laps[name] = round(now - _last[0], 3)
         _last[0] = now
 
-    shape = increments.agg(
+    # coalesce(1): the one-partition child already satisfies the distinct
+    # and global aggregates, so the shape is ONE job with no exchange (under
+    # AQE each exchange stage would be a job of its own)
+    shape = increments.coalesce(1).agg(
         F.count("*").alias("n"),
         F.countDistinct("conv_id", "turn_idx").alias("k"),
         F.min("conv_id").alias("key_lo"),
         F.max("conv_id").alias("key_hi"),
+        F.coalesce(F.sum(F.octet_length("text")), F.lit(0)).alias("text_bytes"),
     ).first()
     n_batch, n_keys = int(shape.n), int(shape.k)
     if n_batch != n_keys:
@@ -488,231 +558,120 @@ def apply_increments(
             f"{n_batch - n_keys} keys appear more than once in the batch"
         )
     if n_batch == 0:
-        return {"tombstones": 0, "new_docs": 0, "segment": None, "wall_s": 0.0}
-    if n_batch > DRIVER_RANK_ROWS:
+        return _noop("driver")
+    decline = None
+    if shape.text_bytes > DRIVER_APPLY_BYTES:
+        decline = (
+            f"batch text {shape.text_bytes / 2**20:.1f} MB over "
+            f"{DRIVER_APPLY_BYTES / 2**20:g} MB"
+        )
+    else:
+        batch = (
+            increments.select(*_BATCH_SCHEMA.names).toArrow()
+            .cast(_BATCH_SCHEMA).combine_chunks()
+        )
+        old, scanned = _probe_store(
+            index_dir, meta, batch, shape.key_lo, shape.key_hi
+        )
+        if old is None:
+            decline = "matched store text over budget"
+    if decline is not None:
         return _apply_increments_distributed(
-            spark, index_dir, increments, paths, meta, t0, laps, _lap
+            spark, index_dir, increments, paths, meta, t0, laps, _lap, decline
         )
 
-    live = live_docs(spark, index_dir).select(
-        "conv_id", "turn_idx", F.col("doc_id").alias("old_doc_id"),
-        F.col("text").alias("cur_text"), F.col("role").alias("cur_role"),
-        F.col("tool").alias("cur_tool"), F.col("ts").alias("cur_ts"),
-        F.col("dl").alias("cur_dl"),
+    # each batch row's stored row (null where the key is new), then the
+    # effective rows: a delete of a present key, an upsert that changes
+    # text, role, tool or ts (null-safe)
+    at = np.full(n_batch, -1, dtype=np.int64)
+    at[old["bi"].to_numpy()] = np.arange(old.num_rows)
+    cur = old.take(pa.array(at, mask=at < 0))
+    same = at >= 0
+    for c in ("text", "role", "tool", "ts"):
+        same &= _null_safe_eq(batch[c], cur[c])
+    op = batch["op"]
+    is_del = pc.fill_null(pc.equal(op, "D"), False).to_numpy(zero_copy_only=False)
+    is_up = ~same & pc.fill_null(pc.not_equal(op, "D"), False).to_numpy(
+        zero_copy_only=False
     )
-    # zone-map pruning of the ONE full-store scan (guide §6): every join
-    # match has conv_id inside the batch's key range, so this BETWEEN is
-    # implied by the inner join — it changes nothing semantically but
-    # pushes to the parquet scan, where the conv-sorted store's row-group
-    # min/max stats skip everything outside the range. Clustered batches
-    # (binlog order tracks key ranges in time-ordered tables) scan a few
-    # %% of the store; a uniform batch spans the range and prunes nothing.
-    live = live.where(F.col("conv_id").between(shape.key_lo, shape.key_hi))
-    # broadcast-inner: the live store streams past the batch's hashed keys
-    # (BroadcastHashJoin — no shuffle, no sort of the corpus), leaving a
-    # batch-sized matched relation; the left join against it is
-    # batch × batch
-    matched = live.join(
-        F.broadcast(increments.select("conv_id", "turn_idx")),
-        ["conv_id", "turn_idx"],
-        "inner",
-    )
-    joined = increments.join(matched, ["conv_id", "turn_idx"], "left").persist()
-
-    unchanged = (
-        F.col("cur_text").eqNullSafe(F.col("text"))
-        & F.col("cur_role").eqNullSafe(F.col("role"))
-        & F.col("cur_tool").eqNullSafe(F.col("tool"))
-        & F.col("cur_ts").eqNullSafe(F.col("ts"))
-    )
-    # ONE narrow collect materializes the cache and carries every per-row
-    # decision: op, match, changedness, old id, stored dl
-    flags = joined.select(
-        "conv_id", "turn_idx", "op",
-        F.col("old_doc_id"),
-        unchanged.alias("same"),
-        F.col("cur_dl"),
-    ).toPandas()
-    has_old = flags["old_doc_id"].notna()
-    same = flags["same"].fillna(False).astype(bool)
-    is_del = (flags["op"] == "D") & has_old
-    is_up = (flags["op"] != "D") & (~has_old | ~same)
-    removed_mask = has_old & (is_del | is_up)
-    tomb_ids = flags.loc[removed_mask, "old_doc_id"].to_numpy(dtype=np.int64)
-    n_tombstones = int(removed_mask.sum())
-    n_new = int(is_up.sum())
-    removed_n = n_tombstones
-    removed_tok = int(flags.loc[removed_mask, "cur_dl"].fillna(0).sum())
+    gone = cur.filter(pa.array((at >= 0) & (is_del | is_up)))
+    n_tombstones, n_new = gone.num_rows, int(is_up.sum())
     _lap("join_and_tombstones")
-
     if n_tombstones == 0 and n_new == 0:
-        joined.unpersist()
-        return {"tombstones": 0, "new_docs": 0, "segment": None, "wall_s": 0.0}
+        return _noop("driver", store_rows_scanned=scanned)
 
     segment = int(meta.get("last_segment", 0)) + 1
-
-    # fresh doc ids above the high-water mark, ranked driver-side from the
-    # flags already in hand (no extra job)
+    # fresh doc ids above the high-water mark, in key order
     next_id = meta.get("next_doc_id")
     if next_id is None:
         max_doc = all_docs(spark, index_dir, meta).agg(F.max("doc_id")).first()[0]
         next_id = int(max_doc) + 1 if max_doc is not None else 0
-    kp = (
-        flags.loc[is_up, ["conv_id", "turn_idx"]]
-        .sort_values(["conv_id", "turn_idx"], kind="stable")
-        .reset_index(drop=True)
+    new = batch.filter(pa.array(is_up)).sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")]
     )
-    kp["doc_id"] = kp.index.to_numpy(dtype="int64") + int(next_id)
-    upserts = joined.where(
-        (F.col("op") != "D") & (F.col("old_doc_id").isNull() | ~unchanged)
-    )
-    new_docs = (
-        upserts.join(
-            F.broadcast(spark.createDataFrame(kp)), ["conv_id", "turn_idx"]
-        )
-        .withColumn(
-            "dl",
-            F.coalesce(
-                F.size(
-                    F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(SPARK_TOKEN_RE), 0
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts", "dl")
-        .persist()
-    ) if n_new else None
+    doc_ids = int(next_id) + np.arange(n_new, dtype=np.int64)
     _lap("new_doc_ids")
 
-    # --- delta segment + removed-row stats, independent jobs overlapped ---
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..index.builder import build_term_stats_driver, read_manifests
-
-    def job_chunks():
-        _write_delta_chunks(new_docs, paths, meta, segment, n_new)
-
-    def job_docs_seg():
-        if n_new == 0:
-            import shutil as _sh
-
-            _sh.rmtree(paths.docs_seg(segment), ignore_errors=True)
-            return
-        new_docs.write.mode("overwrite").parquet(paths.docs_seg(segment))
-
-    def job_removed_stats() -> pd.DataFrame:
-        if n_tombstones == 0:
-            return pd.DataFrame(
-                {"term": pd.Series([], dtype=object),
-                 "d_df": pd.Series([], dtype=np.int64),
-                 "d_cf": pd.Series([], dtype=np.int64)}
-            )
-        removed_texts = joined.where(
-            F.col("old_doc_id").isNotNull()
-            & ((F.col("op") == "D") | ~unchanged)
-        ).select(F.col("cur_text").alias("text"))
-
-        def kern(batches):
-            for pdf in batches:
-                out = _term_freq_stats(pdf["text"])
-                if len(out):
-                    yield out
-
-        return (
-            removed_texts.mapInPandas(
-                kern, schema="term string, d_df long, d_cf long"
-            )
-            .groupBy("term")
-            .agg(F.sum("d_df").alias("d_df"), F.sum("d_cf").alias("d_cf"))
-            .toPandas()
+    # --- term and stat deltas: the chunk kernel's per-term (n_docs, cf)
+    # over the new rows (the ONE tokenize pass, whose rows are also the
+    # delta postings) minus the same over the stored texts ---------------
+    store_positions = bool(meta.get("store_positions", False))
+    rows, _, dls = _spimi_rows_for_texts(0, doc_ids, new["text"], store_positions)
+    removed, _, _ = _spimi_rows_for_texts(
+        0, np.arange(n_tombstones, dtype=np.int64), gone["text"]
+    )
+    delta = (
+        pd.DataFrame({
+            "term": np.concatenate([rows["term"], removed["term"]]),
+            "d_df": np.concatenate([rows["n_docs"], -removed["n_docs"]]),
+            "d_cf": np.concatenate([rows["cf"], -removed["cf"]]),
+        })
+        .astype({"d_df": np.int64, "d_cf": np.int64})
+        .groupby("term", sort=False, as_index=False)
+        .sum()
+    )
+    st = _read_stats(paths, meta)
+    n_docs_live = int(st.n_docs) - n_tombstones + n_new
+    total_tokens = (
+        int(st.total_tokens) - int(pc.sum(gone["dl"]).as_py() or 0)
+        + int(dls.sum())
+    )
+    avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
+    write_stats_driver(paths.stats_v(segment), n_docs_live, avgdl, total_tokens)
+    if not _update_terms_driver(
+        paths.terms_v(meta.get("terms_version", 0)), delta,
+        meta["n_buckets"], paths.terms_v(segment),
+    ):
+        _update_terms_spark(
+            spark, paths, meta, segment,
+            spark.createDataFrame(delta, schema="term string, d_df long, d_cf long"),
         )
+    _lap("term_deltas_and_stats")
 
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_chunks = pool.submit(job_chunks)
-        f_docs = pool.submit(job_docs_seg)
-        f_removed = pool.submit(job_removed_stats)
-        f_chunks.result()
-        removed_stats = f_removed.result()
+    write_postings_driver(
+        rows, avgdl, int(meta["n_buckets"]), paths.postings_seg(segment),
+        store_positions,
+    )
+    _lap("delta_postings")
 
-        # added-side stats from the delta chunks (tokenized ONCE, above)
-        delta_glob = _seg_prefix(segment) + "part-*.parquet"
-        delta_terms_pdf = build_term_stats_driver(
-            paths.chunks, meta["n_buckets"], glob=delta_glob
-        )
-        if delta_terms_pdf is None:  # over-budget delta: distributed agg
-            delta_terms_pdf = (
-                build_term_stats(
-                    spark, paths.chunks, meta["n_buckets"], glob=delta_glob
-                ).toPandas()
-            )
-        mans = read_manifests(paths.chunks, _seg_prefix(segment)) if n_new else []
-        added_tok = int(sum(m.get("sum_dl", 0) for m in mans))
+    docs = (
+        new.select(["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+        .add_column(0, "doc_id", pa.array(doc_ids))
+        .append_column("dl", pa.array(dls.astype(np.int32)))
+    )
+    _write_seg_table(paths.docs_seg(segment), docs)
+    _write_seg_table(
+        paths.deletes_seg(segment),
+        pa.table({"doc_id": pa.array(np.sort(gone["doc_id"].to_numpy()))}),
+    )
+    _lap("segment_writes")
 
-        # --- stats (exact, no job) ---------------------------------------
-        st = _read_stats(paths, meta)
-        n_docs_live = int(st.n_docs) - removed_n + n_new
-        total_tokens = int(st.total_tokens) - removed_tok + added_tok
-        avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
-        write_stats_driver(
-            paths.stats_v(segment), n_docs_live, avgdl, total_tokens
-        )
-
-        # --- terms table: old ± (added from chunks, removed from pass) ---
-        delta = (
-            delta_terms_pdf.rename(columns={"df": "d_df", "cf": "d_cf"})[
-                ["term", "d_df", "d_cf"]
-            ]
-            if len(delta_terms_pdf)
-            else pd.DataFrame(
-                {"term": pd.Series([], dtype=object),
-                 "d_df": pd.Series([], dtype=np.int64),
-                 "d_cf": pd.Series([], dtype=np.int64)}
-            )
-        )
-        if len(removed_stats):
-            removed_stats = removed_stats.copy()
-            removed_stats["d_df"] = -removed_stats["d_df"]
-            removed_stats["d_cf"] = -removed_stats["d_cf"]
-            delta = (
-                pd.concat([delta, removed_stats], ignore_index=True)
-                .groupby("term", sort=False, as_index=False)
-                .sum()
-            )
-        if not _update_terms_driver(
-            paths.terms_v(meta.get("terms_version", 0)), delta,
-            meta["n_buckets"], paths.terms_v(segment),
-        ):
-            _update_terms_spark(
-                spark, paths, meta, segment,
-                spark.createDataFrame(
-                    delta, schema="term string, d_df long, d_cf long"
-                ),
-            )
-        _lap("term_deltas_and_stats")
-
-        # --- delta postings: zero-shuffle direct merge into the seg dir ---
-        delta_terms_df = spark.createDataFrame(
-            delta_terms_pdf, schema="term string, df long, cf long, bucket int"
-        ) if n_new else None
-        _write_delta_postings(spark, paths, meta, segment, delta_terms_df, avgdl)
-        _lap("delta_postings")
-
-        # --- segment deletes (driver write) + docs write join -------------
-        _write_deletes_driver(paths.deletes_seg(segment), tomb_ids)
-        f_docs.result()
-        _lap("segment_writes")
-
-    out = _commit_segment(
+    return _commit_segment(
         index_dir, paths, meta, segment, n_docs_live=n_docs_live,
         avgdl=avgdl, next_id=next_id, n_new=n_new,
-        n_tombstones=n_tombstones, t0=t0, laps=laps,
+        n_tombstones=n_tombstones, t0=t0, laps=laps, route="driver",
+        store_rows_scanned=scanned,
     )
-    joined.unpersist()
-    if new_docs is not None:
-        new_docs.unpersist()
-    return out
 
 
 def _apply_increments_distributed(
@@ -724,11 +683,13 @@ def _apply_increments_distributed(
     t0: float,
     laps: "dict[str, float]",
     _lap,
+    decline: str,
 ) -> dict:
-    """Backfill-scale path: the join, the signed tokenize union and the
-    full-outer terms join run distributed; the delta segment goes through
-    the same chunk writer, zero-shuffle merge and commit as the driver
-    path."""
+    """Backfill-scale route, taken for the reason ``decline``: the join,
+    the signed tokenize union and the full-outer terms join run
+    distributed; the delta segment is SPIMI chunks in the index's layout
+    plus the zero-shuffle merge, and the commit is the in-process route's
+    ``_commit_segment``."""
     live = live_docs(spark, index_dir).select(
         "conv_id", "turn_idx", F.col("doc_id").alias("old_doc_id"),
         F.col("text").alias("cur_text"), F.col("role").alias("cur_role"),
@@ -819,7 +780,7 @@ def _apply_increments_distributed(
         joined.unpersist()
         all_tombstones.unpersist()
         new_docs.unpersist()
-        return {"tombstones": 0, "new_docs": 0, "segment": None, "wall_s": 0.0}
+        return _noop("distributed", decline)
 
     segment = int(meta.get("last_segment", 0)) + 1
 
@@ -885,7 +846,7 @@ def _apply_increments_distributed(
     write_stats_driver(paths.stats_v(segment), n_docs_live, avgdl, total_tokens)
     _lap("stats")
 
-    # --- delta segment postings: the driver path's chunk + merge writers --
+    # --- delta segment postings: SPIMI chunks + the zero-shuffle merge ----
     _write_delta_chunks(new_docs, paths, meta, segment, n_new)
     delta_terms = build_term_stats(
         spark, paths.chunks, meta["n_buckets"],
@@ -902,7 +863,8 @@ def _apply_increments_distributed(
     out = _commit_segment(
         index_dir, paths, meta, segment, n_docs_live=n_docs_live,
         avgdl=avgdl, next_id=next_id, n_new=n_new,
-        n_tombstones=n_tombstones, t0=t0, laps=laps,
+        n_tombstones=n_tombstones, t0=t0, laps=laps, route="distributed",
+        decline=decline,
     )
     # a CDC session applies batches forever: release this batch's cached
     # partitions so storage memory can't accumulate across applies
@@ -1005,14 +967,6 @@ def maybe_compact(
     return out
 
 
-# The live-splice temp-corpus path holds every delta doc row and tombstone
-# id on the driver for its planning pre-pass; past this row budget compact
-# hands the live docs to build_index, which range-sorts them (large
-# backfills / delta-heavy indexes keep the scale-safe plan).
-COMPACT_SPLICE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_COMPACT_SPLICE_ROWS", "2000000")
-)
-
 _CORPUS_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
 
 
@@ -1031,16 +985,19 @@ def _splice_live_sorted(
 
     Returns ``(engaged, decline_reason)``: ``(True, None)`` when the temp
     corpus was written, ``(False, reason)`` when preconditions fail — no
-    base store, footer stats missing or out of order, delta/tombstone rows
-    past the driver budget, or the row-conservation check after the merge
+    base store, footer stats missing or out of order at row-group
+    granularity, delta docs + deletes bytes (footer ``total_byte_size``)
+    past DRIVER_APPLY_BYTES, or the row-conservation check after the merge
     — in which case the caller hands the live docs to ``build_index``,
     which range-sorts them.
     """
     import glob as _glob
 
-    import pyarrow as pa
     import pyarrow.dataset as pds
     import pyarrow.parquet as pq
+
+    from ..index.builder import footer_conv_walk
+    from ..query.wand import _load_deletes
 
     paths = IndexPaths(index_dir)
     base_files = sorted(_glob.glob(os.path.join(paths.docs, "*.parquet")))
@@ -1048,64 +1005,44 @@ def _splice_live_sorted(
         return False, "no base docs files"
     seg_dirs = [d for d in docs_sources(index_dir, meta) if d != paths.docs]
     del_dirs = deletes_sources(index_dir, meta)
+    seg_files = [
+        f for d in seg_dirs for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
+    ]
     try:
-        n_delta_raw = (
-            sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for d in seg_dirs
-                for f in _glob.glob(os.path.join(d, "*.parquet"))
-            )
-            if seg_dirs
-            else 0
+        # the driver budget, priced from the delta docs and deletes footers:
+        # the pre-pass below holds those rows, text included
+        seg_md = [pq.ParquetFile(f).metadata for f in seg_files]
+        del_md = [
+            pq.ParquetFile(f).metadata
+            for d in del_dirs for f in _glob.glob(os.path.join(d, "*.parquet"))
+        ]
+        n_delta_raw = sum(md.num_rows for md in seg_md)
+        held = sum(
+            md.row_group(g).total_byte_size
+            for md in seg_md + del_md for g in range(md.num_row_groups)
         )
-        n_dead_raw = (
-            sum(
-                pq.ParquetFile(f).metadata.num_rows
-                for d in del_dirs
-                for f in _glob.glob(os.path.join(d, "*.parquet"))
-            )
-            if del_dirs
-            else 0
-        )
-        if n_delta_raw + n_dead_raw > COMPACT_SPLICE_ROWS:
-            return False, "delta+dead rows over budget"
+        if held > DRIVER_APPLY_BYTES:
+            return False, "delta+dead bytes over budget"
 
-        # Footer walk: file-granular conv ordering (equality allowed — a
-        # conversation may straddle files) + the exact (conv, turn) key of
-        # each file's first row, which is the span boundary the delta
-        # placement searches. Any absent stat → decline.
+        # Footer walk: conv order at row-group granularity across the base
+        # files (equality allowed — a conversation may straddle groups),
+        # then the exact (conv, turn) key of each file's first row, which is
+        # the span boundary the delta placement searches.
+        _, unsorted = footer_conv_walk(base_files)
+        if unsorted is not None:
+            return False, unsorted
         firsts: "list[tuple[str, int]]" = []
         n_base = 0
-        prev_max: "str | None" = None
         kept_files: "list[str]" = []
         for f in base_files:
             pf = pq.ParquetFile(f)
-            md = pf.metadata
-            if md.num_rows == 0:
+            if pf.metadata.num_rows == 0:
                 continue
-            idx = {
-                md.row_group(0).column(j).path_in_schema: j
-                for j in range(md.num_columns)
-            }
-            if "conv_id" not in idx or "doc_id" not in idx:
+            if "doc_id" not in pf.schema_arrow.names:
                 return False, "missing columns in base footer"
-            st_lo = md.row_group(0).column(idx["conv_id"]).statistics
-            st_hi = md.row_group(md.num_row_groups - 1).column(
-                idx["conv_id"]
-            ).statistics
-            if (
-                st_lo is None
-                or st_hi is None
-                or not st_lo.has_min_max
-                or not st_hi.has_min_max
-            ):
-                return False, f"absent conv stats in {f}"
-            if prev_max is not None and st_lo.min < prev_max:
-                return False, f"file conv order violated at {f}"
-            prev_max = st_hi.max if prev_max is None else max(prev_max, st_hi.max)
             head = pf.read_row_group(0, columns=["conv_id", "turn_idx"])
             firsts.append((head.column(0)[0].as_py(), int(head.column(1)[0].as_py())))
-            n_base += md.num_rows
+            n_base += pf.metadata.num_rows
             kept_files.append(f)
         if not kept_files:
             return False, "all base files empty"
@@ -1114,37 +1051,18 @@ def _splice_live_sorted(
 
         # Tombstone ids: one sorted driver array (the delete-bitmap analog;
         # budget-gated above).
-        del_files = [
-            f for d in del_dirs for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
-        ]
-        dead = (
-            np.unique(
-                pds.dataset(del_files)
-                .to_table(columns=["doc_id"])
-                .column("doc_id")
-                .to_numpy()
-            )
-            if del_files
-            else np.empty(0, dtype=np.int64)
-        )
+        dead = _load_deletes(del_dirs)
 
         # Delta pre-pass (driver): concat the committed delta segments, drop
         # tombstoned rows, sort by key, write ONE small-row-group file the
         # merge tasks range-prune. This is the only place delta text is
-        # held in memory — bounded by COMPACT_SPLICE_ROWS.
+        # held in memory — bounded by DRIVER_APPLY_BYTES.
         delta_path = ""
         n_delta_live = 0
-        seg_files = [
-            f for d in seg_dirs for f in sorted(_glob.glob(os.path.join(d, "*.parquet")))
-        ]
         if seg_files and n_delta_raw:
             dt = pds.dataset(seg_files).to_table(columns=["doc_id"] + _CORPUS_COLS)
             if dead.size:
-                ids = dt.column("doc_id").to_numpy()
-                pos = np.searchsorted(dead, ids)
-                in_rng = pos < dead.size
-                pos[~in_rng] = 0
-                dt = dt.filter(pa.array(~(in_rng & (dead[pos] == ids))))
+                dt = dt.filter(pa.array(~np.isin(dt["doc_id"].to_numpy(), dead)))
             dt = dt.sort_by([("conv_id", "ascending"), ("turn_idx", "ascending")])
             dt = dt.select(_CORPUS_COLS)
             # match the base store's physical schema exactly (tz-aware vs
@@ -1200,11 +1118,8 @@ def _splice_live_sorted(
                 base = pq.read_table(path, columns=["doc_id"] + out_cols)
                 dd = dead_bc.value
                 if dd.size:
-                    ids = base.column("doc_id").to_numpy()
-                    pos = np.searchsorted(dd, ids)
-                    in_rng = pos < dd.size
-                    pos[~in_rng] = 0
-                    base = base.filter(pa.array(~(in_rng & (dd[pos] == ids))))
+                    ids = base["doc_id"].to_numpy()
+                    base = base.filter(pa.array(~np.isin(ids, dd)))
                 base = base.select(out_cols)
                 parts = [base]
                 if delta_path:

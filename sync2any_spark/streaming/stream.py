@@ -5,7 +5,10 @@ The reference consumes binlog events from Kafka one row at a time
 (``extract/KafkaMsgListener.java``), acking at CHECKPOINT markers. The
 Spark-native equivalent is a streaming source feeding ``foreachBatch``,
 where each micro-batch applies the same idempotent I/U/D merge the batch
-path uses (streaming.incremental.apply_increments):
+path uses (streaming.incremental.apply_increments): a micro-batch whose
+text fits ``DRIVER_APPLY_BYTES`` is collected once as Arrow and applied
+in-process (two Spark jobs per batch), a bigger one takes the distributed
+apply, and each commit records the route it took:
 
 - **source**: a file source (a directory new increment-parquet files land
   in — the sandbox stand-in for the Kafka topic) or a real

@@ -106,3 +106,6 @@ def test_status_reports_latest_run(spark, tmp_path_factory, capsys, monkeypatch)
     assert st["meta"]["last_segment"] == 2
     assert st["metrics"]["increment.segment"] == 2
     assert st["metrics"]["increment.new_docs"] == 1
+    # the route each increment took, and its stage laps
+    assert st["metrics"]["increment.route=driver"] == 1
+    assert "increment.join_and_tombstones_s" in st["metrics"]

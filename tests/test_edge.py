@@ -185,6 +185,136 @@ def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
                     assert gs == pytest.approx(ws, rel=1e-9), (round_i, q, name)
 
 
+def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
+    """Property test for the two apply routes: random I/U/D batches — an
+    'İ' text on both the removed and the added side of every batch (it
+    forces the tokenizer's regex fallback), CJK tokens, NULL texts, role-,
+    tool- and ts-only changes, unchanged upserts and deletes of absent
+    keys — go to two copies of one index, one applied in-process and one
+    forced distributed (DRIVER_APPLY_BYTES = 0). Both must commit the
+    expected live rows and the same doc ids, dl, terms and stats; a
+    re-apply is a no-op on both; and both searchers on both copies return
+    the oracle's exact ranking over the live corpus. The second round
+    stores positions."""
+    import shutil
+
+    import numpy as np
+    import pandas as pd
+    import pyarrow.dataset as pds
+
+    import sync2any_spark.streaming.incremental as inc
+    from sync2any_spark.index.builder import IndexPaths, read_index_meta
+    from sync2any_spark.query.serving import LocalSearcher
+
+    vocab = ["ok", "w1", "w2", "data", "x9", "中", "文", "한", "İstanbul", "qq"]
+    rng = np.random.default_rng(4321)
+    ts2 = datetime.datetime(2026, 2, 2)
+    cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
+
+    def text():
+        if rng.random() < 0.1:
+            return None
+        idxs = np.minimum(rng.zipf(1.6, size=int(rng.integers(0, 10))) - 1, 9)
+        return " ".join(vocab[i] for i in idxs)
+
+    def live(d):
+        pdf = inc.live_docs(spark, d).select("doc_id", *cols, "dl").toPandas()
+        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+        return pdf.sort_values("doc_id").reset_index(drop=True)
+
+    def state(d):
+        meta = read_index_meta(d)
+        paths = IndexPaths(d)
+        tv = meta["terms_version"]
+        terms = (
+            pds.dataset(paths.terms_v(tv)).to_table(columns=["term", "df", "cf"])
+            .sort_by("term").to_pylist()
+        )
+        stats = pds.dataset(paths.stats_v(tv)).to_table().to_pylist()
+        return live(d), terms, stats, meta.get("last_segment")
+
+    for round_i, positions in enumerate((False, True)):
+        rows = {
+            (f"conv{c:02d}", t): ["user", text(), "", TS]
+            for c in range(4) for t in range(int(rng.integers(1, 8)))
+        }
+        rows[("conv00", 0)][1] = "İstanbul ok 中"
+        drv = str(tmp_path_factory.mktemp(f"rand_cdc_{round_i}"))
+        build_index(
+            spark, spark.createDataFrame([(*k, *v) for k, v in rows.items()], SCHEMA),
+            drv, n_partitions=4, n_buckets=4, n_salts=2, heavy_df_threshold=5,
+            store_positions=positions,
+        )
+        dist = drv + "_dist"
+        shutil.copytree(drv, dist)
+        for batch_i in range(2):
+            # İ on both sides: the stored text of ("conv00", 0) holds one
+            batch = [("conv00", 0, "user", f"İİ w{batch_i} data", "", TS, "U")]
+            rows[("conv00", 0)] = ["user", batch[0][3], "", TS]
+            keys = [k for k in rows if k != ("conv00", 0)]
+            for j in rng.choice(len(keys), size=len(keys) // 2, replace=False):
+                k = keys[j]
+                role, txt, tool, ts = rows[k]
+                kind = int(rng.integers(0, 6))
+                if kind == 0:
+                    del rows[k]
+                    batch.append((*k, role, txt, tool, ts, "D"))
+                    continue
+                new = [role, txt, tool, ts]
+                if kind == 1:
+                    new[1] = text()
+                elif kind == 2:
+                    new[0] = "assistant" if role == "user" else "user"
+                elif kind == 3:
+                    new[2] = tool + "grep"
+                elif kind == 4:
+                    new[3] = ts2 if ts == TS else TS
+                rows[k] = new  # kind 5: an unchanged upsert
+                batch.append((*k, *new, "U"))
+            batch.append(("conv_absent", 0, "user", "gone", "", TS, "D"))
+            for t in range(3):
+                k = (f"conv_new{batch_i}", t)
+                rows[k] = ["user", None if t == 0 else text(), "", ts2]
+                batch.append((*k, *rows[k], "I"))
+            df = spark.createDataFrame(batch, SCHEMA + ", op string")
+            s_drv = inc.apply_increments(spark, drv, df)
+            with monkeypatch.context() as m:
+                m.setattr(inc, "DRIVER_APPLY_BYTES", 0)
+                s_dist = inc.apply_increments(spark, dist, df)
+            assert (s_drv["route"], s_dist["route"]) == ("driver", "distributed")
+            for key in ("segment", "new_docs", "tombstones"):
+                assert s_drv[key] == s_dist[key], (round_i, batch_i, key)
+
+            a, b = state(drv), state(dist)
+            assert a[0].equals(b[0]), (round_i, batch_i)
+            assert a[1:] == b[1:], (round_i, batch_i)
+            got = {
+                (r.conv_id, r.turn_idx): [r.role, r.text, r.tool, r.ts]
+                for r in a[0].itertuples(index=False)
+            }
+            want = {k: [*v[:3], pd.Timestamp(v[3], tz="UTC")] for k, v in rows.items()}
+            assert got == want, (round_i, batch_i)
+
+            again = inc.apply_increments(spark, drv, df)
+            with monkeypatch.context() as m:
+                m.setattr(inc, "DRIVER_APPLY_BYTES", 0)
+                again_dist = inc.apply_increments(spark, dist, df)
+            for s in (again, again_dist):
+                assert (s["segment"], s["new_docs"], s["tombstones"]) == (None, 0, 0)
+            assert state(drv)[1:] == a[1:] and state(dist)[1:] == b[1:]
+
+            oracle = BM25Oracle(list(zip(a[0]["doc_id"], a[0]["text"])))
+            for d in (drv, dist):
+                for searcher in (IndexSearcher(spark, d), LocalSearcher(d)):
+                    for q in ["ok", "w1 data", "中 文", "i stanbul", "qq x9", "한"]:
+                        got_q, want_q = searcher.search(q, 5), oracle.topk(q, 5)
+                        assert [g[0] for g in got_q] == [w[0] for w in want_q], (
+                            round_i, batch_i, d, q,
+                        )
+                        for (_, gs), (_, ws) in zip(got_q, want_q):
+                            assert gs == pytest.approx(ws, rel=1e-9), (d, q)
+
+
 def _sorted_file(tmp_path, keys, row_group_size):
     """A (conv_id, turn_idx)-sorted source file with the given keys."""
     import pyarrow as pa

@@ -239,10 +239,11 @@ def test_driver_apply_merges_delta_without_shuffle(
 def test_distributed_apply_equals_driver_apply(
     spark, pristine, increments, tmp_path_factory, monkeypatch
 ):
-    """The backfill-scale apply (forced with DRIVER_RANK_ROWS = 0) commits
-    the same doc ids, terms and stats as the driver-path apply of the same
-    batch, through the same zero-shuffle delta merge, and both searchers
-    answer it rank- and score-identically to the oracle."""
+    """The backfill-scale apply (forced with DRIVER_APPLY_BYTES = 0) commits
+    the same doc ids, terms and stats as the in-process apply of the same
+    batch, its delta merge is the zero-shuffle one, both routes and the
+    decline reason are recorded as metrics rows, and both searchers answer
+    it rank- and score-identically to the oracle."""
     import pyarrow.dataset as pads
 
     import sync2any_spark.index.builder as builder
@@ -253,11 +254,20 @@ def test_distributed_apply_equals_driver_apply(
     dist = _copy_index(pristine, tmp_path_factory, "idx_apply_dist")
     monkeypatch.setattr(builder, "_build_postings_direct_shuffle", _no_shuffle_merge)
     s_drv = apply_increments(spark, drv, increments)
-    monkeypatch.setattr(inc_mod, "DRIVER_RANK_ROWS", 0)
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 0)
     s_dist = apply_increments(spark, dist, increments)
-    assert "stats" in s_dist["stage_walls"]  # the distributed path ran
+    assert (s_drv["route"], s_drv["decline"]) == ("driver", None)
+    assert s_drv["store_rows_scanned"] > 0
+    assert s_dist["route"] == "distributed"
+    assert s_dist["decline"].startswith("batch text ")
+    assert s_dist["decline"].endswith(" MB over 0 MB")
     for key in ("segment", "new_docs", "tombstones"):
         assert s_dist[key] == s_drv[key], key
+    for idx, s in ((drv, s_drv), (dist, s_dist)):
+        keys = set(_metric_keys(idx, "increment"))
+        assert f"route={s['route']}" in keys
+        assert {f"{lap}_s" for lap in s["stage_walls"]} <= keys
+    assert f"decline={s_dist['decline']}" in keys
 
     def state(idx):
         meta = builder.read_index_meta(idx)
@@ -623,10 +633,10 @@ def test_compact_splice_equals_shuffle_path(
     assert r0["resort_reason"] == "no source_path"
 
     out_shuffle = str(tmp_path_factory.mktemp("idx_c_shuffle"))
-    monkeypatch.setattr(inc_mod, "COMPACT_SPLICE_ROWS", 0)
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 0)
     r2 = compact(spark, base2, out_shuffle)
     assert r2["live_spliced"] is False
-    assert r2["splice_decline"] == "delta+dead rows over budget"
+    assert r2["splice_decline"] == "delta+dead bytes over budget"
 
     def docs_pdf(d):
         pdf = (
@@ -662,3 +672,71 @@ def test_compact_splice_equals_shuffle_path(
     for q in QUERIES + ["edgeterm"]:
         assert sa.search(q, 10) == sb.search(q, 10), q
     assert sa.search("edgeterm", 10)  # the boundary inserts are queryable
+
+
+def _metric_keys(index_dir, stage):
+    import pyarrow.dataset as pads
+
+    m = pads.dataset(index_dir + "/metrics").to_table().to_pandas()
+    return list(m[m.stage == stage].key)
+
+
+def test_long_text_delta_declines_splice_by_bytes(
+    spark, pristine, tmp_path_factory
+):
+    """A few rows of long text are few rows but many bytes: the batch
+    itself passes DRIVER_APPLY_BYTES and takes the distributed route, and
+    compact's delta pre-pass, which would hold that text on the driver,
+    declines by bytes before reading it."""
+    idx = _copy_index(pristine, tmp_path_factory, "idx_long_text")
+    ts = datetime.datetime(2026, 6, 3)
+    # ~3 MB per row, distinct rows (no dictionary page collapses them)
+    body = "w0001 ok " * 350_000
+    batch = spark.createDataFrame(
+        [
+            (f"conv_long{i:03d}", 0, "user", f"longterm v{i} {body}", "", ts, "I")
+            for i in range(3)
+        ],
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, op string",
+    )
+    s = apply_increments(spark, idx, batch)
+    assert s["new_docs"] == 3 and s["route"] == "distributed"
+    assert s["decline"] == "batch text 9.0 MB over 8 MB"
+    assert "decline=batch text 9.0 MB over 8 MB" in _metric_keys(idx, "increment")
+
+    out = str(tmp_path_factory.mktemp("idx_long_text_c"))
+    r = compact(spark, idx, out)
+    assert r["live_spliced"] is False
+    assert r["splice_decline"] == "delta+dead bytes over budget"
+    assert _metric_keys(out, "splice_decline") == ["delta+dead bytes over budget"]
+    assert len(IndexSearcher(spark, out).search("longterm", 10)) == 3
+
+
+def test_splice_declines_unsorted_base_file_up_front(
+    spark, pristine, tmp_path_factory
+):
+    """A base docs file whose row groups are out of key order declines the
+    splice before any work, naming the file — not after a fused pass whose
+    span check fails and a re-sort retry."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    idx = _copy_index(pristine, tmp_path_factory, "idx_unsorted_file")
+    ddir = os.path.join(idx, "docs")
+    bad = max(
+        (os.path.join(ddir, f) for f in os.listdir(ddir) if f.endswith(".parquet")),
+        key=lambda f: pq.ParquetFile(f).metadata.num_rows,
+    )
+    tbl = pq.read_table(bad)
+    assert len(set(tbl["conv_id"].to_pylist())) > 1
+    pq.write_table(
+        tbl.take(list(range(tbl.num_rows - 1, -1, -1))), bad, row_group_size=4
+    )
+    out = str(tmp_path_factory.mktemp("idx_unsorted_file_c"))
+    r = compact(spark, idx, out)
+    assert r["live_spliced"] is False
+    assert r["splice_decline"] == f"row-group conv order violated at {bad}"
+    assert "span key ranges overlap" not in _metric_keys(out, "resort")
+    assert r["resort_reason"] == "no source_path"

@@ -5,9 +5,6 @@ Usage: python tools/capture_plans.py <out_dir> <suffix>
   e.g. python tools/capture_plans.py plans/r06 after
 
 Captures, for the query paths round 6 touched:
-  - increment_join: the apply_increments batch-vs-live-store join
-    (before: SortMergeJoin shuffling the full docs store; after:
-    broadcast-inner + batch-sized left join)
   - compact_docs: the plan that moves the text corpus when compact()'s
     splice declines (before: the round-5 route, live docs through
     build_docs — the assign_doc_ids window fallback of the since-deleted
@@ -15,6 +12,10 @@ Captures, for the query paths round 6 touched:
     + sortWithinPartitions write)
   - bm25_topk_distributed_transcripts: the declared distributed query
     (plan shape must be unchanged — included as the no-regression proof)
+
+An I/U/D batch is applied first so the live docs carry tombstones. The
+apply itself has no plan to capture: a batch under the driver byte budget
+is collected once as Arrow and applied in-process.
 """
 import contextlib
 import io
@@ -27,7 +28,6 @@ sys.path.insert(0, REPO)
 
 import numpy as np
 import pyarrow.parquet as pq
-from pyspark.sql import functions as F
 
 from sync2any_spark.generator import ensure_transcripts
 from sync2any_spark.index.builder import build_index
@@ -67,34 +67,8 @@ def main() -> None:
         head[["conv_id", "turn_idx", "op", "role", "text", "tool", "ts"]]
     )
     apply_increments(spark, idx, batch)
-    batch2 = batch.withColumn("text", F.concat(F.col("text"), F.lit(" y")))
 
-    # 1. the apply_increments join as the current code spells it.
-    # autoBroadcastJoinThreshold off for THIS capture: at bench/production
-    # scale the docs store far exceeds the 10 MB auto-broadcast estimate,
-    # so the at-scale plan is what matters — explicit F.broadcast hints
-    # (the after-shape) are unaffected by the threshold.
-    prev_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    live = live_docs(spark, idx).select(
-        "conv_id", "turn_idx", F.col("doc_id").alias("old_doc_id"),
-        F.col("text").alias("cur_text"), F.col("role").alias("cur_role"),
-        F.col("tool").alias("cur_tool"), F.col("ts").alias("cur_ts"),
-        *([F.col("dl").alias("cur_dl")] if suffix != "before" else []),
-    )
-    if suffix == "before":
-        joined = batch2.join(live, ["conv_id", "turn_idx"], "left")
-    else:
-        matched = live.join(
-            F.broadcast(batch2.select("conv_id", "turn_idx")),
-            ["conv_id", "turn_idx"], "inner",
-        )
-        joined = batch2.join(matched, ["conv_id", "turn_idx"], "left")
-    with open(os.path.join(out_dir, f"increment_join_{suffix}.txt"), "w") as f:
-        f.write(explain_str(joined))
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thr)
-
-    # 2. the corpus-moving plan of compact()
+    # 1. the corpus-moving plan of compact()
     lv = live_docs(spark, idx).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
@@ -109,7 +83,7 @@ def main() -> None:
     with open(os.path.join(out_dir, f"compact_docs_{suffix}.txt"), "w") as f:
         f.write(explain_str(plan_df))
 
-    # 3. declared distributed query (no-regression evidence)
+    # 2. declared distributed query (no-regression evidence)
     from __spark_entry__ import queries
 
     q = queries()["bm25_topk_distributed_transcripts"]
