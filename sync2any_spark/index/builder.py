@@ -1985,12 +1985,12 @@ def force_merge_postings(
     rewrites each bucket into ONE term-sorted file with ``row_group_rows``
     rows per row group, so a query touches one file per bucket and prunes
     to its terms' row groups via the parquet column stats. Distributed
-    (one task per bucket — at 10^12 docs a bucket is one serving shard's
-    postings, the natural rewrite unit), task-side writes go through
-    ``WriteFS``, and the COMMIT is the atomic meta.json swap: readers
-    resolve the base dir through ``meta['postings_dir']``, so a crash
-    mid-rewrite leaves the committed layout untouched and a retry simply
-    overwrites the staging dir. The old layout is removed only after the
+    (the bucket is the rewrite unit — at 10^12 docs a bucket is one serving
+    shard's postings — and each task takes TASK_PACK buckets), task-side
+    writes go through ``WriteFS``, and the COMMIT is the atomic meta.json
+    swap: readers resolve the base dir through ``meta['postings_dir']``, so
+    a crash mid-rewrite leaves the committed layout untouched and a retry
+    simply overwrites the staging dir. The old layout is removed only after the
     swap. Returns {buckets, blocks, out_dir, wall_s}."""
     import shutil
 
@@ -2013,31 +2013,40 @@ def force_merge_postings(
         if name.startswith("bucket=")
     )
 
-    def merge_bucket(key, pdf):
+    def merge_buckets(batches):
         import pyarrow as pa
         import pyarrow.dataset as pds
 
         pa.set_cpu_count(1)
-        b = int(key[0])
-        tbl = pds.dataset(os.path.join(cur, f"bucket={b}")).to_table()
-        tbl = tbl.sort_by(
-            [("term", "ascending"), ("salt", "ascending"), ("min_doc", "ascending")]
-        )
-        d = os.path.join(out_dir, f"bucket={b}")
-        wfs.makedirs(d)
-        wfs.write_table(
-            tbl,
-            os.path.join(d, "part-00000.parquet"),
-            compression=POSTINGS_COMPRESSION,
-            row_group_size=row_group_rows,
-        )
-        return pd.DataFrame([{"bucket": b, "n_blocks": tbl.num_rows}])
+        for pdf in batches:
+            for b in pdf["bucket"]:
+                b = int(b)
+                tbl = pds.dataset(os.path.join(cur, f"bucket={b}")).to_table()
+                tbl = tbl.sort_by([
+                    ("term", "ascending"), ("salt", "ascending"),
+                    ("min_doc", "ascending"),
+                ])
+                d = os.path.join(out_dir, f"bucket={b}")
+                wfs.makedirs(d)
+                wfs.write_table(
+                    tbl,
+                    os.path.join(d, "part-00000.parquet"),
+                    compression=POSTINGS_COMPRESSION,
+                    row_group_size=row_group_rows,
+                )
+                yield pd.DataFrame([{"bucket": b, "n_blocks": tbl.num_rows}])
 
-    bdf = spark.createDataFrame([(b,) for b in buckets], "bucket int")
-    man = bdf.groupBy("bucket").applyInPandas(
-        merge_bucket, schema="bucket int, n_blocks long"
+    # parallelize, not a groupBy: AQE coalesces a shuffle of this tiny
+    # bucket table into ONE partition and merges every bucket in one task
+    # (the build_postings_direct trap)
+    rdd = spark.sparkContext.parallelize(
+        [(b,) for b in buckets], _packed_partitions(len(buckets))
     )
-    agg = man.agg(F.coalesce(F.sum("n_blocks"), F.lit(0)).alias("nb")).first()
+    man = (
+        spark.createDataFrame(rdd, "bucket int")
+        .mapInPandas(merge_buckets, schema="bucket int, n_blocks long")
+        .toPandas()
+    )
     # commit: atomic meta swap flips every reader to the merged layout
     meta = read_index_meta(index_dir)
     old_rel = meta.get("postings_dir", "postings")
@@ -2050,7 +2059,7 @@ def force_merge_postings(
     shutil.rmtree(os.path.join(index_dir, old_rel), ignore_errors=True)
     return {
         "buckets": len(buckets),
-        "blocks": int(agg.nb),
+        "blocks": int(man["n_blocks"].sum()),
         "out_dir": out_rel,
         "wall_s": time.time() - t0,
     }

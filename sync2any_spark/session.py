@@ -8,7 +8,10 @@ here encode the engine's scale posture:
 - UTC session timezone (the reference hard-codes a +8h timestamp shift,
   ``model/mysql/TableRecords.java:304-308`` — we pin UTC instead and test it),
 - shuffle partitions sized to the local core count; on a real cluster this
-  is ``--conf spark.sql.shuffle.partitions=<2-3x total cores>``.
+  is ``--conf spark.sql.shuffle.partitions=<2-3x total cores>``,
+- Python workers start from ``pyspark_graft_worker`` (repo root), which
+  stops each task from re-reading ``pyspark.zip``'s directory when the
+  archive has not changed (see that module).
 """
 
 from __future__ import annotations
@@ -51,6 +54,8 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # importable because pkg_root is on PYTHONPATH (above)
+        .config("spark.python.worker.module", "pyspark_graft_worker")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.compression.codec", "zstd")

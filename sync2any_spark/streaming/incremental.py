@@ -22,7 +22,7 @@ Lucene segment model:
 - ``compact()`` rebuilds the index from the live docs (force-merge analog),
   purging tombstones and re-densifying doc ids.
 
-A batch whose text fits ``DRIVER_APPLY_BYTES`` is applied in-process after
+A batch that fits ``DRIVER_APPLY_BYTES`` is applied in-process after
 one Arrow collect (two Spark jobs per batch: the shape aggregate and the
 collect); bigger batches take the distributed path. Each apply records
 its route and the reason it declined the in-process one.
@@ -70,12 +70,16 @@ from ..index.builder import (
 from ..query.algebra import SPARK_TOKEN_RE
 
 
-# driver memory budget, in bytes of text: a batch whose text fits is
-# applied in-process (the tokenizer's transient memory is ~21x the text
-# bytes, so ~170 MB at the budget), and so is compact's delta pre-pass when
-# the delta docs and deletes footers fit it; past it, the distributed apply
-# and the re-sort compact run, and the decline reason is recorded
+# driver memory budget, in bytes: a batch whose text fits, and whose
+# collected columns together fit, is applied in-process (the tokenizer's
+# transient memory is ~21x the text bytes, so ~170 MB at the budget), and
+# so is compact's delta pre-pass when the delta docs and deletes footers
+# fit it; past it, the distributed apply and the re-sort compact run, and
+# the decline reason is recorded
 DRIVER_APPLY_BYTES = 8 << 20
+# per batch row, the collect's fixed-width Arrow bytes beyond the string
+# values: five 4-byte string offsets, int32 turn_idx, int64 ts
+_ARROW_ROW_BYTES = 5 * 4 + 4 + 8
 
 # the distributed apply ranks fresh doc ids driver-side (one 2-column
 # toPandas + a broadcast id map) up to this many new rows; larger backfills
@@ -514,9 +518,10 @@ def apply_increments(
 
     Two routes, same committed state:
 
-    - ``driver``: a batch whose text is at most DRIVER_APPLY_BYTES runs two
-      Spark jobs — the shape aggregate and one ``toArrow`` collect — and
-      nothing else touches Spark. The docs store is probed keys-first with
+    - ``driver``: a batch whose text, and whose collected columns
+      together, are at most DRIVER_APPLY_BYTES runs two Spark jobs — the
+      shape aggregate and one ``toArrow`` collect — and nothing else
+      touches Spark. The docs store is probed keys-first with
       pyarrow (``_probe_store``); the new rows are tokenized ONCE
       (``_spimi_rows_for_texts``), giving the added (df, cf), the docs
       segment's ``dl`` and the delta postings' chunk; the removed side is
@@ -551,6 +556,10 @@ def apply_increments(
         F.min("conv_id").alias("key_lo"),
         F.max("conv_id").alias("key_hi"),
         F.coalesce(F.sum(F.octet_length("text")), F.lit(0)).alias("text_bytes"),
+        F.coalesce(
+            F.sum(F.octet_length(F.concat_ws("", "conv_id", "role", "tool", "op"))),
+            F.lit(0),
+        ).alias("other_bytes"),
     ).first()
     n_batch, n_keys = int(shape.n), int(shape.k)
     if n_batch != n_keys:
@@ -559,10 +568,18 @@ def apply_increments(
         )
     if n_batch == 0:
         return _noop("driver")
+    # text alone, then every collected column: a mass delete with NULL text
+    # has no text bytes but is still collected whole
+    batch_bytes = shape.text_bytes + shape.other_bytes + n_batch * _ARROW_ROW_BYTES
     decline = None
     if shape.text_bytes > DRIVER_APPLY_BYTES:
         decline = (
             f"batch text {shape.text_bytes / 2**20:.1f} MB over "
+            f"{DRIVER_APPLY_BYTES / 2**20:g} MB"
+        )
+    elif batch_bytes > DRIVER_APPLY_BYTES:
+        decline = (
+            f"batch total {batch_bytes / 2**20:.1f} MB over "
             f"{DRIVER_APPLY_BYTES / 2**20:g} MB"
         )
     else:
@@ -928,11 +945,16 @@ def vacuum(index_dir: str) -> "list[str]":
 
 def compaction_stats(spark: SparkSession, index_dir: str) -> dict:
     """Merge-policy inputs: total docs, tombstoned docs, deleted ratio,
-    committed segment count — all from metadata-scale reads."""
+    committed segment count — all from metadata-scale reads (parquet footer
+    row counts; no Spark job)."""
+    import pyarrow.dataset as pds
+
+    def footer_rows(dirs: "list[str]") -> int:
+        return sum(pds.dataset(d, format="parquet").count_rows() for d in dirs)
+
     meta = read_index_meta(index_dir)
-    dead = deleted_ids(spark, index_dir, meta)
-    n_dead = int(dead.count()) if dead is not None else 0
-    n_total = int(all_docs(spark, index_dir, meta).count())
+    n_dead = footer_rows(deletes_sources(index_dir, meta))
+    n_total = footer_rows(docs_sources(index_dir, meta))
     return {
         "n_docs_total": n_total,
         "n_deleted": n_dead,

@@ -713,6 +713,32 @@ def test_long_text_delta_declines_splice_by_bytes(
     assert len(IndexSearcher(spark, out).search("longterm", 10)) == 3
 
 
+def test_null_text_delete_batch_declines_by_total_bytes(
+    spark, pristine, transcripts_sf0001, tmp_path_factory, monkeypatch
+):
+    """A delete batch with NULL text has no text bytes but is still
+    collected whole: the shape aggregate prices every collected column, so
+    past the budget it takes the distributed route, with its reason."""
+    import sync2any_spark.streaming.incremental as inc_mod
+
+    idx = _copy_index(pristine, tmp_path_factory, "idx_null_delete")
+    h = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(100))
+    deletes = (
+        transcripts_sf0001.where(h < 20)
+        .withColumn("text", F.lit(None).cast("string"))
+        .withColumn("op", F.lit("D"))
+    )
+    n = deletes.count()
+    budget = 16 << 10  # under the ~50 B a row that is not text
+    assert n * 50 > budget
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", budget)
+    s = apply_increments(spark, idx, deletes)
+    assert s["route"] == "distributed" and s["tombstones"] == n
+    assert s["decline"].startswith("batch total ")
+    assert s["decline"].endswith(f" MB over {budget / 2**20:g} MB")
+    assert f"decline={s['decline']}" in _metric_keys(idx, "increment")
+
+
 def test_splice_declines_unsorted_base_file_up_front(
     spark, pristine, tmp_path_factory
 ):

@@ -496,8 +496,19 @@ def test_force_merge_postings(spark, transcripts_sf0001, tmp_path_factory):
     phrase_before = phrase_topk_positional(s0, "ok w0000", 5)
     n_before = len(globmod.glob(f"{d}/postings/bucket=*/*.parquet"))
 
-    res = force_merge_postings(spark, d)
+    sc = spark.sparkContext
+    sc.setJobGroup("force_merge", "force_merge_postings")
+    try:
+        res = force_merge_postings(spark, d)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
     assert res["buckets"] == PARAMS["n_buckets"]
+    # one job whose buckets merge in parallel tasks (a groupBy over the
+    # bucket table coalesces under AQE into one task)
+    tracker = sc.statusTracker()
+    (job,) = tracker.getJobIdsForGroup("force_merge")
+    (stage,) = tracker.getJobInfo(job).stageIds
+    assert tracker.getStageInfo(stage).numTasks > 1
     meta = read_index_meta(d)
     assert meta["postings_dir"] == res["out_dir"]
     n_after = len(globmod.glob(f"{d}/{res['out_dir']}/bucket=*/*.parquet"))
