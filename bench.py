@@ -259,7 +259,7 @@ def phase_query(cpus: int, out_path: str) -> None:
     quarter = LocalSearcher(idx, buckets=list(range(0, n_buckets, 4)))
     quarter_load_s = time.time() - t_q
     quarter_frac = (
-        len(quarter._blocks) / max(1, len(local._blocks))
+        quarter._blocks.num_rows / max(1, local._blocks.num_rows)
     )
 
     with open(out_path, "w") as f:
@@ -268,7 +268,7 @@ def phase_query(cpus: int, out_path: str) -> None:
                 "spark": lat, "spark_max": lat_max,
                 "local": lat_local, "local_max": lat_local_max,
                 "local_load_s": load_s,
-                "local_blocks": len(local._blocks),
+                "local_blocks": local._blocks.num_rows,
                 "quarter_load_s": quarter_load_s,
                 "quarter_block_frac": round(quarter_frac, 4),
                 "qps_1": round(qps_1, 1),
@@ -485,7 +485,7 @@ def phase_validate(cpus: int, out_path: str) -> None:
         "sf1_serving_load_s": round(load_s, 2),
         "sf1_serving_p50_ms": round(pctl(lat_local, 0.5), 2),
         "sf1_serving_p99_ms": round(pctl(lat_local, 0.99), 2),
-        "sf1_serving_blocks": len(local._blocks),
+        "sf1_serving_blocks": local._blocks.num_rows,
         "sf1_queries": {k: round(v, 4) for k, v in sorted(lat.items())},
     }
     with open(out_path, "w") as f:

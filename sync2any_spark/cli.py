@@ -57,7 +57,7 @@ def cmd_query(args) -> int:
     from .query.wand import IndexSearcher
 
     spark = _spark(args.cpus)
-    searcher = IndexSearcher(spark, args.index, cache=args.cache)
+    searcher = IndexSearcher(spark, args.index)
     t0 = time.time()
     if args.distributed:
         hits = [
@@ -195,7 +195,6 @@ def main(argv: list[str] | None = None) -> int:
     q.add_argument("--query", required=True)
     q.add_argument("--topk", type=int, default=10)
     q.add_argument("--distributed", action="store_true")
-    q.add_argument("--cache", action="store_true")
     q.set_defaults(fn=cmd_query)
 
     i = sub.add_parser("increment", help="apply an I/U/D batch")

@@ -210,12 +210,13 @@ def _decode_pool():
 def decode_block_batch_arrow(
     tbl, parallel: bool = True
 ) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
-    """``decode_block_batch`` straight off an Arrow table of posting blocks
-    (columns doc_ids/tfs/dls/n_docs) — the arrow-native driver fetch path:
-    three varbyte decodes over zero-copy buffer views (run concurrently on
-    the decode pool unless ``parallel=False`` — callers already inside a
-    worker thread decode serially to keep the pool deadlock-free), no
-    per-block Python bytes, no join copy."""
+    """Decode MANY posting blocks of an Arrow table (columns
+    doc_ids/tfs/dls/n_docs) → (doc ids, tfs, dls): three varbyte decodes
+    over zero-copy buffer views (run concurrently on the decode pool unless
+    ``parallel=False`` — callers already inside a worker thread decode
+    serially to keep the pool deadlock-free), no per-block Python bytes, no
+    join copy; per-block absolute doc ids are restored with one segmented
+    cumsum. Every query route decodes through it."""
     counts = tbl.column("n_docs").to_numpy().astype(np.int64)
     bounds = np.zeros(len(counts) + 1, dtype=np.int64)
     bounds[1:] = np.cumsum(counts)
@@ -234,27 +235,6 @@ def decode_block_batch_arrow(
     corrections = np.zeros(len(counts), dtype=np.int64)
     corrections[1:] = total[bounds[1:-1] - 1]
     ids = total - np.repeat(corrections, counts)
-    return ids, tfs, dls
-
-
-def decode_block_batch(
-    doc_id_bufs, tf_bufs, dl_bufs, n_docs: np.ndarray
-) -> "tuple[np.ndarray, np.ndarray, np.ndarray]":
-    """Decode MANY posting blocks in three vectorized passes (one varbyte
-    decode per column over the concatenated buffers; per-block absolute doc
-    ids restored with a segmented cumsum). This is the serving-tier hot
-    path — per-block Python loops cost ~0.5 ms/block, which at thousands of
-    blocks per hot term dominates query latency."""
-    counts = np.asarray(n_docs, dtype=np.int64)
-    bounds = np.zeros(len(counts) + 1, dtype=np.int64)
-    bounds[1:] = np.cumsum(counts)
-    gaps = vb_decode(b"".join(doc_id_bufs))
-    total = np.cumsum(gaps)
-    corrections = np.zeros(len(counts), dtype=np.int64)
-    corrections[1:] = total[bounds[1:-1] - 1]
-    ids = total - np.repeat(corrections, counts)
-    tfs = vb_decode(b"".join(tf_bufs))
-    dls = vb_decode(b"".join(dl_bufs))
     return ids, tfs, dls
 
 

@@ -118,7 +118,7 @@ def phrase_candidates(searcher, uniq: "list[str]") -> DataFrame:
     import pandas as pd
 
     from ..index.codec import decode_doc_ids
-    from .wand import _alive_mask
+    from .kernel import alive_mask
 
     n_terms = len(uniq)
     pruned = searcher._pruned_blocks(uniq).select("term", "doc_ids")
@@ -131,7 +131,7 @@ def phrase_candidates(searcher, uniq: "list[str]") -> DataFrame:
             for r in pdf.itertuples(index=False):
                 ids = decode_doc_ids(r.doc_ids)
                 if dead.size:
-                    ids = ids[_alive_mask(dead, ids)]
+                    ids = ids[alive_mask(dead, ids)]
                 if ids.size:
                     outs_t.append(np.repeat(np.array([r.term], dtype=object), ids.size))
                     outs_d.append(ids)
@@ -151,18 +151,17 @@ def phrase_candidates(searcher, uniq: "list[str]") -> DataFrame:
 
 
 def decode_term_postings(g):
-    """One term's block frame → (doc-sorted ids, per-posting tfs, flat
-    positions gathered to that order, dls). Shared by the driver phrase
-    core and the serving tier's candidate-bounded slot fetch (salted
-    streams are disjoint by doc, so the sort is a permutation)."""
+    """One term's Arrow block table (with ``pos``) → (doc-sorted ids,
+    per-posting tfs, flat positions gathered to that order, dls). Shared by
+    the driver phrase core and the serving tier's candidate-bounded slot
+    fetch (salted streams are disjoint by doc, so the sort is a
+    permutation)."""
     import numpy as np
 
-    from ..index.codec import decode_block_batch, decode_positions
+    from ..index.codec import arrow_binary_bytes, decode_block_batch_arrow, decode_positions
 
-    ids, tfs, dls = decode_block_batch(
-        g["doc_ids"], g["tfs"], g["dls"], g["n_docs"].to_numpy()
-    )
-    pos = decode_positions(b"".join(g["pos"]), tfs)
+    ids, tfs, dls = decode_block_batch_arrow(g, parallel=False)
+    pos = decode_positions(arrow_binary_bytes(g.column("pos")), tfs)
     order = np.argsort(ids, kind="stable")
     off = np.cumsum(tfs) - tfs
     lens_out = tfs[order]
@@ -199,26 +198,26 @@ def _adjacency_ptfs(terms: "list[str]", slices: dict, n_cand: int):
 
 
 def _phrase_from_blocks(
-    pdf, terms: "list[str]", uniq: "list[str]", dfs: dict,
+    tables: dict, terms: "list[str]", uniq: "list[str]", dfs: dict,
     n_docs: int, avgdl: float, deleted, k: int,
 ) -> "list[tuple[int, float]]":
-    """Positional phrase top-k over a pandas frame of posting blocks (with
-    the pos column) — the numpy core shared by the Spark-scan searcher and
-    the RAM-resident serving tier."""
+    """Positional phrase top-k over each phrase term's Arrow block table
+    (with the pos column) — the numpy core shared by the driver searcher
+    and the RAM-resident serving tier. ``deleted``: sorted tombstones."""
     import numpy as np
 
-    from .wand import _alive_mask, idf
+    from .kernel import alive_mask, idf, topk_sorted
 
     # per-term (doc_id, tfs, flat positions), doc-sorted with positions
     # carried along (salted streams are disjoint by doc)
-    by_term: dict = {term: decode_term_postings(g) for term, g in pdf.groupby("term")}
+    by_term: dict = {t: decode_term_postings(tables[t]) for t in uniq}
 
     # candidates = docs containing ALL terms (sorted-array intersections)
     cand = by_term[uniq[0]][0]
     for t in uniq[1:]:
         cand = cand[np.isin(cand, by_term[t][0], assume_unique=True)]
-    if deleted is not None and deleted.size:
-        cand = cand[_alive_mask(deleted, cand)]
+    if deleted.size:
+        cand = cand[alive_mask(deleted, cand)]
     if cand.size == 0:
         return []
 
@@ -245,15 +244,7 @@ def _phrase_from_blocks(
 
     idf_sum = sum(idf(n_docs, dfs[t]) for t in uniq)
     scores = idf_sum * ptfs / (ptfs + K1 * (1.0 - B + B * dl / avgdl))
-    if k < scores.size:
-        import numpy as np2  # noqa: F401
-
-        kth = np.partition(scores, scores.size - k)[scores.size - k]
-        keep = np.flatnonzero(scores >= kth)
-    else:
-        keep = np.arange(scores.size)
-    order = keep[np.lexsort((cand[keep], -scores[keep]))][:k]
-    return [(int(cand[i]), float(scores[i])) for i in order]
+    return topk_sorted(cand, scores, k)
 
 
 def phrase_topk_positional(
@@ -297,13 +288,13 @@ def phrase_topk_positional(
         return [(int(r.doc_id), float(r.score)) for r in top]
     # driver leg: direct pyarrow fetch of the pos-bearing pruned blocks —
     # no Spark job; the budget above bounds the fetch
-    pdf = searcher._pruned_blocks_arrow(uniq, with_pos=True).to_pandas()
-    if pdf.empty or pdf["term"].nunique() < len(uniq):
-        return []  # some phrase term absent entirely
+    from .kernel import split_terms
 
-    deleted = searcher.deleted if searcher.deleted.size else None
+    tables = split_terms(searcher._pruned_blocks_arrow(uniq, with_pos=True), uniq)
+    if any(g.num_rows == 0 for g in tables.values()):
+        return []  # some phrase term absent entirely
     return _phrase_from_blocks(
-        pdf, terms, uniq, dfs, searcher.n_docs, searcher.avgdl, deleted, k
+        tables, terms, uniq, dfs, searcher.n_docs, searcher.avgdl, searcher.deleted, k
     )
 
 
@@ -315,14 +306,10 @@ def phrase_occurrence_pairs(searcher, uniq: "list[str]") -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ..index.bucketing import bucket_of
     from ..index.codec import decode_doc_ids, decode_positions, decode_tfs
-    from .wand import _alive_mask
+    from .kernel import alive_mask
 
-    buckets = sorted({bucket_of(t, searcher.n_buckets) for t in uniq})
-    pruned = searcher._postings_full.where(
-        F.col("bucket").isin(buckets) & F.col("term").isin(uniq)
-    ).select("term", "doc_ids", "tfs", "dls", "pos")
+    pruned = searcher._pruned_blocks(uniq).select("term", "doc_ids", "tfs", "dls", "pos")
     dead_bc = searcher.spark.sparkContext.broadcast(searcher.deleted)
 
     def expand(batches):
@@ -338,7 +325,7 @@ def phrase_occurrence_pairs(searcher, uniq: "list[str]") -> DataFrame:
                 doc_rep = np.repeat(ids, tfs)
                 dl_rep = np.repeat(dls, tfs)
                 if dead.size:
-                    alive = _alive_mask(dead, doc_rep)
+                    alive = alive_mask(dead, doc_rep)
                     doc_rep, dl_rep, pos = doc_rep[alive], dl_rep[alive], pos[alive]
                 if doc_rep.size == 0:
                     continue

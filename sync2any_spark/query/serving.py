@@ -8,39 +8,21 @@ job) into driver memory once via pyarrow and serves top-k with the exact
 scorers — the deployment shape at 10^12 docs is this tier sharded by
 ``bucket`` across serving nodes, each loading only its buckets.
 
-Scoring code and semantics are shared with IndexSearcher (exact BM25,
-doc-id tie-break, tombstone skipping); tests assert both return identical
-rankings to the oracle.
+Scoring is IndexSearcher's: both hand (idf weight, Arrow block table)
+pairs to the one BM25 kernel (``kernel.topk``), so the tiers differ only in
+how they get their tables; tests assert both rank as the oracle does.
 """
 
 from __future__ import annotations
-
-import json
-import os
 
 import numpy as np
 import pandas as pd
 
 from .. import B, K1
-from ..index.codec import decode_block_batch
+from ..index.codec import decode_block_batch_arrow
 from ..tokenize import tokenize
-from .wand import bm25_contrib, idf, topk_sorted
-
-BLOCK_COLS = [
-    "term", "salt", "block_id", "min_doc", "max_doc",
-    "doc_ids", "tfs", "dls", "max_tf", "min_dl", "n_docs",
-]
-
-
-# Σ-postings threshold above which a serving-node query scores
-# slice-parallel on the shared pool (below it, pool dispatch costs more
-# than it saves — light queries are a few hundred µs sequential)
-_PAR_SERVE_POSTINGS = int(os.environ.get("SPARK_GRAFT_PAR_SERVE_POSTINGS", "200000"))
-# block-max pruning pre-pass (hot serving queries): per-term seed decode
-# budget for the θ estimate, and the kept-postings fraction above which the
-# pruned plan is abandoned for the exhaustive slice-parallel scorer
-_PRUNE_SEED_POSTINGS = int(os.environ.get("SPARK_GRAFT_PRUNE_SEED", "50000"))
-_PRUNE_KEEP_MAX = float(os.environ.get("SPARK_GRAFT_PRUNE_KEEP_MAX", "0.7"))
+from . import kernel
+from .kernel import idf, topk_sorted
 
 
 class _ReplicaGroup:
@@ -102,14 +84,11 @@ class _ReplicaGroup:
     def phrase_term_slots(self, term: str, cand):
         return self._call("phrase_term_slots", term, cand)
 
-    def _term_blocks(self, term: str):
-        return self._call("_term_blocks", term)
-
-    def _df_of(self, term: str, g) -> int:
+    def _df_of(self, term: str) -> int:
         # through _call, not _first_live: a replica raising ConnectionError
         # mid-query must fail over to a live sibling exactly like the data
         # calls do (ADVICE r5 #4)
-        return self._call("_df_of", term, g)
+        return self._call("_df_of", term)
 
     def _meta_attr(self, name: str):
         """Metadata accessor with the SAME failover as data calls: the
@@ -239,21 +218,15 @@ class ShardedSearcher:
         # scatter in parallel — in a real deployment these are concurrent
         # RPCs to separate nodes; in-process, the shards' decode/score
         # kernels release the GIL, so threads genuinely overlap
-        from .wand import _score_pool
-
         futs = [
-            _score_pool().submit(s.partial_scores, query) for s in self.shards
+            kernel.score_pool().submit(s.partial_scores, query) for s in self.shards
         ]
-        parts = [f.result() for f in futs]
-        parts = [(i, c) for i, c in parts if i.size]
+        parts = [p for p in (f.result() for f in futs) if p[0].size]
         if not parts:
             return []
         ids = np.concatenate([i for i, _ in parts])
         contrib = np.concatenate([c for _, c in parts])
-        from .wand import _group_sum
-
-        uniq, scores = _group_sum(ids, contrib)
-        return topk_sorted(uniq, scores, k)
+        return topk_sorted(*kernel.group_sum(ids, contrib), k)
 
     def _owner(self, term: str) -> "LocalSearcher | None":
         """The shard holding a term's bucket (a term's WHOLE posting list
@@ -288,7 +261,6 @@ class ShardedSearcher:
         ships its whole position list. Rank/score-identical to
         ``LocalSearcher.search_phrase`` on one node (tested)."""
         from .phrase import _adjacency_ptfs
-        from .wand import _alive_mask
 
         terms = tokenize(phrase)
         uniq = list(dict.fromkeys(terms))
@@ -316,7 +288,7 @@ class ShardedSearcher:
                 return []
         deleted = self.shards[0].deleted
         if deleted.size:
-            cand = cand[_alive_mask(deleted, cand)]
+            cand = cand[kernel.alive_mask(deleted, cand)]
             if cand.size == 0:
                 return []
         slices = {}
@@ -332,11 +304,9 @@ class ShardedSearcher:
         if cand.size == 0:
             return []
         node = self.shards[0]
-        dfs = {t: owners[t]._df_of(t, owners[t]._term_blocks(t)) for t in uniq}
+        dfs = {t: owners[t]._df_of(t) for t in uniq}
         if any(dfs[t] <= 0 for t in uniq):
             return []
-        from .wand import idf
-
         idf_sum = sum(idf(node.n_docs, dfs[t]) for t in uniq)
         dl = dl.astype(np.float64)
         scores = idf_sum * ptfs / (
@@ -353,7 +323,12 @@ class LocalSearcher:
     splits cleanly by bucket. Cross-shard queries are answered by
     ``ShardedSearcher``, which sums per-doc partials (a multi-term query's
     terms can hash to different buckets, so a rank-only merge would be
-    wrong — partial SUMS are exchanged, exactly like distributed BM25)."""
+    wrong — partial SUMS are exchanged, exactly like distributed BM25).
+
+    The node pins ONE Arrow table of its blocks, sorted by (term, salt,
+    min_doc), with a (start, end) row range per term: a query term's blocks
+    are a zero-copy slice, and the kernel decodes straight off its buffers
+    (no Python ``bytes`` per block)."""
 
     def __init__(
         self,
@@ -361,6 +336,8 @@ class LocalSearcher:
         with_positions: bool = False,
         buckets: "list[int] | None" = None,
     ) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.dataset as ds
 
         from ..index.builder import (
@@ -375,51 +352,52 @@ class LocalSearcher:
         self._index_dir = index_dir
         paths = IndexPaths(index_dir)
         tv = int(self.meta.get("terms_version", 0))
-        st = ds.dataset(paths.stats_v(tv)).to_table().to_pandas().iloc[0]
-        self.n_docs = int(st.n_docs)
-        self.avgdl = float(st.avgdl)
+        st = ds.dataset(paths.stats_v(tv)).to_table().to_pylist()[0]
+        self.n_docs = int(st["n_docs"])
+        self.avgdl = float(st["avgdl"])
         self.buckets = sorted(buckets) if buckets is not None else None
         # the serving node pins only the scoring columns unless it also
         # serves match_phrase (then the pos column loads too — Lucene's
         # .pos, columnar)
-        cols = BLOCK_COLS + ["pos"] if with_positions else BLOCK_COLS
+        cols = kernel.BLOCK_COLS + ["salt"] + (["pos"] if with_positions else [])
         self._with_positions = with_positions
         bucket_filter = (
             ds.field("bucket").isin(self.buckets)
             if self.buckets is not None
             else None
         )
-        pdirs = postings_sources(index_dir, self.meta)
-        if pdirs:
-            blocks = pd.concat(
-                [
-                    ds.dataset(d, partitioning="hive")
-                    .to_table(columns=cols, filter=bucket_filter)
-                    .to_pandas()
-                    for d in pdirs
-                ],
-                ignore_index=True,
+        parts = [
+            ds.dataset(d, partitioning="hive").to_table(columns=cols, filter=bucket_filter)
+            for d in postings_sources(index_dir, self.meta)
+        ]
+        self._term_index: "dict[str, tuple[int, int]]" = {}
+        if parts:
+            blocks = pa.concat_tables(parts, promote_options="permissive").sort_by(
+                [("term", "ascending"), ("salt", "ascending"), ("min_doc", "ascending")]
             )
+            self._blocks = blocks.combine_chunks()
+            terms = self._blocks.column("term")
+            n = len(terms)
+            if n:
+                change = pc.not_equal(terms.slice(1), terms.slice(0, n - 1))
+                starts = np.concatenate(
+                    ([0], np.flatnonzero(change.to_numpy(zero_copy_only=False)) + 1)
+                )
+                ends = np.append(starts[1:], n)
+                names = terms.take(starts).to_pylist()
+                self._term_index = dict(zip(names, zip(starts.tolist(), ends.tolist())))
         else:  # all-empty corpus → no postings files
-            blocks = pd.DataFrame({c: [] for c in cols})
-        # term → block-slice index (sorted once; per-query lookup is O(log n))
-        blocks = blocks.sort_values(["term", "salt", "min_doc"], kind="stable")
-        self._blocks = blocks.reset_index(drop=True)
-        terms = self._blocks["term"].to_numpy()
-        change = np.concatenate(([True], terms[1:] != terms[:-1]))
-        starts = np.flatnonzero(change)
-        self._term_index = {
-            terms[s]: (int(s), int(e))
-            for s, e in zip(starts, np.append(starts[1:], len(terms)))
-        }
+            self._blocks = pa.table({c: [] for c in cols})
         # tombstones: sorted int64 array (see wand._load_deletes)
         self.deleted = _load_deletes(deletes_sources(index_dir, self.meta))
         self._live_df: dict[str, int] | None = None
         if self.deleted.size:
             tdf = ds.dataset(paths.terms_v(tv)).to_table(
-                filter=bucket_filter
-            ).to_pandas()
-            self._live_df = dict(zip(tdf["term"], tdf["df"].astype(int)))
+                columns=["term", "df"], filter=bucket_filter
+            )
+            self._live_df = dict(
+                zip(tdf.column("term").to_pylist(), tdf.column("df").to_pylist())
+            )
 
     def fetch(self, hits: "list[tuple[int, float]]") -> pd.DataFrame:
         """Resolve winners to their source rows from the docs store — the
@@ -431,12 +409,8 @@ class LocalSearcher:
         import pyarrow.dataset as ds
 
         cols = ["doc_id", "conv_id", "turn_idx", "role", "text"]
-        if self.deleted.size:
-            from .wand import _alive_mask
-
-            ids = np.array([h[0] for h in hits], dtype=np.int64)
-            alive = _alive_mask(self.deleted, ids) if ids.size else ids.astype(bool)
-            hits = [h for h, a in zip(hits, alive) if a]
+        ids = np.array([h[0] for h in hits], dtype=np.int64)
+        hits = [h for h, a in zip(hits, kernel.alive_mask(self.deleted, ids)) if a]
         if not hits:
             return pd.DataFrame(
                 {c: [] for c in ["doc_id", "score"] + cols[1:]}
@@ -462,16 +436,30 @@ class LocalSearcher:
             ]
         return self._docs_ds
 
-    def _term_blocks(self, term: str) -> "pd.DataFrame | None":
+    def _term_blocks(self, term: str):
+        """The term's block rows (a zero-copy slice), or None."""
         span = self._term_index.get(term)
         if span is None:
             return None
-        return self._blocks.iloc[span[0] : span[1]]
+        return self._blocks.slice(span[0], span[1] - span[0])
 
-    def _df_of(self, term: str, g: pd.DataFrame) -> int:
+    def _df_of(self, term: str) -> int:
+        """Live df: the terms table's when tombstones exist, else the
+        term's postings count."""
         if self._live_df is not None:
             return int(self._live_df.get(term, 0))
-        return int(g["n_docs"].sum())
+        g = self._term_blocks(term)
+        return 0 if g is None else int(g.column("n_docs").to_numpy().sum())
+
+    def _query_terms(self, query: str) -> "list[tuple[float, object]]":
+        """(idf weight, block slice) per live query term this node holds."""
+        out = []
+        for t in dict.fromkeys(tokenize(query)):
+            g = self._term_blocks(t)
+            df = self._df_of(t) if g is not None else 0
+            if df > 0:
+                out.append((idf(self.n_docs, df), g))
+        return out
 
     # -- cross-shard phrase protocol (coordinator: ShardedSearcher) --------
     def phrase_term_docs(self, term: str) -> "np.ndarray | None":
@@ -482,9 +470,7 @@ class LocalSearcher:
         g = self._term_blocks(term)
         if g is None:
             return None
-        ids, _tfs, _dls = decode_block_batch(
-            g["doc_ids"], g["tfs"], g["dls"], g["n_docs"].to_numpy()
-        )
+        ids, _tfs, _dls = decode_block_batch_arrow(g, parallel=False)
         return np.sort(ids)
 
     def phrase_term_slots(
@@ -501,12 +487,9 @@ class LocalSearcher:
         from .phrase import decode_term_postings
 
         g = self._term_blocks(term)
-        mn = g["min_doc"].to_numpy()
-        mx = g["max_doc"].to_numpy()
-        lo = np.searchsorted(cand, mn)
-        hi = np.searchsorted(cand, mx, side="right")
-        g = g.iloc[np.flatnonzero(hi > lo)]
-        ids, tfs, pos, dls = decode_term_postings(g)
+        lo = np.searchsorted(cand, g.column("min_doc").to_numpy())
+        hi = np.searchsorted(cand, g.column("max_doc").to_numpy(), side="right")
+        ids, tfs, pos, dls = decode_term_postings(g.filter(hi > lo))
         idx = np.searchsorted(ids, cand)  # cand ⊆ ids by construction
         starts_all = np.cumsum(tfs) - tfs
         s, ln = starts_all[idx], tfs[idx]
@@ -534,325 +517,22 @@ class LocalSearcher:
         uniq = list(dict.fromkeys(terms))
         if not uniq:
             return []
-        frames = [self._term_blocks(t) for t in uniq]
-        if any(f is None for f in frames):
+        tables = {t: self._term_blocks(t) for t in uniq}
+        if any(g is None for g in tables.values()):
             return []
-        pdf = pd.concat(frames, ignore_index=True)
-        dfs = {t: self._df_of(t, g) for t, g in zip(uniq, frames)}
+        dfs = {t: self._df_of(t) for t in uniq}
         if any(dfs[t] <= 0 for t in uniq):
             return []
-        deleted = self.deleted if self.deleted.size else None
         return _phrase_from_blocks(
-            pdf, terms, uniq, dfs, self.n_docs, self.avgdl, deleted, k
+            tables, terms, uniq, dfs, self.n_docs, self.avgdl, self.deleted, k
         )
 
     def search(self, query: str, k: int = 10) -> "list[tuple[int, float]]":
-        qterms = list(dict.fromkeys(tokenize(query)))
-        groups = [(t, self._term_blocks(t)) for t in qterms]
-        groups = [(t, g) for t, g in groups if g is not None]
-        if not groups:
-            return []
-        return self._vectorized(groups, k)
+        return kernel.topk(self._query_terms(query), self.deleted, self.avgdl, k)
 
     def partial_scores(self, query: str) -> "tuple[np.ndarray, np.ndarray]":
         """(doc_ids, per-doc partial BM25 sums) for THIS node's share of the
         query's terms — the scatter half of the sharded execution. A term's
         entire posting list is in one bucket, so per-term contributions are
         complete here; the coordinator sums partials across nodes."""
-        qterms = list(dict.fromkeys(tokenize(query)))
-        groups = [(t, self._term_blocks(t)) for t in qterms]
-        groups = [(t, g) for t, g in groups if g is not None]
-        empty = (np.array([], dtype=np.int64), np.array([], dtype=np.float64))
-        if not groups:
-            return empty
-        ids, contrib = self._partials(groups)
-        if ids.size == 0:
-            return empty
-        from .wand import _group_sum
-
-        return _group_sum(ids, contrib)
-
-    def _partials(self, groups) -> "tuple[np.ndarray, np.ndarray]":
-        ids_all, contrib_all = [], []
-        for term, g in groups:
-            df = self._df_of(term, g)
-            if df <= 0:
-                continue
-            w = idf(self.n_docs, df)
-            ids, tfs, dls = decode_block_batch(
-                g["doc_ids"], g["tfs"], g["dls"], g["n_docs"].to_numpy()
-            )
-            ids_all.append(ids)
-            contrib_all.append(bm25_contrib(w, tfs, dls, self.avgdl))
-        if not ids_all:
-            return np.array([], dtype=np.int64), np.array([], dtype=np.float64)
-        ids = np.concatenate(ids_all)
-        contrib = np.concatenate(contrib_all)
-        if self.deleted.size:
-            from .wand import _alive_mask
-
-            alive = _alive_mask(self.deleted, ids)
-            ids, contrib = ids[alive], contrib[alive]
-        return ids, contrib
-
-    def _vectorized(self, groups, k: int) -> "list[tuple[int, float]]":
-        total = sum(int(g["n_docs"].sum()) for _, g in groups)
-        if total >= _PAR_SERVE_POSTINGS:
-            return self._vectorized_pruned(groups, k)
-        ids, contrib = self._partials(groups)
-        if ids.size == 0:
-            return []
-        if len({t for t, _ in groups}) == 1 and self.deleted.size == 0:
-            uniq, scores = ids, contrib  # single term: sorted & unique already
-        else:
-            # per-doc sums sized by the match count (wand._group_sum)
-            from .wand import _group_sum
-
-            uniq, scores = _group_sum(ids, contrib)
-        return topk_sorted(uniq, scores, k)
-
-    def _decode_contrib(self, w: float, sl) -> "tuple[np.ndarray, np.ndarray]":
-        """Decode one slice of block rows → (doc_ids, BM25 contributions),
-        tombstones dropped. The leaf kernel of every hot-serving leg —
-        numpy releases the GIL in decode/contrib, so pool threads overlap."""
-        ids, tfs, dls = decode_block_batch(
-            sl["doc_ids"], sl["tfs"], sl["dls"], sl["n_docs"].to_numpy()
-        )
-        contrib = bm25_contrib(w, tfs, dls, self.avgdl)
-        if self.deleted.size:
-            from .wand import _alive_mask
-
-            alive = _alive_mask(self.deleted, ids)
-            ids, contrib = ids[alive], contrib[alive]
-        return ids, contrib
-
-    def _weighted(self, groups) -> "list[tuple[float, pd.DataFrame]]":
-        out = []
-        for term, g in groups:
-            df = self._df_of(term, g)
-            if df > 0:
-                out.append((idf(self.n_docs, df), g))
-        return out
-
-    def _vectorized_pruned(self, groups, k: int) -> "list[tuple[int, float]]":
-        """Hot-query leg with a vectorized block-max pruning pre-pass
-        (the block-max WAND idea reshaped for batch execution — a Python
-        document-at-a-time traversal was 30× SLOWER than exhaustive
-        decode on multi-stop-word queries, measured at 19M docs):
-
-        1. per-block upper bounds from the drift-safe (max_tf, min_dl)
-           metadata under CURRENT (df, avgdl) — tf/(tf+k1·norm) grows with
-           tf and shrinks with dl, so the pair bounds every posting;
-        2. seed a threshold θ: decode each term's top-ub blocks
-           (~``_PRUNE_SEED_POSTINGS`` postings/term) and take the k-th best
-           partial sum — partial ≤ true score, so θ lower-bounds the true
-           k-th score;
-        3. drop every block whose ub + Σ other-term global max ub < θ: no
-           doc inside can reach θ. Any true top-k doc's blocks all survive
-           (each such block's potential ≥ the doc's full score ≥ θ), so its
-           score is EXACT in the pruned scoring, and every partially-scored
-           doc sums below θ — the pruned top-k is rank- AND
-           score-identical to the exhaustive leg (identity-tested);
-        4. if pruning keeps > ``_PRUNE_KEEP_MAX`` of the postings (dense
-           multi-stop-word queries: block maxima are near-uniform, nothing
-           prunes), fall back to the exhaustive slice-parallel scorer —
-           the seed pass cost is ~1% of the exhaustive decode.
-
-        Single hot terms prune hardest (no other-term slack in the bound):
-        2.3× over exhaustive at 19M docs; the fallback keeps the worst
-        case within seed-cost of the round-4 latencies."""
-        pairs = self._weighted(groups)
-        if not pairs:
-            return []
-        from .wand import _group_sum, _score_pool
-
-        ubs = []
-        for w, g in pairs:
-            mtf = g["max_tf"].to_numpy(np.float64)
-            mdl = g["min_dl"].to_numpy(np.float64)
-            ubs.append(w * mtf / (mtf + K1 * (1.0 - B + B * mdl / self.avgdl)))
-        gmax = np.array([u.max() for u in ubs])
-        # metadata-only feasibility floor: under the best POSSIBLE θ
-        # (= Σ gmax), the keep condition degenerates to ub_i ≥ gmax_i, so
-        # postings in blocks at their term's global max can never prune.
-        # Dense multi-stop-word queries have near-uniform block maxima —
-        # the floor alone exceeds the keep cap, and the seed pass would be
-        # pure overhead: skip it without decoding a single block.
-        floor_kept = tot_post = 0
-        for (w, g), ub, gm in zip(pairs, ubs, gmax):
-            nd = g["n_docs"].to_numpy()
-            floor_kept += int(nd[ub >= gm - 1e-12].sum())
-            tot_post += int(nd.sum())
-        # multi-term: the cut a block must clear is θ − Σ other gmax, and
-        # for frequent-term conjunctions the true k-th score sits far
-        # enough below Σ gmax that near-max blocks always survive —
-        # measured kept ≈ 1.0 on stop-word pairs even with an exact θ, so
-        # the seed pass would be pure overhead. Attempt it only when the
-        # perfect-θ floor shows near-certain prunability. Single-term
-        # queries prune on θ alone (no other-term slack): always try.
-        floor = floor_kept / tot_post if tot_post else 1.0
-        if not tot_post or (len(pairs) > 1 and floor > 0.05) or floor > _PRUNE_KEEP_MAX:
-            return self._score_or_fast(pairs, k)
-        # seed budget ~2% of the query's postings (floored): enough for a
-        # tight θ on big queries, bounded overhead on barely-hot ones
-        seed_budget = max(4000, min(_PRUNE_SEED_POSTINGS, tot_post // 50))
-        seed = []
-        for (w, g), ub in zip(pairs, ubs):
-            order = np.argsort(-ub)
-            nd = g["n_docs"].to_numpy()[order]
-            m = int(np.searchsorted(np.cumsum(nd), seed_budget)) + 1
-            seed.append((w, g.iloc[order[:m]]))
-        futs = [_score_pool().submit(self._decode_contrib, w, sl) for w, sl in seed]
-        parts = [f.result() for f in futs]
-        parts = [p for p in parts if p[0].size]
-        theta = 0.0
-        if parts:
-            uniq, sc = _group_sum(
-                np.concatenate([p[0] for p in parts]),
-                np.concatenate([p[1] for p in parts]),
-            )
-            if sc.size >= k:
-                # θ refinement: the seed partials under-estimate multi-term
-                # docs (each term's top-ub blocks cover different doc
-                # ranges), so the k-th PARTIAL is a weak bound. Take the
-                # top-k partial docs as candidates and score them FULLY —
-                # decode exactly the blocks whose doc range stabs a
-                # candidate (ranges overlap across salts → broadcast
-                # interval stab, k × n_blocks bools). k real docs' true
-                # scores → the k-th of them still lower-bounds the true
-                # k-th best, but tightly.
-                cand = np.sort(uniq[np.argpartition(sc, -k)[-k:]])
-                fids, fcon = [], []
-                for (w, g), ub in zip(pairs, ubs):
-                    lo = g["min_doc"].to_numpy(np.int64)
-                    hi = g["max_doc"].to_numpy(np.int64)
-                    m = (
-                        (lo[None, :] <= cand[:, None])
-                        & (cand[:, None] <= hi[None, :])
-                    ).any(0)
-                    if m.any():
-                        i_, c_ = self._decode_contrib(w, g[m])
-                        inc = np.isin(i_, cand)
-                        fids.append(i_[inc])
-                        fcon.append(c_[inc])
-                if fids:
-                    _, s2 = _group_sum(
-                        np.concatenate(fids), np.concatenate(fcon)
-                    )
-                    if s2.size >= k:
-                        theta = float(np.partition(s2, -k)[-k])
-        if theta > 0.0:
-            kept = tot = 0
-            survivors = []
-            other = gmax.sum() - gmax
-            for i, ((w, g), ub) in enumerate(zip(pairs, ubs)):
-                mask = (ub + other[i]) >= theta
-                nd = g["n_docs"].to_numpy()
-                kept += int(nd[mask].sum())
-                tot += int(nd.sum())
-                survivors.append((w, g[mask]))
-            if tot and kept / tot <= _PRUNE_KEEP_MAX:
-                return self._score_or_fast(survivors, k)
-        return self._score_or_fast(pairs, k)
-
-    def _vectorized_parallel(self, groups, k: int) -> "list[tuple[int, float]]":
-        """Exhaustive hot-query leg: every block decodes. Kept callable
-        directly as the identity oracle for `_vectorized_pruned`."""
-        return self._score_pairs_parallel(self._weighted(groups), k)
-
-    def _single_term_topk(
-        self, w: float, g, k: int
-    ) -> "list[tuple[int, float]] | None":
-        """Single-term scorer that skips the doc-id decode for
-        non-candidates (round 6, mirrors the driver path's
-        ``_single_term_topk_arrow``): scores depend only on (tf, dl), so
-        doc ids decode ONLY for the blocks holding postings at or above
-        the k-th contribution. Valid only with no tombstones; None when
-        boundary ties make the candidate set large (full path cheaper).
-        Rank- and score-identical (shared ``topk_sorted`` tie-break)."""
-        from ..index.codec import decode_block_batch, vb_decode
-
-        if self.deleted.size:
-            return None
-        counts = g["n_docs"].to_numpy().astype(np.int64)
-        tfs = vb_decode(b"".join(g["tfs"]))
-        dls = vb_decode(b"".join(g["dls"]))
-        contrib = bm25_contrib(w, tfs, dls, self.avgdl)
-        n = contrib.size
-        if n == 0:
-            return []
-        kk = min(k, n)
-        tau = np.partition(contrib, n - kk)[n - kk]
-        cand = np.flatnonzero(contrib >= tau)
-        if cand.size > max(4 * k, n // 4):
-            return None
-        bounds = np.concatenate(([0], np.cumsum(counts)))
-        blk = np.searchsorted(bounds, cand, side="right") - 1
-        ublk = np.unique(blk)
-        sub = g.iloc[ublk]
-        ids_sub, _tf, _dl = decode_block_batch(
-            sub["doc_ids"], sub["tfs"], sub["dls"], sub["n_docs"].to_numpy()
-        )
-        sub_bounds = np.concatenate(([0], np.cumsum(counts[ublk])))
-        sub_pos = sub_bounds[np.searchsorted(ublk, blk)] + (cand - bounds[blk])
-        return topk_sorted(ids_sub[sub_pos], contrib[cand], k)
-
-    def _score_or_fast(self, pairs, k: int) -> "list[tuple[int, float]]":
-        if len(pairs) == 1:
-            fast = self._single_term_topk(pairs[0][0], pairs[0][1], k)
-            if fast is not None:
-                return fast
-        return self._score_pairs_parallel(pairs, k)
-
-    def _score_pairs_parallel(self, pairs, k: int) -> "list[tuple[int, float]]":
-        """Slice-parallel scorer over (idf weight, block rows) pairs: each
-        term's block rows split into slices scored on the shared thread
-        pool (numpy releases the GIL in decode/contrib), then the per-doc
-        sums merge via per-thread span-bincounts into the dense-span
-        top-k — the same shape as the driver path's
-        ``_vectorized_topk_arrow``, over the RAM-resident pandas blocks.
-        Rank-identical to the sequential leg (same decode, same merge
-        arithmetic)."""
-        from .wand import (
-            _SCORE_THREADS,
-            _group_sum,
-            _score_pool,
-            topk_dense,
-        )
-
-        run = self._decode_contrib
-
-        futs = []
-        for w, g in pairs:
-            n = len(g)
-            t = min(_SCORE_THREADS, max(1, n))
-            cuts = [i * n // t for i in range(t + 1)]
-            for i in range(t):
-                sl = g.iloc[cuts[i] : cuts[i + 1]]
-                if len(sl):
-                    futs.append(_score_pool().submit(run, w, sl))
-        parts = [f.result() for f in futs]
-        parts = [p for p in parts if p[0].size]
-        if not parts:
-            return []
-        lo = min(int(p[0].min()) for p in parts)
-        hi = max(int(p[0].max()) for p in parts)
-        span = hi - lo + 1
-        total = sum(p[0].size for p in parts)
-        if span <= 4 * total:
-            futs = [
-                _score_pool().submit(
-                    np.bincount, p[0] - lo, weights=p[1], minlength=span
-                )
-                for p in parts
-            ]
-            full = futs[0].result()
-            for f in futs[1:]:
-                full += f.result()
-            return topk_dense(full, lo, k)
-        uniq, scores = _group_sum(
-            np.concatenate([p[0] for p in parts]),
-            np.concatenate([p[1] for p in parts]),
-        )
-        return topk_sorted(uniq, scores, k)
-
+        return kernel.partial_sums(self._query_terms(query), self.deleted, self.avgdl)

@@ -7,26 +7,21 @@ ES picks between query phases:
   its terms' buckets select the ``bucket=K`` dirs, and a per-(postings root,
   bucket) term directory held by the searcher names the files and row groups
   that hold the terms, so only those are read (no footer parse per query).
-  The surviving blocks (only the query terms' postings) are scored on the
-  driver with numpy. This is the path a search tier would serve QPS from.
+  The fetched block table, split by term, is scored on the driver by the
+  one BM25 kernel (``kernel.topk``). This is the path a search tier would
+  serve QPS from.
 - ``search_distributed`` — scale path for huge candidate sets: the Spark
-  ``bucket IN (…) AND term IN (…)`` pruned scan feeds ``mapInPandas``
-  (vectorized per-block exact scoring → (doc_id, contrib) partials) →
+  ``bucket IN (…) AND term IN (…)`` pruned scan feeds ``mapInArrow``
+  (the kernel's per-doc partial sums of each Arrow batch) →
   ``groupBy(doc_id).sum`` → ``ORDER BY score DESC LIMIT k``
   (TakeOrderedAndProject — no global sort).
 
 Both return exactly the same ranking as the BM25 oracle: exact Lucene
 formula, float64, ties by doc_id ascending.
-
-A term's postings may be split across several salted sub-streams (builder
-B3). Each doc lives in exactly one sub-stream, so every (term, salt) stream
-is scored with the term's idf — the disjoint union scores identically to
-one merged list.
 """
 
 from __future__ import annotations
 
-import math
 import os
 from functools import cached_property
 
@@ -35,77 +30,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .. import B, K1
-from ..index.codec import decode_doc_ids, decode_tfs
+from . import kernel
+from .kernel import idf
 from ..tokenize import tokenize
-
-
-def idf(n_docs: int, df: int) -> float:
-    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-
-
-def bm25_contrib(w, tfs: np.ndarray, dls: np.ndarray, avgdl: float) -> np.ndarray:
-    """Per-posting BM25 contribution ``w · tf/(tf + k1·(1−b+b·dl/avgdl))``
-    with the constants folded — 4 ufunc passes instead of 7 on the hot
-    arrays, int→float upcast inside the loops (no astype copy). ``w`` may
-    be a scalar (one term) or a per-posting array. This is THE scoring
-    kernel: every vectorized path (driver arrow, driver pandas,
-    distributed mapInPandas, serving tier) calls it, so cross-path
-    rankings are bit-identical, not merely approx-equal."""
-    c1 = K1 * (1.0 - B)
-    c2 = K1 * B / avgdl
-    denom = c2 * dls
-    denom += c1
-    denom += tfs
-    out = w * tfs
-    out /= denom
-    return out
-
-
-def _is_deleted(deleted: "np.ndarray | None", doc: int) -> bool:
-    """Membership in the sorted tombstone array (binary search — the
-    compact live-docs representation; 8 bytes per deleted doc, sharded with
-    the index at scale)."""
-    if deleted is None or deleted.size == 0:
-        return False
-    i = int(np.searchsorted(deleted, doc))
-    return i < deleted.size and int(deleted[i]) == doc
-
-
-def _alive_mask(deleted: np.ndarray, ids: np.ndarray) -> np.ndarray:
-    """Vectorized not-in-sorted-array test (O(n log m), no set / no isin
-    hash build)."""
-    idx = np.searchsorted(deleted, ids)
-    idx_c = np.minimum(idx, deleted.size - 1)
-    return ~((idx < deleted.size) & (deleted[idx_c] == ids))
-
-
-def _group_sum(ids: np.ndarray, contrib: np.ndarray) -> "tuple[np.ndarray, np.ndarray]":
-    """(unique doc ids ascending, per-doc contribution sums) with allocation
-    proportional to the MATCH count, never the doc-id space.
-
-    Replaces the former unconditional ``np.bincount(ids, …,
-    minlength=max(ids)+1)`` whose dense accumulator scaled with the global
-    doc-id space (8 GB per query on a 10^9-doc shard even for a two-match
-    query — round-2 What's-wrong #2). Adaptive, allocation always
-    O(matches): when the OBSERVED id span is within 4× the match count a
-    span-offset bincount runs (C-speed scatter-add, accumulator ≤ 32
-    bytes/match); otherwise a stable sort + ``np.add.reduceat``. Per-doc
-    sums agree across the variants to the last ulp or so (float-sum
-    reassociation) — far inside the 1e-9 tolerance every cross-engine
-    ranking test and the 6-dp contract rounding use."""
-    lo = int(ids.min())
-    span = int(ids.max()) - lo + 1
-    if span <= 4 * ids.size:
-        full = np.bincount(ids - lo, weights=contrib, minlength=span)
-        uniq = np.flatnonzero(full)
-        return uniq + lo, full[uniq]
-    order = np.argsort(ids, kind="stable")
-    sids = ids[order]
-    svals = contrib[order]
-    change = np.concatenate(([True], sids[1:] != sids[:-1]))
-    starts = np.flatnonzero(change)
-    return sids[starts], np.add.reduceat(svals, starts)
 
 
 def _load_deletes(dirs: "list[str]") -> np.ndarray:
@@ -130,58 +57,6 @@ def _load_deletes(dirs: "list[str]") -> np.ndarray:
 # sub-second pyarrow fetch; anything larger belongs on the cluster.
 ROUTE_BUDGET = int(os.environ.get("SPARK_GRAFT_ROUTE_BUDGET", 10_000_000))
 
-# slice-parallel scoring kicks in above this many blocks (~256k postings —
-# below it thread fan-out overhead beats the win); numpy ufunc loops release
-# the GIL, so a small driver-side pool gives near-linear speedup on the
-# decode+score passes of hot-term queries
-_PARALLEL_BLOCKS = 2048
-_SCORE_THREADS = int(os.environ.get("SPARK_GRAFT_SCORE_THREADS", "4"))
-
-
-def topk_sorted(
-    uniq: np.ndarray, scores: np.ndarray, k: int
-) -> "list[tuple[int, float]]":
-    """Exact top-k with the engine-wide tie-break (score desc, doc_id
-    asc); ``uniq`` need not be sorted but must be duplicate-free."""
-    if k < len(uniq):
-        kth = np.partition(scores, len(scores) - k)[len(scores) - k]
-        cand = np.flatnonzero(scores >= kth)  # boundary ties included
-    else:
-        cand = np.arange(len(uniq))
-    order = cand[np.lexsort((uniq[cand], -scores[cand]))][:k]
-    return [(int(uniq[i]), float(scores[i])) for i in order]
-
-
-def topk_dense(full: np.ndarray, lo: int, k: int) -> "list[tuple[int, float]]":
-    """Top-k straight off a DENSE span-offset score array (the
-    span-bincount merge output): one partition over the span finds the
-    kth score, one comparison collects candidates — no full
-    flatnonzero + gather of every matched doc (a hot 2-term query
-    matches ~80% of the corpus; materializing those ids cost two extra
-    span-sized passes). BM25 contributions are strictly positive, so a
-    zero cell is "no match" and the kth-score cut can only be crossed
-    by real matches; a zero kth (fewer than k matches) falls back to
-    the sparse path."""
-    n = full.size
-    if n == 0:
-        return []
-    if k < n:
-        kth = np.partition(full, n - k)[n - k]
-        if kth > 0.0:
-            cand = np.flatnonzero(full >= kth)
-            return topk_sorted(cand + lo, full[cand], k)
-    uniq = np.flatnonzero(full)
-    return topk_sorted(uniq + lo, full[uniq], k)
-_SCORE_POOL = None
-
-
-def _score_pool():
-    global _SCORE_POOL
-    if _SCORE_POOL is None:
-        from concurrent.futures import ThreadPoolExecutor
-
-        _SCORE_POOL = ThreadPoolExecutor(_SCORE_THREADS)
-    return _SCORE_POOL
 
 
 def _data_files(fs, path: str) -> "list[str]":
@@ -278,39 +153,30 @@ class IndexSearcher:
     scan — Σ df of its terms, read from the driver-resident term dictionary
     (the terms table, loaded once via pyarrow: the same in-memory term
     dictionary every search engine holds; ``buckets=[...]`` restricts a
-    sharded node to its buckets' rows — see ``_term_dfs``). At or below ``route_budget`` postings the
-    low-latency driver path runs (pruned scan → collect → numpy); above it
-    the query routes to ``search_distributed``, whose shuffle carries only
-    (doc_id, contrib) partials — so a hot-term query can never pull an
-    unbounded posting list across the driver (round-2 What's-wrong #1).
+    sharded node to its buckets' rows — see ``_term_dfs``). At or below
+    ``route_budget`` postings the low-latency driver path runs (pyarrow
+    fetch → the BM25 kernel); above it the query routes to
+    ``search_distributed``, whose shuffle carries only (doc_id, score)
+    partials — so a hot-term query can never pull an unbounded posting list
+    across the driver (round-2 What's-wrong #1).
 
-    The driver path issues ZERO Spark jobs by default, and opening the
-    searcher starts none either: bucket list driver-side (md5, no job), df
-    from the term dictionary, N/avgdl read with pyarrow at open, and the
-    pruned blocks fetched by a direct pyarrow read (``scan="pyarrow"``, any
-    pyarrow filesystem). The committed postings roots are resolved once at
-    open — the searcher is a snapshot of that commit. The first query that
-    touches a (root, bucket) builds its ``_TermDirectory`` (one footer parse
-    and one ``term``-column read per file); every fetch after that reads
-    only the files and row groups that hold the query's terms, with their
-    cached footers. ``scan="spark"`` keeps the Spark scan; with
-    ``cache=True`` that relation is pinned in executor memory — the "warm
-    index" a serving tier would hold. The Spark relations (``_postings``,
-    ``_postings_full``, ``_docs``) are built on first use by the
-    distributed route, ``scan="spark"`` and ``fetch``; ``cache=True``
-    builds them at open.
+    The driver path issues ZERO Spark jobs, and opening the searcher starts
+    none either: bucket list driver-side (md5, no job), df from the term
+    dictionary, N/avgdl read with pyarrow at open, and the pruned blocks
+    fetched by a direct pyarrow read (any pyarrow filesystem). The
+    committed postings roots are resolved once at open — the searcher is a
+    snapshot of that commit. The first query that touches a (root, bucket)
+    builds its ``_TermDirectory`` (one footer parse and one ``term``-column
+    read per file); every fetch after that reads only the files and row
+    groups that hold the query's terms, with their cached footers. The
+    Spark relations (``_postings_full``, ``_docs``) are built on first use
+    by the distributed route, the distributed phrase legs and ``fetch``.
     """
-
-    _block_cols = [
-        "term", "salt", "block_id", "min_doc", "max_doc",
-        "doc_ids", "tfs", "dls", "max_tf", "min_dl", "n_docs",
-    ]
 
     def __init__(
         self,
         spark: SparkSession,
         index_dir: str,
-        cache: bool = False,
         route_budget: int = ROUTE_BUDGET,
         buckets: "list[int] | None" = None,
     ) -> None:
@@ -349,21 +215,13 @@ class IndexSearcher:
         self._roots = [fs_and_path(d) for d in self._pdirs]
         # lazy (root index, bucket) → _TermDirectory
         self._dirs: "dict[tuple[int, int], _TermDirectory]" = {}
-        # with a pinned relation the Spark scan is the path that benefits —
-        # make it the default so callers don't pay cache materialization
-        # for a cache the pyarrow path would never touch
-        self._cache = cache
-        self._default_scan = "spark" if cache else "pyarrow"
-        if cache:  # a warm serving index builds (and pins) them at open
-            for name in ("_postings", "_docs"):
-                getattr(self, name)
         # tombstones (Lucene live-docs analog): a SORTED numpy doc-id array
         # loaded via pyarrow (no Spark job, no Python set) — 8 bytes per
         # deleted doc, sharded alongside the index at serving scale;
         # membership is a binary search
         self.deleted = _load_deletes(deletes_sources(index_dir, self.meta))
 
-    # -- Spark relations (distributed route, scan="spark", fetch) ----------
+    # -- Spark relations (distributed route, phrase legs, fetch) -----------
     def _union(self, dirs: "list[str]", empty_schema) -> DataFrame:
         """Each segment dir is its own hive-partitioned table root — union
         them (Spark refuses multi-root partition discovery). No dirs (an
@@ -377,22 +235,12 @@ class IndexSearcher:
 
     @cached_property
     def _postings_full(self) -> DataFrame:
-        """All postings columns, never cached: positional reads
-        (match_phrase) go through it, so the pos column stays on disk until
-        a phrase query prunes-and-reads it."""
+        """All postings columns: scoring and phrase reads project what they
+        need, so the pos column stays on disk unless a phrase query prunes
+        and reads it."""
         from ..index.builder import BLOCK_SCHEMA
 
         return self._union(self._pdirs, BLOCK_SCHEMA)
-
-    @cached_property
-    def _postings(self) -> DataFrame:
-        """The scoring relation; with ``cache=True`` only the scoring
-        columns are pinned in executor memory."""
-        if not self._cache:
-            return self._postings_full
-        rel = self._postings_full.select(*self._block_cols, "bucket").cache()
-        rel.count()  # materialize
-        return rel
 
     @cached_property
     def _docs(self) -> DataFrame:
@@ -434,7 +282,7 @@ class IndexSearcher:
         from ..index.bucketing import bucket_of
 
         buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
-        return self._postings.where(
+        return self._postings_full.where(
             F.col("bucket").isin(buckets) & F.col("term").isin(qterms)
         )
 
@@ -476,7 +324,7 @@ class IndexSearcher:
         takes this path."""
         import pyarrow as pa
 
-        cols = self._block_cols + (["pos"] if with_pos else [])
+        cols = kernel.BLOCK_COLS + (["pos"] if with_pos else [])
         keep = pa.array(qterms, pa.string())
         parts = [d.read(f, rgs, cols, keep) for d, f, rgs in self._fetch_plan(qterms)]
         if not parts:
@@ -487,8 +335,7 @@ class IndexSearcher:
 
     # -- low-latency path -------------------------------------------------
     def search(
-        self, query: str, k: int = 10, route: str = "auto",
-        scan: "str | None" = None,
+        self, query: str, k: int = 10, route: str = "auto"
     ) -> list[tuple[int, float]]:
         """Top-k → [(doc_id, score)] rank-ordered, self-dispatching.
 
@@ -499,17 +346,10 @@ class IndexSearcher:
         k rows reach the driver. ``route="driver"``/``"distributed"`` force
         a path (tests, diagnostics).
 
-        Driver path scan: ``scan=None`` picks the searcher's default —
-        ``"pyarrow"`` normally, ``"spark"`` when the searcher was built with
-        ``cache=True`` (otherwise the pinned relation would never be
-        touched). ``scan="pyarrow"`` reads the pruned blocks directly
-        (only the files and row groups the term directories name, C++
-        reader, no Spark job — the budget-bounded fetch is a few MB) and
-        the vectorized engine scores straight off the Arrow buffers (no
-        Python bytes);
-        ``scan="spark"`` keeps the Spark scan (the cached-relation path).
-        Every path decodes the fetched blocks and scores them with numpy;
-        all return identical rankings (tested).
+        The driver path reads the pruned blocks directly (only the files and
+        row groups the term directories name, C++ reader, no Spark job — the
+        budget-bounded fetch is a few MB) and ``kernel.topk`` scores them
+        straight off the Arrow buffers (no Python bytes).
         """
         qterms = self._qterms(query)
         if not qterms:
@@ -523,264 +363,20 @@ class IndexSearcher:
         ):
             rows = self.search_distributed(query, k).collect()
             return [(int(r.doc_id), float(r.score)) for r in rows]
-        if scan is None:
-            scan = self._default_scan
-        if scan == "pyarrow":
-            tbl = self._pruned_blocks_arrow(qterms)
-            if tbl.num_rows == 0:
-                return []
-            return self._vectorized_topk_arrow(tbl, qterms, dfs, k)
-        pdf = self._pruned_blocks(qterms).select(*self._block_cols).toPandas()
-        if pdf.empty:
+        tbl = self._pruned_blocks_arrow(qterms)
+        if tbl.num_rows == 0:
             return []
-        return self._vectorized_topk(pdf, dfs, k)
+        return kernel.topk(self._weighted_tables(tbl, qterms, dfs), self.deleted, self.avgdl, k)
 
-    def _topk_from_postings(
-        self, ids: np.ndarray, contrib: np.ndarray, single_term: bool, k: int
-    ) -> list[tuple[int, float]]:
-        """Shared tail of the vectorized engines: tombstone drop → per-doc
-        sum → exact top-k with the engine-wide tie-break (score desc,
-        doc_id asc). ``single_term`` skips the merge pass (one posting per
-        doc — salted sub-streams are doc-disjoint)."""
-        if self.deleted.size:
-            alive = _alive_mask(self.deleted, ids)
-            ids, contrib = ids[alive], contrib[alive]
-        return self._topk_postsums(ids, contrib, single_term, k)
-
-    def _pruned_single_arrow(
-        self, tbl, w: float, k: int
-    ) -> "list[tuple[int, float]] | None":
-        """Block-max pruned leg for SINGLE-term hot queries on the arrow
-        driver path (the serving tier's `_vectorized_pruned` reshaped for
-        the Arrow block table; r5 VERDICT Next #3). Exact: a single-term
-        doc lives in exactly one block, the drift-safe (max_tf, min_dl)
-        bound dominates every score in its block, and θ is the k-th best
-        of REAL seed scores (θ ≤ true k-th best), so every dropped block
-        (ub < θ − ε) holds only docs that cannot enter the top-k; boundary
-        ties survive via the ε slack. Returns None when pruning keeps too
-        much (near-uniform block maxima) — callers fall back to the
-        exhaustive scorer. Multi-term queries stay exhaustive here: on the
-        bench's stop-word pairs the feasibility floor keeps ≈100% of
-        postings (PLANS.md §10), so the seed pass would be pure
-        overhead."""
-        from ..index.codec import decode_block_batch_arrow
-
-        mtf = tbl.column("max_tf").to_numpy().astype(np.float64)
-        mdl = tbl.column("min_dl").to_numpy().astype(np.float64)
-        ub = w * mtf / (mtf + K1 * (1.0 - B + B * mdl / self.avgdl))
-        nd = tbl.column("n_docs").to_numpy().astype(np.int64)
-        tot = int(nd.sum())
-        order = np.argsort(-ub)
-        budget = max(4000, min(50_000, tot // 50))
-        m = int(np.searchsorted(np.cumsum(nd[order]), budget)) + 1
-        seed_idx = np.sort(order[:m])
-        seed = tbl.take(seed_idx)
-        ids, tfs, dls = decode_block_batch_arrow(seed)
-        contrib = bm25_contrib(w, tfs, dls, self.avgdl)
-        if self.deleted.size:
-            alive = _alive_mask(self.deleted, ids)
-            contrib = contrib[alive]
-        if contrib.size < k:
-            return None
-        theta = float(np.partition(contrib, contrib.size - k)[contrib.size - k])
-        if theta <= 0.0:
-            return None
-        keep = ub >= theta - 1e-9
-        if int(nd[keep].sum()) > tot // 2:
-            return None
-        sub = tbl.filter(keep)
-        if self.deleted.size == 0:
-            fast = self._single_term_topk_arrow(sub, w, k)
-            if fast is not None:
-                return fast
-        idsk, tfsk, dlsk = decode_block_batch_arrow(sub)
-        contribk = bm25_contrib(w, tfsk, dlsk, self.avgdl)
-        if self.deleted.size:
-            alivek = _alive_mask(self.deleted, idsk)
-            idsk, contribk = idsk[alivek], contribk[alivek]
-        return self._topk_postsums(idsk, contribk, True, k)
-
-    def _single_term_topk_arrow(
-        self, tbl, w: float, k: int
-    ) -> "list[tuple[int, float]] | None":
-        """Single-term exhaustive scorer that never decodes the doc-id
-        column for non-candidates: scores depend only on (tf, dl), so the
-        k-th contribution threshold is found from two column decodes, and
-        doc ids decode ONLY for the blocks holding candidate postings
-        (ids were ~40% of the single-term decode cost, plus the per-posting
-        weight array disappears — w is a scalar). Valid only with no
-        tombstones (alive filtering needs every id); returns None when
-        boundary ties make the candidate set so large that the full path
-        is cheaper. Rank- and score-identical: candidates are exactly the
-        postings with contribution ≥ the k-th best, and the shared
-        ``topk_sorted`` applies the engine tie-break."""
-        from ..index.codec import (
-            _decode_pool,
-            arrow_binary_bytes,
-            decode_block_batch_arrow,
-            vb_decode,
-        )
-
-        f_tf = _decode_pool().submit(
-            lambda: vb_decode(arrow_binary_bytes(tbl.column("tfs")))
-        )
-        dls = vb_decode(arrow_binary_bytes(tbl.column("dls")))
-        tfs = f_tf.result()
-        contrib = bm25_contrib(w, tfs, dls, self.avgdl)
-        n = contrib.size
-        if n == 0:
-            return []
-        kk = min(k, n)
-        tau = np.partition(contrib, n - kk)[n - kk]
-        cand = np.flatnonzero(contrib >= tau)
-        if cand.size > max(4 * k, n // 4):
-            return None  # massive score ties — full decode is cheaper
-        counts = tbl.column("n_docs").to_numpy().astype(np.int64)
-        bounds = np.concatenate(([0], np.cumsum(counts)))
-        blk = np.searchsorted(bounds, cand, side="right") - 1
-        ublk = np.unique(blk)
-        ids_sub, _tf, _dl = decode_block_batch_arrow(
-            tbl.take(ublk), parallel=False
-        )
-        sub_bounds = np.concatenate(([0], np.cumsum(counts[ublk])))
-        sub_pos = (
-            sub_bounds[np.searchsorted(ublk, blk)] + (cand - bounds[blk])
-        )
-        return topk_sorted(ids_sub[sub_pos], contrib[cand], k)
-
-    def _vectorized_topk_arrow(
-        self, tbl, qterms: "list[str]", dfs: dict[str, int], k: int
-    ) -> list[tuple[int, float]]:
-        """Exhaustive scoring straight off the Arrow block table — the
-        default driver leg. ONE segmented varbyte decode per column over
-        zero-copy views of the Arrow binary buffers (no per-block Python
-        bytes, no join copy — the round-3 q8 fetch cost), per-block idf
-        weights assigned with arrow-compute equality masks (no per-block
-        Python string ever materializes), then spread per-posting by one
-        ``np.repeat``. Hot-term queries (≥ ``_PARALLEL_BLOCKS`` blocks)
-        score SLICE-PARALLEL: the table splits into zero-copy row slices,
-        each thread decodes + scores its slice (numpy releases the GIL in
-        the ufunc loops), and the per-doc sums merge via per-thread
-        span-bincounts — allocation still O(matches + observed span).
-        Caller guarantees every fetched block's term is in ``qterms`` with
-        live df > 0 (search() drops dead terms before the fetch). Ranking
-        is identical to ``_vectorized_topk`` (exact BM25, same
-        tie-break)."""
-        import pyarrow.compute as pc
-
-        from ..index.codec import decode_block_batch_arrow
-
-        term_col = tbl.column("term")
-        w_block = np.zeros(tbl.num_rows, dtype=np.float64)
-        for t in qterms:
-            m = pc.equal(term_col, t).to_numpy(zero_copy_only=False)
-            w_block[m] = idf(self.n_docs, dfs[t])
-        deleted = self.deleted if self.deleted.size else None
-
-        def score_slice(sl, w_block_sl):
-            """(ids, contrib) of one row slice — runs GIL-light."""
-            ids, tfs, dls = decode_block_batch_arrow(sl, parallel=False)
-            counts = sl.column("n_docs").to_numpy().astype(np.int64)
-            w_post = np.repeat(w_block_sl, counts)
-            contrib = bm25_contrib(w_post, tfs, dls, self.avgdl)
-            if deleted is not None:
-                alive = _alive_mask(deleted, ids)
-                ids, contrib = ids[alive], contrib[alive]
-            return ids, contrib
-
-        single = len(qterms) == 1
-        if single and tbl.num_rows >= _PARALLEL_BLOCKS:
-            w1 = idf(self.n_docs, dfs[qterms[0]])
-            pruned = self._pruned_single_arrow(tbl, w1, k)
-            if pruned is not None:
-                return pruned
-            if deleted is None:
-                fast = self._single_term_topk_arrow(tbl, w1, k)
-                if fast is not None:
-                    return fast
-        if tbl.num_rows < _PARALLEL_BLOCKS:
-            ids, contrib = score_slice(tbl, w_block)
-            return self._topk_postsums(ids, contrib, single, k)
-        nrows = tbl.num_rows
-        T = _SCORE_THREADS
-        cuts = [i * nrows // T for i in range(T + 1)]
-        futs = [
-            _score_pool().submit(
-                score_slice,
-                tbl.slice(cuts[i], cuts[i + 1] - cuts[i]),
-                w_block[cuts[i] : cuts[i + 1]],
-            )
-            for i in range(T)
-        ]
-        parts = [f.result() for f in futs]
-        parts = [(i, c) for i, c in parts if i.size]
-        if not parts:
-            return []
-        if single:
-            # one posting per doc (salted sub-streams are doc-disjoint) —
-            # no cross-slice merge needed
-            ids = np.concatenate([p[0] for p in parts])
-            return topk_sorted(ids, np.concatenate([p[1] for p in parts]), k)
-        lo = min(int(p[0].min()) for p in parts)
-        hi = max(int(p[0].max()) for p in parts)
-        span = hi - lo + 1
-        total = sum(p[0].size for p in parts)
-        if span <= 4 * total:
-            # per-thread span-offset bincounts, summed — the merge is T-1
-            # adds over the observed span, never the global doc-id space
-            futs = [
-                _score_pool().submit(
-                    np.bincount, p[0] - lo, weights=p[1], minlength=span
-                )
-                for p in parts
-            ]
-            full = futs[0].result()
-            for f in futs[1:]:
-                full += f.result()
-            return topk_dense(full, lo, k)
-        ids = np.concatenate([p[0] for p in parts])
-        contrib = np.concatenate([p[1] for p in parts])
-        uniq, scores = _group_sum(ids, contrib)
-        return topk_sorted(uniq, scores, k)
-
-    def _topk_postsums(
-        self, ids: np.ndarray, contrib: np.ndarray, single: bool, k: int
-    ) -> list[tuple[int, float]]:
-        """Per-doc sum (skipped for single-term) + top-k over ALREADY
-        tombstone-filtered postings."""
-        if ids.size == 0:
-            return []
-        if single:
-            uniq, scores = ids, contrib
-        else:
-            uniq, scores = _group_sum(ids, contrib)
-        return topk_sorted(uniq, scores, k)
-
-    def _vectorized_topk(
-        self, pdf, dfs: dict[str, int], k: int
-    ) -> list[tuple[int, float]]:
-        """Exhaustive numpy scoring of the collected blocks (exact BM25)."""
-        from ..index.codec import decode_block_batch
-
-        ids_all, contrib_all = [], []
-        for term, g in pdf.groupby("term", sort=True):
-            if dfs.get(term, 0) <= 0:
-                continue
-            w = idf(self.n_docs, dfs[term])
-            ids, tfs, dls = decode_block_batch(
-                g["doc_ids"], g["tfs"], g["dls"], g["n_docs"].to_numpy()
-            )
-            ids_all.append(ids)
-            contrib_all.append(bm25_contrib(w, tfs, dls, self.avgdl))
-        if not ids_all:
-            return []
-        ids = np.concatenate(ids_all)
-        contrib = np.concatenate(contrib_all)
-        return self._topk_from_postings(ids, contrib, len(ids_all) == 1, k)
+    def _weighted_tables(self, tbl, qterms: "list[str]", dfs: "dict[str, int]"):
+        """(idf weight, block table) per live query term of a fetched table."""
+        tables = kernel.split_terms(tbl, qterms)
+        return [(idf(self.n_docs, dfs[t]), tables[t]) for t in qterms]
 
     # -- distributed path --------------------------------------------------
     def search_distributed(self, query: str, k: int = 10) -> DataFrame:
-        """Cluster-side scoring: pruned scan → vectorized partial scores →
+        """Cluster-side scoring: pruned scan → per-batch partial sums
+        (``mapInArrow`` over ``kernel.partial_sums``) →
         groupBy(doc_id).sum → TakeOrderedAndProject(k). Term weights come
         from the driver term dictionary — the whole query is ONE job."""
         qterms = self._qterms(query)
@@ -792,43 +388,31 @@ class IndexSearcher:
         qterms = [t for t in qterms if dfs.get(t, 0) > 0]
         if not qterms:
             return empty
-        n_docs, avgdl = self.n_docs, self.avgdl
-        weights = {t: idf(n_docs, dfs[t]) for t in qterms}
+        avgdl = self.avgdl
+        weights = {t: idf(self.n_docs, dfs[t]) for t in qterms}
         # tombstones ride a real Spark broadcast (one copy per executor,
         # not per task closure)
         dead_bc = spark.sparkContext.broadcast(self.deleted)
 
         def score_blocks(batches):
-            dead = dead_bc.value
-            for pdf in batches:
-                outs_d, outs_s = [], []
-                for r in pdf.itertuples(index=False):
-                    ids = decode_doc_ids(r.doc_ids)
-                    tfs = decode_tfs(r.tfs)
-                    dls = decode_tfs(r.dls)
-                    if dead.size:
-                        alive = _alive_mask(dead, ids)
-                        ids, tfs, dls = ids[alive], tfs[alive], dls[alive]
-                    if ids.size == 0:
-                        continue
-                    w = weights[r.term]
-                    outs_d.append(ids)
-                    outs_s.append(bm25_contrib(w, tfs, dls, avgdl))
-                if outs_d:
-                    yield pd.DataFrame(
-                        {
-                            "doc_id": np.concatenate(outs_d),
-                            "contrib": np.concatenate(outs_s),
-                        }
+            import pyarrow as pa
+
+            for b in batches:
+                tables = kernel.split_terms(pa.Table.from_batches([b]), weights)
+                terms = [(w, tables[t]) for t, w in weights.items()]
+                ids, sums = kernel.partial_sums(terms, dead_bc.value, avgdl)
+                if ids.size:
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(ids), pa.array(sums)], ["doc_id", "contrib"]
                     )
 
-        # scoring needs 4 columns — projecting BEFORE the kernel keeps the
+        # scoring needs 5 columns — projecting BEFORE the kernel keeps the
         # pos column (comparable in bytes to the postings themselves on a
         # positional index) and the block metadata out of the scan entirely
         partials = (
             self._pruned_blocks(qterms)
-            .select("term", "doc_ids", "tfs", "dls")
-            .mapInPandas(score_blocks, schema="doc_id long, contrib double")
+            .select("term", "doc_ids", "tfs", "dls", "n_docs")
+            .mapInArrow(score_blocks, schema="doc_id long, contrib double")
         )
         scored = partials.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
         return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
@@ -841,7 +425,8 @@ class IndexSearcher:
         )
         if not hits:
             return self.spark.createDataFrame([], empty_schema)
-        live = [h for h in hits if not _is_deleted(self.deleted, h[0])]
+        ids = np.array([h[0] for h in hits], dtype=np.int64)
+        live = [h for h, a in zip(hits, kernel.alive_mask(self.deleted, ids)) if a]
         if not live:
             return self.spark.createDataFrame([], empty_schema)
         hit_df = self.spark.createDataFrame(live, "doc_id long, score double")

@@ -1250,7 +1250,9 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
     meta = read_index_meta(index_dir)
     t0 = time.time()
     shutil.rmtree(out_dir, ignore_errors=True)
-    tmp = os.path.join(out_dir, "_live_src")
+    # no leading "_" or ".": Spark's file listing skips such names and logs
+    # "All paths were ignored" for the read of the spliced corpus
+    tmp = os.path.join(out_dir, "live_src")
     spliced, splice_decline = _splice_live_sorted(spark, index_dir, meta, tmp)
     splice_wall = time.time() - t0
     if spliced:

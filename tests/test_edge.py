@@ -133,15 +133,18 @@ def test_fetch_schema_consistent_on_empty(spark, tmp_path):
     assert empty.columns == full.columns
 
 
-def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
+def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory, monkeypatch):
     """Property test: on randomized corpora (mixed Latin/digit/CJK words,
     duplicated texts, skewed repetition, multi-conversation), every query
-    route — pyarrow driver scan, Spark scan, distributed,
-    and the RAM serving tier — returns the numpy oracle's exact ranking.
-    Deterministic seeds; each round builds a real index."""
+    route — pyarrow driver fetch, distributed, the RAM serving tier and
+    sharded serving — returns the numpy oracle's exact ranking, with the
+    kernel's sequential leg and with its hot legs forced
+    (``PARALLEL_POSTINGS`` = 0). Deterministic seeds; each round builds a
+    real index."""
     import numpy as np
 
-    from sync2any_spark.query.serving import LocalSearcher
+    from sync2any_spark.query import kernel
+    from sync2any_spark.query.serving import LocalSearcher, ShardedSearcher
 
     vocab = ["ok", "w1", "w2", "data", "x9", "中", "文", "한", "z00", "qq"]
     rng = np.random.default_rng(1234)
@@ -168,15 +171,16 @@ def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory):
         oracle = BM25Oracle([(i, r[3]) for i, r in enumerate(ordered)])
         s = IndexSearcher(spark, d)
         local = LocalSearcher(d)
+        sharded = ShardedSearcher.build(d, 2)
         queries = ["ok", "ok w1", "中 文", "zzz_missing", "w2 data x9", "qq"]
         for q in queries:
             want = oracle.topk(q, 5)
-            paths = {
-                "pyarrow": s.search(q, 5),
-                "spark": s.search(q, 5, scan="spark"),
-                "dist": s.search(q, 5, route="distributed"),
-                "serving": local.search(q, 5),
-            }
+            paths = {"dist": s.search(q, 5, route="distributed")}
+            for hot in (10**12, 0):
+                monkeypatch.setattr(kernel, "PARALLEL_POSTINGS", hot)
+                paths[f"pyarrow/{hot}"] = s.search(q, 5)
+                paths[f"serving/{hot}"] = local.search(q, 5)
+                paths[f"sharded/{hot}"] = sharded.search(q, 5)
             for name, got in paths.items():
                 assert [g[0] for g in got] == [w[0] for w in want], (
                     round_i, q, name, texts,

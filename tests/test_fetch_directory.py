@@ -1,6 +1,7 @@
 """Driver-route fetch through the per-(postings root, bucket) term
 directories: a query reads only the files that hold its terms, and the
-answers stay identical to the oracle and to the Spark scan — on an index
+answers stay identical to the oracle, as do the Spark-scan (distributed)
+route's — on an index
 with a committed delta segment plus deletes, on a shuffle-writer postings
 layout, through a ``file://`` root, and for positional phrase reads."""
 
@@ -83,9 +84,9 @@ def _all_queries(queries) -> "list[str]":
     return [q for group in queries.values() for q in group]
 
 
-def _check_oracle(searcher, oracle, qs) -> None:
+def _check_oracle(searcher, oracle, qs, route: str = "auto") -> None:
     for q in qs:
-        got = searcher.search(q, 10)
+        got = searcher.search(q, 10, route=route)
         want = oracle.topk(q, 10)
         assert got, q
         assert [g[0] for g in got] == [w[0] for w in want], q
@@ -126,12 +127,12 @@ def test_fetch_opens_only_files_holding_terms(spark, index, queries):
 
 def test_directory_answers_match_oracle_and_spark_scan(spark, index, oracle, queries):
     """Delta-only, base-only and mixed queries: rank- and score-identical to
-    the oracle, and bit-identical to the Spark scan."""
+    the oracle through the directory fetch, and through the Spark scan of
+    the distributed route."""
     s = IndexSearcher(spark, index, route_budget=1 << 60)
     qs = _all_queries(queries)
     _check_oracle(s, oracle, qs)
-    for q in qs:
-        assert s.search(q, 10) == s.search(q, 10, scan="spark"), q
+    _check_oracle(s, oracle, qs, route="distributed")
 
 
 def test_shuffle_writer_layout(spark, index, oracle, queries, tmp_path_factory):
@@ -188,7 +189,7 @@ def test_file_uri_root(spark, index, oracle, queries):
     _check_oracle(uri, oracle, qs)
     for q in qs:
         assert uri.search(q, 10) == plain.search(q, 10), q
-    assert uri.search(DELTA_ONLY, 10, scan="spark") == plain.search(DELTA_ONLY, 10)
+    _check_oracle(uri, oracle, [DELTA_ONLY], route="distributed")
 
 
 def test_phrase_with_positions(spark, index, oracle):

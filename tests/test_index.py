@@ -344,31 +344,89 @@ def test_sharded_serving_matches_unsharded(spark, index_dir):
             assert gs == pytest.approx(ws, rel=1e-12), q.query_text
 
 
-def test_serving_pruned_hot_path_identity(spark, index_dir, monkeypatch):
-    """Vectorized block-max pruned serving leg (round 5): every reference
-    query forced through the hot path with pruning enabled must be rank-
-    AND score-identical to the exhaustive slice-parallel scorer — across
-    seed budgets (a tiny seed gives a loose θ that prunes little; θ is a
-    lower bound either way, so correctness never depends on it)."""
-    import sync2any_spark.query.serving as serving
-    from sync2any_spark.tokenize import tokenize
+@pytest.fixture(scope="module")
+def tombstoned(spark, index_dir, transcripts_sf0001, tmp_path_factory):
+    """(index dir, live-corpus oracle) of a copy of ``index_dir`` with one
+    committed delta segment: 3% of the docs updated, 2% deleted."""
+    import shutil
 
+    from sync2any_spark.streaming.incremental import apply_increments, live_docs
+
+    d = str(tmp_path_factory.mktemp("index_tombstoned"))
+    shutil.rmtree(d)
+    shutil.copytree(index_dir, d)
+    t = transcripts_sf0001
+    h = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(100))
+    updates = (
+        t.where(h < 3)
+        .withColumn("text", F.concat(F.lit("ok updated "), F.col("text")))
+        .withColumn("op", F.lit("U"))
+    )
+    deletes = t.where((h >= 3) & (h < 5)).withColumn("op", F.lit("D"))
+    assert apply_increments(spark, d, updates.unionByName(deletes))["tombstones"] > 0
+    pdf = live_docs(spark, d).orderBy("doc_id").select("doc_id", "text").toPandas()
+    return d, BM25Oracle(list(zip(pdf["doc_id"], pdf["text"])))
+
+
+@pytest.mark.parametrize("tier", ["driver", "serving", "sharded", "replicated"])
+def test_kernel_legs_identity(spark, index_dir, oracle, tombstoned, monkeypatch, tier):
+    """Every leg of ``kernel.topk`` — the block-max pruned pre-pass (seed
+    budgets 8, 1,000 and 10^7: a tiny seed gives a loose θ that prunes
+    little; θ is a lower bound either way), the single-term tail and the
+    slice-parallel exhaustive leg — is rank- and score-identical to the
+    sequential exhaustive leg and to the oracle, through the driver route,
+    the serving tier, sharded or replicated serving, on an index without
+    tombstones and on one with them. The hot legs engage at
+    ``PARALLEL_POSTINGS`` postings; the test forces that threshold to 0
+    (every query hot) and to 10^12 (every query sequential)."""
+    from collections import Counter
+
+    from sync2any_spark.query import kernel
+    from sync2any_spark.query.serving import LocalSearcher, ShardedSearcher
+
+    ran = Counter()
+
+    def count(name, real, did):
+        def leg(*args):
+            out = real(*args)
+            ran[name] += did(args, out)
+            return out
+
+        monkeypatch.setattr(kernel, name, leg)
+
+    count("_prune", kernel._prune, lambda a, out: out is not a[0])
+    count("_single_term_tail", kernel._single_term_tail, lambda a, out: out is not None)
+    count("_parallel", kernel._parallel, lambda a, out: 1)
     queries = pq.read_table(ensure_queries()).to_pandas()
-    local = serving.LocalSearcher(index_dir)
-    monkeypatch.setattr(serving, "_PAR_SERVE_POSTINGS", 0)
-    for seed in (8, 1000, 10_000_000):
-        monkeypatch.setattr(serving, "_PRUNE_SEED_POSTINGS", seed)
-        for q in queries.itertuples(index=False):
-            got = local.search(q.query_text, int(q.k))
-            qterms = list(dict.fromkeys(tokenize(q.query_text)))
-            groups = [(t, local._term_blocks(t)) for t in qterms]
-            groups = [(t, g) for t, g in groups if g is not None]
-            want = local._vectorized_parallel(groups, int(q.k)) if groups else []
-            assert [g[0] for g in got] == [w[0] for w in want], (
-                seed, q.query_text
-            )
-            for (_, gs), (_, ws) in zip(got, want):
-                assert gs == pytest.approx(ws, rel=1e-12), (seed, q.query_text)
+    open_tier = {
+        "driver": lambda d: IndexSearcher(spark, d).search,
+        "serving": lambda d: LocalSearcher(d).search,
+        "sharded": lambda d: ShardedSearcher.build(d, 2).search,
+        "replicated": lambda d: ShardedSearcher.build_replicated(d, 3, 2).search,
+    }[tier]
+    for d, o in ((index_dir, oracle[0]), tombstoned):
+        search = open_tier(d)
+        monkeypatch.setattr(kernel, "PARALLEL_POSTINGS", 10**12)
+        base = {
+            (q.query_text, int(q.k)): search(q.query_text, int(q.k))
+            for q in queries.itertuples(index=False)
+        }
+        monkeypatch.setattr(kernel, "PARALLEL_POSTINGS", 0)
+        for seed in (8, 1000, 10_000_000):
+            monkeypatch.setattr(kernel, "PRUNE_SEED_POSTINGS", seed)
+            for (qtext, k), want in base.items():
+                got = search(qtext, k)
+                exact = o.topk(qtext, k)
+                key = (d == index_dir, seed, qtext)
+                assert [g[0] for g in got] == [w[0] for w in want] == [
+                    e[0] for e in exact
+                ], key
+                for (_, gs), (_, ws), (_, es) in zip(got, want, exact):
+                    assert gs == pytest.approx(ws, rel=1e-12), key
+                    assert gs == pytest.approx(es, rel=1e-9), key
+    # each hot leg decided at least one query: pruning kept a strict subset,
+    # the tail answered, the parallel leg scored
+    assert ran["_prune"] and ran["_single_term_tail"] and ran["_parallel"], ran
 
 
 def test_replicated_serving_failover(spark, index_dir):
@@ -434,16 +492,20 @@ def test_replicated_serving_failover(spark, index_dir):
         r.up = True
 
 
-def test_pyarrow_scan_equals_spark_scan(spark, index_dir):
-    """The default driver fetch is a direct pyarrow read (zero Spark jobs);
-    it must return exactly the Spark-scan path's blocks → identical
-    rankings and scores for the full query set."""
+def test_pyarrow_scan_equals_spark_scan(spark, index_dir, oracle):
+    """The driver route's direct pyarrow fetch (zero Spark jobs) and the
+    Spark scan of the distributed route both return the oracle's rankings
+    and scores for the full query set."""
+    o, _ = oracle
     searcher = IndexSearcher(spark, index_dir, route_budget=1 << 60)
     queries = pq.read_table(ensure_queries()).to_pandas()
     for q in queries.itertuples(index=False):
-        a = searcher.search(q.query_text, int(q.k))                # pyarrow
-        b = searcher.search(q.query_text, int(q.k), scan="spark")  # spark
-        assert a == b, q.query_text
+        want = o.topk(q.query_text, int(q.k))
+        for route in ("driver", "distributed"):
+            got = searcher.search(q.query_text, int(q.k), route=route)
+            assert [g[0] for g in got] == [w[0] for w in want], (route, q.query_text)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert gs == pytest.approx(ws, rel=1e-9), (route, q.query_text)
 
 
 def test_local_searcher_fetch(spark, index_dir, transcripts_sf0001):
@@ -467,12 +529,12 @@ def test_local_searcher_fetch(spark, index_dir, transcripts_sf0001):
     assert local.fetch([]).empty
 
 
-def test_force_merge_postings(spark, transcripts_sf0001, tmp_path_factory):
+def test_force_merge_postings(spark, transcripts_sf0001, tmp_path_factory, oracle):
     """force_merge (the ES POST /_forcemerge analog, round-4): the base
     postings rewrite into ONE term-sorted file per bucket, committed via the
     atomic meta.json swap. Rankings must be identical on every path
-    (driver pyarrow, Spark scan, serving tier, phrase), the old layout must
-    be gone, and vacuum must remove an orphaned superseded layout."""
+    (driver, serving tier, phrase) and match the oracle, the old layout
+    must be gone, and vacuum must remove an orphaned superseded layout."""
     import glob as globmod
     import json
     import os
@@ -518,8 +580,12 @@ def test_force_merge_postings(spark, transcripts_sf0001, tmp_path_factory):
     s1 = IndexSearcher(spark, d)
     for q in queries.itertuples(index=False):
         key = (q.query_text, int(q.k))
-        assert s1.search(*key) == before[key], q.query_text
-        assert s1.search(*key, scan="spark") == before[key], q.query_text
+        got = s1.search(*key)
+        assert got == before[key], q.query_text
+        want = oracle[0].topk(*key)
+        assert [g[0] for g in got] == [w[0] for w in want], q.query_text
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-9), q.query_text
     local = LocalSearcher(d, with_positions=True)
     for q in queries.itertuples(index=False):
         key = (q.query_text, int(q.k))
@@ -781,30 +847,6 @@ def test_sorted_source_fast_path_identical_and_fallbacks(
         docs_c[["doc_id", "conv_id", "turn_idx", "dl"]],
         fast[["doc_id", "conv_id", "turn_idx", "dl"]],
     )
-
-
-def test_driver_single_term_fast_paths_identity(spark, index_dir, monkeypatch):
-    """Round 6: the driver arrow path's single-term fast legs — the
-    block-max pruned leg and the no-doc-ids candidate scorer — must be
-    rank- AND score-identical to the exhaustive arrow scorer on every
-    reference query (the legs engage only above _PARALLEL_BLOCKS in
-    production; forcing the threshold to 0 exercises them on the test
-    index, and a huge threshold disables them for the baseline)."""
-    import sync2any_spark.query.wand as wand
-
-    queries = pq.read_table(ensure_queries()).to_pandas()
-    searcher = IndexSearcher(spark, index_dir)
-    baseline = {}
-    monkeypatch.setattr(wand, "_PARALLEL_BLOCKS", 10**9)
-    for q in queries.itertuples(index=False):
-        baseline[int(q.query_id)] = searcher.search(q.query_text, int(q.k))
-    monkeypatch.setattr(wand, "_PARALLEL_BLOCKS", 0)
-    for q in queries.itertuples(index=False):
-        got = searcher.search(q.query_text, int(q.k))
-        want = baseline[int(q.query_id)]
-        assert [g[0] for g in got] == [w[0] for w in want], q.query_text
-        for (_, gs), (_, ws) in zip(got, want):
-            assert gs == pytest.approx(ws, rel=1e-12), q.query_text
 
 
 def test_sorted_fast_path_offsets_stays_metadata_scale(spark, tmp_path_factory):

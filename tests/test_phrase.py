@@ -167,18 +167,6 @@ def test_phrase_positional_after_increment(spark, transcripts_sf0001, tmp_path_f
         assert score == pytest.approx(want[docs[doc_id]], rel=1e-9)
 
 
-def test_phrase_positional_with_cached_searcher(spark, corpus, pos_index_dir):
-    """cache=True pins only scoring columns; positional phrase must still
-    read pos through the uncached relation."""
-    from sync2any_spark.query.phrase import phrase_topk_positional
-
-    _, oracle, key_of = corpus
-    searcher = IndexSearcher(spark, pos_index_dir, cache=True)
-    got = phrase_topk_positional(searcher, "中 文", 10)
-    want = oracle.phrase_topk("中 文", 10)
-    assert [key_of[g[0]] for g in got] == [key_of[w[0]] for w in want]
-
-
 def test_serving_tier_phrase(corpus, pos_index_dir):
     """LocalSearcher.search_phrase (RAM-resident positional blocks) —
     rank/score-identical to the oracle: the ES-node match_phrase analog."""

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Query-path profiler: per-stage breakdown (fetch / decode+score /
-merge+topk) of IndexSearcher.search driver-path latency on a bench index,
-with the number of postings files each fetch reads.
+"""Query-path profiler: per-stage breakdown (fetch / kernel) of
+IndexSearcher.search driver-path latency on a bench index, with the number
+of postings files each fetch reads. The kernel column times the split by
+term plus ``kernel.topk`` (decode, score, merge, top-k).
 
 Usage: python tools/profile_queries.py <index_dir> [qids...]
 """
@@ -16,6 +17,7 @@ import numpy as np
 import pyarrow.parquet as pq
 
 from sync2any_spark.generator import ensure_queries
+from sync2any_spark.query import kernel
 from sync2any_spark.query.wand import IndexSearcher
 from sync2any_spark.session import get_spark
 
@@ -32,7 +34,7 @@ def main() -> None:
         s.search(q.query_text, int(q.k))
 
     print(f"{'qid':>4} {'query':<28} {'total':>8} {'fetch':>8} {'files':>5} "
-          f"{'score':>8} {'blocks':>7} {'postings':>9}")
+          f"{'kernel':>8} {'blocks':>7} {'postings':>9}")
     for q in queries.itertuples(index=False):
         if want and int(q.query_id) not in want:
             continue
@@ -49,7 +51,8 @@ def main() -> None:
             tbl = s._pruned_blocks_arrow(qterms)
             t1 = time.time()
             if tbl.num_rows:
-                s._vectorized_topk_arrow(tbl, qterms, dfs, int(q.k))
+                terms = s._weighted_tables(tbl, qterms, dfs)
+                kernel.topk(terms, s.deleted, s.avgdl, int(q.k))
             t2 = time.time()
             if t2 - t0 < best[0]:
                 best = (t2 - t0, t1 - t0, t2 - t1, tbl.num_rows)
