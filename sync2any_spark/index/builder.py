@@ -18,9 +18,9 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    reference's parameter projection, ``transform/RecordsTransform.java:54-76``)
    and the SPIMI chunk (tokenize + tf-count + varbyte-encode in one
    vectorized numpy kernel, ``_spimi_rows_for_texts``), committed by a
-   per-span manifest JSON written last; CDC delta segments run the same
-   kernel. A re-run skips completed spans (the analog of the reference's
-   offset-reset / checkpoint-ack recovery,
+   per-span manifest JSON written last; the CDC apply tokenizes its new
+   rows with the same kernel. A re-run skips completed spans (the analog
+   of the reference's offset-reset / checkpoint-ack recovery,
    ``extract/KafkaMsgListener.java:76-79,312-330``); a changed span list
    invalidates the manifests via ``_filelist.json``.
 3. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
@@ -116,6 +116,9 @@ CHUNK_COMPRESSION = _CHUNK_CODEC_ENV or {
     },
 }
 
+# the SPIMI chunk files of a chunks dir (manifests are ``part-*.manifest.json``)
+CHUNK_GLOB = "part-*.parquet"
+
 CHUNK_SCHEMA = T.StructType(
     [
         T.StructField("term", T.StringType()),
@@ -195,6 +198,11 @@ class IndexPaths:
     def sorted_src(self) -> str:
         # the build's range-sorted copy of a source it cannot use as-is
         return os.path.join(self.root, "_sorted_src")
+
+    @property
+    def apply_src(self) -> str:
+        # the CDC apply's range-sorted copy of a batch over the driver budget
+        return os.path.join(self.root, "_apply_src")
 
     @property
     def deletes(self) -> str:
@@ -425,7 +433,7 @@ def build_docs(transcripts: DataFrame) -> DataFrame:
 
 
 def _write_chunk(
-    chunks_dir: str, prefix: str, part_id: int, rows: dict,
+    chunks_dir: str, part_id: int, rows: dict,
     n_rows_docs: int, n_terms: int, t0: float, *, n_buckets: int,
     n_salts: int, sum_dl: int = 0, wfs=None,
     span_keys: "tuple | None" = None,
@@ -453,7 +461,7 @@ def _write_chunk(
 
     wfs = wfs or LOCAL
     wfs.makedirs(chunks_dir)
-    path = os.path.join(chunks_dir, f"{prefix}part-{part_id:05d}.parquet")
+    path = os.path.join(chunks_dir, f"part-{part_id:05d}.parquet")
     b, s = bucket_sub_arrays(
         np.asarray(rows["term"], dtype=object), n_buckets, MERGE_SUBSPLIT
     )
@@ -508,7 +516,7 @@ def _write_chunk(
         manifest["first_turn"] = int(ft)
         manifest["last_conv"] = lc
         manifest["last_turn"] = int(lt)
-    mpath = os.path.join(chunks_dir, f"{prefix}part-{part_id:05d}.manifest.json")
+    mpath = os.path.join(chunks_dir, f"part-{part_id:05d}.manifest.json")
     wfs.write_json(manifest, mpath)
     return ret
 
@@ -700,37 +708,7 @@ def _spimi_rows_for_texts(
     return rows, n_terms, dls
 
 
-def _chunk_builder_pandas(chunks_dir: str, prefix: str = "", *,
-                          n_buckets: int, n_salts: int,
-                          store_positions: bool = False):
-    """The SPIMI kernel over one CDC delta partition's docs rows
-    (``build_chunks``): tokenize, tf-count and varbyte-encode entirely
-    inside the Arrow batch (byte-level tokenizer, regex fallback —
-    ``_spimi_rows_for_texts``, the kernel the snapshot build's fused pass
-    runs too), then write the chunk + manifest."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        t0 = time.time()
-        part_id = int(pdf["part_id"].iloc[0])
-        pdf = pdf.sort_values("doc_id")
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        # dls come from the tokenizer itself (identical to the stored dl
-        # column by the proven JVM≡Python token equivalence; NULL-text rows
-        # count 0 both ways)
-        rows, n_terms, dls = _spimi_rows_for_texts(
-            part_id, doc_ids, pdf["text"], store_positions=store_positions
-        )
-        return _write_chunk(
-            chunks_dir, prefix, part_id, rows, len(pdf), n_terms, t0,
-            sum_dl=int(dls.sum()), n_buckets=n_buckets, n_salts=n_salts,
-        )
-
-    return build
-
-
-def completed_partitions(
-    chunks_dir: str, prefix: str = "", wfs=None
-) -> set[int]:
+def completed_partitions(chunks_dir: str, wfs=None) -> set[int]:
     """Partition ids with a committed manifest — resolved through ``wfs``
     so resume bookkeeping sees the store the tasks actually wrote to."""
     from .fswrite import LOCAL
@@ -738,42 +716,14 @@ def completed_partitions(
     _wfs = wfs or LOCAL
     done = set()
     for name in _wfs.listdir(chunks_dir):
-        if name.startswith(f"{prefix}part-") and name.endswith(".manifest.json"):
+        if name.startswith("part-") and name.endswith(".manifest.json"):
             m = _wfs.read_json(os.path.join(chunks_dir, name))
             if m.get("status") == "done":
                 done.add(int(m["partition_id"]))
     return done
 
 
-def build_chunks(
-    docs: DataFrame,
-    chunks_dir: str,
-    n_partitions: int,
-    *,
-    n_buckets: int,
-    n_salts: int,
-    prefix: str = "",
-    store_positions: bool = False,
-) -> DataFrame:
-    """SPIMI pass over a docs relation (the CDC delta segment): rows are
-    grouped by ``part_id = xxhash64(conv_id) % n_partitions`` and each
-    group runs the chunk kernel. Returns the manifest DataFrame (one row
-    per partition built). Callers own the ``prefix`` chunk namespace and
-    wipe it first; ``n_buckets``/``n_salts`` must be the index's, so the
-    chunks pass the zero-shuffle merge's layout check."""
-    part = F.pmod(F.xxhash64("conv_id"), F.lit(n_partitions)).cast("int")
-    kern = _chunk_builder_pandas(
-        chunks_dir, prefix, n_buckets=n_buckets, n_salts=n_salts,
-        store_positions=store_positions,
-    )
-    return (
-        docs.select("doc_id", "text", part.alias("part_id"))
-        .groupBy("part_id")
-        .applyInPandas(kern, schema=MANIFEST_SCHEMA)
-    )
-
-
-def read_manifests(chunks_dir: str, prefix: str = "", wfs=None) -> "list[dict]":
+def read_manifests(chunks_dir: str, wfs=None) -> "list[dict]":
     """All committed partition manifests (the lineage/metrics sidecars),
     resolved through ``wfs`` (object-store deployments read them back from
     the store the tasks wrote to)."""
@@ -782,7 +732,7 @@ def read_manifests(chunks_dir: str, prefix: str = "", wfs=None) -> "list[dict]":
     _wfs = wfs or LOCAL
     out = []
     for name in sorted(_wfs.listdir(chunks_dir)):
-        if name.startswith(f"{prefix}part-") and name.endswith(".manifest.json"):
+        if name.startswith("part-") and name.endswith(".manifest.json"):
             out.append(_wfs.read_json(os.path.join(chunks_dir, name)))
     return out
 
@@ -1082,7 +1032,7 @@ def build_segments(
                 # chunk then manifest LAST — the docs file above is only
                 # trusted once this manifest lands (fswrite commit order)
                 yield _write_chunk(
-                    chunks_dir, "", part_id, rows, len(doc_ids), n_terms,
+                    chunks_dir, part_id, rows, len(doc_ids), n_terms,
                     t0, sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
                     n_salts=n_salts, span_keys=span_keys,
                 )
@@ -1094,29 +1044,29 @@ def build_segments(
     return flist.mapInPandas(kern, schema=MANIFEST_SCHEMA)
 
 
-def _read_chunks(spark: SparkSession, chunks_dir: str, glob: str) -> DataFrame:
+def _read_chunks(spark: SparkSession, chunks_dir: str) -> DataFrame:
     """Chunk reader tolerant of an all-empty corpus (no token → no chunk
     files): returns an empty, correctly-typed relation instead of a
     path-not-found error."""
-    import glob as globmod
+    import glob
 
-    if not globmod.glob(os.path.join(chunks_dir, glob)):
+    if not glob.glob(os.path.join(chunks_dir, CHUNK_GLOB)):
         return spark.createDataFrame([], CHUNK_SCHEMA)
     # mergeSchema: a resumed dir may mix layout generations (chunks with
     # and without the bucket/sub/salt columns) — the shuffle merge
     # recomputes its own keys, so the union schema is always safe
     return spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(chunks_dir, glob)
+        os.path.join(chunks_dir, CHUNK_GLOB)
     )
 
 
 def build_term_stats(
-    spark: SparkSession, chunks_dir: str, n_buckets: int, glob: str = "part-*.parquet"
+    spark: SparkSession, chunks_dir: str, n_buckets: int
 ) -> DataFrame:
     """terms(term, df, cf, bucket) from chunk rows (map-side combined sums)."""
     from .bucketing import bucket_expr
 
-    chunks = _read_chunks(spark, chunks_dir, glob)
+    chunks = _read_chunks(spark, chunks_dir)
     return chunks.groupBy("term").agg(
         F.sum("n_docs").cast("long").alias("df"), F.sum("cf").alias("cf")
     ).withColumn("bucket", bucket_expr("term", n_buckets))
@@ -1275,21 +1225,21 @@ def write_terms_driver(terms_pdf: "pd.DataFrame", out_dir: str) -> None:
 
 def write_postings_driver(
     rows: dict, avgdl: float, n_buckets: int, out_dir: str,
-    store_positions: bool = False,
+    store_positions: bool = False, part: int = 0,
 ) -> int:
     """Encode and write the postings of ONE doc-ordered SPIMI chunk (the
     rows ``_spimi_rows_for_texts`` returns: term-sorted, one row per term)
     driver-side: one ``_blocks_from_sorted`` pass over every term, then one
-    term-sorted file per bucket (``bucket=K/part-00000.parquet``) — the
+    term-sorted file per bucket (``bucket=K/part-<part>.parquet``) — the
     layout ``force_merge_postings`` writes, which every reader serves. The
-    CDC driver apply's delta writer. ``out_dir`` is wiped first, so no part
-    file of an earlier attempt survives; returns the block count."""
+    CDC apply's delta writer, called once per slice with its own ``part``;
+    the caller wipes ``out_dir`` before the first. Returns the block
+    count."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .bucketing import bucket_of
 
-    shutil.rmtree(out_dir, ignore_errors=True)
     terms = np.asarray(rows["term"], dtype=object)
     if not len(terms):
         return 0
@@ -1313,7 +1263,7 @@ def write_postings_driver(
             d = os.path.join(out_dir, f"bucket={b}")
             os.makedirs(d, exist_ok=True)
             pq.write_table(
-                tbl.slice(lo, n), os.path.join(d, "part-00000.parquet"),
+                tbl.slice(lo, n), os.path.join(d, f"part-{part:05d}.parquet"),
                 compression=POSTINGS_COMPRESSION,
                 row_group_size=2048,  # force_merge_postings' row groups
             )
@@ -1350,7 +1300,7 @@ def _merge_group(
     store_positions: bool = False,
 ) -> dict:
     """Merge one (bucket, sub, salt) group's chunk rows into doc-ordered
-    128-posting blocks — pandas spelling (the shuffle/delta path). Sorts
+    128-posting blocks — pandas spelling (the shuffle path). Sorts
     the frame, then hands column bytes to ``_blocks_from_sorted``."""
     if len(pdf) == 0:
         return dict(_EMPTY_BLOCK_ROWS)
@@ -1547,7 +1497,6 @@ def _salted_chunks(
     n_buckets: int,
     n_salts: int,
     heavy_df_threshold: int,
-    glob: str,
 ) -> DataFrame:
     """Chunk rows + (bucket, sub, salt) merge-group keys. Heavy terms
     (df > threshold) split into ``n_salts`` sub-streams by
@@ -1556,7 +1505,7 @@ def _salted_chunks(
     sums are unaffected (streams of one term just add)."""
     from .bucketing import bucket_expr
 
-    chunks = _read_chunks(spark, chunks_dir, glob)
+    chunks = _read_chunks(spark, chunks_dir)
     heavy = terms.where(F.col("df") > heavy_df_threshold).select(
         "term", F.lit(True).alias("is_heavy")
     )
@@ -1586,8 +1535,8 @@ def _salted_chunks(
 # ParquetFile handles + per-row-group (bucket, sub, salt) stats live for
 # the whole stage and each task prunes row groups with one numpy compare.
 # Keyed by one id per merge call, never by file names: a rewritten chunk
-# file keeps its name (a CDC segment retried with another batch, a rebuild
-# in place), and a name key would hand the retry the old file's handle.
+# file keeps its name (a rebuild in place), and a name key would hand the
+# rebuild the old file's handle.
 # Bounded: the cache clears itself past 4 entries. At 10^5+ chunk files per
 # segment the cache should hold parsed metadata rather than open handles -
 # the merge then runs per segment group, which bounds the list (SCALE.md).
@@ -1697,7 +1646,6 @@ def _build_postings_direct_shuffle(
     out_dir: str,
     n_salts: int = 8,
     heavy_df_threshold: int = 10_000,
-    glob: str = "part-*.parquet",
     store_positions: bool = False,
     filesystem=None,
 ) -> int:
@@ -1706,7 +1654,7 @@ def _build_postings_direct_shuffle(
     each merge task writes its group's block file into the hive layout
     itself and returns a manifest row. Returns total blocks."""
     salted = _salted_chunks(
-        spark, chunks_dir, terms, n_buckets, n_salts, heavy_df_threshold, glob
+        spark, chunks_dir, terms, n_buckets, n_salts, heavy_df_threshold
     )
     manifest = salted.groupBy("bucket", "sub", "salt").applyInPandas(
         _postings_writer(
@@ -1727,7 +1675,6 @@ def build_postings_direct(
     out_dir: str,
     n_salts: int = 8,
     heavy_df_threshold: int = 10_000,
-    glob: str = "part-*.parquet",
     store_positions: bool = False,
     filesystem=None,
     split_postings: "int | None" = None,
@@ -1770,12 +1717,13 @@ def build_postings_direct(
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
     wfs = filesystem or LOCAL
-    names = sorted(nm for nm in wfs.listdir(chunks_dir) if fnmatch.fnmatch(nm, glob))
+    names = sorted(
+        nm for nm in wfs.listdir(chunks_dir) if fnmatch.fnmatch(nm, CHUNK_GLOB)
+    )
     files = [os.path.join(chunks_dir, nm) for nm in names]
     if not files:
         return 0
-    prefix = glob.split("part-")[0]
-    mans = read_manifests(chunks_dir, prefix, wfs=wfs)
+    mans = read_manifests(chunks_dir, wfs=wfs)
     layout_ok = (
         "salt" in pads.dataset(files[:1], filesystem=wfs.fs).schema.names
         and mans
@@ -1790,7 +1738,7 @@ def build_postings_direct(
         return _build_postings_direct_shuffle(
             spark, chunks_dir, terms, avgdl, n_buckets, out_dir,
             n_salts=n_salts, heavy_df_threshold=heavy_df_threshold,
-            glob=glob, store_positions=store_positions, filesystem=filesystem,
+            store_positions=store_positions, filesystem=filesystem,
         )
 
     # split plan: a (bucket, sub) group fans out only when its heavy
@@ -1842,7 +1790,7 @@ def build_postings_direct(
         cols.append("pos")
     _fs = wfs.fs
     merge_id = uuid.uuid4().hex  # the tasks' reader-cache key
-    # part_id (→ salt class) straight off the file name: {prefix}part-NNNNN
+    # part_id (→ salt class) straight off the file name: part-NNNNN
     import re
 
     _pat = re.compile(r"part-(\d+)\.parquet$")

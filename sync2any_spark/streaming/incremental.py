@@ -22,22 +22,28 @@ Lucene segment model:
 - ``compact()`` rebuilds the index from the live docs (force-merge analog),
   purging tombstones and re-densifying doc ids.
 
-A batch that fits ``DRIVER_APPLY_BYTES`` is applied in-process after
-one Arrow collect (two Spark jobs per batch: the shape aggregate and the
-collect); bigger batches take the distributed path. Each apply records
-its route and the reason it declined the in-process one.
+There is one apply, and it runs in-process over key-ordered slices of
+the batch. A batch that fits ``DRIVER_APPLY_BYTES`` is one slice, brought
+to the driver by one Arrow collect (two Spark jobs per batch: the shape
+aggregate and the collect). A bigger batch is range-sorted once into a
+staging dir under the index and streamed back with pyarrow in slices of
+at most that many bytes (three Spark jobs, whatever its size), in the
+bounded bulk chunks the reference loads changes in
+(``load/impl/CkLoadServiceImpl.java:58-63,171-191``). Each apply records
+its route, its slice count and the reason it declined the one collect.
 
 Crash atomicity (the write-ahead shape the reference gets from ES bulk
 acks + Kafka offset commits, ``extract/KafkaMsgListener.java:312-330``):
 every artifact of segment N — postings_segs/segN, docs_segs/segN,
 deletes_segs/segN, terms_vN, stats_vN — is written with deterministic names
-into a dir its writer wipes first, and readers resolve ONLY through
-``meta.json`` (``segments`` + ``terms_version``). The single atomic
-``os.replace`` of meta.json is the commit point: a crash anywhere before it
-leaves the index exactly at the previous commit, and a retry of the same
-(or a different) batch rewrites the orphaned segment artifacts (no
-duplicate postings, no double counting — tested by killing the apply
-before commit).
+into a dir the apply wipes first (each slice adds its own part files), and
+readers resolve ONLY through ``meta.json`` (``segments`` +
+``terms_version``). The single atomic ``os.replace`` of meta.json is the
+commit point: a crash anywhere before it leaves the index exactly at the
+previous commit, and a retry of the same (or a different) batch rewrites
+the orphaned segment artifacts (no duplicate postings, no double counting
+— tested by killing the apply mid-slices and before commit); ``vacuum``
+removes what a crash left, the staging dir included.
 """
 
 from __future__ import annotations
@@ -55,36 +61,31 @@ from pyspark.sql import functions as F
 
 from ..index.builder import (
     IndexPaths,
+    _range_sort,
+    _source_files,
     _spimi_rows_for_texts,
     append_metrics_driver,
-    build_chunks,
     build_index,
-    build_postings_direct,
-    build_term_stats,
     deletes_sources,
     docs_sources,
     read_index_meta,
     write_postings_driver,
     write_stats_driver,
 )
-from ..query.algebra import SPARK_TOKEN_RE
+from ..query.wand import _load_deletes
 
 
-# driver memory budget, in bytes: a batch whose text fits, and whose
-# collected columns together fit, is applied in-process (the tokenizer's
-# transient memory is ~21x the text bytes, so ~170 MB at the budget), and
-# so is compact's delta pre-pass when the delta docs and deletes footers
-# fit it; past it, the distributed apply and the re-sort compact run, and
-# the decline reason is recorded
+# driver memory budget, in bytes, of one apply slice: a batch whose text
+# fits, and whose collected columns together fit, is one slice after one
+# collect (the tokenizer's transient memory is ~21x the text bytes, so
+# ~170 MB at the budget); a bigger batch is staged and applied in slices of
+# at most this size, and a slice whose matched stored text passes it is
+# halved. Compact's delta pre-pass runs when the delta docs and deletes
+# footers fit it, else the re-sort compact runs. Every decline is recorded.
 DRIVER_APPLY_BYTES = 8 << 20
 # per batch row, the collect's fixed-width Arrow bytes beyond the string
 # values: five 4-byte string offsets, int32 turn_idx, int64 ts
 _ARROW_ROW_BYTES = 5 * 4 + 4 + 8
-
-# the distributed apply ranks fresh doc ids driver-side (one 2-column
-# toPandas + a broadcast id map) up to this many new rows; larger backfills
-# use the distributed two-level prefix sum
-DRIVER_RANK_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_RANK_ROWS", 1_000_000))
 
 
 def _write_meta(index_dir: str, meta: dict) -> None:
@@ -273,77 +274,19 @@ def _update_terms_spark(
     )
 
 
-def _write_seg_table(out_dir: str, tbl) -> None:
-    """Write one segment-owned table (docs or deletes) as a single pyarrow
-    file. The dir is wiped first, so the part files of a crashed earlier
-    attempt — Spark-written ones included — never survive; an empty table
-    leaves no dir."""
-    import shutil
-
+def _write_seg_table(out_dir: str, tbl, part: int) -> None:
+    """Write one slice's rows of a segment-owned table (docs or deletes) as
+    ``part-<part>.parquet``; an empty table writes nothing. The apply wipes
+    the dir before its first slice, so no part file of a crashed earlier
+    attempt survives."""
     import pyarrow.parquet as pq
 
-    shutil.rmtree(out_dir, ignore_errors=True)
     if tbl.num_rows:
-        os.makedirs(out_dir)
+        os.makedirs(out_dir, exist_ok=True)
         pq.write_table(
-            tbl, os.path.join(out_dir, "part-00000.parquet"), compression="zstd"
+            tbl, os.path.join(out_dir, f"part-{part:05d}.parquet"),
+            compression="zstd",
         )
-
-
-def _seg_prefix(segment: int) -> str:
-    """Chunk-file prefix of delta segment ``segment``."""
-    return f"seg{segment:03d}-"
-
-
-def _write_delta_chunks(
-    new_docs: "DataFrame | None", paths: IndexPaths, meta: dict,
-    segment: int, n_new: int,
-) -> None:
-    """Distributed apply: SPIMI pass over a batch's new rows into segment
-    ``segment``'s chunk namespace (``seg{N}-part-*``). A crashed apply may have left chunk
-    files for this (uncommitted) segment number behind, and a retry with a
-    DIFFERENT batch must not mix them in, so the namespace is wiped first.
-    The chunks carry the index's (n_buckets, n_salts) layout, so the delta
-    merge below is always the zero-shuffle one."""
-    import glob as globmod
-
-    prefix = _seg_prefix(segment)
-    for stale in globmod.glob(os.path.join(paths.chunks, prefix + "*")):
-        os.remove(stale)
-    if n_new == 0:
-        return
-    # delta partition count sized to the batch (≥ ~4k docs per SPIMI task):
-    # a 40k-doc delta through the full snapshot partition count spends its
-    # wall on empty-task scheduling, not tokenizing
-    n_delta_parts = max(1, min(int(meta["n_partitions"]), n_new // 4000 + 1))
-    build_chunks(
-        new_docs, paths.chunks, n_delta_parts, prefix=prefix,
-        n_buckets=int(meta["n_buckets"]), n_salts=int(meta["n_salts"]),
-        store_positions=bool(meta.get("store_positions", False)),
-    ).count()
-
-
-def _write_delta_postings(
-    spark: SparkSession, paths: IndexPaths, meta: dict, segment: int,
-    delta_terms: "DataFrame | None", avgdl: float,
-) -> None:
-    """Distributed apply's delta postings: the zero-shuffle merge of the
-    segment's chunks into its own postings dir (overwrite = retry-safe).
-    ``delta_terms`` None means the batch added no docs; the dir is
-    removed."""
-    import shutil
-
-    out = paths.postings_seg(segment)
-    if delta_terms is None:
-        shutil.rmtree(out, ignore_errors=True)
-        return
-    build_postings_direct(
-        spark, paths.chunks, delta_terms, avgdl, int(meta["n_buckets"]), out,
-        n_salts=int(meta["n_salts"]),
-        heavy_df_threshold=int(meta["heavy_df_threshold"]),
-        glob=_seg_prefix(segment) + "part-*.parquet",
-        store_positions=bool(meta.get("store_positions", False)),
-    )
 
 
 def _read_stats(paths: IndexPaths, meta: dict):
@@ -355,12 +298,12 @@ def _read_stats(paths: IndexPaths, meta: dict):
 
 
 def _noop(route: str, decline: "str | None" = None,
-          store_rows_scanned: "int | None" = None) -> dict:
+          store_rows_scanned: "int | None" = None, slices: int = 0) -> dict:
     """Summary of an apply that commits nothing (empty or no-op batch)."""
     return {
         "tombstones": 0, "new_docs": 0, "segment": None, "wall_s": 0.0,
         "route": route, "decline": decline,
-        "store_rows_scanned": store_rows_scanned,
+        "store_rows_scanned": store_rows_scanned, "slices": slices,
     }
 
 
@@ -368,13 +311,13 @@ def _commit_segment(
     index_dir: str, paths: IndexPaths, meta: dict, segment: int, *,
     n_docs_live: int, avgdl: float, next_id: int, n_new: int,
     n_tombstones: int, t0: float, laps: "dict[str, float]", route: str,
-    decline: "str | None" = None, store_rows_scanned: "int | None" = None,
+    decline: "str | None", store_rows_scanned: int, slices: int,
 ) -> dict:
-    """Commit point of both apply routes: ONE atomic meta.json replace,
-    then the run's ``increment`` metrics rows — counts, wall, the route
+    """Commit point of an apply: ONE atomic meta.json replace, then the
+    run's ``increment`` metrics rows — counts, wall, the route
     (``route=<route>``), the decline reason (``decline=<reason>``), the
-    store rows probed and every stage lap (``<lap>_s``). Returns the apply
-    summary."""
+    store rows probed, the slice count and every stage lap
+    (``<lap>_s``). Returns the apply summary."""
     meta["segments"] = meta.get("segments", []) + [segment]
     meta["terms_version"] = segment
     meta["last_segment"] = segment
@@ -384,21 +327,22 @@ def _commit_segment(
     _write_meta(index_dir, meta)
 
     wall = time.time() - t0
+    laps = {lap: round(v, 3) for lap, v in laps.items()}
     rows = [
         ("increment", "segment", float(segment)),
         ("increment", "tombstones", float(n_tombstones)),
         ("increment", "new_docs", float(n_new)),
         ("increment", "wall_s", wall),
         ("increment", f"route={route}", 1.0),
+        ("increment", "store_rows_scanned", float(store_rows_scanned)),
+        ("increment", "slices", float(slices)),
         *(("increment", f"{lap}_s", v) for lap, v in laps.items()),
     ]
     if decline is not None:
         rows.append(("increment", f"decline={decline}", 1.0))
-    if store_rows_scanned is not None:
-        rows.append(("increment", "store_rows_scanned", float(store_rows_scanned)))
     append_metrics_driver(paths.metrics, rows)
     return {
-        **_noop(route, decline, store_rows_scanned),
+        **_noop(route, decline, store_rows_scanned, slices),
         "tombstones": n_tombstones,
         "new_docs": n_new,
         "segment": segment,
@@ -407,9 +351,9 @@ def _commit_segment(
     }
 
 
-# the batch as the in-process apply holds it, and the stored columns it
-# reads for a matched key; ts is normalised on both sides to the one
-# timestamp flavor every writer lineage of the docs store casts to
+# the batch as the apply holds it, and the stored columns it reads for a
+# matched key; ts is normalised on both sides to the one timestamp flavor
+# every writer lineage of the docs store casts to
 _TS = pa.timestamp("us", tz="UTC")
 _BATCH_SCHEMA = pa.schema([
     ("conv_id", pa.string()), ("turn_idx", pa.int32()), ("role", pa.string()),
@@ -421,30 +365,68 @@ _OLD_SCHEMA = pa.schema([
     ("tool", pa.string()), ("ts", _TS), ("dl", pa.int64()),
 ])
 _KEY_SCHEMA = pa.schema([("conv_id", pa.string()), ("turn_idx", pa.int32())])
+_KEY_ORDER = [("conv_id", "ascending"), ("turn_idx", "ascending")]
+
+
+def _row_bytes(batch: pa.Table) -> np.ndarray:
+    """Each batch row's collected bytes, priced as the shape aggregate
+    prices a batch: its string values plus ``_ARROW_ROW_BYTES``."""
+    out = np.full(batch.num_rows, _ARROW_ROW_BYTES, dtype=np.int64)
+    for c in ("conv_id", "role", "text", "tool", "op"):
+        out += pc.fill_null(pc.binary_length(batch[c]), 0).to_numpy()
+    return out
+
+
+def _staged_slices(src: str):
+    """The staged batch in key order, cut into slices of at most
+    DRIVER_APPLY_BYTES and never less than one row. The range-sorted files
+    are read one row group at a time, so the driver holds one row group
+    plus one slice."""
+    import pyarrow.parquet as pq
+
+    rest = _BATCH_SCHEMA.empty_table()
+    for f in _source_files(src):
+        pf = pq.ParquetFile(f)
+        for g in range(pf.metadata.num_row_groups):
+            rg = pf.read_row_group(g, columns=_BATCH_SCHEMA.names)
+            rest = pa.concat_tables(
+                [rest, rg.select(_BATCH_SCHEMA.names).cast(_BATCH_SCHEMA)]
+            )
+            ends = np.cumsum(_row_bytes(rest))
+            lo = 0
+            while True:
+                room = (ends[lo - 1] if lo else 0) + DRIVER_APPLY_BYTES
+                hi = max(lo + 1, int(np.searchsorted(ends, room, side="right")))
+                if hi >= len(ends):  # the rest fits: wait for more rows
+                    break
+                yield rest.slice(lo, hi - lo).combine_chunks()
+                lo = hi
+            rest = rest.slice(lo)
+    if rest.num_rows:
+        yield rest.combine_chunks()
 
 
 def _probe_store(
-    index_dir: str, meta: dict, batch: pa.Table, key_lo, key_hi
+    files: "list[str]", dead: np.ndarray, batch: pa.Table,
+    budget: "int | None",
 ) -> "tuple[pa.Table | None, int]":
-    """Keys-first probe of the docs store for the batch's keys. Per file:
-    row groups whose ``conv_id`` stats miss ``[key_lo, key_hi]`` are
-    skipped, only ``conv_id, turn_idx`` are read and hash-joined to the
+    """Keys-first probe of the docs store ``files`` for the batch's keys.
+    Per file: row groups whose ``conv_id`` stats miss the batch's key range
+    are skipped, only ``conv_id, turn_idx`` are read and hash-joined to the
     batch keys, and the stored columns are read only for the row groups
-    that hold a match, keeping only the matched rows; tombstoned ids drop
-    out. Returns (the live matched rows — ``_OLD_SCHEMA`` plus the batch
-    row index ``bi`` — and the store rows whose keys were read), or
-    (None, rows read) once the matched text passes DRIVER_APPLY_BYTES."""
-    import pyarrow.dataset as pds
+    that hold a match, keeping only the matched rows; tombstoned ids
+    (``dead``) drop out. Returns (the live matched rows — ``_OLD_SCHEMA``
+    plus the batch row index ``bi`` — and the store rows whose keys were
+    read), or (None, rows read) once the matched text passes ``budget``
+    (None: no limit)."""
     import pyarrow.parquet as pq
 
-    from ..query.wand import _load_deletes
-
-    dead = _load_deletes(deletes_sources(index_dir, meta))
+    mm = pc.min_max(batch["conv_id"])
+    key_lo, key_hi = mm["min"].as_py(), mm["max"].as_py()
     keys = batch.select(_KEY_SCHEMA.names).append_column(
         "bi", pa.array(np.arange(batch.num_rows, dtype=np.int64))
     )
     parts, scanned, text_bytes = [], 0, 0
-    files = [f for d in docs_sources(index_dir, meta) for f in pds.dataset(d).files]
     for f in files:
         pf = pq.ParquetFile(f)
         md = pf.metadata
@@ -485,7 +467,7 @@ def _probe_store(
             if dead.size:
                 old = old.filter(pa.array(~np.isin(old["doc_id"].to_numpy(), dead)))
             text_bytes += pc.sum(pc.binary_length(old["text"])).as_py() or 0
-            if text_bytes > DRIVER_APPLY_BYTES:
+            if budget is not None and text_bytes > budget:
                 return None, scanned
             parts.append(old)
     if not parts:
@@ -507,35 +489,46 @@ def apply_increments(
 ) -> dict:
     """Apply one I/U/D batch (SURVEY.md §3.2 analog). Returns the summary:
     ``tombstones``, ``new_docs``, ``segment``, ``wall_s``, ``stage_walls``,
-    ``route`` (``"driver"`` or ``"distributed"``), ``decline`` (None, or
-    why the in-process route was declined) and ``store_rows_scanned``
-    (docs-store rows whose keys the in-process probe read; None on the
-    distributed route).
+    ``route`` (``"driver"`` or ``"sliced"``), ``decline`` (None, or why
+    the batch was not applied as one collected slice), ``slices`` and
+    ``store_rows_scanned`` (docs-store rows whose keys the probe read).
 
     Batch contract (mirrors one-binlog-row-per-message): at most one op per
     (conv_id, turn_idx) — enforced, because apply order within a batch would
     otherwise be undefined.
 
-    Two routes, same committed state:
+    One apply, run in-process over key-ordered slices of the batch:
 
     - ``driver``: a batch whose text, and whose collected columns
-      together, are at most DRIVER_APPLY_BYTES runs two Spark jobs — the
-      shape aggregate and one ``toArrow`` collect — and nothing else
-      touches Spark. The docs store is probed keys-first with
-      pyarrow (``_probe_store``); the new rows are tokenized ONCE
-      (``_spimi_rows_for_texts``), giving the added (df, cf), the docs
-      segment's ``dl`` and the delta postings' chunk; the removed side is
-      the same kernel over the stored texts plus the stored ``dl``;
-      terms, stats, postings (``write_postings_driver``: one term-sorted
-      file per bucket), docs and deletes are written with pyarrow.
-    - ``distributed``: bigger batches, or batches whose matched stored text
-      passes the same budget (shuffle join + signed tokenize union +
-      full-outer terms join, SPIMI chunks and the zero-shuffle merge), whose
-      every stage scales out.
+      together, are at most DRIVER_APPLY_BYTES is one slice after one
+      ``toArrow`` collect — two Spark jobs, the shape aggregate and the
+      collect.
+    - ``sliced``: a bigger batch (``decline`` says ``batch text …`` or
+      ``batch total …``) is written once, sorted into one file, into the
+      staging dir ``_apply_src`` — three Spark jobs — and streamed back
+      with pyarrow in slices of at most DRIVER_APPLY_BYTES; a slice whose
+      matched stored text passes the budget (``matched store text over
+      budget``) is halved and probed again, down to one row, which is
+      applied whatever its size.
 
-    Both commit through ``_commit_segment``, which records the route, the
-    decline reason and the stage laps as ``increment`` metrics rows.
+    Per slice, the docs store is probed keys-first with pyarrow
+    (``_probe_store``); the new rows are tokenized ONCE
+    (``_spimi_rows_for_texts``), giving the added (df, cf), the docs
+    segment's ``dl`` and the delta postings' chunk; the removed side is the
+    same kernel over the stored texts plus the stored ``dl``. Fresh doc ids
+    run on from ``next_doc_id`` in key order across slices. Each slice
+    writes its own part files of the segment's postings
+    (``write_postings_driver``, scored with the avgdl after that slice),
+    docs and deletes; the summed term deltas and stats are written once,
+    and ``_commit_segment`` commits the segment with one meta.json swap and
+    records the route, the decline reason, the slice count and the stage
+    laps (summed over slices) as ``increment`` metrics rows.
     """
+    import shutil
+    from collections import deque
+
+    import pyarrow.dataset as pds
+
     paths = IndexPaths(index_dir)
     meta = read_index_meta(index_dir)
     t0 = time.time()
@@ -544,7 +537,7 @@ def apply_increments(
 
     def _lap(name: str) -> None:
         now = time.time()
-        laps[name] = round(now - _last[0], 3)
+        laps[name] = laps.get(name, 0.0) + now - _last[0]
         _last[0] = now
 
     # coalesce(1): the one-partition child already satisfies the distinct
@@ -553,8 +546,6 @@ def apply_increments(
     shape = increments.coalesce(1).agg(
         F.count("*").alias("n"),
         F.countDistinct("conv_id", "turn_idx").alias("k"),
-        F.min("conv_id").alias("key_lo"),
-        F.max("conv_id").alias("key_hi"),
         F.coalesce(F.sum(F.octet_length("text")), F.lit(0)).alias("text_bytes"),
         F.coalesce(
             F.sum(F.octet_length(F.concat_ws("", "conv_id", "role", "tool", "op"))),
@@ -582,40 +573,19 @@ def apply_increments(
             f"batch total {batch_bytes / 2**20:.1f} MB over "
             f"{DRIVER_APPLY_BYTES / 2**20:g} MB"
         )
+    batch = increments.select(*_BATCH_SCHEMA.names)
+    if decline is None:
+        slices = [
+            batch.toArrow().cast(_BATCH_SCHEMA).sort_by(_KEY_ORDER).combine_chunks()
+        ]
     else:
-        batch = (
-            increments.select(*_BATCH_SCHEMA.names).toArrow()
-            .cast(_BATCH_SCHEMA).combine_chunks()
-        )
-        old, scanned = _probe_store(
-            index_dir, meta, batch, shape.key_lo, shape.key_hi
-        )
-        if old is None:
-            decline = "matched store text over budget"
-    if decline is not None:
-        return _apply_increments_distributed(
-            spark, index_dir, increments, paths, meta, t0, laps, _lap, decline
-        )
-
-    # each batch row's stored row (null where the key is new), then the
-    # effective rows: a delete of a present key, an upsert that changes
-    # text, role, tool or ts (null-safe)
-    at = np.full(n_batch, -1, dtype=np.int64)
-    at[old["bi"].to_numpy()] = np.arange(old.num_rows)
-    cur = old.take(pa.array(at, mask=at < 0))
-    same = at >= 0
-    for c in ("text", "role", "tool", "ts"):
-        same &= _null_safe_eq(batch[c], cur[c])
-    op = batch["op"]
-    is_del = pc.fill_null(pc.equal(op, "D"), False).to_numpy(zero_copy_only=False)
-    is_up = ~same & pc.fill_null(pc.not_equal(op, "D"), False).to_numpy(
-        zero_copy_only=False
-    )
-    gone = cur.filter(pa.array((at >= 0) & (is_del | is_up)))
-    n_tombstones, n_new = gone.num_rows, int(is_up.sum())
-    _lap("join_and_tombstones")
-    if n_tombstones == 0 and n_new == 0:
-        return _noop("driver", store_rows_scanned=scanned)
+        # ONE range partition: the slices are applied one after another on
+        # the driver, so more sorted files buy nothing, while a range
+        # partitioner over more partitions samples its input first — one
+        # more Spark job, two when the input's partitions are skewed
+        _range_sort(batch, paths.apply_src, 1)
+        _lap("stage_batch")
+        slices = _staged_slices(paths.apply_src)
 
     segment = int(meta.get("last_segment", 0)) + 1
     # fresh doc ids above the high-water mark, in key order
@@ -623,38 +593,113 @@ def apply_increments(
     if next_id is None:
         max_doc = all_docs(spark, index_dir, meta).agg(F.max("doc_id")).first()[0]
         next_id = int(max_doc) + 1 if max_doc is not None else 0
-    new = batch.filter(pa.array(is_up)).sort_by(
-        [("conv_id", "ascending"), ("turn_idx", "ascending")]
-    )
-    doc_ids = int(next_id) + np.arange(n_new, dtype=np.int64)
-    _lap("new_doc_ids")
-
-    # --- term and stat deltas: the chunk kernel's per-term (n_docs, cf)
-    # over the new rows (the ONE tokenize pass, whose rows are also the
-    # delta postings) minus the same over the stored texts ---------------
+    for d in (
+        paths.postings_seg(segment), paths.docs_seg(segment),
+        paths.deletes_seg(segment),
+    ):
+        shutil.rmtree(d, ignore_errors=True)
+    files = [f for d in docs_sources(index_dir, meta) for f in pds.dataset(d).files]
+    dead = _load_deletes(deletes_sources(index_dir, meta))
+    st = _read_stats(paths, meta)
     store_positions = bool(meta.get("store_positions", False))
-    rows, _, dls = _spimi_rows_for_texts(0, doc_ids, new["text"], store_positions)
-    removed, _, _ = _spimi_rows_for_texts(
-        0, np.arange(n_tombstones, dtype=np.int64), gone["text"]
-    )
+    deltas: "list[pd.DataFrame]" = []
+    n_new = n_tombstones = d_tokens = scanned = n_slices = 0
+    todo: deque = deque()
+    for piece in slices:
+        todo.append(piece)
+        while todo:
+            part = todo.popleft()
+            old, n_read = _probe_store(
+                files, dead, part, DRIVER_APPLY_BYTES if part.num_rows > 1 else None
+            )
+            scanned += n_read
+            if old is None:
+                # halve; the first half goes first, so ids stay in key order
+                decline = decline or "matched store text over budget"
+                half = part.num_rows // 2
+                todo.extendleft([part.slice(half), part.slice(0, half)])
+                continue
+            n_slices += 1
+
+            # each slice row's stored row (null where the key is new), then
+            # the effective rows: a delete of a present key, an upsert that
+            # changes text, role, tool or ts (null-safe)
+            at = np.full(part.num_rows, -1, dtype=np.int64)
+            at[old["bi"].to_numpy()] = np.arange(old.num_rows)
+            cur = old.take(pa.array(at, mask=at < 0))
+            same = at >= 0
+            for c in ("text", "role", "tool", "ts"):
+                same &= _null_safe_eq(part[c], cur[c])
+            op = part["op"]
+            is_del = pc.fill_null(pc.equal(op, "D"), False).to_numpy(
+                zero_copy_only=False
+            )
+            is_up = ~same & pc.fill_null(pc.not_equal(op, "D"), False).to_numpy(
+                zero_copy_only=False
+            )
+            gone = cur.filter(pa.array((at >= 0) & (is_del | is_up)))
+            new = part.filter(pa.array(is_up))
+            _lap("join_and_tombstones")
+            if gone.num_rows == 0 and new.num_rows == 0:
+                continue
+
+            doc_ids = int(next_id) + n_new + np.arange(new.num_rows, dtype=np.int64)
+            _lap("new_doc_ids")
+
+            # --- term and stat deltas: the chunk kernel's per-term
+            # (n_docs, cf) over the new rows (the ONE tokenize pass, whose
+            # rows are also the delta postings) minus the same over the
+            # stored texts ----------------------------------------------
+            rows, _, dls = _spimi_rows_for_texts(
+                0, doc_ids, new["text"], store_positions
+            )
+            removed, _, _ = _spimi_rows_for_texts(
+                0, np.arange(gone.num_rows, dtype=np.int64), gone["text"]
+            )
+            deltas.append(pd.DataFrame({
+                "term": np.concatenate([rows["term"], removed["term"]]),
+                "d_df": np.concatenate([rows["n_docs"], -removed["n_docs"]]),
+                "d_cf": np.concatenate([rows["cf"], -removed["cf"]]),
+            }))
+            n_new += new.num_rows
+            n_tombstones += gone.num_rows
+            d_tokens += int(dls.sum()) - int(pc.sum(gone["dl"]).as_py() or 0)
+            n_live = int(st.n_docs) - n_tombstones + n_new
+            avgdl = (int(st.total_tokens) + d_tokens) / n_live if n_live else 0.0
+            _lap("term_deltas_and_stats")
+
+            write_postings_driver(
+                rows, avgdl, int(meta["n_buckets"]), paths.postings_seg(segment),
+                store_positions, part=n_slices,
+            )
+            _lap("delta_postings")
+
+            docs = (
+                new.select(["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+                .add_column(0, "doc_id", pa.array(doc_ids))
+                .append_column("dl", pa.array(dls.astype(np.int32)))
+            )
+            _write_seg_table(paths.docs_seg(segment), docs, n_slices)
+            _write_seg_table(
+                paths.deletes_seg(segment),
+                pa.table({"doc_id": pa.array(np.sort(gone["doc_id"].to_numpy()))}),
+                n_slices,
+            )
+            _lap("segment_writes")
+    shutil.rmtree(paths.apply_src, ignore_errors=True)
+    route = "driver" if decline is None else "sliced"
+    if n_tombstones == 0 and n_new == 0:
+        return _noop(route, decline, scanned, n_slices)
+
     delta = (
-        pd.DataFrame({
-            "term": np.concatenate([rows["term"], removed["term"]]),
-            "d_df": np.concatenate([rows["n_docs"], -removed["n_docs"]]),
-            "d_cf": np.concatenate([rows["cf"], -removed["cf"]]),
-        })
+        pd.concat(deltas)
         .astype({"d_df": np.int64, "d_cf": np.int64})
         .groupby("term", sort=False, as_index=False)
         .sum()
     )
-    st = _read_stats(paths, meta)
-    n_docs_live = int(st.n_docs) - n_tombstones + n_new
-    total_tokens = (
-        int(st.total_tokens) - int(pc.sum(gone["dl"]).as_py() or 0)
-        + int(dls.sum())
+    write_stats_driver(
+        paths.stats_v(segment), n_live, avgdl, int(st.total_tokens) + d_tokens
     )
-    avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
-    write_stats_driver(paths.stats_v(segment), n_docs_live, avgdl, total_tokens)
     if not _update_terms_driver(
         paths.terms_v(meta.get("terms_version", 0)), delta,
         meta["n_buckets"], paths.terms_v(segment),
@@ -665,236 +710,18 @@ def apply_increments(
         )
     _lap("term_deltas_and_stats")
 
-    write_postings_driver(
-        rows, avgdl, int(meta["n_buckets"]), paths.postings_seg(segment),
-        store_positions,
-    )
-    _lap("delta_postings")
-
-    docs = (
-        new.select(["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-        .add_column(0, "doc_id", pa.array(doc_ids))
-        .append_column("dl", pa.array(dls.astype(np.int32)))
-    )
-    _write_seg_table(paths.docs_seg(segment), docs)
-    _write_seg_table(
-        paths.deletes_seg(segment),
-        pa.table({"doc_id": pa.array(np.sort(gone["doc_id"].to_numpy()))}),
-    )
-    _lap("segment_writes")
-
     return _commit_segment(
-        index_dir, paths, meta, segment, n_docs_live=n_docs_live,
+        index_dir, paths, meta, segment, n_docs_live=n_live,
         avgdl=avgdl, next_id=next_id, n_new=n_new,
-        n_tombstones=n_tombstones, t0=t0, laps=laps, route="driver",
-        store_rows_scanned=scanned,
+        n_tombstones=n_tombstones, t0=t0, laps=laps, route=route,
+        decline=decline, store_rows_scanned=scanned, slices=n_slices,
     )
-
-
-def _apply_increments_distributed(
-    spark: SparkSession,
-    index_dir: str,
-    increments: DataFrame,
-    paths: IndexPaths,
-    meta: dict,
-    t0: float,
-    laps: "dict[str, float]",
-    _lap,
-    decline: str,
-) -> dict:
-    """Backfill-scale route, taken for the reason ``decline``: the join,
-    the signed tokenize union and the full-outer terms join run
-    distributed; the delta segment is SPIMI chunks in the index's layout
-    plus the zero-shuffle merge, and the commit is the in-process route's
-    ``_commit_segment``."""
-    live = live_docs(spark, index_dir).select(
-        "conv_id", "turn_idx", F.col("doc_id").alias("old_doc_id"),
-        F.col("text").alias("cur_text"), F.col("role").alias("cur_role"),
-        F.col("tool").alias("cur_tool"), F.col("ts").alias("cur_ts"),
-        F.col("dl").alias("cur_dl"),
-    )
-    joined = increments.join(live, ["conv_id", "turn_idx"], "left").persist()
-
-    # effective rows (idempotence): D of absent key → no-op; I/U identical to
-    # the stored row → no-op (the ES docAsUpsert equivalence check). The
-    # compare is null-safe (a NULL text must not silently drop the op) and
-    # covers the non-text columns too: a role/tool/ts-only change is
-    # rank-neutral but must rewrite the doc row or fetch() serves stale data.
-    unchanged = (
-        F.col("cur_text").eqNullSafe(F.col("text"))
-        & F.col("cur_role").eqNullSafe(F.col("role"))
-        & F.col("cur_tool").eqNullSafe(F.col("tool"))
-        & F.col("cur_ts").eqNullSafe(F.col("ts"))
-    )
-    deletes_new = joined.where(
-        (F.col("op") == "D") & F.col("old_doc_id").isNotNull()
-    ).select(F.col("old_doc_id").alias("doc_id"))
-    upserts = joined.where(
-        (F.col("op") != "D") & (F.col("old_doc_id").isNull() | ~unchanged)
-    )
-    tombstoned_updates = upserts.where(F.col("old_doc_id").isNotNull()).select(
-        F.col("old_doc_id").alias("doc_id")
-    )
-    all_tombstones = deletes_new.union(tombstoned_updates).persist()
-    n_tombstones = all_tombstones.count()
-    _lap("join_and_tombstones")
-
-    # fresh doc ids above the current max — never reused. Batch-internal
-    # rank comes from a scalable two-level prefix sum (assign_doc_ids), so
-    # arbitrarily large backfill batches don't funnel through a
-    # single-partition window. The id high-water
-    # mark rides in meta.json (round 5) — the snapshot build and every
-    # commit maintain it, so no full docs-store scan prices the next id;
-    # the agg below is only the migration fallback for pre-round-5 metas.
-    from ..index.builder import assign_doc_ids
-
-    next_id = meta.get("next_doc_id")
-    if next_id is None:
-        max_doc = all_docs(spark, index_dir, meta).agg(F.max("doc_id")).first()[0]
-        next_id = int(max_doc) + 1 if max_doc is not None else 0
-    ups = upserts.select("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    n_new = ups.count()  # cached parent — also prices the rank path below
-    if 0 < n_new <= DRIVER_RANK_ROWS:
-        # typical CDC batch: rank the (conv_id, turn_idx) keys driver-side
-        # (one toPandas of two columns) and broadcast the id map back —
-        # the distributed two-level prefix sum costs ~3 s of job overhead
-        # for a 40k-row batch
-        kp = ups.select("conv_id", "turn_idx").toPandas()
-        kp = kp.sort_values(
-            ["conv_id", "turn_idx"], kind="stable"
-        ).reset_index(drop=True)
-        kp["doc_id"] = kp.index.to_numpy(dtype="int64") + int(next_id)
-        ids_df = spark.createDataFrame(kp)
-        with_ids = ups.join(F.broadcast(ids_df), ["conv_id", "turn_idx"])
-    else:
-        # backfill-scale batches: the same scalable two-level prefix sum
-        # the snapshot build uses — never a single-partition window
-        with_ids = assign_doc_ids(ups).withColumn(
-            "doc_id", (F.col("doc_id") + F.lit(next_id)).cast("long")
-        )
-    new_docs = (
-        with_ids
-        .withColumn(
-            "dl",
-            # coalesce: a NULL text is ZERO tokens, matching the snapshot
-            # writer (ADVICE r5 #5 — size(NULL) is NULL and would drift
-            # total_tokens/avgdl on a later tombstone of this row)
-            F.coalesce(
-                F.size(
-                    F.regexp_extract_all(
-                        F.lower(F.col("text")), F.lit(SPARK_TOKEN_RE), 0
-                    )
-                ),
-                F.lit(0),
-            ),
-        )
-        .select("doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts", "dl")
-        .persist()
-    )
-    _lap("new_doc_ids")
-
-    if n_tombstones == 0 and n_new == 0:
-        joined.unpersist()
-        all_tombstones.unpersist()
-        new_docs.unpersist()
-        return _noop("distributed", decline)
-
-    segment = int(meta.get("last_segment", 0)) + 1
-
-    # --- term/stat deltas (exact live maintenance) -----------------------
-    # the tombstoned rows' stored text already sits in the CACHED join
-    # (cur_* columns) — deriving removed stats from it kills two full
-    # docs-store scans per apply (round 5). dl is the STORED column
-    # itself (ADVICE r5 #5: recomputing via size(regexp_extract_all(...))
-    # disagrees with the writer on NULL text), so the stat deltas match
-    # the store by construction.
-    removed_rows = joined.where(
-        F.col("old_doc_id").isNotNull()
-        & ((F.col("op") == "D") | ~unchanged)
-    ).select(
-        F.col("old_doc_id").alias("doc_id"),
-        F.col("cur_text").alias("text"),
-        F.col("cur_dl").alias("dl"),
-    )
-    # one signed tokenize pass over removed ∪ added (a doc id is on exactly
-    # one side — tombstoned ids are never reused), one join against the old
-    # terms table: halves the delta-stat jobs (round 5)
-    signed = (
-        removed_rows.select("doc_id", "text", "dl")
-        .withColumn("sign", F.lit(-1))
-        .unionByName(
-            new_docs.select("doc_id", "text", "dl").withColumn("sign", F.lit(1))
-        )
-        .persist()
-    )
-    from ..query.algebra import term_freqs
-
-    delta_stats = (
-        term_freqs(signed, ["doc_id", "sign"])
-        .groupBy("term")
-        .agg(
-            F.sum("sign").alias("d_df"),
-            F.sum(F.col("sign") * F.col("tf")).alias("d_cf"),
-        )
-    )
-    _update_terms_spark(spark, paths, meta, segment, delta_stats)
-    _lap("term_deltas")
-
-    # --- stats (exact, one grouped agg over the signed union) --------------
-    st = _read_stats(paths, meta)
-    deltas = {
-        int(r.sign): r
-        for r in signed.groupBy("sign")
-        .agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("tok"),
-        )
-        .collect()
-    }
-    rm = deltas.get(-1)
-    ad = deltas.get(1)
-    n_docs_live = int(st.n_docs) - int(rm.n if rm else 0) + int(ad.n if ad else 0)
-    total_tokens = (
-        int(st.total_tokens)
-        - int(rm.tok if rm else 0)
-        + int(ad.tok if ad else 0)
-    )
-    avgdl = total_tokens / n_docs_live if n_docs_live else 0.0
-    write_stats_driver(paths.stats_v(segment), n_docs_live, avgdl, total_tokens)
-    _lap("stats")
-
-    # --- delta segment postings: SPIMI chunks + the zero-shuffle merge ----
-    _write_delta_chunks(new_docs, paths, meta, segment, n_new)
-    delta_terms = build_term_stats(
-        spark, paths.chunks, meta["n_buckets"],
-        glob=_seg_prefix(segment) + "part-*.parquet",
-    ) if n_new else None
-    _write_delta_postings(spark, paths, meta, segment, delta_terms, avgdl)
-    _lap("delta_postings")
-
-    # --- segment docs + tombstones (segment-owned dirs) --------------------
-    new_docs.write.mode("overwrite").parquet(paths.docs_seg(segment))
-    all_tombstones.write.mode("overwrite").parquet(paths.deletes_seg(segment))
-    _lap("segment_writes")
-
-    out = _commit_segment(
-        index_dir, paths, meta, segment, n_docs_live=n_docs_live,
-        avgdl=avgdl, next_id=next_id, n_new=n_new,
-        n_tombstones=n_tombstones, t0=t0, laps=laps, route="distributed",
-        decline=decline,
-    )
-    # a CDC session applies batches forever: release this batch's cached
-    # partitions so storage memory can't accumulate across applies
-    joined.unpersist()
-    all_tombstones.unpersist()
-    new_docs.unpersist()
-    signed.unpersist()
-    return out
 
 
 def vacuum(index_dir: str) -> "list[str]":
     """Remove artifacts no commit references: superseded terms_v/stats_v
-    versions and staging/orphan segment dirs from crashed applies (the
+    versions, and the orphan segment dirs and batch staging dir of crashed
+    applies (the
     Iceberg `expire_snapshots`/`remove_orphan_files` analog). Safe at any
     time — readers resolve only through meta.json, and live artifacts are
     exactly {terms_version} ∪ {committed segments}. Returns removed paths."""
@@ -919,6 +746,9 @@ def vacuum(index_dir: str) -> "list[str]":
             if name != meta.get("postings_dir", "postings"):
                 shutil.rmtree(full, ignore_errors=True)
                 removed.append(full)
+        elif full == paths.apply_src:
+            shutil.rmtree(full, ignore_errors=True)
+            removed.append(full)
         elif name in ("postings_segs", "docs_segs", "deletes_segs"):
             for seg in sorted(os.listdir(full)):
                 n = int(seg.replace("seg", ""))
@@ -927,9 +757,9 @@ def vacuum(index_dir: str) -> "list[str]":
                     shutil.rmtree(p, ignore_errors=True)
                     removed.append(p)
 
-    # orphan delta-segment CHUNK files (segNNN-part-*) from crashed applies:
-    # intermediate by design, referenced by nothing once meta.json resolves
-    # the commit, and actively dangerous for a retry with a different batch
+    # orphan delta-segment CHUNK files (segNNN-part-*): the apply writes no
+    # chunks now, but a crashed apply of an older version left such files,
+    # which no commit references
     import re
 
     chunks_dir = paths.chunks
@@ -1019,7 +849,6 @@ def _splice_live_sorted(
     import pyarrow.parquet as pq
 
     from ..index.builder import footer_conv_walk
-    from ..query.wand import _load_deletes
 
     paths = IndexPaths(index_dir)
     base_files = sorted(_glob.glob(os.path.join(paths.docs, "*.parquet")))

@@ -7,8 +7,9 @@ Spark-native equivalent is a streaming source feeding ``foreachBatch``,
 where each micro-batch applies the same idempotent I/U/D merge the batch
 path uses (streaming.incremental.apply_increments): a micro-batch whose
 text fits ``DRIVER_APPLY_BYTES`` is collected once as Arrow and applied
-in-process (two Spark jobs per batch), a bigger one takes the distributed
-apply, and each commit records the route it took:
+in-process (two Spark jobs per batch), a bigger one is staged once and
+applied in-process in key-ordered slices of at most that budget (three
+Spark jobs), and each commit records its route and slice count:
 
 - **source**: a file source (a directory new increment-parquet files land
   in — the sandbox stand-in for the Kafka topic) or a real

@@ -190,12 +190,14 @@ def test_random_corpora_all_engines_match_oracle(spark, tmp_path_factory, monkey
 
 
 def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
-    """Property test for the two apply routes: random I/U/D batches — an
+    """Property test for the one-collect and the sliced apply: random I/U/D
+    batches — an
     'İ' text on both the removed and the added side of every batch (it
     forces the tokenizer's regex fallback), CJK tokens, NULL texts, role-,
     tool- and ts-only changes, unchanged upserts and deletes of absent
-    keys — go to two copies of one index, one applied in-process and one
-    forced distributed (DRIVER_APPLY_BYTES = 0). Both must commit the
+    keys — go to two copies of one index, one applied after one collect and
+    one in slices of one or a few rows (DRIVER_APPLY_BYTES = 200; a slice
+    whose stored text passes it is halved). Both must commit the
     expected live rows and the same doc ids, dl, terms and stats; a
     re-apply is a no-op on both; and both searchers on both copies return
     the oracle's exact ranking over the live corpus. The second round
@@ -210,6 +212,7 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
     from sync2any_spark.index.builder import IndexPaths, read_index_meta
     from sync2any_spark.query.serving import LocalSearcher
 
+    SLICE_BYTES = 200
     vocab = ["ok", "w1", "w2", "data", "x9", "中", "文", "한", "İstanbul", "qq"]
     rng = np.random.default_rng(4321)
     ts2 = datetime.datetime(2026, 2, 2)
@@ -249,8 +252,8 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
             drv, n_partitions=4, n_buckets=4, n_salts=2, heavy_df_threshold=5,
             store_positions=positions,
         )
-        dist = drv + "_dist"
-        shutil.copytree(drv, dist)
+        sliced = drv + "_sliced"
+        shutil.copytree(drv, sliced)
         for batch_i in range(2):
             # İ on both sides: the stored text of ("conv00", 0) holds one
             batch = [("conv00", 0, "user", f"İİ w{batch_i} data", "", TS, "U")]
@@ -283,13 +286,14 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
             df = spark.createDataFrame(batch, SCHEMA + ", op string")
             s_drv = inc.apply_increments(spark, drv, df)
             with monkeypatch.context() as m:
-                m.setattr(inc, "DRIVER_APPLY_BYTES", 0)
-                s_dist = inc.apply_increments(spark, dist, df)
-            assert (s_drv["route"], s_dist["route"]) == ("driver", "distributed")
+                m.setattr(inc, "DRIVER_APPLY_BYTES", SLICE_BYTES)
+                s_sl = inc.apply_increments(spark, sliced, df)
+            assert (s_drv["route"], s_sl["route"]) == ("driver", "sliced")
+            assert s_drv["slices"] == 1 and s_sl["slices"] >= len(batch) // 4
             for key in ("segment", "new_docs", "tombstones"):
-                assert s_drv[key] == s_dist[key], (round_i, batch_i, key)
+                assert s_drv[key] == s_sl[key], (round_i, batch_i, key)
 
-            a, b = state(drv), state(dist)
+            a, b = state(drv), state(sliced)
             assert a[0].equals(b[0]), (round_i, batch_i)
             assert a[1:] == b[1:], (round_i, batch_i)
             got = {
@@ -301,14 +305,14 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
 
             again = inc.apply_increments(spark, drv, df)
             with monkeypatch.context() as m:
-                m.setattr(inc, "DRIVER_APPLY_BYTES", 0)
-                again_dist = inc.apply_increments(spark, dist, df)
-            for s in (again, again_dist):
+                m.setattr(inc, "DRIVER_APPLY_BYTES", SLICE_BYTES)
+                again_sl = inc.apply_increments(spark, sliced, df)
+            for s in (again, again_sl):
                 assert (s["segment"], s["new_docs"], s["tombstones"]) == (None, 0, 0)
-            assert state(drv)[1:] == a[1:] and state(dist)[1:] == b[1:]
+            assert state(drv)[1:] == a[1:] and state(sliced)[1:] == b[1:]
 
             oracle = BM25Oracle(list(zip(a[0]["doc_id"], a[0]["text"])))
-            for d in (drv, dist):
+            for d in (drv, sliced):
                 for searcher in (IndexSearcher(spark, d), LocalSearcher(d)):
                     for q in ["ok", "w1 data", "中 文", "i stanbul", "qq x9", "한"]:
                         got_q, want_q = searcher.search(q, 5), oracle.topk(q, 5)

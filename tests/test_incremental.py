@@ -4,6 +4,7 @@ FIXTURES.md F4): ES upsert-by-_id semantics, exactly reproduced."""
 from __future__ import annotations
 
 import datetime
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -214,90 +215,152 @@ def _copy_index(src, tmp_path_factory, name):
     return dst
 
 
-def _no_shuffle_merge(*args, **kwargs):
-    raise AssertionError("delta postings fell back to the shuffle merge")
+def _apply_counting_jobs(spark, idx, batch):
+    """(apply summary, Spark jobs the apply started), counted under a job
+    group set on the calling thread."""
+    sc = spark.sparkContext
+    group = f"apply-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "apply_increments under test")
+    try:
+        summary = apply_increments(spark, idx, batch)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return summary, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_driver_apply_merges_delta_without_shuffle(
-    spark, pristine, increments, tmp_path_factory, monkeypatch
-):
-    """The index is built with n_salts=4; a driver-path apply must write
-    its delta chunks in that layout, so the delta postings go through the
-    zero-shuffle merge and never reach the shuffle fallback."""
-    import sync2any_spark.index.builder as builder
-
-    idx = _copy_index(pristine, tmp_path_factory, "idx_zero_shuffle")
-    assert builder.read_index_meta(idx)["n_salts"] == PARAMS["n_salts"]
-    monkeypatch.setattr(builder, "_build_postings_direct_shuffle", _no_shuffle_merge)
-    summary = apply_increments(spark, idx, increments)
-    assert summary["new_docs"] > 0
-    assert builder._has_parquet(
-        builder.IndexPaths(idx).postings_seg(summary["segment"])
-    )
-
-
-def test_distributed_apply_equals_driver_apply(
-    spark, pristine, increments, tmp_path_factory, monkeypatch
-):
-    """The backfill-scale apply (forced with DRIVER_APPLY_BYTES = 0) commits
-    the same doc ids, terms and stats as the in-process apply of the same
-    batch, its delta merge is the zero-shuffle one, both routes and the
-    decline reason are recorded as metrics rows, and both searchers answer
-    it rank- and score-identically to the oracle."""
+def _apply_state(spark, idx):
+    """(doc-id map, terms_v rows, stats_v rows) of the committed index."""
     import pyarrow.dataset as pads
 
     import sync2any_spark.index.builder as builder
-    import sync2any_spark.streaming.incremental as inc_mod
+
+    meta = builder.read_index_meta(idx)
+    paths = builder.IndexPaths(idx)
+    ids = {
+        (r.conv_id, r.turn_idx): r.doc_id
+        for r in live_docs(spark, idx)
+        .select("conv_id", "turn_idx", "doc_id")
+        .collect()
+    }
+    tv = meta["terms_version"]
+    terms = (
+        pads.dataset(paths.terms_v(tv))
+        .to_table(columns=["term", "df", "cf"])
+        .sort_by("term")
+        .to_pylist()
+    )
+    stats = pads.dataset(paths.stats_v(tv)).to_table().to_pylist()
+    return ids, terms, stats
+
+
+def _check_oracle_identity(spark, idx, queries):
     from sync2any_spark.query.serving import LocalSearcher
 
-    drv = _copy_index(pristine, tmp_path_factory, "idx_apply_drv")
-    dist = _copy_index(pristine, tmp_path_factory, "idx_apply_dist")
-    monkeypatch.setattr(builder, "_build_postings_direct_shuffle", _no_shuffle_merge)
-    s_drv = apply_increments(spark, drv, increments)
-    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 0)
-    s_dist = apply_increments(spark, dist, increments)
-    assert (s_drv["route"], s_drv["decline"]) == ("driver", None)
-    assert s_drv["store_rows_scanned"] > 0
-    assert s_dist["route"] == "distributed"
-    assert s_dist["decline"].startswith("batch text ")
-    assert s_dist["decline"].endswith(" MB over 0 MB")
-    for key in ("segment", "new_docs", "tombstones"):
-        assert s_dist[key] == s_drv[key], key
-    for idx, s in ((drv, s_drv), (dist, s_dist)):
-        keys = set(_metric_keys(idx, "increment"))
-        assert f"route={s['route']}" in keys
-        assert {f"{lap}_s" for lap in s["stage_walls"]} <= keys
-    assert f"decline={s_dist['decline']}" in keys
-
-    def state(idx):
-        meta = builder.read_index_meta(idx)
-        paths = builder.IndexPaths(idx)
-        ids = {
-            (r.conv_id, r.turn_idx): r.doc_id
-            for r in live_docs(spark, idx)
-            .select("conv_id", "turn_idx", "doc_id")
-            .collect()
-        }
-        tv = meta["terms_version"]
-        terms = (
-            pads.dataset(paths.terms_v(tv))
-            .to_table(columns=["term", "df", "cf"])
-            .sort_by("term")
-            .to_pylist()
-        )
-        stats = pads.dataset(paths.stats_v(tv)).to_table().to_pylist()
-        return ids, terms, stats
-
-    assert state(dist) == state(drv)
-
-    oracle = _merged_oracle(spark, dist)
-    for searcher in (IndexSearcher(spark, dist), LocalSearcher(dist)):
-        for q in QUERIES:
+    oracle = _merged_oracle(spark, idx)
+    for searcher in (IndexSearcher(spark, idx), LocalSearcher(idx)):
+        for q in queries:
             got = searcher.search(q, 10)
             want = oracle.topk(q, 10)
             assert [g[0] for g in got] == [w[0] for w in want], q
             for (_, gs), (_, ws) in zip(got, want):
                 assert gs == pytest.approx(ws, rel=1e-9), q
+
+
+def test_sliced_apply_equals_one_collect_apply(
+    spark, pristine, increments, tmp_path_factory, monkeypatch
+):
+    """A batch over DRIVER_APPLY_BYTES (monkeypatched to a quarter of the
+    batch) is staged and applied in ≥ 3 key-ordered slices, in at most 3
+    Spark jobs, and commits the same doc ids, terms and stats as the one
+    collect of the same batch (2 Spark jobs). The route, decline reason
+    and slice count are metrics rows, the staging dir is gone after the
+    commit, and both searchers answer it rank- and score-identically to
+    the oracle."""
+    import os
+
+    import sync2any_spark.index.builder as builder
+    import sync2any_spark.streaming.incremental as inc_mod
+
+    one = _copy_index(pristine, tmp_path_factory, "idx_apply_one")
+    sliced = _copy_index(pristine, tmp_path_factory, "idx_apply_sliced")
+    s_one, jobs_one = _apply_counting_jobs(spark, one, increments)
+    assert (s_one["route"], s_one["decline"], s_one["slices"]) == ("driver", None, 1)
+    assert s_one["store_rows_scanned"] > 0
+    assert jobs_one == 2
+
+    batch_bytes = int(inc_mod._row_bytes(
+        increments.select(*inc_mod._BATCH_SCHEMA.names).toArrow()
+    ).sum())
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", batch_bytes // 4)
+    s_sl, jobs_sl = _apply_counting_jobs(spark, sliced, increments)
+    assert s_sl["route"] == "sliced"
+    assert s_sl["decline"].startswith(("batch text ", "batch total "))
+    assert s_sl["slices"] >= 3
+    assert jobs_sl <= 3
+    assert not os.path.exists(builder.IndexPaths(sliced).apply_src)
+    for key in ("segment", "new_docs", "tombstones"):
+        assert s_sl[key] == s_one[key], key
+    for idx, s in ((one, s_one), (sliced, s_sl)):
+        keys = set(_metric_keys(idx, "increment"))
+        assert f"route={s['route']}" in keys
+        assert {f"{lap}_s" for lap in s["stage_walls"]} <= keys
+        assert _metric_value(idx, "slices") == s["slices"]
+    assert "stage_batch" in s_sl["stage_walls"]
+    assert f"decline={s_sl['decline']}" in keys
+
+    assert _apply_state(spark, sliced) == _apply_state(spark, one)
+    _check_oracle_identity(spark, sliced, QUERIES)
+
+
+def test_stored_text_over_budget_splits_slices(
+    spark, pristine, tmp_path_factory, monkeypatch
+):
+    """A batch of short updates fits the budget, but the stored rows it
+    replaces are long: the probe of the one collected slice passes
+    DRIVER_APPLY_BYTES, so the slice is halved until each part's stored
+    text fits, and the commit equals an apply with a large budget."""
+    import sync2any_spark.streaming.incremental as inc_mod
+
+    schema = (
+        "conv_id string, turn_idx int, role string, text string, "
+        "tool string, ts timestamp, op string"
+    )
+    ts = datetime.datetime(2026, 6, 4)
+    # ~64 KB of distinct text per stored row
+    longs = spark.createDataFrame(
+        [
+            (f"conv_long{i:03d}", 0, "user",
+             f"longstored v{i} " + " ".join(f"w{i}x{j}" for j in range(9_000)),
+             "", ts, "I")
+            for i in range(12)
+        ],
+        schema,
+    )
+    updates = spark.createDataFrame(
+        [(f"conv_long{i:03d}", 0, "user", f"short update ok v{i}", "", ts, "U")
+         for i in range(12)]
+        + [("conv_long999", 0, "user", "short insert ok", "", ts, "I")],
+        schema,
+    )
+    small = _copy_index(pristine, tmp_path_factory, "idx_stored_small")
+    large = _copy_index(pristine, tmp_path_factory, "idx_stored_large")
+    for idx in (small, large):
+        assert apply_increments(spark, idx, longs)["route"] == "driver"
+    s_large = apply_increments(spark, large, updates)
+    assert (s_large["route"], s_large["slices"]) == ("driver", 1)
+
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 200 << 10)
+    s = apply_increments(spark, small, updates)
+    assert s["route"] == "sliced"
+    assert s["decline"] == "matched store text over budget"
+    assert s["slices"] > 3
+    assert "decline=matched store text over budget" in _metric_keys(
+        small, "increment"
+    )
+    for key in ("segment", "new_docs", "tombstones"):
+        assert s[key] == s_large[key], key
+    assert _apply_state(spark, small) == _apply_state(spark, large)
+    _check_oracle_identity(spark, small, ["ok", "short update", "longstored"])
 
 
 def test_compact_equals_fresh_build(spark, base, applied, tmp_path_factory):
@@ -400,19 +463,25 @@ def test_vacuum_removes_only_unreferenced(spark, transcripts_sf0001, increments,
 def test_crash_then_retry_with_different_batch(
     spark, transcripts_sf0001, tmp_path_factory, monkeypatch
 ):
-    """Round-2 ADVICE: a crashed apply leaves seg-prefixed chunk files
-    behind; retrying with a DIFFERENT batch must not mix the old batch's
-    chunks into the new segment (the resume manifests would otherwise mark
-    those partitions done). The retried index must equal a clean index that
-    only ever saw the second batch."""
-    import datetime
+    """Crash atomicity across slices. Batch A, applied in ≥ 3 slices,
+    crashes twice: once mid-slices (the staging dir and part files of
+    segment 1 are left, readers see the old snapshot, and ``vacuum``
+    removes both), once just before the meta.json commit (the staging dir
+    is already gone). A retry with a DIFFERENT batch B, applied in one
+    slice, must leave only B's part files in segment 1 and equal a clean
+    index that only ever saw B."""
+    import os
 
     import sync2any_spark.streaming.incremental as inc_mod
+    from sync2any_spark.index.builder import IndexPaths
 
     crashed = str(tmp_path_factory.mktemp("idx_crash_diff"))
     clean = str(tmp_path_factory.mktemp("idx_clean_diff"))
     build_index(spark, transcripts_sf0001, crashed, resume=False, **PARAMS)
     build_index(spark, transcripts_sf0001, clean, resume=False, **PARAMS)
+    paths = IndexPaths(crashed)
+    pre = _index_state(spark, crashed)
+    pre_top = IndexSearcher(spark, crashed).search("ok", 10)
 
     ts = datetime.datetime(2026, 8, 2)
     schema = (
@@ -420,7 +489,10 @@ def test_crash_then_retry_with_different_batch(
         "tool string, ts timestamp, op string"
     )
     batch_a = spark.createDataFrame(
-        [("conv_aa000001", 0, "user", "abandoned batch text alpha", "", ts, "I")],
+        [
+            (f"conv_aa{i:06d}", 0, "user", f"abandoned batch text alpha {i}", "", ts, "I")
+            for i in range(6)
+        ],
         schema,
     )
     batch_b = spark.createDataFrame(
@@ -428,17 +500,55 @@ def test_crash_then_retry_with_different_batch(
         schema,
     )
 
+    def seg_files(seg_dir):
+        return sorted(
+            os.path.basename(os.path.join(r, f))
+            for r, _, fs in os.walk(seg_dir) for f in fs if f.endswith(".parquet")
+        )
+
+    def crash(*a, **k):
+        raise RuntimeError("boom")
+
+    # one row per slice
+    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 64)
+    real_postings = inc_mod.write_postings_driver
+    calls = []
+
+    def postings_then_crash(*a, **k):
+        calls.append(1)
+        if len(calls) == 3:
+            crash()
+        return real_postings(*a, **k)
+
+    monkeypatch.setattr(inc_mod, "write_postings_driver", postings_then_crash)
+    with pytest.raises(RuntimeError):
+        apply_increments(spark, crashed, batch_a)
+    monkeypatch.setattr(inc_mod, "write_postings_driver", real_postings)
+    assert os.path.isdir(paths.apply_src)
+    assert seg_files(paths.docs_seg(1)) == ["part-00001.parquet", "part-00002.parquet"]
+    assert _index_state(spark, crashed) == pre
+    assert IndexSearcher(spark, crashed).search("ok", 10) == pre_top
+    removed = inc_mod.vacuum(crashed)
+    assert paths.apply_src in removed and paths.docs_seg(1) in removed
+    assert not os.path.exists(paths.apply_src)
+
     real = inc_mod._write_meta
-    monkeypatch.setattr(
-        inc_mod, "_write_meta",
-        lambda *a: (_ for _ in ()).throw(RuntimeError("boom")),
-    )
+    monkeypatch.setattr(inc_mod, "_write_meta", crash)
     with pytest.raises(RuntimeError):
         apply_increments(spark, crashed, batch_a)
     monkeypatch.setattr(inc_mod, "_write_meta", real)
+    assert not os.path.exists(paths.apply_src)
+    assert len(seg_files(paths.docs_seg(1))) == 6  # one part per slice
+    assert _index_state(spark, crashed) == pre
+    assert IndexSearcher(spark, crashed).search("alpha", 10) == []
 
-    apply_increments(spark, crashed, batch_b)  # retry with a DIFFERENT batch
+    monkeypatch.undo()
+    s = apply_increments(spark, crashed, batch_b)  # retry with a DIFFERENT batch
+    assert (s["route"], s["slices"], s["segment"]) == ("driver", 1, 1)
     apply_increments(spark, clean, batch_b)
+    assert seg_files(paths.docs_seg(1)) == ["part-00001.parquet"]
+    assert set(seg_files(paths.postings_seg(1))) == {"part-00001.parquet"}
+    assert seg_files(paths.deletes_seg(1)) == []
 
     assert _index_state(spark, crashed) == _index_state(spark, clean)
     # the abandoned batch's text must be unsearchable and its term absent
@@ -681,11 +791,20 @@ def _metric_keys(index_dir, stage):
     return list(m[m.stage == stage].key)
 
 
+def _metric_value(index_dir, key):
+    """The latest ``increment`` metrics row's value for ``key``."""
+    import pyarrow.dataset as pads
+
+    m = pads.dataset(index_dir + "/metrics").to_table().to_pandas()
+    m = m[(m.stage == "increment") & (m.key == key)].sort_values("ts")
+    return m.value.iloc[-1]
+
+
 def test_long_text_delta_declines_splice_by_bytes(
     spark, pristine, tmp_path_factory
 ):
     """A few rows of long text are few rows but many bytes: the batch
-    itself passes DRIVER_APPLY_BYTES and takes the distributed route, and
+    itself passes DRIVER_APPLY_BYTES and is applied in slices, and
     compact's delta pre-pass, which would hold that text on the driver,
     declines by bytes before reading it."""
     idx = _copy_index(pristine, tmp_path_factory, "idx_long_text")
@@ -701,7 +820,7 @@ def test_long_text_delta_declines_splice_by_bytes(
         "tool string, ts timestamp, op string",
     )
     s = apply_increments(spark, idx, batch)
-    assert s["new_docs"] == 3 and s["route"] == "distributed"
+    assert s["new_docs"] == 3 and s["route"] == "sliced"
     assert s["decline"] == "batch text 9.0 MB over 8 MB"
     assert "decline=batch text 9.0 MB over 8 MB" in _metric_keys(idx, "increment")
 
@@ -718,7 +837,7 @@ def test_null_text_delete_batch_declines_by_total_bytes(
 ):
     """A delete batch with NULL text has no text bytes but is still
     collected whole: the shape aggregate prices every collected column, so
-    past the budget it takes the distributed route, with its reason."""
+    past the budget it is applied in slices, with its reason."""
     import sync2any_spark.streaming.incremental as inc_mod
 
     idx = _copy_index(pristine, tmp_path_factory, "idx_null_delete")
@@ -733,7 +852,7 @@ def test_null_text_delete_batch_declines_by_total_bytes(
     assert n * 50 > budget
     monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", budget)
     s = apply_increments(spark, idx, deletes)
-    assert s["route"] == "distributed" and s["tombstones"] == n
+    assert s["route"] == "sliced" and s["tombstones"] == n
     assert s["decline"].startswith("batch total ")
     assert s["decline"].endswith(f" MB over {budget / 2**20:g} MB")
     assert f"decline={s['decline']}" in _metric_keys(idx, "increment")
