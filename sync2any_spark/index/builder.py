@@ -80,8 +80,8 @@ MERGE_SUBSPLIT = 8
 # work lists are uniform, so the coarser tail stays balanced. A PURE
 # function of the work-list size — never of the executor count — so the
 # same input yields the identical job at every parallelism level (the
-# N-vs-4N methodology's invariant). Env-overridable.
-TASK_PACK = int(os.environ.get("SPARK_GRAFT_TASK_PACK", "3"))
+# N-vs-4N methodology's invariant).
+TASK_PACK = 3
 
 
 # the fused pass's duplicate-key error prefix; the driver re-raises a
@@ -91,6 +91,36 @@ _DUP_KEY = "duplicate (conv_id, turn_idx) key"
 
 def _packed_partitions(n_units: int) -> int:
     return max(1, -(-n_units // TASK_PACK))
+
+
+def run_tasks(spark: SparkSession, work: list, kern) -> list:
+    """Run ``kern`` over ``work`` as ONE Spark job of plain Python tasks
+    (TASK_PACK units each) and collect what it yields, in work order.
+
+    ``kern`` takes an iterator of work tuples and yields small plain
+    values (manifest rows, counts); the tasks read and write their data
+    themselves. A work list pushed through ``createDataFrame`` and an
+    Arrow UDF instead runs every task through two Python workers from two
+    pools (the pickled-row reader and the Arrow-UDF runner), and the first
+    such job of an app also pays the JVM's Arrow/SQL warm-up: on a 4-core
+    VM a 16-task job took 3.5 s cold / 0.55-0.72 s warm that way, and
+    2.0 s / 0.29-0.42 s here."""
+    return (
+        spark.sparkContext.parallelize(work, _packed_partitions(len(work)))
+        .mapPartitions(kern)
+        .collect()
+    )
+
+
+def commit_meta(index_dir: str, meta: dict) -> None:
+    """The commit point of every build, apply, compact and force-merge:
+    write ``meta.json`` to a temp name, then ``os.replace`` it, so a crash
+    mid-write leaves the previous meta.json (or none) — never a truncated
+    one."""
+    tmp = os.path.join(index_dir, "meta.json.tmp")
+    with open(tmp, "w") as f:
+        json.dump(meta, f, indent=1)
+    os.replace(tmp, os.path.join(index_dir, "meta.json"))
 
 # a merge group whose heavy terms sum past this many postings fans out into
 # doc-disjoint salt tasks (≤ n_salts) — ~2M postings ≈ a comfortable
@@ -131,18 +161,6 @@ CHUNK_SCHEMA = T.StructType(
         T.StructField("tfs", T.BinaryType()),
         T.StructField("dls", T.BinaryType()),
         T.StructField("pos", T.BinaryType()),
-    ]
-)
-
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("rows", T.LongType()),
-        T.StructField("n_terms", T.LongType()),
-        T.StructField("sum_dl", T.LongType()),
-        T.StructField("wall_ms", T.LongType()),
-        T.StructField("attempt", T.IntegerType()),
     ]
 )
 
@@ -437,10 +455,10 @@ def _write_chunk(
     n_rows_docs: int, n_terms: int, t0: float, *, n_buckets: int,
     n_salts: int, sum_dl: int = 0, wfs=None,
     span_keys: "tuple | None" = None,
-) -> pd.DataFrame:
+) -> dict:
     """Write one SPIMI chunk parquet, then its manifest (data first,
     manifest LAST — the per-partition commit order the fswrite protocol
-    relies on); returns the manifest row. ``wfs`` is the filesystem
+    relies on); returns the manifest dict. ``wfs`` is the filesystem
     adapter (None = local POSIX).
 
     Every term row carries its (bucket, sub, salt) merge key and the file
@@ -500,13 +518,11 @@ def _write_chunk(
         "sum_dl": int(sum_dl),
         "wall_ms": int((time.time() - t0) * 1000),
         "attempt": 1,
+        # layout keys: the merge planner verifies them
+        "n_buckets": int(n_buckets),
+        "n_subs": MERGE_SUBSPLIT,
+        "n_salts": int(n_salts),
     }
-    ret = pd.DataFrame([manifest])  # MANIFEST_SCHEMA columns only
-    # layout keys ride in the json sidecar (the merge planner verifies
-    # them) but NOT in the applyInPandas return row
-    manifest["n_buckets"] = int(n_buckets)
-    manifest["n_subs"] = MERGE_SUBSPLIT
-    manifest["n_salts"] = int(n_salts)
     if span_keys is not None:
         # fused pass: the sorted span's boundary PKs ride in the json
         # sidecar so the driver can verify global key disjointness after
@@ -518,7 +534,7 @@ def _write_chunk(
         manifest["last_turn"] = int(lt)
     mpath = os.path.join(chunks_dir, f"part-{part_id:05d}.manifest.json")
     wfs.write_json(manifest, mpath)
-    return ret
+    return manifest
 
 
 _EMPTY_CHUNK_ROWS = {
@@ -928,7 +944,7 @@ def build_segments(
     resume: bool = True,
     store_positions: bool = False,
     filesystem=None,
-) -> DataFrame:
+) -> int:
     """Fused segment build — ONE corpus pass writes docs store + SPIMI chunk.
 
     The Lucene-segment shape: every task owns one source span and flushes a
@@ -936,6 +952,8 @@ def build_segments(
     written by Arrow C++, which handles string-heavy parquet several times
     faster than the JVM writer) and the postings chunk — then commits via
     its manifest (written last, so a crash leaves only complete segments).
+    Runs the pass as one ``run_tasks`` job and returns the number of spans
+    built (0 when a resumed pass finds every span committed).
 
     The source is sorted by ``(conv_id, turn_idx)``, so ``doc_id =
     span_bases[i] + local (conv, turn) rank`` (``sorted_span_bases``): no
@@ -970,11 +988,11 @@ def build_segments(
         if i not in done
     ]
     if not todo:
-        return spark.createDataFrame([], MANIFEST_SCHEMA)
+        return 0
     wfs.makedirs(paths.docs)
     chunks_dir, docs_dir = paths.chunks, paths.docs
 
-    def kern(batches):
+    def kern(spans_it):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
@@ -982,66 +1000,56 @@ def build_segments(
         # all-cores Arrow pool thrash (measured 8× kernel-time inflation)
         pa.set_cpu_count(1)
         pa.set_io_thread_count(2)
-        for pdf in batches:
-            for r in pdf.itertuples(index=False):
-                t0 = time.time()
-                part_id = int(r.part_id)
-                pf = pq.ParquetFile(r.path)
-                tbl = pf.read_row_groups(list(range(int(r.lo), int(r.hi))))
-                conv = tbl.column("conv_id").to_pandas().to_numpy()
-                turn = tbl.column("turn_idx").to_numpy().astype(np.int64)
-                codes = pd.factorize(conv, sort=True)[0]
-                order = np.lexsort((turn, codes))
-                c_s, t_s = codes[order], turn[order]
-                dup = np.flatnonzero((c_s[1:] == c_s[:-1]) & (t_s[1:] == t_s[:-1]))
-                if dup.size:
-                    i = order[dup[0]]
-                    raise ValueError(
-                        f"{_DUP_KEY} ({str(conv[i])!r}, {int(turn[i])})"
-                    )
-                doc_ids = int(r.base) + np.arange(len(order), dtype=np.int64)
-                span_keys = None
-                if len(order):
-                    span_keys = (
-                        str(conv[order[0]]), int(t_s[0]),
-                        str(conv[order[-1]]), int(t_s[-1]),
-                    )
-                tbl = tbl.take(order)
-                rows, n_terms, dls = _spimi_rows_for_texts(
-                    part_id, doc_ids, tbl.column("text"),
-                    store_positions=store_positions,
+        for part_id, path, lo, hi, base in spans_it:
+            t0 = time.time()
+            tbl = pq.ParquetFile(path).read_row_groups(list(range(lo, hi)))
+            conv = tbl.column("conv_id").to_pandas().to_numpy()
+            turn = tbl.column("turn_idx").to_numpy().astype(np.int64)
+            codes = pd.factorize(conv, sort=True)[0]
+            order = np.lexsort((turn, codes))
+            c_s, t_s = codes[order], turn[order]
+            dup = np.flatnonzero((c_s[1:] == c_s[:-1]) & (t_s[1:] == t_s[:-1]))
+            if dup.size:
+                i = order[dup[0]]
+                raise ValueError(f"{_DUP_KEY} ({str(conv[i])!r}, {int(turn[i])})")
+            doc_ids = base + np.arange(len(order), dtype=np.int64)
+            span_keys = None
+            if len(order):
+                span_keys = (
+                    str(conv[order[0]]), int(t_s[0]),
+                    str(conv[order[-1]]), int(t_s[-1]),
                 )
-                cols = {
-                    "doc_id": pa.array(doc_ids, pa.int64()),
-                    "conv_id": tbl.column("conv_id"),
-                    "turn_idx": tbl.column("turn_idx"),
-                    "role": tbl.column("role"),
-                    "text": tbl.column("text"),
-                    "tool": tbl.column("tool"),
-                    "ts": tbl.column("ts"),
-                    "dl": pa.array(dls.astype(np.int32), pa.int32()),
-                }
-                # schema evolution: appended source columns ride along
-                # unchanged (reference contract: new columns appended only)
-                for name in tbl.schema.names:
-                    if name not in cols:
-                        cols[name] = tbl.column(name)
-                docs_tbl = pa.table(cols)
-                dpath = os.path.join(docs_dir, f"part-{part_id:05d}.parquet")
-                wfs.write_table(docs_tbl, dpath, compression="snappy")
-                # chunk then manifest LAST — the docs file above is only
-                # trusted once this manifest lands (fswrite commit order)
-                yield _write_chunk(
-                    chunks_dir, part_id, rows, len(doc_ids), n_terms,
-                    t0, sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
-                    n_salts=n_salts, span_keys=span_keys,
-                )
+            tbl = tbl.take(order)
+            rows, n_terms, dls = _spimi_rows_for_texts(
+                part_id, doc_ids, tbl.column("text"),
+                store_positions=store_positions,
+            )
+            cols = {
+                "doc_id": pa.array(doc_ids, pa.int64()),
+                "conv_id": tbl.column("conv_id"),
+                "turn_idx": tbl.column("turn_idx"),
+                "role": tbl.column("role"),
+                "text": tbl.column("text"),
+                "tool": tbl.column("tool"),
+                "ts": tbl.column("ts"),
+                "dl": pa.array(dls.astype(np.int32), pa.int32()),
+            }
+            # schema evolution: appended source columns ride along
+            # unchanged (reference contract: new columns appended only)
+            for name in tbl.schema.names:
+                if name not in cols:
+                    cols[name] = tbl.column(name)
+            dpath = os.path.join(docs_dir, f"part-{part_id:05d}.parquet")
+            wfs.write_table(pa.table(cols), dpath, compression="snappy")
+            # chunk then manifest LAST — the docs file above is only
+            # trusted once this manifest lands (fswrite commit order)
+            yield _write_chunk(
+                chunks_dir, part_id, rows, len(doc_ids), n_terms,
+                t0, sum_dl=int(dls.sum()), wfs=wfs, n_buckets=n_buckets,
+                n_salts=n_salts, span_keys=span_keys,
+            )
 
-    rdd = spark.sparkContext.parallelize(todo, _packed_partitions(len(todo)))
-    flist = spark.createDataFrame(
-        rdd, "part_id int, path string, lo int, hi int, base long"
-    )
-    return flist.mapInPandas(kern, schema=MANIFEST_SCHEMA)
+    return len(run_tasks(spark, todo, kern))
 
 
 def _read_chunks(spark: SparkSession, chunks_dir: str) -> DataFrame:
@@ -1669,7 +1677,7 @@ def _build_postings_direct_shuffle(
 def build_postings_direct(
     spark: SparkSession,
     chunks_dir: str,
-    terms: DataFrame,
+    terms: "pd.DataFrame",
     avgdl: float,
     n_buckets: int,
     out_dir: str,
@@ -1704,6 +1712,11 @@ def build_postings_direct(
     its rows split across salts evenly BY CONSTRUCTION, and each doc is
     in exactly one sub-stream — query-time BM25 sums are unaffected.
 
+    ``terms`` is the driver's terms frame (at least ``term`` and ``df``);
+    only its heavy rows are used, at most 100,000 of them. The merge runs
+    as one ``run_tasks`` job whose tasks yield ``(bucket, sub, salt,
+    n_blocks, wall_ms)``.
+
     Chunk files WITHOUT the sorted layout (older indexes, resumed builds)
     fall back to the legacy shuffle merge. Returns total blocks."""
     import fnmatch
@@ -1714,6 +1727,7 @@ def build_postings_direct(
     from .bucketing import bucket_of, sub_of
     from .fswrite import LOCAL
 
+    heavy = terms.loc[terms["df"] > heavy_df_threshold, ["term", "df"]]
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
     wfs = filesystem or LOCAL
@@ -1736,7 +1750,9 @@ def build_postings_direct(
     )
     if not layout_ok:
         return _build_postings_direct_shuffle(
-            spark, chunks_dir, terms, avgdl, n_buckets, out_dir,
+            spark, chunks_dir,
+            spark.createDataFrame(heavy, schema="term string, df long"),
+            avgdl, n_buckets, out_dir,
             n_salts=n_salts, heavy_df_threshold=heavy_df_threshold,
             store_positions=store_positions, filesystem=filesystem,
         )
@@ -1747,16 +1763,12 @@ def build_postings_direct(
     # is constant per chunk FILE (part_id % n_salts), so a split task
     # opens ONLY its salts' files — no read amplification, and ~256 + a
     # few tasks total instead of 256 × n_salts.
-    heavy_rows = (
-        terms.where(F.col("df") > F.lit(heavy_df_threshold))
-        .select("term", "df").limit(100_000).collect()
-    )
     heavy_by_group: "dict[tuple[int, int], list[str]]" = {}
     heavy_df_sum: "dict[tuple[int, int], int]" = {}
-    for r in heavy_rows:
-        key = (bucket_of(r.term, n_buckets), sub_of(r.term, MERGE_SUBSPLIT))
-        heavy_by_group.setdefault(key, []).append(r.term)
-        heavy_df_sum[key] = heavy_df_sum.get(key, 0) + int(r.df)
+    for term, df in heavy.head(100_000).itertuples(index=False):
+        key = (bucket_of(term, n_buckets), sub_of(term, MERGE_SUBSPLIT))
+        heavy_by_group.setdefault(key, []).append(term)
+        heavy_df_sum[key] = heavy_df_sum.get(key, 0) + int(df)
 
     tasks = []
     split_at = split_postings or SPLIT_POSTINGS
@@ -1813,108 +1825,79 @@ def build_postings_direct(
             )
         return n_blocks
 
-    def merge_tasks(batches):
+    def merge_tasks(tasks_it):
         import pyarrow as pa
 
         pa.set_cpu_count(1)
         pa.set_io_thread_count(2)
-        for pdf_t in batches:
-            for row in pdf_t.itertuples(index=False):
-                t0 = time.time()
-                b, s, salt, k = (
-                    int(row.bucket), int(row.sub), int(row.salt), int(row.k)
+        for b, s, salt, k in tasks_it:
+            t0 = time.time()
+            readers = _chunk_readers(files, merge_id, fs=_fs)
+            if s < 0:
+                # sub-range task: one span read, subs sliced in memory;
+                # split (b, sub) groups are owned by their salt tasks.
+                # Encoding: s = -1 - sub_lo, salt = sub_hi.
+                sub_lo, sub_hi = -1 - s, salt
+                btbl = _read_merge_group(
+                    readers, cols, b, sub_lo=sub_lo, sub_hi=sub_hi
                 )
-                readers = _chunk_readers(files, merge_id, fs=_fs)
-                if s < 0:
-                    # sub-range task: one span read, subs sliced in
-                    # memory; split (b, sub) groups are owned by their
-                    # salt tasks. Encoding: s = -1 - sub_lo, salt = sub_hi.
-                    sub_lo, sub_hi = -1 - s, salt
-                    btbl = _read_merge_group(
-                        readers, cols, b, sub_lo=sub_lo, sub_hi=sub_hi
-                    )
-                    sub_arr = (
-                        btbl.column("sub").to_numpy()
-                        if sub_hi > sub_lo
-                        else np.full(btbl.num_rows, sub_lo, dtype=np.int32)
-                    )
-                    for sub in range(sub_lo, sub_hi + 1):
-                        if (b, sub) in split_k:
-                            continue
-                        stbl = btbl.filter(sub_arr == sub)
-                        if "sub" in stbl.column_names:
-                            stbl = stbl.select(cols)
-                        out = _merge_group_arrow(
-                            stbl, avgdl, b, 0, store_positions
-                        )
-                        nb = _write_block_file(out, b, sub, 0)
-                        yield pd.DataFrame(
-                            [{
-                                "bucket": b, "sub": sub, "salt": 0,
-                                "n_blocks": nb,
-                                "wall_ms": int((time.time() - t0) * 1000),
-                            }]
-                        )
-                    continue
-                hv = heavy_by_group[(b, s)]
-                own = [c for c in range(n_salts) if c % k == salt]
-                if salt == 0:
-                    # all light rows + heavy rows of the owned salts
-                    tbl = _read_merge_group(
-                        readers, cols, b, sub_lo=s, sub_hi=s,
-                        own_salts=own, heavy=hv,
-                    )
-                else:
-                    # heavy-only task: only the owned salts' files
-                    sub_readers = [
-                        r for r, fs_ in zip(readers, file_salts)
-                        if fs_ in own
-                    ]
-                    tbl = _read_merge_group(
-                        sub_readers, cols, b, sub_lo=s, sub_hi=s,
-                        own_salts=own, heavy=hv, heavy_only=True,
-                    )
-                out = _merge_group_arrow(tbl, avgdl, b, salt, store_positions)
-                nb = _write_block_file(out, b, s, salt)
-                yield pd.DataFrame(
-                    [{
-                        "bucket": b, "sub": s, "salt": salt,
-                        "n_blocks": nb,
-                        "wall_ms": int((time.time() - t0) * 1000),
-                    }]
+                sub_arr = (
+                    btbl.column("sub").to_numpy()
+                    if sub_hi > sub_lo
+                    else np.full(btbl.num_rows, sub_lo, dtype=np.int32)
                 )
+                for sub in range(sub_lo, sub_hi + 1):
+                    if (b, sub) in split_k:
+                        continue
+                    stbl = btbl.filter(sub_arr == sub)
+                    if "sub" in stbl.column_names:
+                        stbl = stbl.select(cols)
+                    out = _merge_group_arrow(stbl, avgdl, b, 0, store_positions)
+                    nb = _write_block_file(out, b, sub, 0)
+                    yield b, sub, 0, nb, int((time.time() - t0) * 1000)
+                continue
+            hv = heavy_by_group[(b, s)]
+            own = [c for c in range(n_salts) if c % k == salt]
+            if salt == 0:
+                # all light rows + heavy rows of the owned salts
+                tbl = _read_merge_group(
+                    readers, cols, b, sub_lo=s, sub_hi=s,
+                    own_salts=own, heavy=hv,
+                )
+            else:
+                # heavy-only task: only the owned salts' files
+                sub_readers = [
+                    r for r, fs_ in zip(readers, file_salts) if fs_ in own
+                ]
+                tbl = _read_merge_group(
+                    sub_readers, cols, b, sub_lo=s, sub_hi=s,
+                    own_salts=own, heavy=hv, heavy_only=True,
+                )
+            out = _merge_group_arrow(tbl, avgdl, b, salt, store_positions)
+            nb = _write_block_file(out, b, s, salt)
+            yield b, s, salt, nb, int((time.time() - t0) * 1000)
 
     # parallelize — deliberately NOT a groupBy shuffle: AQE would coalesce
     # the tiny task table into ONE partition and serialize every merge
     # group (measured 240 s vs 4 s). TASK_PACK groups per partition
     # amortize the per-task floor; contiguous grouping keeps bucket
     # locality for the worker-global reader cache.
-    rdd = spark.sparkContext.parallelize(tasks, _packed_partitions(len(tasks)))
-    task_df = spark.createDataFrame(rdd, "bucket int, sub int, salt int, k int")
-    manifest = task_df.mapInPandas(
-        merge_tasks,
-        schema="bucket int, sub int, salt int, n_blocks long, wall_ms long",
-    )
-    # collect the tiny per-task manifest (one row per merge task) and keep
-    # the task walls next to the layout: diagnosing a merge-stage scaling
-    # residue needs the task histogram (straggler vs substrate), not just
-    # the stage wall. Underscore prefix → invisible to pyarrow dataset
-    # discovery of the hive layout.
-    pdf_m = manifest.toPandas()
+    got = run_tasks(spark, tasks, merge_tasks)
+    # keep the task walls next to the layout: diagnosing a merge-stage
+    # scaling residue needs the task histogram (straggler vs substrate),
+    # not just the stage wall. Underscore prefix → invisible to pyarrow
+    # dataset discovery of the hive layout.
     try:
         wfs.write_json(
             {
-                "task_wall_ms": [int(x) for x in pdf_m["wall_ms"]],
-                "task_keys": [
-                    [int(r.bucket), int(r.sub), int(r.salt)]
-                    for r in pdf_m.itertuples(index=False)
-                ],
+                "task_wall_ms": [g[4] for g in got],
+                "task_keys": [list(g[:3]) for g in got],
             },
             os.path.join(out_dir, "_task_walls.json"),
         )
     except OSError:
         pass  # diagnostics only — never fail the build for them
-    return int(pdf_m["n_blocks"].sum()) if len(pdf_m) else 0
+    return sum(g[3] for g in got)
 
 
 def force_merge_postings(
@@ -1961,53 +1944,41 @@ def force_merge_postings(
         if name.startswith("bucket=")
     )
 
-    def merge_buckets(batches):
+    def merge_buckets(buckets_it):
         import pyarrow as pa
         import pyarrow.dataset as pds
 
         pa.set_cpu_count(1)
-        for pdf in batches:
-            for b in pdf["bucket"]:
-                b = int(b)
-                tbl = pds.dataset(os.path.join(cur, f"bucket={b}")).to_table()
-                tbl = tbl.sort_by([
-                    ("term", "ascending"), ("salt", "ascending"),
-                    ("min_doc", "ascending"),
-                ])
-                d = os.path.join(out_dir, f"bucket={b}")
-                wfs.makedirs(d)
-                wfs.write_table(
-                    tbl,
-                    os.path.join(d, "part-00000.parquet"),
-                    compression=POSTINGS_COMPRESSION,
-                    row_group_size=row_group_rows,
-                )
-                yield pd.DataFrame([{"bucket": b, "n_blocks": tbl.num_rows}])
+        for b in buckets_it:
+            tbl = pds.dataset(os.path.join(cur, f"bucket={b}")).to_table()
+            tbl = tbl.sort_by([
+                ("term", "ascending"), ("salt", "ascending"),
+                ("min_doc", "ascending"),
+            ])
+            d = os.path.join(out_dir, f"bucket={b}")
+            wfs.makedirs(d)
+            wfs.write_table(
+                tbl,
+                os.path.join(d, "part-00000.parquet"),
+                compression=POSTINGS_COMPRESSION,
+                row_group_size=row_group_rows,
+            )
+            yield tbl.num_rows
 
-    # parallelize, not a groupBy: AQE coalesces a shuffle of this tiny
+    # run_tasks, not a groupBy: AQE coalesces a shuffle of this tiny
     # bucket table into ONE partition and merges every bucket in one task
     # (the build_postings_direct trap)
-    rdd = spark.sparkContext.parallelize(
-        [(b,) for b in buckets], _packed_partitions(len(buckets))
-    )
-    man = (
-        spark.createDataFrame(rdd, "bucket int")
-        .mapInPandas(merge_buckets, schema="bucket int, n_blocks long")
-        .toPandas()
-    )
+    n_blocks = sum(run_tasks(spark, buckets, merge_buckets))
     # commit: atomic meta swap flips every reader to the merged layout
     meta = read_index_meta(index_dir)
     old_rel = meta.get("postings_dir", "postings")
     meta["postings_dir"] = out_rel
     meta["postings_fm_version"] = version
-    tmp = os.path.join(index_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(index_dir, "meta.json"))
+    commit_meta(index_dir, meta)
     shutil.rmtree(os.path.join(index_dir, old_rel), ignore_errors=True)
     return {
         "buckets": len(buckets),
-        "blocks": int(man["n_blocks"].sum()),
+        "blocks": n_blocks,
         "out_dir": out_rel,
         "wall_s": time.time() - t0,
     }
@@ -2114,13 +2085,12 @@ def build_index(
 
     def fused_pass(spans, bases, resume):
         t = time.time()
-        manifest = build_segments(
-            spark, index_dir, spans, bases, resume=resume, n_buckets=n_buckets,
-            n_salts=n_salts, store_positions=store_positions,
-            filesystem=filesystem,
-        )
         try:
-            built = manifest.count()  # action: the fused corpus pass
+            built = build_segments(
+                spark, index_dir, spans, bases, resume=resume,
+                n_buckets=n_buckets, n_salts=n_salts,
+                store_positions=store_positions, filesystem=filesystem,
+            )
         except Exception as e:  # a task's duplicate-key raise, re-raised
             dup = re.search(re.escape(_DUP_KEY) + ".*", str(e))
             if dup is None:
@@ -2181,19 +2151,21 @@ def build_index(
         # terms stage: driver pyarrow aggregation under the manifest-derived
         # row budget (no Spark job — kills a fixed ~2 s floor that dragged
         # the N→4N efficiency), distributed groupBy above it. The merge only
-        # needs the HEAVY terms (df > threshold) as a broadcast side — a few
-        # hundred rows either way.
+        # needs the HEAVY terms (df > threshold) — a few hundred rows either
+        # way, handed over as a driver frame.
         terms_pdf = build_term_stats_driver(paths.chunks, n_buckets, wfs=filesystem)
         if terms_pdf is not None:
             write_terms_driver(terms_pdf, paths.terms)
-            heavy_pdf = terms_pdf[terms_pdf["df"] > heavy_df_threshold]
-            terms = spark.createDataFrame(
-                heavy_pdf, schema="term string, df long, cf long, bucket int"
-            )
         else:
-            terms = build_term_stats(spark, paths.chunks, n_buckets)
-            terms.write.mode("overwrite").parquet(paths.terms)
-            terms = spark.read.parquet(paths.terms)
+            build_term_stats(spark, paths.chunks, n_buckets).write.mode(
+                "overwrite"
+            ).parquet(paths.terms)
+            terms_pdf = (
+                spark.read.parquet(paths.terms)
+                .where(F.col("df") > heavy_df_threshold)
+                .select("term", "df")
+                .toPandas()
+            )
         metrics.append(("terms", "wall_s", time.time() - t3))
 
         t4 = time.time()
@@ -2204,7 +2176,7 @@ def build_index(
         n_blocks = build_postings_direct(
             spark,
             paths.chunks,
-            terms,
+            terms_pdf,
             avgdl,
             n_buckets,
             paths.postings,
@@ -2234,8 +2206,7 @@ def build_index(
         "store_positions": bool(store_positions),
         "format_version": 2,
     }
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump(meta, f, indent=1)
+    commit_meta(index_dir, meta)
     shutil.rmtree(paths.sorted_src, ignore_errors=True)
 
     wall = time.time() - t_start

@@ -48,7 +48,6 @@ removes what a crash left, the staging dir included.
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
@@ -66,9 +65,11 @@ from ..index.builder import (
     _spimi_rows_for_texts,
     append_metrics_driver,
     build_index,
+    commit_meta,
     deletes_sources,
     docs_sources,
     read_index_meta,
+    run_tasks,
     write_postings_driver,
     write_stats_driver,
 )
@@ -86,13 +87,6 @@ DRIVER_APPLY_BYTES = 8 << 20
 # per batch row, the collect's fixed-width Arrow bytes beyond the string
 # values: five 4-byte string offsets, int32 turn_idx, int64 ts
 _ARROW_ROW_BYTES = 5 * 4 + 4 + 8
-
-
-def _write_meta(index_dir: str, meta: dict) -> None:
-    tmp = os.path.join(index_dir, "meta.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, os.path.join(index_dir, "meta.json"))
 
 
 def all_docs(spark: SparkSession, index_dir: str, meta: "dict | None" = None) -> DataFrame:
@@ -324,7 +318,7 @@ def _commit_segment(
     meta["n_docs"] = n_docs_live
     meta["avgdl"] = avgdl
     meta["next_doc_id"] = int(next_id) + int(n_new)
-    _write_meta(index_dir, meta)
+    commit_meta(index_dir, meta)
 
     wall = time.time() - t0
     laps = {lap: round(v, 3) for lap, v in laps.items()}
@@ -829,9 +823,10 @@ def _splice_live_sorted(
     docs store is already (conv_id, turn_idx)-sorted on disk (doc ids were
     assigned in key order), deletes are an id set, and delta segments are
     small — so compaction is an LSM merge of sorted runs, not a re-sort.
-    One task per base file reads its span, drops tombstoned rows, splices
-    in the (driver-pre-sorted) delta rows of its key interval, and writes
-    the merged span; lexical output order preserves the global key order,
+    One ``run_tasks`` job over the base files: each file is read, its
+    tombstoned rows dropped, the (driver-pre-sorted) delta rows of its key
+    interval spliced in, and the merged span written; the tasks yield row
+    counts. Lexical output order preserves the global key order,
     so the build's fused pass consumes it as-is (and its boundary
     verifier still audits the result downstream).
 
@@ -943,100 +938,77 @@ def _splice_live_sorted(
         return False, repr(e)
 
     os.makedirs(tmp, exist_ok=True)
-    from ..index.builder import _packed_partitions
-
-    work = [
-        (
-            i,
-            kept_files[i],
-            firsts[i + 1][0] if i + 1 < len(firsts) else None,
-            firsts[i + 1][1] if i + 1 < len(firsts) else None,
-        )
-        for i in range(len(kept_files))
-    ]
     dead_bc = spark.sparkContext.broadcast(dead)
     out_cols = list(_CORPUS_COLS)
 
-    def kern(pdfs):
+    def kern(spans_it):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for pdf in pdfs:
-            for span, path, hi_conv, hi_turn in zip(
-                pdf["span"], pdf["path"], pdf["hi_conv"], pdf["hi_turn"]
-            ):
-                span = int(span)
-                base = pq.read_table(path, columns=["doc_id"] + out_cols)
-                dd = dead_bc.value
-                if dd.size:
-                    ids = base["doc_id"].to_numpy()
-                    base = base.filter(pa.array(~np.isin(ids, dd)))
-                base = base.select(out_cols)
-                parts = [base]
-                if delta_path:
-                    # this span owns delta keys in [first_key(span),
-                    # first_key(span+1)); span 0 also takes anything before
-                    # the base corpus, the last span anything after it
-                    lo = None if span == 0 else firsts[span]
-                    hi = (
-                        None
-                        if hi_conv is None or (isinstance(hi_conv, float))
-                        else (str(hi_conv), int(hi_turn))
-                    )
-                    dpf = pq.ParquetFile(delta_path)
-                    md = dpf.metadata
-                    cidx = {
-                        md.row_group(0).column(j).path_in_schema: j
-                        for j in range(md.num_columns)
-                    }["conv_id"]
-                    rgs = []
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(cidx).statistics
-                        if st is None or not st.has_min_max:
-                            rgs.append(g)
-                            continue
-                        if lo is not None and st.max < lo[0]:
-                            continue
-                        if hi is not None and st.min > hi[0]:
-                            continue
+        for span, path in spans_it:
+            base = pq.read_table(path, columns=["doc_id"] + out_cols)
+            dd = dead_bc.value
+            if dd.size:
+                ids = base["doc_id"].to_numpy()
+                base = base.filter(pa.array(~np.isin(ids, dd)))
+            base = base.select(out_cols)
+            parts = [base]
+            if delta_path:
+                # this span owns delta keys in [first_key(span),
+                # first_key(span+1)); span 0 also takes anything before the
+                # base corpus, the last span anything after it
+                lo = None if span == 0 else firsts[span]
+                hi = firsts[span + 1] if span + 1 < len(firsts) else None
+                dpf = pq.ParquetFile(delta_path)
+                md = dpf.metadata
+                cidx = {
+                    md.row_group(0).column(j).path_in_schema: j
+                    for j in range(md.num_columns)
+                }["conv_id"]
+                rgs = []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(cidx).statistics
+                    if st is None or not st.has_min_max:
                         rgs.append(g)
-                    if rgs:
-                        dl = dpf.read_row_groups(rgs, columns=out_cols)
-                        cv = np.asarray(dl.column("conv_id").to_pylist(), dtype=object)
-                        tn = dl.column("turn_idx").to_numpy()
-                        mask = np.ones(len(cv), dtype=bool)
-                        if lo is not None:
-                            mask &= (cv > lo[0]) | ((cv == lo[0]) & (tn >= lo[1]))
-                        if hi is not None:
-                            mask &= (cv < hi[0]) | ((cv == hi[0]) & (tn < hi[1]))
-                        if mask.any():
-                            parts.append(dl.filter(pa.array(mask)).select(out_cols))
-                tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
-                if len(parts) > 1:
-                    # keys are unique across live rows (updates tombstone
-                    # the old version), so sort order is total
-                    tbl = tbl.sort_by(
-                        [("conv_id", "ascending"), ("turn_idx", "ascending")]
-                    )
-                if tbl.num_rows:
-                    out_f = os.path.join(tmp, f"part-{span:05d}.parquet")
-                    tmp_f = out_f + f".tmp-{os.getpid()}"
-                    pq.write_table(
-                        tbl, tmp_f, compression="snappy", row_group_size=2048
-                    )
-                    os.replace(tmp_f, out_f)
-                yield pd.DataFrame({"span": [span], "rows": [tbl.num_rows]})
+                        continue
+                    if lo is not None and st.max < lo[0]:
+                        continue
+                    if hi is not None and st.min > hi[0]:
+                        continue
+                    rgs.append(g)
+                if rgs:
+                    dl = dpf.read_row_groups(rgs, columns=out_cols)
+                    cv = np.asarray(dl.column("conv_id").to_pylist(), dtype=object)
+                    tn = dl.column("turn_idx").to_numpy()
+                    mask = np.ones(len(cv), dtype=bool)
+                    if lo is not None:
+                        mask &= (cv > lo[0]) | ((cv == lo[0]) & (tn >= lo[1]))
+                    if hi is not None:
+                        mask &= (cv < hi[0]) | ((cv == hi[0]) & (tn < hi[1]))
+                    if mask.any():
+                        parts.append(dl.filter(pa.array(mask)).select(out_cols))
+            tbl = parts[0] if len(parts) == 1 else pa.concat_tables(parts)
+            if len(parts) > 1:
+                # keys are unique across live rows (updates tombstone the
+                # old version), so sort order is total
+                tbl = tbl.sort_by(
+                    [("conv_id", "ascending"), ("turn_idx", "ascending")]
+                )
+            if tbl.num_rows:
+                out_f = os.path.join(tmp, f"part-{span:05d}.parquet")
+                tmp_f = out_f + f".tmp-{os.getpid()}"
+                pq.write_table(
+                    tbl, tmp_f, compression="snappy", row_group_size=2048
+                )
+                os.replace(tmp_f, out_f)
+            yield tbl.num_rows
 
-    sc = spark.sparkContext
-    rdd = sc.parallelize(work, _packed_partitions(len(work)))
-    flist = spark.createDataFrame(
-        rdd, "span long, path string, hi_conv string, hi_turn int"
-    )
     import shutil
 
+    sc = spark.sparkContext
     sc.setJobDescription("compact: live-splice temp corpus (zero-shuffle)")
     try:
-        got = flist.mapInPandas(kern, "span long, rows long").toPandas()
+        written = sum(run_tasks(spark, list(enumerate(kept_files)), kern))
     except Exception as e:
         if os.environ.get("SPARK_GRAFT_DEBUG"):
             raise
@@ -1053,7 +1025,6 @@ def _splice_live_sorted(
             os.remove(stale)
         except OSError:
             pass
-    written = int(got["rows"].sum())
     if written != expected_live:
         # row conservation failed — wipe and let the re-sort path recompute
         shutil.rmtree(tmp, ignore_errors=True)

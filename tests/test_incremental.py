@@ -161,15 +161,15 @@ def test_crash_mid_apply_then_retry(
     snapshot = IndexSearcher(spark, crashed)
     pre_top = snapshot.search("ok", 10)
 
-    real_write = inc_mod._write_meta
+    real_write = inc_mod.commit_meta
 
     def boom(index_dir, meta):
         raise RuntimeError("simulated crash before commit")
 
-    monkeypatch.setattr(inc_mod, "_write_meta", boom)
+    monkeypatch.setattr(inc_mod, "commit_meta", boom)
     with pytest.raises(RuntimeError):
         apply_increments(spark, crashed, increments)
-    monkeypatch.setattr(inc_mod, "_write_meta", real_write)
+    monkeypatch.setattr(inc_mod, "commit_meta", real_write)
 
     # pre-commit: readers see exactly the previous commit
     assert _index_state(spark, crashed) == pre
@@ -215,17 +215,17 @@ def _copy_index(src, tmp_path_factory, name):
     return dst
 
 
-def _apply_counting_jobs(spark, idx, batch):
-    """(apply summary, Spark jobs the apply started), counted under a job
+def _counting_jobs(spark, fn, *args):
+    """(``fn(spark, *args)``, Spark jobs it started), counted under a job
     group set on the calling thread."""
     sc = spark.sparkContext
-    group = f"apply-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "apply_increments under test")
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"{fn.__name__} under test")
     try:
-        summary = apply_increments(spark, idx, batch)
+        out = fn(spark, *args)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    return summary, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _apply_state(spark, idx):
@@ -283,7 +283,7 @@ def test_sliced_apply_equals_one_collect_apply(
 
     one = _copy_index(pristine, tmp_path_factory, "idx_apply_one")
     sliced = _copy_index(pristine, tmp_path_factory, "idx_apply_sliced")
-    s_one, jobs_one = _apply_counting_jobs(spark, one, increments)
+    s_one, jobs_one = _counting_jobs(spark, apply_increments, one, increments)
     assert (s_one["route"], s_one["decline"], s_one["slices"]) == ("driver", None, 1)
     assert s_one["store_rows_scanned"] > 0
     assert jobs_one == 2
@@ -292,7 +292,7 @@ def test_sliced_apply_equals_one_collect_apply(
         increments.select(*inc_mod._BATCH_SCHEMA.names).toArrow()
     ).sum())
     monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", batch_bytes // 4)
-    s_sl, jobs_sl = _apply_counting_jobs(spark, sliced, increments)
+    s_sl, jobs_sl = _counting_jobs(spark, apply_increments, sliced, increments)
     assert s_sl["route"] == "sliced"
     assert s_sl["decline"].startswith(("batch text ", "batch total "))
     assert s_sl["slices"] >= 3
@@ -365,7 +365,10 @@ def test_stored_text_over_budget_splits_slices(
 
 def test_compact_equals_fresh_build(spark, base, applied, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx_compacted"))
-    compact(spark, base, out)
+    res, jobs = _counting_jobs(spark, compact, base, out)
+    # the splice, the spliced corpus's parquet schema read, the fused pass
+    # and the postings merge: one job each
+    assert res["live_spliced"] and jobs == 4
     oracle = _merged_oracle(spark, base)  # doc ids re-densified — compare ranks via keys
     live = live_docs(spark, base).select("doc_id", "conv_id", "turn_idx").toPandas()
     key_of = {r.doc_id: (r.conv_id, r.turn_idx) for r in live.itertuples(index=False)}
@@ -435,12 +438,12 @@ def test_vacuum_removes_only_unreferenced(spark, transcripts_sf0001, increments,
     build_index(spark, transcripts_sf0001, idx, resume=False, **PARAMS)
 
     # crash one apply before commit → orphan seg-1 artifacts
-    real = inc_mod._write_meta
-    monkeypatch.setattr(inc_mod, "_write_meta",
+    real = inc_mod.commit_meta
+    monkeypatch.setattr(inc_mod, "commit_meta",
                         lambda *a: (_ for _ in ()).throw(RuntimeError("boom")))
     with pytest.raises(RuntimeError):
         apply_increments(spark, idx, increments)
-    monkeypatch.setattr(inc_mod, "_write_meta", real)
+    monkeypatch.setattr(inc_mod, "commit_meta", real)
     apply_increments(spark, idx, increments)  # commit seg 1 (overwrites orphans)
 
     import datetime
@@ -532,11 +535,11 @@ def test_crash_then_retry_with_different_batch(
     assert paths.apply_src in removed and paths.docs_seg(1) in removed
     assert not os.path.exists(paths.apply_src)
 
-    real = inc_mod._write_meta
-    monkeypatch.setattr(inc_mod, "_write_meta", crash)
+    real = inc_mod.commit_meta
+    monkeypatch.setattr(inc_mod, "commit_meta", crash)
     with pytest.raises(RuntimeError):
         apply_increments(spark, crashed, batch_a)
-    monkeypatch.setattr(inc_mod, "_write_meta", real)
+    monkeypatch.setattr(inc_mod, "commit_meta", real)
     assert not os.path.exists(paths.apply_src)
     assert len(seg_files(paths.docs_seg(1))) == 6  # one part per slice
     assert _index_state(spark, crashed) == pre

@@ -918,3 +918,68 @@ def test_build_wall_covers_every_stage(spark, tmp_path_factory, monkeypatch):
     build_wall = float(walls[walls.stage == "build"].value.iloc[0])
     assert build_wall == pytest.approx(res["wall_s"])
     assert build_wall >= float(stages.value.sum())
+
+
+def test_build_starts_two_spark_jobs(spark, tmp_path_factory):
+    """A build over a sorted ``source_path`` starts exactly two Spark jobs,
+    the fused pass and the postings merge: both run their work lists as
+    plain Python tasks, whose results come back with the job's one
+    ``collect`` (a ``count()`` of a DataFrame manifest was two jobs under
+    AQE)."""
+    import uuid
+
+    from sync2any_spark.generator import ensure_transcripts
+
+    src = ensure_transcripts("sf0.001")
+    transcripts = spark.read.parquet(src)  # its schema read is a job too
+    out = str(tmp_path_factory.mktemp("idx_jobs"))
+    sc = spark.sparkContext
+    group = f"build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "build_index under test")
+    try:
+        res = build_index(
+            spark, transcripts, out, n_partitions=2, n_buckets=4,
+            resume=False, source_path=src, span_mb=4,
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert res["resort_reason"] is None
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_meta_commit_survives_a_torn_write(spark, tmp_path_factory, monkeypatch):
+    """``json.dump`` failing partway through meta.json: a build leaves no
+    meta.json (no truncated file a reader would choke on), and a failed
+    force-merge leaves the previous meta.json whole."""
+    import json
+    import os
+
+    from sync2any_spark.generator import ensure_transcripts
+    from sync2any_spark.index.builder import force_merge_postings, read_index_meta
+
+    real_dump = json.dump
+
+    def torn_dump(obj, f, *a, **kw):
+        if "meta.json" not in os.path.basename(getattr(f, "name", "")):
+            return real_dump(obj, f, *a, **kw)
+        f.write(json.dumps(obj)[:10])
+        raise OSError("no space left mid-write")
+
+    src = ensure_transcripts("sf0.001")
+    d = str(tmp_path_factory.mktemp("idx_torn"))
+    params = dict(n_partitions=2, n_buckets=4, resume=False, source_path=src,
+                  span_mb=4)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="mid-write"):
+            build_index(spark, spark.read.parquet(src), d, **params)
+    assert not os.path.exists(os.path.join(d, "meta.json"))
+
+    build_index(spark, spark.read.parquet(src), d, **params)
+    before = read_index_meta(d)
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="mid-write"):
+            force_merge_postings(spark, d)
+    assert read_index_meta(d) == before
+    assert IndexSearcher(spark, d).search("ok", 5)

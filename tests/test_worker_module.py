@@ -75,3 +75,12 @@ def test_spark_tasks_run_the_worker_module(spark):
 
     got = spark.range(0, 2, numPartitions=2).mapInPandas(probe, "module string")
     assert set(got.toPandas()["module"]) == {"pyspark_graft_worker"}
+
+    # the engine's work-list kernels run as plain RDD tasks (run_tasks)
+    def rdd_probe(_):
+        import zipimport
+
+        yield zipimport.zipimporter.invalidate_caches.__module__
+
+    got = spark.sparkContext.parallelize(range(2), 2).mapPartitions(rdd_probe)
+    assert set(got.collect()) == {"pyspark_graft_worker"}

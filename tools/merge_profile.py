@@ -38,15 +38,11 @@ def main():
     st = ds.dataset(paths.stats).to_table().to_pandas().iloc[0]
     avgdl = float(st.avgdl)
     terms_pdf = build_term_stats_driver(paths.chunks, n_buckets)
-    terms = spark.createDataFrame(
-        terms_pdf[terms_pdf["df"] > heavy],
-        schema="term string, df long, cf long, bucket int",
-    )
     out_dir = f"/dev/shm/merge_prof_c{cpus}"
     for rnd in range(2):
         t0 = time.time()
         nb = build_postings_direct(
-            spark, paths.chunks, terms, avgdl, n_buckets, out_dir,
+            spark, paths.chunks, terms_pdf, avgdl, n_buckets, out_dir,
             n_salts=n_salts, heavy_df_threshold=heavy,
         )
         wall = time.time() - t0
