@@ -35,10 +35,9 @@ def cmd_build(args) -> int:
     from .index.builder import build_index
 
     spark = _spark(args.cpus)
-    transcripts = spark.read.parquet(args.input)
     summary = build_index(
         spark,
-        transcripts,
+        None,
         args.index,
         n_partitions=args.partitions,
         n_buckets=args.buckets,

@@ -2028,7 +2028,7 @@ def _range_sort(transcripts: DataFrame, out: str, n_partitions: int) -> None:
 
 def build_index(
     spark: SparkSession,
-    transcripts: DataFrame,
+    transcripts: "DataFrame | None",
     index_dir: str,
     n_partitions: int = 32,
     n_buckets: int = 16,
@@ -2054,7 +2054,10 @@ def build_index(
     ``max(n_partitions // 2, min(cores, n_partitions))`` spans and its
     footers prove conv order (``sorted_span_bases``). Otherwise
     ``transcripts`` is range-sorted once into ``<index_dir>/_sorted_src``
-    (``n_partitions`` files) and the same pass runs over that copy. The
+    (``n_partitions`` files) and the same pass runs over that copy.
+    ``transcripts`` may be None when ``source_path`` is given: only the
+    re-sort reads it, as ``spark.read.parquet(source_path)``, so a source
+    used as-is starts no schema-read job. The
     summary's ``resort_reason`` (also a ``("resort", reason, 1.0)`` metrics
     row) says why: ``"no source_path"``, ``"too few spans"``, ``"footer
     conv order"``, or ``"span key ranges overlap"`` — the as-is pass ran
@@ -2078,6 +2081,8 @@ def build_index(
     Returns a summary dict with stage timings (also appended to the metrics
     table — the analog of the reference's tpq/lag stats, A24).
     """
+    if transcripts is None and not source_path:
+        raise ValueError("build_index needs transcripts or a source_path")
     t_start = time.time()  # build.wall_s covers the whole call
     paths = IndexPaths(index_dir)
     metrics: list[tuple[str, str, float]] = []
@@ -2127,6 +2132,8 @@ def build_index(
             t1 = time.time()
             src = paths.sorted_src
             if not (resume and os.path.exists(os.path.join(src, "_SUCCESS"))):
+                if transcripts is None:
+                    transcripts = spark.read.parquet(source_path)
                 _range_sort(transcripts, src, n_partitions)
             metrics.append(("resort", "wall_s", time.time() - t1))
             metrics.append(("resort", reason, 1.0))

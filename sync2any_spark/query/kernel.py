@@ -1,8 +1,8 @@
 """BM25 top-k over Arrow block tables — the one scoring kernel.
 
 Every scorer hands this module the query's live terms as (idf weight,
-Arrow block table) pairs: the driver route (``IndexSearcher.search``, the
-blocks its term directories fetched, split by term), the serving tier
+Arrow block table) pairs: the driver route (``IndexSearcher.search``, each
+term's runs sliced out of its cached row groups), the serving tier
 (``LocalSearcher``, slices of its pinned table) and the distributed
 route's ``mapInArrow`` task. A block table carries the varbyte columns
 ``doc_ids``/``tfs``/``dls`` plus ``n_docs``, and for the pruned leg the
@@ -139,8 +139,8 @@ def score_pool():
 
 def split_terms(tbl, terms) -> dict:
     """{term: its rows of ``tbl``} for each of ``terms``; ``tbl`` holds rows
-    of ``terms`` only (every fetch filters by term), so one term's rows are
-    the whole table."""
+    of ``terms`` only (the distributed scan filters by term), so one term's
+    rows are the whole table."""
     import pyarrow.compute as pc
 
     if len(terms) == 1:

@@ -286,11 +286,9 @@ def phrase_topk_positional(
     ):
         top = phrase_topk_positional_distributed(searcher, phrase, k).collect()
         return [(int(r.doc_id), float(r.score)) for r in top]
-    # driver leg: direct pyarrow fetch of the pos-bearing pruned blocks —
-    # no Spark job; the budget above bounds the fetch
-    from .kernel import split_terms
-
-    tables = split_terms(searcher._pruned_blocks_arrow(uniq, with_pos=True), uniq)
+    # driver leg: each term's pos-bearing blocks from the searcher's
+    # row-group cache — no Spark job; the budget above bounds the fetch
+    tables = searcher._term_tables(uniq, with_pos=True)
     if any(g.num_rows == 0 for g in tables.values()):
         return []  # some phrase term absent entirely
     return _phrase_from_blocks(

@@ -5,11 +5,13 @@ ES picks between query phases:
 
 - ``IndexSearcher.search`` — low-latency path. The query's term list is tiny:
   its terms' buckets select the ``bucket=K`` dirs, and a per-(postings root,
-  bucket) term directory held by the searcher names the files and row groups
-  that hold the terms, so only those are read (no footer parse per query).
-  The fetched block table, split by term, is scored on the driver by the
-  one BM25 kernel (``kernel.topk``). This is the path a search tier would
-  serve QPS from.
+  bucket) term directory held by the searcher names the row runs each term
+  occupies in which files and row groups. Those row groups come from the
+  searcher's byte-bounded cache of decoded row groups (a miss reads the
+  row group whole, with its cached footer), and each term's runs are
+  zero-copy slices of them — a repeated term costs no parquet decode. The
+  per-term block tables are scored on the driver by the one BM25 kernel
+  (``kernel.topk``). This is the path a search tier would serve QPS from.
 - ``search_distributed`` — scale path for huge candidate sets: the Spark
   ``bucket IN (…) AND term IN (…)`` pruned scan feeds ``mapInArrow``
   (the kernel's per-doc partial sums of each Arrow batch) →
@@ -22,7 +24,8 @@ formula, float64, ties by doc_id ascending.
 
 from __future__ import annotations
 
-import os
+import threading
+from collections import OrderedDict
 from functools import cached_property
 
 import numpy as np
@@ -55,8 +58,12 @@ def _load_deletes(dirs: "list[str]") -> np.ndarray:
 # docs — the driver path is only valid for selective terms). The number is
 # postings: 10^7 postings ≈ ~25 MB of compressed blocks — a bounded,
 # sub-second pyarrow fetch; anything larger belongs on the cluster.
-ROUTE_BUDGET = int(os.environ.get("SPARK_GRAFT_ROUTE_BUDGET", 10_000_000))
+ROUTE_BUDGET = 10_000_000
 
+# bytes (``Table.nbytes``) of decoded postings row groups one searcher keeps
+# for the driver route; a row group larger than this is used but not kept
+# (the sf0.01×2 perfbench index decodes to ~7 MB whole)
+FETCH_CACHE_BYTES = 256 << 20
 
 
 def _data_files(fs, path: str) -> "list[str]":
@@ -75,19 +82,23 @@ def _data_files(fs, path: str) -> "list[str]":
 
 
 class _TermDirectory:
-    """Which files and row groups of one committed (postings root, bucket)
-    dir hold which terms — the per-segment terms index a Lucene reader
-    keeps in memory. Built once: each file's footer is parsed and its
-    ``term`` column read; what stays is the parsed ``FileMetaData`` per file
-    and the sorted distinct (term, file, row group) triples. A fetch
-    binary-searches its terms here and reads only the row groups that hold
-    them, so per-query work does not grow with the bucket's file count.
-    File names carry no meaning: the two postings writers hash ``sub``
-    differently (md5 vs xxhash64), so only the contents say where a term
-    lives."""
+    """Which row runs of which files and row groups of one committed
+    (postings root, bucket) dir hold which terms — the per-segment terms
+    index a Lucene reader keeps in memory. Built once: each file's footer
+    is parsed and its ``term`` column read; what stays is the parsed
+    ``FileMetaData`` per file and, sorted by term, one (term, file, row
+    group, first row, rows) entry per run of equal adjacent terms within a
+    row group. Every postings writer sorts by term, so a term usually has
+    one run per row group; an unsorted row group just yields several. A
+    fetch binary-searches its terms here and slices those runs out of the
+    row groups, so per-query work does not grow with the bucket's file
+    count. File names carry no meaning: the two postings writers hash
+    ``sub`` differently (md5 vs xxhash64), so only the contents say where a
+    term lives."""
 
     def __init__(self, fs, path: str) -> None:
         import pyarrow as pa
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
         self.fs = fs
@@ -99,51 +110,96 @@ class _TermDirectory:
                 pf = pq.ParquetFile(src)
                 terms = pf.read(columns=["term"]).column("term")
             md = pf.metadata
-            rows = [md.row_group(i).num_rows for i in range(md.num_row_groups)]
             self.metas.append(md)
+            n = len(terms)
+            if n == 0:
+                continue
+            rows = np.array([md.row_group(i).num_rows for i in range(md.num_row_groups)])
+            rg = np.repeat(np.arange(rows.size, dtype=np.int32), rows)
+            # a run starts at row 0, at a term change and at a row-group start
+            new = np.ones(n, dtype=bool)
+            new[1:] = pc.not_equal(terms[1:], terms[:-1]).to_numpy() | (rg[1:] != rg[:-1])
+            starts = np.flatnonzero(new)
+            first = starts - np.repeat(np.cumsum(rows) - rows, rows)[starts]
             parts.append(
                 pa.table(
                     {
-                        "term": terms,
-                        "file": np.full(len(terms), fid, dtype=np.int32),
-                        "rg": np.repeat(np.arange(len(rows), dtype=np.int32), rows),
+                        "term": terms.take(starts),
+                        "file": np.full(starts.size, fid, dtype=np.int32),
+                        "rg": rg[starts],
+                        "first": first.astype(np.int64),
+                        "rows": np.diff(np.append(starts, n)),
                     }
                 )
             )
         self.terms = np.array([], dtype=object)
         self.file = self.rg = np.array([], dtype=np.int32)
+        self.first = self.rows = np.array([], dtype=np.int64)
         if parts:
-            tbl = (
-                pa.concat_tables(parts, promote_options="permissive")
-                .group_by(["term", "file", "rg"])
-                .aggregate([])
-                .sort_by("term")
+            tbl = pa.concat_tables(parts, promote_options="permissive").sort_by(
+                [(c, "ascending") for c in ("term", "file", "rg", "first")]
             )
             self.terms = tbl.column("term").to_numpy(zero_copy_only=False)
-            self.file = tbl.column("file").to_numpy()
-            self.rg = tbl.column("rg").to_numpy()
+            self.file, self.rg = tbl.column("file").to_numpy(), tbl.column("rg").to_numpy()
+            self.first, self.rows = tbl.column("first").to_numpy(), tbl.column("rows").to_numpy()
+
+    def runs(self, terms: np.ndarray) -> "dict[int, dict[int, list]]":
+        """{file index: {row group: [(term, first row, rows)]}} of every run
+        holding one of ``terms`` (sorted)."""
+        lo = np.searchsorted(self.terms, terms, side="left")
+        hi = np.searchsorted(self.terms, terms, side="right")
+        out: "dict[int, dict[int, list]]" = {}
+        for a, b in zip(lo, hi):
+            for i in range(a, b):
+                out.setdefault(int(self.file[i]), {}).setdefault(int(self.rg[i]), []).append(
+                    (self.terms[i], int(self.first[i]), int(self.rows[i]))
+                )
+        return out
 
     def lookup(self, terms: np.ndarray) -> "list[tuple[int, list[int]]]":
         """[(file index, sorted row groups)] holding any of ``terms``."""
-        lo = np.searchsorted(self.terms, terms, side="left")
-        hi = np.searchsorted(self.terms, terms, side="right")
-        by_file: "dict[int, set]" = {}
-        for a, b in zip(lo, hi):
-            for f, g in zip(self.file[a:b], self.rg[a:b]):
-                by_file.setdefault(int(f), set()).add(int(g))
-        return [(f, sorted(g)) for f, g in sorted(by_file.items())]
+        return [(f, sorted(g)) for f, g in sorted(self.runs(terms).items())]
 
-    def read(self, fid: int, row_groups: "list[int]", cols: "list[str]", keep):
-        """The ``keep`` terms' rows of ``row_groups`` of one file, read with
-        its cached footer."""
-        import pyarrow.compute as pc
+    def read(self, fid: int, row_groups: "list[int]", cols: "list[str]"):
+        """``row_groups`` of one file, each read whole as its own table
+        (its buffers are its own, so evicting it frees them), with the
+        file's cached footer."""
         import pyarrow.parquet as pq
 
         with self.fs.open_input_file(self.files[fid]) as src:
-            tbl = pq.ParquetFile(src, metadata=self.metas[fid]).read_row_groups(
-                row_groups, columns=cols
-            )
-        return tbl.filter(pc.is_in(tbl.column("term"), value_set=keep))
+            pf = pq.ParquetFile(src, metadata=self.metas[fid])
+            return [pf.read_row_groups([g], columns=cols) for g in row_groups]
+
+
+class _RowGroupCache:
+    """Decoded postings row groups, least recently used first out, bounded
+    by ``FETCH_CACHE_BYTES`` of ``Table.nbytes``. The lock covers only the
+    dict operations: two threads missing on one row group both read it,
+    and either table may stay."""
+
+    def __init__(self) -> None:
+        self._tables: "OrderedDict[tuple, tuple]" = OrderedDict()
+        self._lock = threading.Lock()
+        self.nbytes = 0
+
+    def get(self, key: tuple):
+        with self._lock:
+            hit = self._tables.get(key)
+            if hit is None:
+                return None
+            self._tables.move_to_end(key)
+            return hit[0]
+
+    def put(self, key: tuple, tbl) -> None:
+        size = tbl.nbytes
+        if size > FETCH_CACHE_BYTES:
+            return
+        with self._lock:
+            old = self._tables.pop(key, None)
+            self.nbytes += size - (old[1] if old is not None else 0)
+            self._tables[key] = (tbl, size)
+            while self.nbytes > FETCH_CACHE_BYTES:
+                self.nbytes -= self._tables.popitem(last=False)[1][1]
 
 
 class IndexSearcher:
@@ -167,10 +223,15 @@ class IndexSearcher:
     committed postings roots are resolved once at open — the searcher is a
     snapshot of that commit. The first query that touches a (root, bucket)
     builds its ``_TermDirectory`` (one footer parse and one ``term``-column
-    read per file); every fetch after that reads only the files and row
-    groups that hold the query's terms, with their cached footers. The
-    Spark relations (``_postings_full``, ``_docs``) are built on first use
-    by the distributed route, the distributed phrase legs and ``fetch``.
+    read per file). Every fetch after that touches only the row groups that
+    hold the query's terms: each comes from the searcher's row-group cache
+    (at most ``FETCH_CACHE_BYTES``), or on a miss is read whole with its
+    file's cached footer and kept. The cache is per searcher because a
+    searcher is a snapshot: segment dirs can be rewritten under the same
+    names after a crashed apply, so a cache keyed by path across searchers
+    could serve stale blocks. The Spark relations (``_postings_full``,
+    ``_docs``) are built on first use by the distributed route, the
+    distributed phrase legs and ``fetch``.
     """
 
     def __init__(
@@ -215,6 +276,8 @@ class IndexSearcher:
         self._roots = [fs_and_path(d) for d in self._pdirs]
         # lazy (root index, bucket) → _TermDirectory
         self._dirs: "dict[tuple[int, int], _TermDirectory]" = {}
+        # (root index, bucket, file index, row group, columns) → decoded table
+        self._cache = _RowGroupCache()
         # tombstones (Lucene live-docs analog): a SORTED numpy doc-id array
         # loaded via pyarrow (no Spark job, no Python set) — 8 bytes per
         # deleted doc, sharded alongside the index at serving scale;
@@ -296,42 +359,62 @@ class IndexSearcher:
             d = self._dirs[key] = _TermDirectory(fs, f"{path}/bucket={bucket}")
         return d
 
+    def _directories(self, qterms: "list[str]"):
+        """(root index, bucket, directory) of every committed root of the
+        terms' buckets."""
+        from ..index.bucketing import bucket_of
+
+        buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
+        for r in range(len(self._roots)):
+            for b in buckets:
+                yield r, b, self._directory(r, b)
+
     def _fetch_plan(
         self, qterms: "list[str]"
     ) -> "list[tuple[_TermDirectory, int, list[int]]]":
         """[(directory, file index, row groups)] that hold the query's
         terms, over every committed root of the terms' buckets."""
-        from ..index.bucketing import bucket_of
-
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
         keys = np.array(sorted(qterms), dtype=object)
-        plan = []
-        for r in range(len(self._roots)):
-            for b in buckets:
-                d = self._directory(r, b)
-                plan += [(d, f, rgs) for f, rgs in d.lookup(keys)]
-        return plan
+        return [
+            (d, f, rgs) for _, _, d in self._directories(qterms) for f, rgs in d.lookup(keys)
+        ]
 
-    def _pruned_blocks_arrow(self, qterms: "list[str]", with_pos: bool = False):
-        """Pruned blocks fetched with a DIRECT pyarrow read — no Spark job,
-        no JVM→Python serialization, and (returned as an Arrow table) no
-        Python ``bytes`` materialization either: the scoring path decodes
-        straight off the Arrow binary buffers. The term directories
-        (``_fetch_plan``) name the files and row groups that hold the
-        query's terms; only those are read, with their cached footers, on
-        the calling thread. Works against any pyarrow filesystem (local,
-        S3, GCS). Bounded by the route budget: above it the query never
-        takes this path."""
+    def _term_tables(self, qterms: "list[str]", with_pos: bool = False) -> dict:
+        """{term: its block rows} for each of ``qterms`` — a direct pyarrow
+        fetch, no Spark job, no JVM→Python serialization and no Python
+        ``bytes``: the scoring path decodes straight off the Arrow binary
+        buffers. The term directories name each term's row runs; their row
+        groups come from the row-group cache, or are read whole on a miss
+        and kept, and each run is a zero-copy slice. The phrase legs'
+        ``with_pos`` reads are cached under their own column set. Works
+        against any pyarrow filesystem (local, S3, GCS). Bounded by the
+        route budget: above it the query never takes this path."""
         import pyarrow as pa
 
         cols = kernel.BLOCK_COLS + (["pos"] if with_pos else [])
-        keep = pa.array(qterms, pa.string())
-        parts = [d.read(f, rgs, cols, keep) for d, f, rgs in self._fetch_plan(qterms)]
-        if not parts:
-            return pa.table({c: [] for c in cols})
-        if len(parts) == 1:
-            return parts[0]
-        return pa.concat_tables(parts, promote_options="permissive")
+        keys = np.array(sorted(qterms), dtype=object)
+        parts: "dict[str, list]" = {t: [] for t in qterms}
+        for r, b, d in self._directories(qterms):
+            for f, groups in d.runs(keys).items():
+                ckeys = {g: (r, b, f, g, tuple(cols)) for g in groups}
+                tables = {g: self._cache.get(k) for g, k in ckeys.items()}
+                missing = [g for g, tbl in tables.items() if tbl is None]
+                if missing:
+                    for g, tbl in zip(missing, d.read(f, missing, cols)):
+                        self._cache.put(ckeys[g], tbl)
+                        tables[g] = tbl
+                for g, runs in groups.items():
+                    for term, a, n in runs:
+                        parts[term].append(tables[g].slice(a, n))
+        out = {}
+        for t, p in parts.items():
+            if not p:
+                out[t] = pa.table({c: [] for c in cols})
+            elif len(p) == 1:
+                out[t] = p[0]
+            else:
+                out[t] = pa.concat_tables(p, promote_options="permissive")
+        return out
 
     # -- low-latency path -------------------------------------------------
     def search(
@@ -346,10 +429,11 @@ class IndexSearcher:
         k rows reach the driver. ``route="driver"``/``"distributed"`` force
         a path (tests, diagnostics).
 
-        The driver path reads the pruned blocks directly (only the files and
-        row groups the term directories name, C++ reader, no Spark job — the
-        budget-bounded fetch is a few MB) and ``kernel.topk`` scores them
-        straight off the Arrow buffers (no Python bytes).
+        The driver path slices each term's blocks out of cached row groups
+        (a miss reads only the row groups the term directories name, C++
+        reader, no Spark job — the budget-bounded fetch is a few MB) and
+        ``kernel.topk`` scores them straight off the Arrow buffers (no
+        Python bytes).
         """
         qterms = self._qterms(query)
         if not qterms:
@@ -363,15 +447,9 @@ class IndexSearcher:
         ):
             rows = self.search_distributed(query, k).collect()
             return [(int(r.doc_id), float(r.score)) for r in rows]
-        tbl = self._pruned_blocks_arrow(qterms)
-        if tbl.num_rows == 0:
-            return []
-        return kernel.topk(self._weighted_tables(tbl, qterms, dfs), self.deleted, self.avgdl, k)
-
-    def _weighted_tables(self, tbl, qterms: "list[str]", dfs: "dict[str, int]"):
-        """(idf weight, block table) per live query term of a fetched table."""
-        tables = kernel.split_terms(tbl, qterms)
-        return [(idf(self.n_docs, dfs[t]), tables[t]) for t in qterms]
+        tables = self._term_tables(qterms)
+        terms = [(idf(self.n_docs, dfs[t]), tables[t]) for t in qterms]
+        return kernel.topk(terms, self.deleted, self.avgdl, k)
 
     # -- distributed path --------------------------------------------------
     def search_distributed(self, query: str, k: int = 10) -> DataFrame:

@@ -1063,7 +1063,7 @@ def compact(spark: SparkSession, index_dir: str, out_dir: str) -> dict:
         # `len(spans) < n_partitions` at large corpora and trigger the
         # row-group-finest re-plan (measured at sf1: 9,378 micro-spans,
         # compact 509 s vs ~100 s fresh-build-shaped)
-        corpus, source = spark.read.parquet(tmp), tmp
+        corpus, source = None, tmp  # build_index reads it only to re-sort
         n_parts = int(meta["n_partitions"])
     else:
         # re-sort partition count from the LIVE DOC COUNT (scale-adaptive,

@@ -3,22 +3,29 @@ directories: a query reads only the files that hold its terms, and the
 answers stay identical to the oracle, as do the Spark-scan (distributed)
 route's — on an index
 with a committed delta segment plus deletes, on a shuffle-writer postings
-layout, through a ``file://`` root, and for positional phrase reads."""
+layout, through a ``file://`` root, and for positional phrase reads. The
+searcher's row-group cache keeps answers identical under a bound of a few
+KB, stays within that bound, serves a repeated pass without one parquet
+read, and answers concurrent queries as sequential ones."""
 
 from __future__ import annotations
 
 import os
 import shutil
+from concurrent.futures import ThreadPoolExecutor
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from sync2any_spark.generator import ensure_queries
 from sync2any_spark.index.bucketing import bucket_of
 from sync2any_spark.index.builder import build_index
 from sync2any_spark.oracle import BM25Oracle
+from sync2any_spark.query import wand
 from sync2any_spark.query.wand import IndexSearcher, _data_files
 from sync2any_spark.streaming.incremental import apply_increments, live_docs
 
@@ -27,10 +34,18 @@ DELTA_ONLY = "freshterm"  # written only by the increment batch
 
 
 @pytest.fixture(scope="module")
-def index(spark, transcripts_sf0001, tmp_path_factory):
-    """Base + one committed delta segment + tombstones, with positions."""
-    d = str(tmp_path_factory.mktemp("idx_fetchdir"))
+def base_index(spark, transcripts_sf0001, tmp_path_factory):
+    """A fresh build with positions, no increments."""
+    d = str(tmp_path_factory.mktemp("idx_fetchdir_base")) + "/idx"
     build_index(spark, transcripts_sf0001, d, resume=False, store_positions=True, **PARAMS)
+    return d
+
+
+@pytest.fixture(scope="module")
+def index(spark, base_index, transcripts_sf0001, tmp_path_factory):
+    """Base + one committed delta segment + tombstones, with positions."""
+    d = str(tmp_path_factory.mktemp("idx_fetchdir")) + "/idx"
+    shutil.copytree(base_index, d)
     t = transcripts_sf0001
     h = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(100))
     updates = (
@@ -44,10 +59,14 @@ def index(spark, transcripts_sf0001, tmp_path_factory):
     return d
 
 
+def _oracle_of(spark, index_dir) -> BM25Oracle:
+    pdf = live_docs(spark, index_dir).orderBy("doc_id").select("doc_id", "text").toPandas()
+    return BM25Oracle(list(zip(pdf["doc_id"], pdf["text"])))
+
+
 @pytest.fixture(scope="module")
 def oracle(spark, index):
-    pdf = live_docs(spark, index).orderBy("doc_id").select("doc_id", "text").toPandas()
-    return BM25Oracle(list(zip(pdf["doc_id"], pdf["text"])))
+    return _oracle_of(spark, index)
 
 
 def _terms_in(path: str) -> set:
@@ -207,3 +226,123 @@ def test_phrase_with_positions(spark, index, oracle):
         for (_, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-9), phrase
     assert phrase_topk_positional(s, f"{DELTA_ONLY} updated", 10)
+
+
+def _reference_queries() -> "list[tuple[str, int]]":
+    qs = pq.read_table(ensure_queries()).to_pandas()
+    return [(q.query_text, int(q.k)) for q in qs.itertuples(index=False)]
+
+
+def _check_reference(searcher, oracle) -> None:
+    for q, k in _reference_queries():
+        got = searcher.search(q, k, route="driver")
+        want = oracle.topk(q, k)
+        assert [g[0] for g in got] == [w[0] for w in want], q
+        for (_, gs), (_, ws) in zip(got, want):
+            assert gs == pytest.approx(ws, rel=1e-9), q
+
+
+def test_cache_bound_of_a_few_kb(spark, base_index, index, oracle, monkeypatch):
+    """A 16 KB bound (the test index's row groups decode to ~5–24 KB):
+    some row groups are too large to keep, others are kept and later
+    evicted, the cache never holds more than the bound, and the 50 reference
+    queries stay rank- and score-identical to the oracle, on the base-only
+    and on the base + delta + tombstones index."""
+    bound = 16 << 10
+    monkeypatch.setattr(wand, "FETCH_CACHE_BYTES", bound)
+    seen = {"puts": 0, "kept": 0, "evicted": 0}
+    put = wand._RowGroupCache.put
+
+    def checked_put(self, key, tbl):
+        before = len(self._tables) + (key not in self._tables)
+        put(self, key, tbl)
+        assert self.nbytes <= bound
+        assert self.nbytes == sum(size for _, size in self._tables.values())
+        seen["puts"] += 1
+        seen["kept"] += key in self._tables
+        seen["evicted"] += before - len(self._tables) - (key not in self._tables)
+
+    monkeypatch.setattr(wand._RowGroupCache, "put", checked_put)
+    for idx, orc in ((base_index, _oracle_of(spark, base_index)), (index, oracle)):
+        _check_reference(IndexSearcher(spark, idx), orc)
+    assert 0 < seen["kept"] < seen["puts"] and seen["evicted"] > 0, seen
+
+
+def test_repeated_pass_reads_no_row_group(spark, index, oracle, monkeypatch):
+    """With the default bound, a second pass over the reference queries
+    (and a repeated phrase, whose positional reads are cached under their
+    own column set) makes no parquet read and answers as the first pass."""
+    from sync2any_spark.query.phrase import phrase_topk_positional
+
+    s = IndexSearcher(spark, index)
+    phrase = f"{DELTA_ONLY} updated"
+    first = [s.search(q, k) for q, k in _reference_queries()]
+    first_phrase = phrase_topk_positional(s, phrase, 10)
+    assert {key[-1] for key in s._cache._tables} == {
+        tuple(wand.kernel.BLOCK_COLS), tuple(wand.kernel.BLOCK_COLS + ["pos"])
+    }
+    reads = []
+    for name in ("read", "read_row_group", "read_row_groups"):
+        orig = getattr(pq.ParquetFile, name)
+        monkeypatch.setattr(
+            pq.ParquetFile, name,
+            lambda self, *a, _o=orig, _n=name, **kw: reads.append(_n) or _o(self, *a, **kw),
+        )
+    assert [s.search(q, k) for q, k in _reference_queries()] == first
+    assert phrase_topk_positional(s, phrase, 10) == first_phrase
+    assert reads == []
+    _check_reference(s, oracle)
+
+
+def test_threads_share_one_searcher(spark, index, monkeypatch):
+    """Four threads querying one searcher — from a cold cache, so misses
+    race, and under a 16 KB bound, so evictions race with hits — return
+    the sequential answers."""
+    queries = _reference_queries()
+    want = [IndexSearcher(spark, index).search(q, k) for q, k in queries]
+    for bound in (wand.FETCH_CACHE_BYTES, 16 << 10):
+        monkeypatch.setattr(wand, "FETCH_CACHE_BYTES", bound)
+        s = IndexSearcher(spark, index)
+
+        def run(shift):
+            order = queries[shift:] + queries[:shift]
+            got = [s.search(q, k) for q, k in order]
+            return got[len(order) - shift:] + got[: len(order) - shift]
+
+        with ThreadPoolExecutor(4) as pool:
+            for got in pool.map(run, [0, 12, 25, 37]):
+                assert got == want
+
+
+def test_directory_runs_on_unsorted_row_groups(tmp_path):
+    """Runs are cut at term changes and row-group starts, never assuming
+    a sorted file: each run slices out only its term's rows, and together
+    a term's runs hold every one of its rows."""
+    from pyarrow.fs import LocalFileSystem
+
+    terms = ["b", "a", "b", "a", "a", "a", "b"]  # "a" runs across the row-group cut
+    (tmp_path / "bucket=0").mkdir()
+    pq.write_table(
+        pa.table({"term": terms, "row": list(range(len(terms)))}),
+        str(tmp_path / "bucket=0" / "part-0.parquet"),
+        row_group_size=4,
+    )
+    d = wand._TermDirectory(LocalFileSystem(), str(tmp_path / "bucket=0"))
+    runs = d.runs(np.array(["a", "b"], dtype=object))
+    assert runs == {
+        0: {
+            0: [("a", 1, 1), ("a", 3, 1), ("b", 0, 1), ("b", 2, 1)],
+            1: [("a", 0, 2), ("b", 2, 1)],
+        }
+    }
+    assert d.lookup(np.array(["b"], dtype=object)) == [(0, [0, 1])]
+    groups = d.read(0, [0, 1], ["term", "row"])
+    for t in ("a", "b"):
+        rows = []
+        for g, rs in runs[0].items():
+            for term, first, n in rs:
+                if term == t:
+                    part = groups[g].slice(first, n)
+                    assert set(part.column("term").to_pylist()) == {t}
+                    rows += part.column("row").to_pylist()
+        assert sorted(rows) == [i for i, x in enumerate(terms) if x == t], t

@@ -767,12 +767,18 @@ def test_sorted_source_fast_path_identical_and_fallbacks(
                       source_path=src_one, resume=False)
     assert res["resort_reason"] == "too few spans"
     assert resort_rows(d_slow) == ["too few spans"]
+    # no DataFrame given: the re-sort reads the source itself
+    d_none = str(tmp_path_factory.mktemp("idx_slow_none"))
+    res = build_index(spark, None, d_none, n_partitions=2, n_buckets=4,
+                      span_mb=0, source_path=src_one, resume=False)
+    assert res["resort_reason"] == "too few spans"
     fast = spark.read.parquet(f"{d_fast}/docs").orderBy("doc_id").toPandas()
-    slow = spark.read.parquet(f"{d_slow}/docs").orderBy("doc_id").toPandas()
-    pd.testing.assert_frame_equal(
-        fast[["doc_id", "conv_id", "turn_idx", "dl"]],
-        slow[["doc_id", "conv_id", "turn_idx", "dl"]],
-    )
+    for d in (d_slow, d_none):
+        slow = spark.read.parquet(f"{d}/docs").orderBy("doc_id").toPandas()
+        pd.testing.assert_frame_equal(
+            fast[["doc_id", "conv_id", "turn_idx", "dl"]],
+            slow[["doc_id", "conv_id", "turn_idx", "dl"]],
+        )
 
     # (b) conv-sorted but turn order broken ACROSS a row-group boundary:
     # footer precheck passes (conv non-decreasing), the within-span check

@@ -1,8 +1,13 @@
 #!/usr/bin/env python
 """Query-path profiler: per-stage breakdown (fetch / kernel) of
 IndexSearcher.search driver-path latency on a bench index, with the number
-of postings files each fetch reads. The kernel column times the split by
-term plus ``kernel.topk`` (decode, score, merge, top-k).
+of postings files each fetch touches. Two fetch columns: ``miss`` times a
+fetch from an empty row-group cache (every planned row group read and
+decoded; the term directories are built beforehand, so it times the
+row-group reads only), ``hit`` one whose row groups are all cached (the
+per-term slices only). ``total`` is the hit fetch plus the kernel, which
+times ``kernel.topk`` (decode, score, merge, top-k). Each column is the
+best of 5.
 
 Usage: python tools/profile_queries.py <index_dir> [qids...]
 """
@@ -13,13 +18,22 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-import numpy as np
 import pyarrow.parquet as pq
 
 from sync2any_spark.generator import ensure_queries
 from sync2any_spark.query import kernel
-from sync2any_spark.query.wand import IndexSearcher
+from sync2any_spark.query.kernel import idf
+from sync2any_spark.query.wand import IndexSearcher, _RowGroupCache
 from sync2any_spark.session import get_spark
+
+
+def _best(fn, reps: int = 5) -> float:
+    best = 9e9
+    for _ in range(reps):
+        t0 = time.perf_counter()
+        fn()
+        best = min(best, time.perf_counter() - t0)
+    return best
 
 
 def main() -> None:
@@ -29,11 +43,7 @@ def main() -> None:
     s = IndexSearcher(spark, idx)
     queries = pq.read_table(ensure_queries()).to_pandas()
 
-    # warm pass
-    for q in queries.itertuples(index=False):
-        s.search(q.query_text, int(q.k))
-
-    print(f"{'qid':>4} {'query':<28} {'total':>8} {'fetch':>8} {'files':>5} "
+    print(f"{'qid':>4} {'query':<28} {'total':>8} {'miss':>8} {'hit':>8} {'files':>5} "
           f"{'kernel':>8} {'blocks':>7} {'postings':>9}")
     for q in queries.itertuples(index=False):
         if want and int(q.query_id) not in want:
@@ -44,21 +54,21 @@ def main() -> None:
         if not qterms:
             continue
         tot = sum(dfs[t] for t in qterms)
-        n_files = len(s._fetch_plan(qterms))
-        best = (9e9, 9e9, 9e9, 0)
-        for _ in range(5):
-            t0 = time.time()
-            tbl = s._pruned_blocks_arrow(qterms)
-            t1 = time.time()
-            if tbl.num_rows:
-                terms = s._weighted_tables(tbl, qterms, dfs)
-                kernel.topk(terms, s.deleted, s.avgdl, int(q.k))
-            t2 = time.time()
-            if t2 - t0 < best[0]:
-                best = (t2 - t0, t1 - t0, t2 - t1, tbl.num_rows)
-        print(f"{q.query_id:>4} {q.query_text[:28]:<28} {best[0]*1e3:8.2f} "
-              f"{best[1]*1e3:8.2f} {n_files:>5} {best[2]*1e3:8.2f} {best[3]:>7} "
-              f"{tot:>9}")
+        n_files = len(s._fetch_plan(qterms))  # builds the term directories
+
+        def cold_fetch():
+            s._cache = _RowGroupCache()
+            s._term_tables(qterms)
+
+        miss = _best(cold_fetch)
+        hit = _best(lambda: s._term_tables(qterms))
+        tables = s._term_tables(qterms)
+        terms = [(idf(s.n_docs, dfs[t]), tables[t]) for t in qterms]
+        kern = _best(lambda: kernel.topk(terms, s.deleted, s.avgdl, int(q.k)))
+        blocks = sum(t.num_rows for t in tables.values())
+        print(f"{q.query_id:>4} {q.query_text[:28]:<28} {(hit + kern)*1e3:8.2f} "
+              f"{miss*1e3:8.2f} {hit*1e3:8.2f} {n_files:>5} {kern*1e3:8.2f} "
+              f"{blocks:>7} {tot:>9}")
     spark.stop()
 
 
