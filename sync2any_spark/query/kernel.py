@@ -2,7 +2,7 @@
 
 Every scorer hands this module the query's live terms as (idf weight,
 Arrow block table) pairs: the driver route (``IndexSearcher.search``, each
-term's runs sliced out of its cached row groups), the serving tier
+term's runs sliced out of the row groups it read), the serving tier
 (``LocalSearcher``, slices of its pinned table) and the distributed
 route's ``mapInArrow`` task. A block table carries the varbyte columns
 ``doc_ids``/``tfs``/``dls`` plus ``n_docs``, and for the pruned leg the

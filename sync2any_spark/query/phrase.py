@@ -286,8 +286,8 @@ def phrase_topk_positional(
     ):
         top = phrase_topk_positional_distributed(searcher, phrase, k).collect()
         return [(int(r.doc_id), float(r.score)) for r in top]
-    # driver leg: each term's pos-bearing blocks from the searcher's
-    # row-group cache — no Spark job; the budget above bounds the fetch
+    # driver leg: each term's pos-bearing blocks by a direct pyarrow
+    # fetch — no Spark job; the budget above bounds the fetch
     tables = searcher._term_tables(uniq, with_pos=True)
     if any(g.num_rows == 0 for g in tables.values()):
         return []  # some phrase term absent entirely

@@ -6,10 +6,9 @@ ES picks between query phases:
 - ``IndexSearcher.search`` — low-latency path. The query's term list is tiny:
   its terms' buckets select the ``bucket=K`` dirs, and a per-(postings root,
   bucket) term directory held by the searcher names the row runs each term
-  occupies in which files and row groups. Those row groups come from the
-  searcher's byte-bounded cache of decoded row groups (a miss reads the
-  row group whole, with its cached footer), and each term's runs are
-  zero-copy slices of them — a repeated term costs no parquet decode. The
+  occupies in which files and row groups. Only those row groups are read
+  (with cached footers), and each term's runs are zero-copy slices of
+  them, so the fetch runs no ``is_in`` filter and no split by term. The
   per-term block tables are scored on the driver by the one BM25 kernel
   (``kernel.topk``). This is the path a search tier would serve QPS from.
 - ``search_distributed`` — scale path for huge candidate sets: the Spark
@@ -24,8 +23,6 @@ formula, float64, ties by doc_id ascending.
 
 from __future__ import annotations
 
-import threading
-from collections import OrderedDict
 from functools import cached_property
 
 import numpy as np
@@ -59,11 +56,6 @@ def _load_deletes(dirs: "list[str]") -> np.ndarray:
 # postings: 10^7 postings ≈ ~25 MB of compressed blocks — a bounded,
 # sub-second pyarrow fetch; anything larger belongs on the cluster.
 ROUTE_BUDGET = 10_000_000
-
-# bytes (``Table.nbytes``) of decoded postings row groups one searcher keeps
-# for the driver route; a row group larger than this is used but not kept
-# (the sf0.01×2 perfbench index decodes to ~7 MB whole)
-FETCH_CACHE_BYTES = 256 << 20
 
 
 def _data_files(fs, path: str) -> "list[str]":
@@ -156,50 +148,22 @@ class _TermDirectory:
                 )
         return out
 
-    def lookup(self, terms: np.ndarray) -> "list[tuple[int, list[int]]]":
-        """[(file index, sorted row groups)] holding any of ``terms``."""
-        return [(f, sorted(g)) for f, g in sorted(self.runs(terms).items())]
-
-    def read(self, fid: int, row_groups: "list[int]", cols: "list[str]"):
-        """``row_groups`` of one file, each read whole as its own table
-        (its buffers are its own, so evicting it frees them), with the
-        file's cached footer."""
+    def read(self, fid: int, groups: "dict[int, list]", cols: "list[str]"):
+        """[(term, its rows)] for every run of ``groups`` ({row group: runs},
+        as ``runs`` gives them) of one file: the row groups are read whole
+        in one call with the file's cached footer, and each run is a
+        zero-copy slice of them."""
         import pyarrow.parquet as pq
 
+        rgs = sorted(groups)
+        md = self.metas[fid]
         with self.fs.open_input_file(self.files[fid]) as src:
-            pf = pq.ParquetFile(src, metadata=self.metas[fid])
-            return [pf.read_row_groups([g], columns=cols) for g in row_groups]
-
-
-class _RowGroupCache:
-    """Decoded postings row groups, least recently used first out, bounded
-    by ``FETCH_CACHE_BYTES`` of ``Table.nbytes``. The lock covers only the
-    dict operations: two threads missing on one row group both read it,
-    and either table may stay."""
-
-    def __init__(self) -> None:
-        self._tables: "OrderedDict[tuple, tuple]" = OrderedDict()
-        self._lock = threading.Lock()
-        self.nbytes = 0
-
-    def get(self, key: tuple):
-        with self._lock:
-            hit = self._tables.get(key)
-            if hit is None:
-                return None
-            self._tables.move_to_end(key)
-            return hit[0]
-
-    def put(self, key: tuple, tbl) -> None:
-        size = tbl.nbytes
-        if size > FETCH_CACHE_BYTES:
-            return
-        with self._lock:
-            old = self._tables.pop(key, None)
-            self.nbytes += size - (old[1] if old is not None else 0)
-            self._tables[key] = (tbl, size)
-            while self.nbytes > FETCH_CACHE_BYTES:
-                self.nbytes -= self._tables.popitem(last=False)[1][1]
+            tbl = pq.ParquetFile(src, metadata=md).read_row_groups(rgs, columns=cols)
+        out, base = [], 0
+        for g in rgs:
+            out += [(term, tbl.slice(base + a, n)) for term, a, n in groups[g]]
+            base += md.row_group(g).num_rows
+        return out
 
 
 class IndexSearcher:
@@ -223,15 +187,12 @@ class IndexSearcher:
     committed postings roots are resolved once at open — the searcher is a
     snapshot of that commit. The first query that touches a (root, bucket)
     builds its ``_TermDirectory`` (one footer parse and one ``term``-column
-    read per file). Every fetch after that touches only the row groups that
-    hold the query's terms: each comes from the searcher's row-group cache
-    (at most ``FETCH_CACHE_BYTES``), or on a miss is read whole with its
-    file's cached footer and kept. The cache is per searcher because a
-    searcher is a snapshot: segment dirs can be rewritten under the same
-    names after a crashed apply, so a cache keyed by path across searchers
-    could serve stale blocks. The Spark relations (``_postings_full``,
-    ``_docs``) are built on first use by the distributed route, the
-    distributed phrase legs and ``fetch``.
+    read per file). Every fetch after that reads only the row groups that
+    hold the query's terms, with their files' cached footers, and slices
+    each term's runs out of them; between queries the searcher keeps its
+    term directories, not the blocks. The Spark relations
+    (``_postings_full``, ``_docs``) are built on first use by the
+    distributed route, the distributed phrase legs and ``fetch``.
     """
 
     def __init__(
@@ -276,8 +237,6 @@ class IndexSearcher:
         self._roots = [fs_and_path(d) for d in self._pdirs]
         # lazy (root index, bucket) → _TermDirectory
         self._dirs: "dict[tuple[int, int], _TermDirectory]" = {}
-        # (root index, bucket, file index, row group, columns) → decoded table
-        self._cache = _RowGroupCache()
         # tombstones (Lucene live-docs analog): a SORTED numpy doc-id array
         # loaded via pyarrow (no Spark job, no Python set) — 8 bytes per
         # deleted doc, sharded alongside the index at serving scale;
@@ -359,53 +318,40 @@ class IndexSearcher:
             d = self._dirs[key] = _TermDirectory(fs, f"{path}/bucket={bucket}")
         return d
 
-    def _directories(self, qterms: "list[str]"):
-        """(root index, bucket, directory) of every committed root of the
-        terms' buckets."""
+    def _fetch_plan(
+        self, qterms: "list[str]"
+    ) -> "list[tuple[_TermDirectory, int, dict[int, list]]]":
+        """[(directory, file index, {row group: [(term, first row, rows)]})]
+        of every run holding a query term, over every committed root of the
+        terms' buckets — exactly what ``_term_tables`` reads."""
         from ..index.bucketing import bucket_of
 
         buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
+        keys = np.array(sorted(qterms), dtype=object)
+        plan = []
         for r in range(len(self._roots)):
             for b in buckets:
-                yield r, b, self._directory(r, b)
-
-    def _fetch_plan(
-        self, qterms: "list[str]"
-    ) -> "list[tuple[_TermDirectory, int, list[int]]]":
-        """[(directory, file index, row groups)] that hold the query's
-        terms, over every committed root of the terms' buckets."""
-        keys = np.array(sorted(qterms), dtype=object)
-        return [
-            (d, f, rgs) for _, _, d in self._directories(qterms) for f, rgs in d.lookup(keys)
-        ]
+                d = self._directory(r, b)
+                plan += [(d, f, groups) for f, groups in d.runs(keys).items()]
+        return plan
 
     def _term_tables(self, qterms: "list[str]", with_pos: bool = False) -> dict:
         """{term: its block rows} for each of ``qterms`` — a direct pyarrow
         fetch, no Spark job, no JVM→Python serialization and no Python
         ``bytes``: the scoring path decodes straight off the Arrow binary
-        buffers. The term directories name each term's row runs; their row
-        groups come from the row-group cache, or are read whole on a miss
-        and kept, and each run is a zero-copy slice. The phrase legs'
-        ``with_pos`` reads are cached under their own column set. Works
-        against any pyarrow filesystem (local, S3, GCS). Bounded by the
-        route budget: above it the query never takes this path."""
+        buffers. The plan names each term's row runs; each file's row
+        groups that hold them are read whole, on the calling thread, and
+        each run is a zero-copy slice, so no ``is_in`` filter and no split
+        by term runs. Works against any pyarrow filesystem (local, S3,
+        GCS). Bounded by the route budget: above it the query never takes
+        this path."""
         import pyarrow as pa
 
         cols = kernel.BLOCK_COLS + (["pos"] if with_pos else [])
-        keys = np.array(sorted(qterms), dtype=object)
         parts: "dict[str, list]" = {t: [] for t in qterms}
-        for r, b, d in self._directories(qterms):
-            for f, groups in d.runs(keys).items():
-                ckeys = {g: (r, b, f, g, tuple(cols)) for g in groups}
-                tables = {g: self._cache.get(k) for g, k in ckeys.items()}
-                missing = [g for g, tbl in tables.items() if tbl is None]
-                if missing:
-                    for g, tbl in zip(missing, d.read(f, missing, cols)):
-                        self._cache.put(ckeys[g], tbl)
-                        tables[g] = tbl
-                for g, runs in groups.items():
-                    for term, a, n in runs:
-                        parts[term].append(tables[g].slice(a, n))
+        for d, f, groups in self._fetch_plan(qterms):
+            for term, rows in d.read(f, groups, cols):
+                parts[term].append(rows)
         out = {}
         for t, p in parts.items():
             if not p:
@@ -429,11 +375,10 @@ class IndexSearcher:
         k rows reach the driver. ``route="driver"``/``"distributed"`` force
         a path (tests, diagnostics).
 
-        The driver path slices each term's blocks out of cached row groups
-        (a miss reads only the row groups the term directories name, C++
-        reader, no Spark job — the budget-bounded fetch is a few MB) and
-        ``kernel.topk`` scores them straight off the Arrow buffers (no
-        Python bytes).
+        The driver path reads only the row groups the term directories name
+        (C++ reader, no Spark job — the budget-bounded fetch is a few MB),
+        slices each term's runs out of them, and ``kernel.topk`` scores them
+        straight off the Arrow buffers (no Python bytes).
         """
         qterms = self._qterms(query)
         if not qterms:

@@ -3,10 +3,10 @@ directories: a query reads only the files that hold its terms, and the
 answers stay identical to the oracle, as do the Spark-scan (distributed)
 route's — on an index
 with a committed delta segment plus deletes, on a shuffle-writer postings
-layout, through a ``file://`` root, and for positional phrase reads. The
-searcher's row-group cache keeps answers identical under a bound of a few
-KB, stays within that bound, serves a repeated pass without one parquet
-read, and answers concurrent queries as sequential ones."""
+layout, through a ``file://`` root, and for positional phrase reads. Each
+term's rows are sliced out of its row runs, which the directory finds in
+unsorted row groups too, and concurrent queries on one searcher answer as
+sequential ones."""
 
 from __future__ import annotations
 
@@ -34,18 +34,10 @@ DELTA_ONLY = "freshterm"  # written only by the increment batch
 
 
 @pytest.fixture(scope="module")
-def base_index(spark, transcripts_sf0001, tmp_path_factory):
-    """A fresh build with positions, no increments."""
-    d = str(tmp_path_factory.mktemp("idx_fetchdir_base")) + "/idx"
-    build_index(spark, transcripts_sf0001, d, resume=False, store_positions=True, **PARAMS)
-    return d
-
-
-@pytest.fixture(scope="module")
-def index(spark, base_index, transcripts_sf0001, tmp_path_factory):
+def index(spark, transcripts_sf0001, tmp_path_factory):
     """Base + one committed delta segment + tombstones, with positions."""
-    d = str(tmp_path_factory.mktemp("idx_fetchdir")) + "/idx"
-    shutil.copytree(base_index, d)
+    d = str(tmp_path_factory.mktemp("idx_fetchdir"))
+    build_index(spark, transcripts_sf0001, d, resume=False, store_positions=True, **PARAMS)
     t = transcripts_sf0001
     h = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(100))
     updates = (
@@ -59,14 +51,10 @@ def index(spark, base_index, transcripts_sf0001, tmp_path_factory):
     return d
 
 
-def _oracle_of(spark, index_dir) -> BM25Oracle:
-    pdf = live_docs(spark, index_dir).orderBy("doc_id").select("doc_id", "text").toPandas()
-    return BM25Oracle(list(zip(pdf["doc_id"], pdf["text"])))
-
-
 @pytest.fixture(scope="module")
 def oracle(spark, index):
-    return _oracle_of(spark, index)
+    pdf = live_docs(spark, index).orderBy("doc_id").select("doc_id", "text").toPandas()
+    return BM25Oracle(list(zip(pdf["doc_id"], pdf["text"])))
 
 
 def _terms_in(path: str) -> set:
@@ -114,10 +102,10 @@ def _check_oracle(searcher, oracle, qs, route: str = "auto") -> None:
 
 
 def test_fetch_opens_only_files_holding_terms(spark, index, queries):
-    """The fetch plan names exactly the files (and row groups) that hold a
-    query term — checked against every file of the touched buckets in every
-    committed root — and a term that lives in one segment plans no file of
-    the other."""
+    """The fetch plan names exactly the files that hold a query term —
+    checked against every file of the touched buckets in every committed
+    root — each of its runs slices out rows of its term only, and a term
+    that lives in one segment plans no file of the other."""
     s = IndexSearcher(spark, index)
     base_root, delta_root = s._pdirs
     for q in _all_queries(queries):
@@ -134,9 +122,10 @@ def test_fetch_opens_only_files_holding_terms(spark, index, queries):
         holding = {f for f in candidates if _terms_in(f) & set(qterms)}
         assert planned == holding, q
         assert len(planned) < len(candidates), q
-        for d, f, rgs in plan:
-            tbl = pq.ParquetFile(d.files[f]).read_row_groups(rgs, columns=["term"])
-            assert pc.any(pc.is_in(tbl.column("term"), pa.array(qterms))).as_py(), q
+        for d, f, groups in plan:
+            for term, rows in d.read(f, groups, ["term"]):
+                assert term in qterms and rows.num_rows, q
+                assert pc.all(pc.equal(rows.column("term"), term)).as_py(), q
     delta = {d.files[f] for d, f, _ in s._fetch_plan([DELTA_ONLY])}
     assert delta and all(f.startswith(delta_root) for f in delta)
     for t in queries["base_only"]:
@@ -233,85 +222,34 @@ def _reference_queries() -> "list[tuple[str, int]]":
     return [(q.query_text, int(q.k)) for q in qs.itertuples(index=False)]
 
 
-def _check_reference(searcher, oracle) -> None:
+def test_reference_queries_with_delta_and_tombstones(spark, index, oracle):
+    """The 50 reference queries, forced onto the driver route, are rank-
+    and score-identical to the oracle on the base + delta + tombstones
+    index, where a term's runs come from two roots."""
+    s = IndexSearcher(spark, index)
     for q, k in _reference_queries():
-        got = searcher.search(q, k, route="driver")
+        got = s.search(q, k, route="driver")
         want = oracle.topk(q, k)
         assert [g[0] for g in got] == [w[0] for w in want], q
         for (_, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-9), q
 
 
-def test_cache_bound_of_a_few_kb(spark, base_index, index, oracle, monkeypatch):
-    """A 16 KB bound (the test index's row groups decode to ~5–24 KB):
-    some row groups are too large to keep, others are kept and later
-    evicted, the cache never holds more than the bound, and the 50 reference
-    queries stay rank- and score-identical to the oracle, on the base-only
-    and on the base + delta + tombstones index."""
-    bound = 16 << 10
-    monkeypatch.setattr(wand, "FETCH_CACHE_BYTES", bound)
-    seen = {"puts": 0, "kept": 0, "evicted": 0}
-    put = wand._RowGroupCache.put
-
-    def checked_put(self, key, tbl):
-        before = len(self._tables) + (key not in self._tables)
-        put(self, key, tbl)
-        assert self.nbytes <= bound
-        assert self.nbytes == sum(size for _, size in self._tables.values())
-        seen["puts"] += 1
-        seen["kept"] += key in self._tables
-        seen["evicted"] += before - len(self._tables) - (key not in self._tables)
-
-    monkeypatch.setattr(wand._RowGroupCache, "put", checked_put)
-    for idx, orc in ((base_index, _oracle_of(spark, base_index)), (index, oracle)):
-        _check_reference(IndexSearcher(spark, idx), orc)
-    assert 0 < seen["kept"] < seen["puts"] and seen["evicted"] > 0, seen
-
-
-def test_repeated_pass_reads_no_row_group(spark, index, oracle, monkeypatch):
-    """With the default bound, a second pass over the reference queries
-    (and a repeated phrase, whose positional reads are cached under their
-    own column set) makes no parquet read and answers as the first pass."""
-    from sync2any_spark.query.phrase import phrase_topk_positional
-
-    s = IndexSearcher(spark, index)
-    phrase = f"{DELTA_ONLY} updated"
-    first = [s.search(q, k) for q, k in _reference_queries()]
-    first_phrase = phrase_topk_positional(s, phrase, 10)
-    assert {key[-1] for key in s._cache._tables} == {
-        tuple(wand.kernel.BLOCK_COLS), tuple(wand.kernel.BLOCK_COLS + ["pos"])
-    }
-    reads = []
-    for name in ("read", "read_row_group", "read_row_groups"):
-        orig = getattr(pq.ParquetFile, name)
-        monkeypatch.setattr(
-            pq.ParquetFile, name,
-            lambda self, *a, _o=orig, _n=name, **kw: reads.append(_n) or _o(self, *a, **kw),
-        )
-    assert [s.search(q, k) for q, k in _reference_queries()] == first
-    assert phrase_topk_positional(s, phrase, 10) == first_phrase
-    assert reads == []
-    _check_reference(s, oracle)
-
-
-def test_threads_share_one_searcher(spark, index, monkeypatch):
-    """Four threads querying one searcher — from a cold cache, so misses
-    race, and under a 16 KB bound, so evictions race with hits — return
-    the sequential answers."""
+def test_threads_share_one_searcher(spark, index):
+    """Four threads querying one searcher — from no term directory, so
+    first touches race — return the sequential answers."""
     queries = _reference_queries()
     want = [IndexSearcher(spark, index).search(q, k) for q, k in queries]
-    for bound in (wand.FETCH_CACHE_BYTES, 16 << 10):
-        monkeypatch.setattr(wand, "FETCH_CACHE_BYTES", bound)
-        s = IndexSearcher(spark, index)
+    s = IndexSearcher(spark, index)
 
-        def run(shift):
-            order = queries[shift:] + queries[:shift]
-            got = [s.search(q, k) for q, k in order]
-            return got[len(order) - shift:] + got[: len(order) - shift]
+    def run(shift):
+        order = queries[shift:] + queries[:shift]
+        got = [s.search(q, k) for q, k in order]
+        return got[len(order) - shift:] + got[: len(order) - shift]
 
-        with ThreadPoolExecutor(4) as pool:
-            for got in pool.map(run, [0, 12, 25, 37]):
-                assert got == want
+    with ThreadPoolExecutor(4) as pool:
+        for got in pool.map(run, [0, 12, 25, 37]):
+            assert got == want
 
 
 def test_directory_runs_on_unsorted_row_groups(tmp_path):
@@ -335,14 +273,11 @@ def test_directory_runs_on_unsorted_row_groups(tmp_path):
             1: [("a", 0, 2), ("b", 2, 1)],
         }
     }
-    assert d.lookup(np.array(["b"], dtype=object)) == [(0, [0, 1])]
-    groups = d.read(0, [0, 1], ["term", "row"])
     for t in ("a", "b"):
-        rows = []
-        for g, rs in runs[0].items():
-            for term, first, n in rs:
-                if term == t:
-                    part = groups[g].slice(first, n)
-                    assert set(part.column("term").to_pylist()) == {t}
-                    rows += part.column("row").to_pylist()
-        assert sorted(rows) == [i for i, x in enumerate(terms) if x == t], t
+        parts = [rows for term, rows in d.read(0, runs[0], ["term", "row"]) if term == t]
+        assert all(set(p.column("term").to_pylist()) == {t} for p in parts), t
+        rows = sorted(r for p in parts for r in p.column("row").to_pylist())
+        assert rows == [i for i, x in enumerate(terms) if x == t], t
+    # a row group read without the one before it slices from its own start
+    alone = d.read(0, {1: runs[0][1]}, ["row"])
+    assert [(t, p.column("row").to_pylist()) for t, p in alone] == [("a", [4, 5]), ("b", [6])]

@@ -1,13 +1,11 @@
 #!/usr/bin/env python
 """Query-path profiler: per-stage breakdown (fetch / kernel) of
 IndexSearcher.search driver-path latency on a bench index, with the number
-of postings files each fetch touches. Two fetch columns: ``miss`` times a
-fetch from an empty row-group cache (every planned row group read and
-decoded; the term directories are built beforehand, so it times the
-row-group reads only), ``hit`` one whose row groups are all cached (the
-per-term slices only). ``total`` is the hit fetch plus the kernel, which
-times ``kernel.topk`` (decode, score, merge, top-k). Each column is the
-best of 5.
+of postings files each fetch reads. ``fetch`` times ``_term_tables`` (read
+the row groups holding the query's terms, slice each term's runs; the term
+directories are built beforehand, so it times the row-group reads only),
+``kernel`` times ``kernel.topk`` (decode, score, merge, top-k), ``total``
+is their sum. Each column is the best of 5.
 
 Usage: python tools/profile_queries.py <index_dir> [qids...]
 """
@@ -23,7 +21,7 @@ import pyarrow.parquet as pq
 from sync2any_spark.generator import ensure_queries
 from sync2any_spark.query import kernel
 from sync2any_spark.query.kernel import idf
-from sync2any_spark.query.wand import IndexSearcher, _RowGroupCache
+from sync2any_spark.query.wand import IndexSearcher
 from sync2any_spark.session import get_spark
 
 
@@ -43,7 +41,7 @@ def main() -> None:
     s = IndexSearcher(spark, idx)
     queries = pq.read_table(ensure_queries()).to_pandas()
 
-    print(f"{'qid':>4} {'query':<28} {'total':>8} {'miss':>8} {'hit':>8} {'files':>5} "
+    print(f"{'qid':>4} {'query':<28} {'total':>8} {'fetch':>8} {'files':>5} "
           f"{'kernel':>8} {'blocks':>7} {'postings':>9}")
     for q in queries.itertuples(index=False):
         if want and int(q.query_id) not in want:
@@ -55,19 +53,13 @@ def main() -> None:
             continue
         tot = sum(dfs[t] for t in qterms)
         n_files = len(s._fetch_plan(qterms))  # builds the term directories
-
-        def cold_fetch():
-            s._cache = _RowGroupCache()
-            s._term_tables(qterms)
-
-        miss = _best(cold_fetch)
-        hit = _best(lambda: s._term_tables(qterms))
+        fetch = _best(lambda: s._term_tables(qterms))
         tables = s._term_tables(qterms)
         terms = [(idf(s.n_docs, dfs[t]), tables[t]) for t in qterms]
         kern = _best(lambda: kernel.topk(terms, s.deleted, s.avgdl, int(q.k)))
         blocks = sum(t.num_rows for t in tables.values())
-        print(f"{q.query_id:>4} {q.query_text[:28]:<28} {(hit + kern)*1e3:8.2f} "
-              f"{miss*1e3:8.2f} {hit*1e3:8.2f} {n_files:>5} {kern*1e3:8.2f} "
+        print(f"{q.query_id:>4} {q.query_text[:28]:<28} {(fetch + kern)*1e3:8.2f} "
+              f"{fetch*1e3:8.2f} {n_files:>5} {kern*1e3:8.2f} "
               f"{blocks:>7} {tot:>9}")
     spark.stop()
 
