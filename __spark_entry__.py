@@ -451,12 +451,11 @@ def _q_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_docs_table_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stable dense doc-id assignment (two-level prefix sum) — oracle is a
-    plain rank over the composite PK."""
-    from sync2any_spark.index.builder import build_docs
-
-    t = _transcripts(spark, sf_dir)
-    return build_docs(t).select(
+    """Stable dense doc ids as the engine serves them: the docs store the
+    snapshot build's fused pass wrote — oracle is a plain rank over the
+    composite PK."""
+    idx = _contract_index(spark, sf_dir)
+    return spark.read.parquet(f"{idx}/docs").select(
         "doc_id", "conv_id", "turn_idx", F.col("dl").cast("long").alias("dl")
     )
 
@@ -566,7 +565,7 @@ def _contract_index(spark: SparkSession, sf_dir: str) -> str:
 
         shutil.rmtree(idx, ignore_errors=True)
         build_index(
-            spark, spark.read.parquet(src), idx,
+            spark, None, idx,
             n_partitions=16, n_buckets=16, n_salts=4,
             heavy_df_threshold=2000, resume=True, source_path=src,
             store_positions=True,

@@ -21,16 +21,21 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    per-span manifest JSON written last; the CDC apply tokenizes its new
    rows with the same kernel. A re-run skips completed spans (the analog
    of the reference's offset-reset / checkpoint-ack recovery,
-   ``extract/KafkaMsgListener.java:76-79,312-330``); a changed span list
-   invalidates the manifests via ``_filelist.json``.
-3. **Term stats** — ``groupBy(term)`` over chunk rows (map-side combined;
-   hot terms are sums of few-hundred-byte rows, not row explosions; parquet
-   column pruning keeps the posting binaries out of this scan).
+   ``extract/KafkaMsgListener.java:76-79,312-330``); ``_filelist.json``
+   pins the span list together with the chunk layout (``n_buckets``,
+   ``n_salts``, ``MERGE_SUBSPLIT``, ``store_positions``), and a re-run
+   under any other pin rebuilds every span.
+3. **Term stats** — one pyarrow aggregate on the driver over the
+   ``(term, n_docs, cf)`` columns of the chunk files the manifests name
+   (column pruning keeps the posting binaries out of the read; no Spark
+   job).
 4. **Salted compaction merge** — chunks of a term are concatenated in doc-id
    order and re-cut into 128-posting blocks with exact per-block max-score
-   bounds. Terms with df above a threshold are salted into ``n_salts``
-   disjoint sub-streams (a doc lives in exactly one stream, so BM25 sums
-   stay exact) to keep the merge balanced under Zipf skew (B3). The chunk
+   bounds. Every chunk file carries one salt (its part id mod ``n_salts``);
+   a merge group whose heavy terms (df above a threshold) hold enough
+   postings fans out into salt tasks, each merging those terms' rows of
+   its salts' files only (a doc lives in exactly one stream, so BM25 sums
+   stay exact), to keep the merge balanced under Zipf skew (B3). The chunk
    files are sorted by merge group, so each merge task reads its own
    group's row groups directly — no shuffle (``build_postings_direct``).
 5. **Postings layout** — parquet partitioned by ``bucket`` (md5-based:
@@ -42,8 +47,9 @@ Pipeline (SURVEY.md §7.1 M2/M3, north-rule core):
    partitioned write emits directly from the merge — no extra shuffle.
 
 Scale posture: at most one corpus exchange (the re-sort, only for a source
-that is not already sorted); nothing collects more than per-span counts
-and boundary keys to the driver. Knobs: ``n_partitions`` (the re-sort's
+that is not already sorted); the driver holds per-span counts and
+boundary keys, plus the terms aggregate (one row per chunk term,
+SCALE.md §3). Knobs: ``n_partitions`` (the re-sort's
 file count, and the span floor an as-is source must reach),
 ``n_buckets`` (query-side pruning granularity), ``n_salts`` ×
 ``heavy_df_threshold`` (merge-group upper bound ≈ heavy-term df / n_salts).
@@ -61,12 +67,10 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .. import B, BLOCK_SIZE, K1
-from ..query.algebra import SPARK_TOKEN_RE
 
 # groups per bucket in the compaction merge — parallelism knob, independent
 # of the bucket count (a term always lands in exactly one (bucket, sub))
@@ -126,16 +130,14 @@ def commit_meta(index_dir: str, meta: dict) -> None:
 # doc-disjoint salt tasks (≤ n_salts) — ~2M postings ≈ a comfortable
 # single-task decode+encode (sub-second); far below it, extra tasks just
 # multiply per-task file-open overhead
-SPLIT_POSTINGS = int(os.environ.get("SPARK_GRAFT_SPLIT_POSTINGS", 2_000_000))
+SPLIT_POSTINGS = 2_000_000
 
 # chunk-file compression: intermediate SPIMI chunks are written once and read
-# twice (term stats + merge) — cheap-but-fast beats maximum ratio here
-# chunk varbyte columns are already compressed (delta-gap + base-128) —
-# zstd over them costs SPIMI-write and merge-read CPU for ~25% size on a
-# TRANSIENT artifact; metadata columns stay zstd. Env var forces one codec
-# for everything (diagnostics).
-_CHUNK_CODEC_ENV = os.environ.get("SPARK_GRAFT_CHUNK_COMPRESSION")
-CHUNK_COMPRESSION = _CHUNK_CODEC_ENV or {
+# twice (term stats + merge) — cheap-but-fast beats maximum ratio here.
+# The varbyte columns are already compressed (delta-gap + base-128) — zstd
+# over them costs SPIMI-write and merge-read CPU for ~25% size on a
+# TRANSIENT artifact; metadata columns stay zstd.
+CHUNK_COMPRESSION = {
     **{c: "NONE" for c in ("doc_ids", "tfs", "dls", "pos")},
     **{
         c: "ZSTD"
@@ -145,24 +147,6 @@ CHUNK_COMPRESSION = _CHUNK_CODEC_ENV or {
         )
     },
 }
-
-# the SPIMI chunk files of a chunks dir (manifests are ``part-*.manifest.json``)
-CHUNK_GLOB = "part-*.parquet"
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("term", T.StringType()),
-        T.StructField("part_id", T.IntegerType()),
-        T.StructField("min_doc", T.LongType()),
-        T.StructField("max_doc", T.LongType()),
-        T.StructField("n_docs", T.IntegerType()),
-        T.StructField("cf", T.LongType()),
-        T.StructField("doc_ids", T.BinaryType()),
-        T.StructField("tfs", T.BinaryType()),
-        T.StructField("dls", T.BinaryType()),
-        T.StructField("pos", T.BinaryType()),
-    ]
-)
 
 BLOCK_SCHEMA = T.StructType(
     [
@@ -323,133 +307,6 @@ DOCS_SCHEMA = (
 )
 
 
-def _conv_offsets(
-    transcripts: DataFrame, n_range_parts: int = 64
-) -> "tuple[DataFrame, int, bool]":
-    """(conv_offsets(conv_id, conv_offset, n_turns), n_convs, dense).
-
-    Two-level prefix sum: per-conversation turn counts are range-partitioned
-    by ``conv_id``; partition subtotals (one long per partition) come to the
-    driver and go back as broadcast offsets. ``dense`` is true when every
-    conversation's ``turn_idx`` is exactly 0..n_turns-1 (the reference's PK
-    contract) — checked with one tiny agg over the conv relation, never the
-    corpus.
-    """
-    spark = transcripts.sparkSession
-    # density needs all four: count, min=0, max=n-1 AND countDistinct=n —
-    # without the distinct check a duplicated key (turn_idx [0,1,1,3])
-    # passes and the broadcast fast path would assign duplicate doc_ids.
-    # countDistinct costs a distinct-pair shuffle of the two PK columns
-    # (the snapshot build needs no offsets: it reads a key-sorted source).
-    convs = (
-        transcripts.groupBy("conv_id")
-        .agg(
-            F.count("*").alias("n_turns"),
-            F.min("turn_idx").alias("_mn"),
-            F.max("turn_idx").alias("_mx"),
-            F.countDistinct("turn_idx").alias("_nd"),
-        )
-        .repartitionByRange(n_range_parts, "conv_id")
-        .sortWithinPartitions("conv_id")
-        .withColumn("part_id", F.spark_partition_id())
-        .persist()
-    )
-    agg = convs.groupBy("part_id").agg(
-        F.sum("n_turns").alias("s"),
-        F.count("*").alias("n"),
-        F.sum(
-            F.when(
-                (F.col("_mn") != 0)
-                | (F.col("_mx") != F.col("n_turns") - 1)
-                | (F.col("_nd") != F.col("n_turns")),
-                1,
-            ).otherwise(0)
-        ).alias("bad"),
-    ).collect()
-    subtotals = {r.part_id: r.s for r in agg}
-    n_convs = int(sum(r.n for r in agg))
-    dense = sum(r.bad for r in agg) == 0
-    offsets, acc = [], 0
-    for pid in sorted(subtotals):
-        offsets.append((pid, acc))
-        acc += subtotals[pid]
-    off_df = spark.createDataFrame(offsets, "part_id int, part_offset long")
-    w_part = (
-        Window.partitionBy("part_id")
-        .orderBy("conv_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    conv_offsets = (
-        convs.join(F.broadcast(off_df), "part_id")
-        .withColumn(
-            "conv_offset",
-            F.col("part_offset") + F.coalesce(F.sum("n_turns").over(w_part), F.lit(0)),
-        )
-        .select("conv_id", "conv_offset", "n_turns")
-    )
-    return conv_offsets, n_convs, dense
-
-
-# conversations below this count broadcast the offset table (map-only doc-id
-# assignment); above it, fall back to a shuffle join — the 10^9-conversation
-# regime where a broadcast table would not fit executors
-BROADCAST_CONV_LIMIT = 20_000_000
-
-
-def assign_doc_ids(transcripts: DataFrame, n_range_parts: int = 64) -> DataFrame:
-    """transcripts + dense stable ``doc_id`` (global (conv_id, turn_idx) rank).
-
-    Fast path (the reference's PK contract holds: ``turn_idx`` is dense
-    0..n-1 per conversation): ``doc_id = conv_offset + turn_idx`` via a
-    broadcast join of the small conversation-offset table — the corpus is
-    touched by exactly ONE map-side pass (no corpus shuffle, no window).
-    Fallback (non-dense turn_idx): shuffle join + per-conversation
-    ``row_number`` window (the round-1 path). Both produce the identical
-    global (conv_id, turn_idx) rank, deterministic under re-runs.
-    """
-    conv_offsets, n_convs, dense = _conv_offsets(transcripts, n_range_parts)
-    if dense:
-        off = conv_offsets.select("conv_id", "conv_offset")
-        if n_convs <= BROADCAST_CONV_LIMIT:
-            off = F.broadcast(off)
-        return transcripts.join(off, "conv_id").withColumn(
-            "doc_id",
-            (F.col("conv_offset") + F.col("turn_idx").cast("long")).cast("long"),
-        ).drop("conv_offset")
-    w_turn = Window.partitionBy("conv_id").orderBy("turn_idx")
-    out = transcripts.join(
-        conv_offsets.select("conv_id", "conv_offset"), "conv_id"
-    ).withColumn(
-        "doc_id", (F.col("conv_offset") + F.row_number().over(w_turn) - 1).cast("long")
-    )
-    return out.drop("conv_offset")
-
-
-BASE_COLS = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-
-
-def build_docs(transcripts: DataFrame) -> DataFrame:
-    """The docs-store relation as one Spark plan: source row + doc_id + dl
-    (JVM-side token count). The snapshot build writes the same rows from
-    its fused pass; this plan serves the DuckDB contract query
-    ``docs_table_transcripts``.
-
-    Schema evolution (A6/§1.3): the reference's contract is new-columns-
-    appended-only (``transform/RecordsTransform.java:25-38`` re-pulls the
-    schema on column growth) — any column beyond the base six is carried
-    through to the docs store unchanged, after ``dl``. Doc ids depend only
-    on (conv_id, turn_idx), so an appended column can never change them.
-    """
-    extras = [c for c in transcripts.columns if c not in BASE_COLS]
-    with_ids = assign_doc_ids(transcripts)
-    return with_ids.withColumn(
-        "dl",
-        F.size(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit(SPARK_TOKEN_RE), 0)
-        ),
-    ).select("doc_id", *BASE_COLS, "dl", *extras)
-
-
 def _write_chunk(
     chunks_dir: str, part_id: int, rows: dict,
     n_rows_docs: int, n_terms: int, t0: float, *, n_buckets: int,
@@ -470,8 +327,8 @@ def _write_chunk(
     ~0.63 and capped build scaling at ~0.73). The salt is
     ``salt_of_part(part_id, n_salts)`` — constant per file — and is
     written for EVERY row; the merge planner uses it only for heavy-term
-    groups. ``n_buckets``/``n_salts`` are recorded in the manifest and
-    must match the merge's, or it falls back to the shuffle merge."""
+    groups. ``n_buckets``/``n_salts`` are recorded in the manifest; the
+    merge raises when they do not match its own."""
     import pyarrow as pa
 
     from .bucketing import bucket_sub_arrays, salt_of_part
@@ -907,13 +764,15 @@ def span_key_overlap(mans: "list[dict]") -> "tuple | None":
     return None
 
 
-def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
+def _pin_worklist(chunks_dir: str, pin: dict, resume: bool,
                   wfs=None) -> bool:
-    """Pin the span work list under the chunks dir; returns the
-    effective resume flag (False wipes stale outputs — manifests from a
-    different layout cannot be trusted as span indices). All I/O goes
-    through ``wfs`` so the worklist and the wiped files live on the SAME
-    store the tasks write to."""
+    """Pin the span work list and the chunk layout under the chunks dir;
+    returns the effective resume flag. Any other pin (another span list,
+    bucket or salt count, sub-split or ``store_positions``; or an older
+    ``_filelist.json``) wipes the chunks: their manifests name other spans,
+    or their rows carry merge keys or positions the merge cannot use. All
+    I/O goes through ``wfs`` so the worklist and the wiped files live on
+    the SAME store the tasks write to."""
     from .fswrite import LOCAL
 
     _wfs = wfs or LOCAL
@@ -921,7 +780,7 @@ def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
     flist_path = os.path.join(chunks_dir, "_filelist.json")
     if resume:
         if _wfs.exists(flist_path):
-            if _wfs.read_json(flist_path) != names:
+            if _wfs.read_json(flist_path) != pin:
                 resume = False
         else:
             resume = False
@@ -929,7 +788,7 @@ def _pin_worklist(chunks_dir: str, names: "list[str]", resume: bool,
         for n in _wfs.listdir(chunks_dir):
             if n.startswith("part-"):
                 _wfs.remove(os.path.join(chunks_dir, n))
-    _wfs.write_json(names, flist_path)
+    _wfs.write_json(pin, flist_path)
     return resume
 
 
@@ -963,8 +822,14 @@ def build_segments(
     global disjointness check (``span_key_overlap``).
     """
     paths = IndexPaths(index_dir)
-    names = [f"{os.path.basename(p)}:{lo}-{hi}" for p, lo, hi in spans]
-    resume = _pin_worklist(paths.chunks, names, resume, wfs=filesystem)
+    pin = {
+        "spans": [f"{os.path.basename(p)}:{lo}-{hi}" for p, lo, hi in spans],
+        "n_buckets": int(n_buckets),
+        "n_salts": int(n_salts),
+        "n_subs": MERGE_SUBSPLIT,
+        "store_positions": bool(store_positions),
+    }
+    resume = _pin_worklist(paths.chunks, pin, resume, wfs=filesystem)
     done = completed_partitions(paths.chunks, wfs=filesystem) if resume else set()
     from .fswrite import LOCAL
 
@@ -1052,87 +917,44 @@ def build_segments(
     return len(run_tasks(spark, todo, kern))
 
 
-def _read_chunks(spark: SparkSession, chunks_dir: str) -> DataFrame:
-    """Chunk reader tolerant of an all-empty corpus (no token → no chunk
-    files): returns an empty, correctly-typed relation instead of a
-    path-not-found error."""
-    import glob
-
-    if not glob.glob(os.path.join(chunks_dir, CHUNK_GLOB)):
-        return spark.createDataFrame([], CHUNK_SCHEMA)
-    # mergeSchema: a resumed dir may mix layout generations (chunks with
-    # and without the bucket/sub/salt columns) — the shuffle merge
-    # recomputes its own keys, so the union schema is always safe
-    return spark.read.option("mergeSchema", "true").parquet(
-        os.path.join(chunks_dir, CHUNK_GLOB)
-    )
-
-
-def build_term_stats(
-    spark: SparkSession, chunks_dir: str, n_buckets: int
-) -> DataFrame:
-    """terms(term, df, cf, bucket) from chunk rows (map-side combined sums)."""
-    from .bucketing import bucket_expr
-
-    chunks = _read_chunks(spark, chunks_dir)
-    return chunks.groupBy("term").agg(
-        F.sum("n_docs").cast("long").alias("df"), F.sum("cf").alias("cf")
-    ).withColumn("bucket", bucket_expr("term", n_buckets))
-
-
-# chunk-term row budget for the driver-side terms aggregation: the chunk
-# manifests record n_terms per chunk, so the decision costs nothing. At or
-# below the budget the (term, n_docs, cf) columns are read with pyarrow and
-# aggregated in pandas — no Spark job, no ~2 s fixed floor; above it the
-# distributed groupBy runs (the 10^12-doc regime, where the vocabulary ×
-# chunk-count product no longer fits one machine).
-DRIVER_TERMS_ROWS = int(os.environ.get("SPARK_GRAFT_DRIVER_TERMS_ROWS", 30_000_000))
+def _chunk_files(chunks_dir: str, mans: "list[dict]") -> "list[str]":
+    """The chunk files the committed manifests name."""
+    return [
+        os.path.join(chunks_dir, f"part-{m['partition_id']:05d}.parquet")
+        for m in mans
+    ]
 
 
 def build_term_stats_driver(
     chunks_dir: str, n_buckets: int, wfs=None
-) -> "pd.DataFrame | None":
-    """terms(term, df, cf, bucket) aggregated driver-side with pyarrow, or
-    None when the chunk-term row count (from the manifests) exceeds
-    DRIVER_TERMS_ROWS — or when manifests are ABSENT for existing chunk
-    files (the budget can't be priced, so never aggregate unboundedly on
-    the driver; round-3 ADVICE). File listing and manifest reads resolve
-    through ``wfs`` so object-store deployments price and read the store
-    the tasks wrote to. Output is identical to ``build_term_stats`` —
-    per-term integer sums are order-independent."""
-    import fnmatch
-
+) -> "pd.DataFrame":
+    """terms(term, df, cf, bucket), sorted by term: one pyarrow read of the
+    ``(term, n_docs, cf)`` columns of the chunk files the manifests name,
+    summed per term in pandas on the driver (no Spark job). Driver memory
+    is linear in the chunk-term rows (SCALE.md §3). Manifest reads and the
+    file reads resolve through ``wfs`` so object-store deployments read
+    the store the tasks wrote to."""
     import pyarrow.dataset as ds
 
+    from .bucketing import bucket_of
     from .fswrite import LOCAL
 
     _wfs = wfs or LOCAL
-    mans = read_manifests(chunks_dir, wfs=_wfs)
-    if mans and sum(m.get("n_terms", 0) for m in mans) > DRIVER_TERMS_ROWS:
-        return None
-    files = sorted(
-        os.path.join(chunks_dir, n)
-        for n in _wfs.listdir(chunks_dir)
-        if fnmatch.fnmatch(n, "part-*.parquet")
-    )
+    files = _chunk_files(chunks_dir, read_manifests(chunks_dir, wfs=_wfs))
     if not files:
         return pd.DataFrame(
             {"term": pd.Series([], dtype=object), "df": pd.Series([], dtype=np.int64),
              "cf": pd.Series([], dtype=np.int64), "bucket": pd.Series([], dtype=np.int32)}
         )
-    if not mans:
-        return None
     tbl = ds.dataset(files, filesystem=_wfs.fs).to_table(
         columns=["term", "n_docs", "cf"]
     )
-    pdf = tbl.to_pandas()
     agg = (
-        pdf.groupby("term", sort=True)
+        tbl.to_pandas()
+        .groupby("term", sort=True)
         .agg(df=("n_docs", "sum"), cf=("cf", "sum"))
         .reset_index()
     )
-    from .bucketing import bucket_of
-
     agg["df"] = agg["df"].astype(np.int64)
     agg["cf"] = agg["cf"].astype(np.int64)
     agg["bucket"] = np.fromiter(
@@ -1303,36 +1125,15 @@ _EMPTY_BLOCK_ROWS = {
 }
 
 
-def _merge_group(
-    pdf: pd.DataFrame, avgdl: float, bucket: int, salt: int,
-    store_positions: bool = False,
-) -> dict:
-    """Merge one (bucket, sub, salt) group's chunk rows into doc-ordered
-    128-posting blocks — pandas spelling (the shuffle path). Sorts
-    the frame, then hands column bytes to ``_blocks_from_sorted``."""
-    if len(pdf) == 0:
-        return dict(_EMPTY_BLOCK_ROWS)
-    pdf = pdf.sort_values(["term", "min_doc"], kind="stable")
-    return _blocks_from_sorted(
-        pdf["term"].to_numpy(),
-        pdf["n_docs"].to_numpy(dtype=np.int64),
-        b"".join(pdf["doc_ids"]),
-        b"".join(pdf["tfs"]),
-        b"".join(pdf["dls"]),
-        b"".join(pdf["pos"]) if store_positions else None,
-        avgdl, bucket, salt, store_positions,
-    )
-
-
 def _merge_group_arrow(
     tbl, avgdl: float, bucket: int, salt: int,
     store_positions: bool = False,
 ) -> dict:
-    """Arrow spelling of ``_merge_group`` — the zero-shuffle merge path:
-    the task read its group's chunk rows itself (pyarrow, row-group
-    pruned), so the column bytes go straight from the Arrow buffers into
-    the batched varbyte decode with no per-row Python bytes objects (the
-    Arrow→pandas materialization was ~40% of the old merge stage)."""
+    """Merge one (bucket, sub, salt) group's chunk rows into doc-ordered
+    128-posting blocks. The task read its group's rows itself (pyarrow,
+    row-group pruned), so the column bytes go straight from the Arrow
+    buffers into the batched varbyte decode (``_blocks_from_sorted``) with
+    no per-row Python bytes objects."""
     from .codec import arrow_binary_bytes
 
     if tbl.num_rows == 0:
@@ -1458,84 +1259,6 @@ def _blocks_from_sorted(
     return out
 
 
-def _postings_writer(avgdl: float, out_dir: str, store_positions: bool = False,
-                     wfs=None):
-    """applyInPandas kernel wrapper around ``_merge_group`` that writes its
-    group's block file DIRECTLY (pyarrow, tmp→rename into the hive layout
-    ``bucket=K/part-<sub>-<salt>.parquet``) and returns one manifest row —
-    the snapshot-build path. This keeps the block table out of the
-    Python→JVM Arrow hop and out of the JVM parquet writer + serial job
-    commit (measured ~25% of the merge stage), the same direct-write shape
-    as the fused segment pass. The caller wipes ``out_dir`` first;
-    deterministic names make retries overwrite in place."""
-
-    from .fswrite import LOCAL
-
-    _wfs = wfs or LOCAL
-
-    def write_group(key, pdf):
-        import pyarrow as pa
-
-        pa.set_cpu_count(1)
-        t0 = time.time()
-        bucket, sub, salt = int(key[0]), int(key[1]), int(key[2])
-        out = _merge_group(pdf, avgdl, bucket, salt, store_positions)
-        n_blocks = len(out["term"])
-        if n_blocks:
-            cols = {k: v for k, v in out.items() if k != "bucket"}
-            d = os.path.join(out_dir, f"bucket={bucket}")
-            _wfs.makedirs(d)
-            path = os.path.join(d, f"part-{sub:03d}-{salt:03d}.parquet")
-            _wfs.write_table(pa.table(cols), path, compression=POSTINGS_COMPRESSION)
-        return pd.DataFrame(
-            [{
-                "bucket": bucket, "sub": sub, "salt": salt,
-                "n_blocks": n_blocks,
-                "wall_ms": int((time.time() - t0) * 1000),
-            }]
-        )
-
-    return write_group
-
-
-def _salted_chunks(
-    spark: SparkSession,
-    chunks_dir: str,
-    terms: DataFrame,
-    n_buckets: int,
-    n_salts: int,
-    heavy_df_threshold: int,
-) -> DataFrame:
-    """Chunk rows + (bucket, sub, salt) merge-group keys. Heavy terms
-    (df > threshold) split into ``n_salts`` sub-streams by
-    ``xxhash64(min_doc)`` so no single merge group holds a stop-word's whole
-    posting list; each doc is in exactly one sub-stream, so query-time BM25
-    sums are unaffected (streams of one term just add)."""
-    from .bucketing import bucket_expr
-
-    chunks = _read_chunks(spark, chunks_dir)
-    heavy = terms.where(F.col("df") > heavy_df_threshold).select(
-        "term", F.lit(True).alias("is_heavy")
-    )
-    return (
-        chunks.join(F.broadcast(heavy), "term", "left")
-        .withColumn(
-            "salt",
-            F.when(
-                F.col("is_heavy"),
-                F.pmod(F.xxhash64("min_doc"), F.lit(n_salts)).cast("int"),
-            ).otherwise(F.lit(0)),
-        )
-        .drop("is_heavy")
-        .withColumn("bucket", bucket_expr("term", n_buckets))
-        # sub-split within a bucket (a term maps to exactly one sub) so merge
-        # parallelism is n_buckets × MERGE_SUBSPLIT, independent of the
-        # bucket count chosen for query pruning
-        .withColumn("sub", F.pmod(F.xxhash64("term"), F.lit(MERGE_SUBSPLIT)))
-    )
-
-
-
 # Worker-global chunk-reader cache for the zero-shuffle merge: every merge
 # task reads from (almost) every chunk file, so parsing each file's footer
 # per task is the dominant fixed cost (measured ~2 ms x 118 files x 257
@@ -1588,7 +1311,7 @@ def _chunk_readers(files: "list[str]", merge_id: str, fs=None):
     return out
 
 
-def _read_merge_group(
+def _read_group_rows(
     readers, cols: "list[str]", b: int,
     sub_lo: int = 0, sub_hi: "int | None" = None,
     own_salts: "list[int] | None" = None,
@@ -1645,35 +1368,6 @@ def _read_merge_group(
     return tbl.filter(mask).select(out_cols)
 
 
-def _build_postings_direct_shuffle(
-    spark: SparkSession,
-    chunks_dir: str,
-    terms: DataFrame,
-    avgdl: float,
-    n_buckets: int,
-    out_dir: str,
-    n_salts: int = 8,
-    heavy_df_threshold: int = 10_000,
-    store_positions: bool = False,
-    filesystem=None,
-) -> int:
-    """Legacy salted compaction merge THROUGH a shuffle (kept as the
-    fallback for chunk files without the (bucket, sub) sorted layout):
-    each merge task writes its group's block file into the hive layout
-    itself and returns a manifest row. Returns total blocks."""
-    salted = _salted_chunks(
-        spark, chunks_dir, terms, n_buckets, n_salts, heavy_df_threshold
-    )
-    manifest = salted.groupBy("bucket", "sub", "salt").applyInPandas(
-        _postings_writer(
-            avgdl, out_dir, store_positions=store_positions, wfs=filesystem
-        ),
-        schema="bucket int, sub int, salt int, n_blocks long, wall_ms long",
-    )
-    agg = manifest.agg(F.coalesce(F.sum("n_blocks"), F.lit(0)).alias("nb")).first()
-    return int(agg.nb)
-
-
 def build_postings_direct(
     spark: SparkSession,
     chunks_dir: str,
@@ -1717,45 +1411,33 @@ def build_postings_direct(
     as one ``run_tasks`` job whose tasks yield ``(bucket, sub, salt,
     n_blocks, wall_ms)``.
 
-    Chunk files WITHOUT the sorted layout (older indexes, resumed builds)
-    fall back to the legacy shuffle merge. Returns total blocks."""
-    import fnmatch
+    The merge reads the chunk files the manifests name, and each manifest
+    must record the layout it merges (``n_buckets``, ``n_subs``,
+    ``n_salts``); otherwise it raises ``ValueError`` naming the chunk and
+    the key. ``build_index`` pins that layout (and ``store_positions``)
+    with the span list, so its resumes never reach the raise. Returns
+    total blocks."""
     import shutil
 
-    import pyarrow.dataset as pads
-
-    from .bucketing import bucket_of, sub_of
+    from .bucketing import bucket_of, salt_of_part, sub_of
     from .fswrite import LOCAL
 
+    wfs = filesystem or LOCAL
+    mans = read_manifests(chunks_dir, wfs=wfs)
+    layout = {"n_buckets": n_buckets, "n_subs": MERGE_SUBSPLIT, "n_salts": n_salts}
+    for m in mans:
+        for key, want in layout.items():
+            if m.get(key) != want:
+                raise ValueError(
+                    f"chunk part-{m['partition_id']:05d} has {key}="
+                    f"{m.get(key)!r}; the merge needs {want!r}"
+                )
     heavy = terms.loc[terms["df"] > heavy_df_threshold, ["term", "df"]]
     shutil.rmtree(out_dir, ignore_errors=True)
     os.makedirs(out_dir, exist_ok=True)
-    wfs = filesystem or LOCAL
-    names = sorted(
-        nm for nm in wfs.listdir(chunks_dir) if fnmatch.fnmatch(nm, CHUNK_GLOB)
-    )
-    files = [os.path.join(chunks_dir, nm) for nm in names]
+    files = _chunk_files(chunks_dir, mans)
     if not files:
         return 0
-    mans = read_manifests(chunks_dir, wfs=wfs)
-    layout_ok = (
-        "salt" in pads.dataset(files[:1], filesystem=wfs.fs).schema.names
-        and mans
-        and all(
-            m.get("n_buckets") == n_buckets
-            and m.get("n_subs") == MERGE_SUBSPLIT
-            and m.get("n_salts") == n_salts
-            for m in mans
-        )
-    )
-    if not layout_ok:
-        return _build_postings_direct_shuffle(
-            spark, chunks_dir,
-            spark.createDataFrame(heavy, schema="term string, df long"),
-            avgdl, n_buckets, out_dir,
-            n_salts=n_salts, heavy_df_threshold=heavy_df_threshold,
-            store_positions=store_positions, filesystem=filesystem,
-        )
 
     # split plan: a (bucket, sub) group fans out only when its heavy
     # terms' summed df warrants it — k = ceil(Σdf / SPLIT_POSTINGS) tasks
@@ -1802,13 +1484,7 @@ def build_postings_direct(
         cols.append("pos")
     _fs = wfs.fs
     merge_id = uuid.uuid4().hex  # the tasks' reader-cache key
-    # part_id (→ salt class) straight off the file name: part-NNNNN
-    import re
-
-    _pat = re.compile(r"part-(\d+)\.parquet$")
-    file_salts = [
-        int(_pat.search(f).group(1)) % n_salts for f in files
-    ]
+    file_salts = [salt_of_part(m["partition_id"], n_salts) for m in mans]
 
     def _write_block_file(out, b, s, salt):
         import pyarrow as pa
@@ -1838,7 +1514,7 @@ def build_postings_direct(
                 # split (b, sub) groups are owned by their salt tasks.
                 # Encoding: s = -1 - sub_lo, salt = sub_hi.
                 sub_lo, sub_hi = -1 - s, salt
-                btbl = _read_merge_group(
+                btbl = _read_group_rows(
                     readers, cols, b, sub_lo=sub_lo, sub_hi=sub_hi
                 )
                 sub_arr = (
@@ -1860,7 +1536,7 @@ def build_postings_direct(
             own = [c for c in range(n_salts) if c % k == salt]
             if salt == 0:
                 # all light rows + heavy rows of the owned salts
-                tbl = _read_merge_group(
+                tbl = _read_group_rows(
                     readers, cols, b, sub_lo=s, sub_hi=s,
                     own_salts=own, heavy=hv,
                 )
@@ -1869,7 +1545,7 @@ def build_postings_direct(
                 sub_readers = [
                     r for r, fs_ in zip(readers, file_salts) if fs_ in own
                 ]
-                tbl = _read_merge_group(
+                tbl = _read_group_rows(
                     sub_readers, cols, b, sub_lo=s, sub_hi=s,
                     own_salts=own, heavy=hv, heavy_only=True,
                 )
@@ -2155,24 +1831,10 @@ def build_index(
         metrics.append(("stats", "wall_s", time.time() - t1))
 
         t3 = time.time()
-        # terms stage: driver pyarrow aggregation under the manifest-derived
-        # row budget (no Spark job — kills a fixed ~2 s floor that dragged
-        # the N→4N efficiency), distributed groupBy above it. The merge only
-        # needs the HEAVY terms (df > threshold) — a few hundred rows either
-        # way, handed over as a driver frame.
+        # terms stage: one driver pyarrow aggregate (no Spark job); the
+        # merge takes its heavy rows (df > threshold) from the same frame
         terms_pdf = build_term_stats_driver(paths.chunks, n_buckets, wfs=filesystem)
-        if terms_pdf is not None:
-            write_terms_driver(terms_pdf, paths.terms)
-        else:
-            build_term_stats(spark, paths.chunks, n_buckets).write.mode(
-                "overwrite"
-            ).parquet(paths.terms)
-            terms_pdf = (
-                spark.read.parquet(paths.terms)
-                .where(F.col("df") > heavy_df_threshold)
-                .select("term", "df")
-                .toPandas()
-            )
+        write_terms_driver(terms_pdf, paths.terms)
         metrics.append(("terms", "wall_s", time.time() - t3))
 
         t4 = time.time()

@@ -177,9 +177,7 @@ def read_segment_changes(
 # update driver-side in pandas — one pyarrow read + merge instead of a
 # full-outer sort-merge join and a distributed rewrite whose cost grows
 # with the INDEX vocabulary, not the batch
-TERMS_UPDATE_DRIVER_ROWS = int(
-    os.environ.get("SPARK_GRAFT_TERMS_UPDATE_DRIVER_ROWS", 5_000_000)
-)
+TERMS_UPDATE_DRIVER_ROWS = 5_000_000
 
 
 def _terms_table_rows(terms_dir: str) -> "int | None":
@@ -931,10 +929,6 @@ def _splice_live_sorted(
             return False, "no live rows"
     except Exception as e:  # precondition probing over arbitrary layouts —
         # decline to the re-sort path, but keep the reason inspectable
-        if os.environ.get("SPARK_GRAFT_DEBUG"):
-            import traceback
-
-            traceback.print_exc()
         return False, repr(e)
 
     os.makedirs(tmp, exist_ok=True)
@@ -1010,8 +1004,6 @@ def _splice_live_sorted(
     try:
         written = sum(run_tasks(spark, list(enumerate(kept_files)), kern))
     except Exception as e:
-        if os.environ.get("SPARK_GRAFT_DEBUG"):
-            raise
         shutil.rmtree(tmp, ignore_errors=True)
         return False, repr(e)
     finally:

@@ -2,8 +2,8 @@
 directories: a query reads only the files that hold its terms, and the
 answers stay identical to the oracle, as do the Spark-scan (distributed)
 route's — on an index
-with a committed delta segment plus deletes, on a shuffle-writer postings
-layout, through a ``file://`` root, and for positional phrase reads. Each
+with a committed delta segment plus deletes, through a ``file://`` root,
+and for positional phrase reads. Each
 term's rows are sliced out of its row runs, which the directory finds in
 unsorted row groups too, and concurrent queries on one searcher answer as
 sequential ones."""
@@ -11,7 +11,6 @@ sequential ones."""
 from __future__ import annotations
 
 import os
-import shutil
 from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
@@ -141,49 +140,6 @@ def test_directory_answers_match_oracle_and_spark_scan(spark, index, oracle, que
     qs = _all_queries(queries)
     _check_oracle(s, oracle, qs)
     _check_oracle(s, oracle, qs, route="distributed")
-
-
-def test_shuffle_writer_layout(spark, index, oracle, queries, tmp_path_factory):
-    """The shuffle writer spreads a bucket's terms over its files by
-    ``pmod(xxhash64(term))``, the direct writer by md5 — file names say
-    nothing about where a term lives. The directory-driven fetch answers
-    identically on both layouts."""
-    import pyarrow.dataset as pads
-
-    from sync2any_spark.index.builder import (
-        IndexPaths,
-        _build_postings_direct_shuffle,
-        build_term_stats_driver,
-    )
-
-    paths = IndexPaths(index)
-    st = pads.dataset(paths.stats).to_table().to_pandas().iloc[0]
-    terms_pdf = build_term_stats_driver(paths.chunks, PARAMS["n_buckets"])
-    heavy = terms_pdf[terms_pdf["df"] > PARAMS["heavy_df_threshold"]]
-    terms = spark.createDataFrame(heavy, schema="term string, df long, cf long, bucket int")
-    shuf = str(tmp_path_factory.mktemp("fetchdir_shufpost"))
-    _build_postings_direct_shuffle(
-        spark, paths.chunks, terms, float(st.avgdl), PARAMS["n_buckets"], shuf,
-        n_salts=PARAMS["n_salts"], heavy_df_threshold=PARAMS["heavy_df_threshold"],
-        store_positions=True,
-    )
-    d2 = str(tmp_path_factory.mktemp("idx_fetchdir_shuf"))
-    shutil.rmtree(d2)
-    shutil.copytree(index, d2)
-    shutil.rmtree(os.path.join(d2, "postings"))
-    shutil.copytree(shuf, os.path.join(d2, "postings"))
-
-    a, b = IndexSearcher(spark, index), IndexSearcher(spark, d2)
-    assert {os.path.basename(f) for f in _paths_under(os.path.join(d2, "postings"))} != {
-        os.path.basename(f) for f in _paths_under(os.path.join(index, "postings"))
-    }
-    qs = _all_queries(queries)
-    _check_oracle(b, oracle, qs)
-    for q in qs:
-        ra, rb = a.search(q, 10), b.search(q, 10)
-        assert [x[0] for x in ra] == [x[0] for x in rb], q
-        for (_, sa), (_, sb) in zip(ra, rb):
-            assert sa == pytest.approx(sb, rel=1e-12), q
 
 
 def test_file_uri_root(spark, index, oracle, queries):

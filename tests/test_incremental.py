@@ -312,6 +312,49 @@ def test_sliced_apply_equals_one_collect_apply(
     _check_oracle_identity(spark, sliced, QUERIES)
 
 
+def test_terms_over_driver_budget_update_in_spark(
+    spark, pristine, increments, tmp_path_factory, monkeypatch
+):
+    """An old terms table over TERMS_UPDATE_DRIVER_ROWS (monkeypatched to
+    0) declines the driver rewrite to the Spark full-outer join, which
+    writes the driver path's terms table (compared in term order), and
+    the reference queries stay oracle-identical."""
+    import pyarrow.dataset as pads
+    import pyarrow.parquet as pq
+
+    import sync2any_spark.index.builder as builder
+    import sync2any_spark.streaming.incremental as inc_mod
+    from sync2any_spark.generator import ensure_queries
+
+    def terms_of(idx):
+        tv = builder.read_index_meta(idx)["terms_version"]
+        return (
+            pads.dataset(builder.IndexPaths(idx).terms_v(tv))
+            .to_table(columns=["term", "df", "cf", "bucket"])
+            .sort_by("term")
+            .to_pylist()
+        )
+
+    drv = _copy_index(pristine, tmp_path_factory, "idx_terms_driver")
+    spk = _copy_index(pristine, tmp_path_factory, "idx_terms_spark")
+    apply_increments(spark, drv, increments)
+    calls = []
+    spark_update = inc_mod._update_terms_spark
+
+    def counted(*a, **kw):
+        calls.append(1)
+        return spark_update(*a, **kw)
+
+    monkeypatch.setattr(inc_mod, "TERMS_UPDATE_DRIVER_ROWS", 0)
+    monkeypatch.setattr(inc_mod, "_update_terms_spark", counted)
+    apply_increments(spark, spk, increments)
+    assert calls == [1]
+    assert terms_of(spk) == terms_of(drv)
+    assert _apply_state(spark, spk) == _apply_state(spark, drv)
+    refs = pq.read_table(ensure_queries()).column("query_text").to_pylist()
+    _check_oracle_identity(spark, spk, refs)
+
+
 def test_stored_text_over_budget_splits_slices(
     spark, pristine, tmp_path_factory, monkeypatch
 ):

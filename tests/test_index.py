@@ -556,6 +556,11 @@ def test_force_merge_postings(spark, transcripts_sf0001, tmp_path_factory, oracl
         for q in queries.itertuples(index=False)
     }
     phrase_before = phrase_topk_positional(s0, "ok w0000", 5)
+    # positions survive the salted, split merge ("ok" is heavy)
+    want = oracle[0].phrase_topk("ok w0000", 5)
+    assert [g[0] for g in phrase_before] == [w[0] for w in want]
+    for (_, gs), (_, ws) in zip(phrase_before, want):
+        assert gs == pytest.approx(ws, rel=1e-9)
     n_before = len(globmod.glob(f"{d}/postings/bucket=*/*.parquet"))
 
     sc = spark.sparkContext
@@ -639,64 +644,6 @@ def test_bucket_restricted_term_dictionary(spark, index_dir):
     # exactly like a sharded deployment where another node owns it
     other = next(iter(set(full._df_map.index) - want))
     assert shard.search(other, 5) == []
-
-
-def test_zero_shuffle_merge_equals_shuffle_merge(
-    spark, transcripts_sf0001, tmp_path_factory
-):
-    """The round-4 ZERO-SHUFFLE merge (sorted chunks + direct per-task
-    pyarrow reads) is the SAME logical operator as the legacy shuffle
-    merge: building the postings both ways over identical chunks must give
-    rank- and score-identical results for the full query set, with heavy
-    terms salted (balanced sub-streams) and light terms unsalted."""
-    import shutil
-
-    import pyarrow.dataset as pads
-
-    from sync2any_spark.index.builder import (
-        IndexPaths,
-        _build_postings_direct_shuffle,
-        build_index,
-        build_term_stats_driver,
-    )
-
-    d = str(tmp_path_factory.mktemp("idx_zsm"))
-    build_index(spark, transcripts_sf0001, d, store_positions=True, **PARAMS)
-    paths = IndexPaths(d)
-    st = pads.dataset(paths.stats).to_table().to_pandas().iloc[0]
-    terms_pdf = build_term_stats_driver(paths.chunks, PARAMS["n_buckets"])
-    heavy = terms_pdf[terms_pdf["df"] > PARAMS["heavy_df_threshold"]]
-    terms = spark.createDataFrame(
-        heavy, schema="term string, df long, cf long, bucket int"
-    )
-    shuf = str(tmp_path_factory.mktemp("idx_zsm_shufpost"))
-    _build_postings_direct_shuffle(
-        spark, paths.chunks, terms, float(st.avgdl), PARAMS["n_buckets"], shuf,
-        n_salts=PARAMS["n_salts"],
-        heavy_df_threshold=PARAMS["heavy_df_threshold"],
-        store_positions=True,
-    )
-    d2 = str(tmp_path_factory.mktemp("idx_zsm_b"))
-    shutil.rmtree(d2)
-    shutil.copytree(d, d2)
-    shutil.rmtree(f"{d2}/postings")
-    shutil.copytree(shuf, f"{d2}/postings")
-
-    a = IndexSearcher(spark, d)
-    b = IndexSearcher(spark, d2)
-    queries = pq.read_table(ensure_queries()).to_pandas()
-    for q in queries.itertuples(index=False):
-        ra = a.search(q.query_text, int(q.k))
-        rb = b.search(q.query_text, int(q.k))
-        assert [x[0] for x in ra] == [x[0] for x in rb], q.query_text
-        for (_, sa), (_, sb) in zip(ra, rb):
-            assert sa == pytest.approx(sb, rel=1e-12), q.query_text
-    # phrase positions survive the zero-shuffle path identically
-    from sync2any_spark.query.phrase import phrase_topk_positional
-
-    assert phrase_topk_positional(a, "ok w0000", 5) == pytest.approx(
-        phrase_topk_positional(b, "ok w0000", 5)
-    )
 
 
 def test_sorted_source_fast_path_identical_and_fallbacks(

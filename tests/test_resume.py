@@ -70,6 +70,76 @@ def test_resume_equals_single_run(
     assert _fingerprint(spark, resumed) == _fingerprint(spark, single)
 
 
+def test_resume_over_another_layout_rebuilds_every_span(
+    spark, tmp_path_factory
+):
+    """The chunk layout (n_buckets, n_salts, the merge sub-split and
+    store_positions) is pinned with the span list: a resume that changes
+    any of it rebuilds every span, and answers like a fresh build and the
+    oracle. Reusing the chunks instead would merge chunks without
+    positions into positional postings, or chunks keyed by the old bucket
+    count into the new one."""
+    import pyarrow.parquet as pq_mod
+
+    from sync2any_spark.generator import ensure_queries, ensure_transcripts
+    from sync2any_spark.oracle import BM25Oracle
+    from sync2any_spark.query.phrase import phrase_topk_positional
+    from sync2any_spark.query.wand import IndexSearcher
+
+    tbl = pq_mod.read_table(ensure_transcripts("sf0.001")).sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")]
+    )
+    # tiny row groups so the sorted file plans enough spans to be used as-is
+    src = str(tmp_path_factory.mktemp("resume_src")) + "/transcripts.parquet"
+    pq_mod.write_table(tbl, src, row_group_size=128)
+    oracle = BM25Oracle(list(enumerate(tbl.column("text").to_pylist())))
+    opts = dict(source_path=src, span_mb=0, n_partitions=12, n_salts=4,
+                heavy_df_threshold=500)
+
+    fresh = str(tmp_path_factory.mktemp("idx_layout_fresh"))
+    first = build_index(spark, None, fresh, resume=False, n_buckets=8,
+                        store_positions=True, **opts)
+    assert first["resort_reason"] is None
+    n_spans = first["partitions_built"]
+    want = IndexSearcher(spark, fresh)
+
+    d = str(tmp_path_factory.mktemp("idx_layout_resumed"))
+    build_index(spark, None, d, resume=False, n_buckets=8, **opts)
+    queries = pq_mod.read_table(ensure_queries()).to_pandas()
+    toks = next(t for t in oracle.tokens.values() if len(t) >= 6)
+    phrases = ["ok w0000", f"{toks[2]} {toks[3]}", "中 文"]
+    for change in ({"n_buckets": 8}, {"n_buckets": 4}):
+        res = build_index(spark, None, d, resume=True, store_positions=True,
+                          **change, **opts)
+        assert res["partitions_built"] == n_spans, change
+        got = IndexSearcher(spark, d)
+        assert got.n_buckets == change["n_buckets"]
+        for q in queries.itertuples(index=False):
+            hits = got.search(q.query_text, int(q.k))
+            assert hits == want.search(q.query_text, int(q.k)), q.query_text
+            exp = oracle.topk(q.query_text, int(q.k))
+            assert [h[0] for h in hits] == [e[0] for e in exp], q.query_text
+            for (_, hs), (_, es) in zip(hits, exp):
+                assert hs == pytest.approx(es, rel=1e-9), q.query_text
+        for p in phrases:
+            hits = phrase_topk_positional(got, p, 10)
+            assert hits == phrase_topk_positional(want, p, 10), p
+            exp = oracle.phrase_topk(p, 10)
+            assert [h[0] for h in hits] == [e[0] for e in exp], p
+            for (_, hs), (_, es) in zip(hits, exp):
+                assert hs == pytest.approx(es, rel=1e-9), p
+    # the merge itself refuses chunks of another layout, naming the key
+    from sync2any_spark.index import builder
+
+    paths = builder.IndexPaths(d)
+    terms = builder.build_term_stats_driver(paths.chunks, 4)
+    with pytest.raises(ValueError, match=r"part-00000 has n_buckets=4"):
+        builder.build_postings_direct(
+            spark, paths.chunks, terms, 1.0, 8, paths.postings, n_salts=4,
+        )
+    assert IndexSearcher(spark, d).search("ok", 5)  # postings left in place
+
+
 def test_doc_ids_stable_across_rebuilds(spark, transcripts_sf0001, tmp_path_factory):
     """Doc ids are a pure function of the data (SURVEY.md §7.3) — two
     independent builds assign identical ids."""

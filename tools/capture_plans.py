@@ -4,12 +4,10 @@
 Usage: python tools/capture_plans.py <out_dir> <suffix>
   e.g. python tools/capture_plans.py plans/r06 after
 
-Captures, for the query paths round 6 touched:
+Captures, into files named with <suffix>:
   - compact_docs: the plan that moves the text corpus when compact()'s
-    splice declines (before: the round-5 route, live docs through
-    build_docs — the assign_doc_ids window fallback of the since-deleted
-    two-pass build; after: build_index's re-sort, one repartitionByRange
-    + sortWithinPartitions write)
+    splice declines (build_index's re-sort, one repartitionByRange +
+    sortWithinPartitions write)
   - bm25_topk_distributed_transcripts: the declared distributed query
     (plan shape must be unchanged — included as the no-regression proof)
 
@@ -50,7 +48,7 @@ def main() -> None:
     idx = "/tmp/r06-plan-idx"
     shutil.rmtree(idx, ignore_errors=True)
     build_index(
-        spark, spark.read.parquet(src), idx, n_partitions=8, n_buckets=4,
+        spark, None, idx, n_partitions=8, n_buckets=4,
         resume=False, source_path=src, span_mb=4,
     )
     # an I/U/D batch so live_docs has tombstones (the compact shape)
@@ -72,14 +70,9 @@ def main() -> None:
     lv = live_docs(spark, idx).select(
         "conv_id", "turn_idx", "role", "text", "tool", "ts"
     )
-    if suffix == "before":
-        from sync2any_spark.index.builder import build_docs
-
-        plan_df = build_docs(lv)
-    else:
-        plan_df = lv.repartitionByRange(32, "conv_id").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
+    plan_df = lv.repartitionByRange(32, "conv_id").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    )
     with open(os.path.join(out_dir, f"compact_docs_{suffix}.txt"), "w") as f:
         f.write(explain_str(plan_df))
 

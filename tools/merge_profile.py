@@ -5,8 +5,8 @@ Replays build_postings_direct (the ZERO-SHUFFLE merge) against an existing
 chunks dir and prints per-group wall_ms plus the stage wall, so N-vs-4N
 merge scaling can be decomposed into (task skew, substrate, overhead).
 The merge layout (n_buckets, n_salts, heavy_df_threshold) is read from the
-index's meta.json: a mismatch with the chunks' layout would replay the
-shuffle fallback instead of the zero-shuffle merge.
+index's meta.json, which always matches the chunks' layout (the merge
+raises a ValueError naming the key when it does not).
 
 Usage: taskset -c 0-N python tools/merge_profile.py <index_dir> <cpus>
 """
