@@ -58,13 +58,8 @@ def cmd_query(args) -> int:
     spark = _spark(args.cpus)
     searcher = IndexSearcher(spark, args.index)
     t0 = time.time()
-    if args.distributed:
-        hits = [
-            (r.doc_id, r.score)
-            for r in searcher.search_distributed(args.query, args.topk).collect()
-        ]
-    else:
-        hits = searcher.search(args.query, args.topk)
+    route = "distributed" if args.distributed else "auto"
+    hits = searcher.search(args.query, args.topk, route=route)
     wall = time.time() - t0
     rows = searcher.fetch(hits).orderBy("score", ascending=False).collect()
     out = {

@@ -291,6 +291,19 @@ def docs_sources(index_dir: str, meta: dict) -> "list[str]":
     return out
 
 
+def union_parquet(spark: SparkSession, dirs: "list[str]", empty_schema) -> DataFrame:
+    """One relation over parquet table roots (segment dirs): Spark refuses
+    multi-root partition discovery, so each is read alone and the reads are
+    unioned by name. No dirs (an all-empty corpus writes no files) → an
+    empty relation of ``empty_schema``."""
+    from functools import reduce
+
+    if not dirs:
+        return spark.createDataFrame([], empty_schema)
+    parts = [spark.read.parquet(d) for d in dirs]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+
+
 def deletes_sources(index_dir: str, meta: dict) -> "list[str]":
     p = IndexPaths(index_dir)
     out = [p.deletes] if _has_parquet(p.deletes) else []
@@ -405,97 +418,24 @@ _EMPTY_CHUNK_ROWS = {
 }
 
 
-def _spimi_encode(
-    part_id: int,
-    doc_ids: np.ndarray,
-    dls: np.ndarray,
-    toks: "list[list[str]]",
-    store_positions: bool = False,
-) -> "tuple[dict, int]":
-    """(chunk rows dict, n_terms) from per-doc token lists — the vectorized
-    SPIMI core: factorize terms to codes, combine ``code * n_rows + row_pos``
-    into one int64 key, one stable argsort yields (term, doc) groups sorted
-    by (term, doc) — doc ascending within a term because the caller
-    pre-sorts rows by doc_id, and (when ``store_positions``) in-doc token
-    positions ascending within a posting because the stable sort preserves
-    token order. Positions are the Lucene DOCS_AND_FREQS_AND_POSITIONS
-    index option: off by default (BM25 needs none), on for match_phrase
-    without docs-store re-tokenization."""
-    from itertools import chain
-
-    n_rows = len(doc_ids)
-    lens = np.fromiter((len(x) for x in toks), dtype=np.int64, count=len(toks))
-    flat = np.asarray(list(chain.from_iterable(toks)), dtype=object)
-    if flat.size == 0:
-        return dict(_EMPTY_CHUNK_ROWS), 0
-    codes, uniq_terms = pd.factorize(flat, sort=True)
-    row_pos = np.repeat(np.arange(n_rows, dtype=np.int64), lens)
-    key = codes.astype(np.int64) * n_rows + row_pos
-    order = np.argsort(key, kind="stable")
-    sk = key[order]
-    pchange = np.concatenate(([True], sk[1:] != sk[:-1]))
-    pstarts = np.flatnonzero(pchange)  # posting starts in sorted-token space
-    pends = np.append(pstarts[1:], len(sk))
-    tf = pends - pstarts
-    uk = sk[pstarts]
-    t_code = uk // n_rows
-    pos = uk % n_rows
-    ids = doc_ids[pos]
-    dl_arr = dls[pos]
-
-    change = np.concatenate(([True], t_code[1:] != t_code[:-1]))
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], len(uk))
-    bounds = np.append(starts, len(uk))
-
-    from .codec import (
-        encode_doc_id_segments,
-        encode_positions_segments,
-        vb_encode_segments,
-    )
-
-    rows = {
-        "term": uniq_terms[t_code[starts]].astype(object),
-        "part_id": np.full(len(starts), part_id, dtype=np.int32),
-        "min_doc": ids[starts],
-        "max_doc": ids[ends - 1],
-        "n_docs": (ends - starts).astype(np.int32),
-        "cf": np.add.reduceat(tf, starts).astype(np.int64),
-        "doc_ids": encode_doc_id_segments(ids, bounds),
-        "tfs": vb_encode_segments(tf.astype(np.int64), bounds),
-        "dls": vb_encode_segments(dl_arr, bounds),
-    }
-    if store_positions:
-        # in-doc token position of every sorted occurrence
-        doc_start = np.repeat(np.cumsum(lens) - lens, lens)
-        pos_in_doc = (np.arange(flat.size, dtype=np.int64) - doc_start)[order]
-        posting_bounds = np.append(pstarts, len(sk))
-        # term-row segment offsets in sorted-token space
-        seg_bounds = posting_bounds[bounds]
-        rows["pos"] = encode_positions_segments(
-            pos_in_doc, posting_bounds, seg_bounds
-        )
-    else:
-        rows["pos"] = [b""] * len(starts)
-    return rows, len(starts)
-
-
 def _spimi_encode_codes(
     part_id: int,
     doc_ids: np.ndarray,
-    dls: np.ndarray,
     codes: np.ndarray,
     doc_lens: np.ndarray,
     uniq_terms: np.ndarray,
     store_positions: bool = False,
 ) -> "tuple[dict, int]":
-    """``_spimi_encode`` over pre-factorized token codes (the byte-level
-    tokenizer output, round 6): identical chunk rows, no per-token Python
-    strings. ``codes`` index the SORTED vocabulary ``uniq_terms`` and run in
-    document order (callers pre-sort rows by doc_id), so ONE stable int32
-    argsort (numpy radix) yields the (term, doc, in-doc position) order the
-    old combined-int64-key sort produced — and the div/mod decomposition
-    disappears (term and row indices are gathered directly)."""
+    """(chunk rows dict, n_terms) from factorized token codes — the
+    vectorized SPIMI core. ``codes`` index the SORTED vocabulary
+    ``uniq_terms`` and run in document order (callers pre-sort rows by
+    doc_id; ``doc_lens`` tokens per row, which is also each row's dl), so
+    ONE stable int32 argsort (numpy radix) yields the (term, doc, in-doc
+    position) order: doc ascending within a term, and (when
+    ``store_positions``) in-doc token positions ascending within a
+    posting. Positions are the Lucene DOCS_AND_FREQS_AND_POSITIONS index
+    option: off by default (BM25 needs none), on for match_phrase without
+    docs-store re-tokenization."""
     n_rows = len(doc_ids)
     if codes.size == 0:
         return dict(_EMPTY_CHUNK_ROWS), 0
@@ -510,7 +450,7 @@ def _spimi_encode_codes(
     t_code = c_s[pstarts]
     pos = r_s[pstarts].astype(np.int64)
     ids = doc_ids[pos]
-    dl_arr = dls[pos]
+    dl_arr = doc_lens[pos]
 
     change = np.concatenate(([True], t_code[1:] != t_code[:-1]))
     starts = np.flatnonzero(change)
@@ -559,26 +499,24 @@ def _spimi_rows_for_texts(
     wrap) aligned with ``doc_ids`` (already doc-sorted)."""
     import pyarrow as pa
 
-    from ..tokenize import TOKEN_RE, tokenize_arrow_codes
+    from itertools import chain
+
+    from ..tokenize import tokenize_arrow_codes, tokenize_series
 
     if not isinstance(text_col, (pa.Array, pa.ChunkedArray)):
         text_col = pa.array(text_col, pa.string(), from_pandas=True)
     fast = tokenize_arrow_codes(text_col)
     if fast is not None:
         codes, doc_lens, uniq = fast
-        rows, n_terms = _spimi_encode_codes(
-            part_id, doc_ids, doc_lens, codes, doc_lens, uniq,
-            store_positions=store_positions,
-        )
-        return rows, n_terms, doc_lens
-    findall = TOKEN_RE.findall
-    texts = text_col.to_pandas()
-    toks = [findall(t.lower()) if t else [] for t in texts]
-    dls = np.fromiter((len(x) for x in toks), dtype=np.int64, count=len(toks))
-    rows, n_terms = _spimi_encode(
-        part_id, doc_ids, dls, toks, store_positions=store_positions
+    else:
+        toks = tokenize_series(text_col.to_pandas())
+        doc_lens = np.fromiter(map(len, toks), dtype=np.int64, count=len(toks))
+        flat = np.asarray(list(chain.from_iterable(toks)), dtype=object)
+        codes, uniq = pd.factorize(flat, sort=True)
+    rows, n_terms = _spimi_encode_codes(
+        part_id, doc_ids, codes, doc_lens, uniq, store_positions=store_positions
     )
-    return rows, n_terms, dls
+    return rows, n_terms, doc_lens
 
 
 def completed_partitions(chunks_dir: str, wfs=None) -> set[int]:

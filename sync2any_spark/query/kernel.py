@@ -2,13 +2,14 @@
 
 Every scorer hands this module the query's live terms as (idf weight,
 Arrow block table) pairs: the driver route (``IndexSearcher.search``, each
-term's runs sliced out of the row groups it read), the serving tier
-(``LocalSearcher``, slices of its pinned table) and the distributed
-route's ``mapInArrow`` task. A block table carries the varbyte columns
-``doc_ids``/``tfs``/``dls`` plus ``n_docs``, and for the pruned leg the
-block metadata ``max_tf``/``min_dl``/``min_doc``/``max_doc``. Scores are
-exact Lucene BM25 in float64 with the engine tie-break (score desc, doc_id
-asc), so every route ranks as the oracle does.
+term's runs sliced out of the row groups it read), its distributed route
+(the same slices, one doc-id range per task, through ``partial_sums``) and
+the serving tier (``LocalSearcher``, slices of its pinned table). A block
+table carries the varbyte columns ``doc_ids``/``tfs``/``dls`` plus
+``n_docs``, and for the pruned leg the block metadata
+``max_tf``/``min_dl``/``min_doc``/``max_doc``. Scores are exact Lucene BM25
+in float64 with the engine tie-break (score desc, doc_id asc), so every
+route ranks as the oracle does.
 
 ``topk`` picks one of its legs by the query's postings count:
 
@@ -137,18 +138,6 @@ def score_pool():
     return _SCORE_POOL
 
 
-def split_terms(tbl, terms) -> dict:
-    """{term: its rows of ``tbl``} for each of ``terms``; ``tbl`` holds rows
-    of ``terms`` only (the distributed scan filters by term), so one term's
-    rows are the whole table."""
-    import pyarrow.compute as pc
-
-    if len(terms) == 1:
-        return {t: tbl for t in terms}
-    col = tbl.column("term")
-    return {t: tbl.filter(pc.equal(col, t)) for t in terms}
-
-
 def _postings(tbl) -> np.ndarray:
     return tbl.column("n_docs").to_numpy().astype(np.int64)
 
@@ -173,8 +162,10 @@ def decode_contrib(w: float, tbl, avgdl: float, deleted: np.ndarray):
 
 def partial_sums(terms, deleted: np.ndarray, avgdl: float):
     """(unique doc ids ascending, per-doc BM25 sums) over (w, table) pairs,
-    sequentially — what a shard or a distributed task contributes."""
-    ids, contrib = _concat([decode_contrib(w, t, avgdl, deleted) for w, t in terms])
+    sequentially — what a shard or a distributed range task contributes."""
+    ids, contrib = _concat(
+        [decode_contrib(w, t, avgdl, deleted) for w, t in terms if t.num_rows]
+    )
     return group_sum(ids, contrib) if ids.size else _EMPTY
 
 

@@ -9,16 +9,17 @@ Three physical strategies for the same logical operator:
 
 1. **algebra** (``phrase_topk``) — pure DataFrame plan over the source
    table (the oracle-comparable reference path);
-2. **distributed index** (``phrase_topk_indexed``) — postings intersection
-   prunes candidates (all DataFrame, no driver IN-list), adjacency verified
-   JVM-side on the semi-joined docs-store subset — the path for indexes
-   built WITHOUT positions (trades index size for a bounded candidate
-   re-tokenization; right for short transcript turns);
-3. **positional** (``phrase_topk_positional`` + the serving tier's
+2. **positional** (``phrase_topk_positional`` + the serving tier's
    ``LocalSearcher.search_phrase``) — the ES/Lucene execution over stored
    per-posting positions (``store_positions=True``): adjacency from decoded
-   positions alone, no docs-store re-read — the path that stays bounded for
-   common-term phrases.
+   positions alone (``_phrase_scores``), no docs-store re-read. It
+   self-dispatches like BM25: the driver route, or the same core per
+   doc-id range as one Spark job (``IndexSearcher._distributed``);
+3. **indexed** (``phrase_topk_indexed``) — for indexes built WITHOUT
+   positions: per doc-id range, the postings intersection prunes to docs
+   holding every phrase term, and only those docs are read back from the
+   docs store and re-tokenized (trades index size for a bounded candidate
+   re-tokenization; right for short transcript turns).
 
 All three are rank/score-identical to each other and to the Lucene-
 semantics oracle (tests).
@@ -26,12 +27,15 @@ semantics oracle (tests).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .. import B, K1
+from ..index.codec import arrow_binary_bytes, decode_block_batch_arrow, decode_positions
 from ..tokenize import tokenize
 from .algebra import SPARK_TOKEN_RE, doc_lengths, term_freqs
+from .kernel import _EMPTY, BLOCK_COLS, alive_mask, idf, topk_sorted
 
 
 def phrase_occurrences(
@@ -107,59 +111,12 @@ def phrase_topk(
     return scored.orderBy(*order).limit(k)
 
 
-def phrase_candidates(searcher, uniq: "list[str]") -> DataFrame:
-    """(doc_id) docs containing ALL the phrase's terms — fully distributed:
-    the pruned postings scan feeds a vectorized block-decode kernel
-    (``mapInPandas`` → (term, doc_id) pairs), the ALL-terms intersection is
-    one ``groupBy(doc_id)`` distinct-count, and tombstones are dropped via
-    the broadcast live-docs array. Nothing wider than the final candidate
-    relation ever exists, and it never visits the driver."""
-    import numpy as np
-    import pandas as pd
-
-    from ..index.codec import decode_doc_ids
-    from .kernel import alive_mask
-
-    n_terms = len(uniq)
-    pruned = searcher._pruned_blocks(uniq).select("term", "doc_ids")
-    dead_bc = searcher.spark.sparkContext.broadcast(searcher.deleted)
-
-    def expand(batches):
-        dead = dead_bc.value
-        for pdf in batches:
-            outs_t, outs_d = [], []
-            for r in pdf.itertuples(index=False):
-                ids = decode_doc_ids(r.doc_ids)
-                if dead.size:
-                    ids = ids[alive_mask(dead, ids)]
-                if ids.size:
-                    outs_t.append(np.repeat(np.array([r.term], dtype=object), ids.size))
-                    outs_d.append(ids)
-            if outs_d:
-                yield pd.DataFrame(
-                    {"term": np.concatenate(outs_t), "doc_id": np.concatenate(outs_d)}
-                )
-
-    pairs = pruned.mapInPandas(expand, schema="term string, doc_id long")
-    # a doc appears once per (term, salt-stream) — distinct terms per doc
-    return (
-        pairs.groupBy("doc_id")
-        .agg(F.countDistinct("term").alias("nt"))
-        .where(F.col("nt") == n_terms)
-        .select("doc_id")
-    )
-
-
 def decode_term_postings(g):
     """One term's Arrow block table (with ``pos``) → (doc-sorted ids,
     per-posting tfs, flat positions gathered to that order, dls). Shared by
     the driver phrase core and the serving tier's candidate-bounded slot
     fetch (salted streams are disjoint by doc, so the sort is a
     permutation)."""
-    import numpy as np
-
-    from ..index.codec import arrow_binary_bytes, decode_block_batch_arrow, decode_positions
-
     ids, tfs, dls = decode_block_batch_arrow(g, parallel=False)
     pos = decode_positions(arrow_binary_bytes(g.column("pos")), tfs)
     order = np.argsort(ids, kind="stable")
@@ -181,8 +138,6 @@ def _adjacency_ptfs(terms: "list[str]", slices: dict, n_cand: int):
     (duplicate phrase terms reuse the same term's positions at their
     offset — Lucene semantics). ``slices[t] = (starts, lens, flat_pos)``
     indexed by candidate position."""
-    import numpy as np
-
     ptfs = np.zeros(n_cand, dtype=np.int64)
     for i in range(n_cand):
         s0, l0, p0 = slices[terms[0]]
@@ -197,17 +152,22 @@ def _adjacency_ptfs(terms: "list[str]", slices: dict, n_cand: int):
     return ptfs
 
 
-def _phrase_from_blocks(
+def _phrase_bm25(idf_sum: float, ptfs, dl, avgdl: float):
+    """The phrase score of docs with phrase frequencies ``ptfs`` and lengths
+    ``dl``."""
+    return idf_sum * ptfs / (ptfs + K1 * (1.0 - B + B * dl / avgdl))
+
+
+def _phrase_scores(
     tables: dict, terms: "list[str]", uniq: "list[str]", dfs: dict,
-    n_docs: int, avgdl: float, deleted, k: int,
-) -> "list[tuple[int, float]]":
-    """Positional phrase top-k over each phrase term's Arrow block table
-    (with the pos column) — the numpy core shared by the driver searcher
-    and the RAM-resident serving tier. ``deleted``: sorted tombstones."""
-    import numpy as np
-
-    from .kernel import alive_mask, idf, topk_sorted
-
+    n_docs: int, avgdl: float, deleted,
+):
+    """(matching doc ids, phrase scores) over each phrase term's Arrow block
+    table (with the pos column) — the positional numpy core shared by the
+    driver searcher, its range tasks and the RAM-resident serving tier.
+    ``deleted``: sorted tombstones."""
+    if any(tables[t].num_rows == 0 for t in uniq):
+        return _EMPTY  # some phrase term has no postings here
     # per-term (doc_id, tfs, flat positions), doc-sorted with positions
     # carried along (salted streams are disjoint by doc)
     by_term: dict = {t: decode_term_postings(tables[t]) for t in uniq}
@@ -219,7 +179,7 @@ def _phrase_from_blocks(
     if deleted.size:
         cand = cand[alive_mask(deleted, cand)]
     if cand.size == 0:
-        return []
+        return _EMPTY
 
     # adjacency: ptf(doc) = |{p ∈ P_0(doc) : p+j ∈ P_j(doc) ∀j}| — per-doc
     # position-set intersections over numpy slices (duplicate phrase terms
@@ -236,15 +196,14 @@ def _phrase_from_blocks(
     hit = ptfs > 0
     cand, ptfs = cand[hit], ptfs[hit]
     if cand.size == 0:
-        return []
+        return _EMPTY
 
     # dl of each candidate, read off the first term's doc-sorted stream
     ids0, _tfs0, _pos0, dls0 = by_term[uniq[0]]
     dl = dls0[np.searchsorted(ids0, cand)].astype(np.float64)
 
     idf_sum = sum(idf(n_docs, dfs[t]) for t in uniq)
-    scores = idf_sum * ptfs / (ptfs + K1 * (1.0 - B + B * dl / avgdl))
-    return topk_sorted(cand, scores, k)
+    return cand, _phrase_bm25(idf_sum, ptfs, dl, avgdl)
 
 
 def phrase_topk_positional(
@@ -261,12 +220,12 @@ def phrase_topk_positional(
 
     Self-dispatching like ``IndexSearcher.search``: the term dictionary
     prices the phrase as Σ df over its terms; at or below the searcher's
-    ``route_budget`` the driver-side numpy core runs over the pruned
+    ``route_budget`` the numpy core runs on the driver over the fetched
     blocks (the serving-tier shape, shared with
-    ``LocalSearcher.search_phrase``); above it the fully distributed
-    positional execution (``phrase_topk_positional_distributed``) runs and
-    only k rows reach the driver — a stop-word-phrase's positions are never
-    collected (round-2 What's-wrong #1 / Missing #3). All paths are
+    ``LocalSearcher.search_phrase``); above it the same core runs per
+    doc-id range as one Spark job (``IndexSearcher._distributed``) and only
+    k rows per range reach the driver — a stop-word phrase's positions are
+    never collected (round-2 What's-wrong #1 / Missing #3). All paths are
     rank/score-identical to the algebra phrase scorer (tested)."""
     if not searcher.meta.get("store_positions"):
         raise ValueError(
@@ -280,144 +239,45 @@ def phrase_topk_positional(
     dfs = searcher._term_dfs(uniq)
     if any(dfs.get(t, 0) <= 0 for t in uniq):
         return []
+    n_docs, avgdl = searcher.n_docs, searcher.avgdl
     if route == "distributed" or (
         route == "auto"
         and sum(dfs[t] for t in uniq) > searcher.route_budget
     ):
-        top = phrase_topk_positional_distributed(searcher, phrase, k).collect()
-        return [(int(r.doc_id), float(r.score)) for r in top]
+        return searcher._distributed(
+            uniq, BLOCK_COLS + ["pos"],
+            lambda tables, dead: _phrase_scores(
+                tables, terms, uniq, dfs, n_docs, avgdl, dead
+            ),
+            k,
+        )
     # driver leg: each term's pos-bearing blocks by a direct pyarrow
     # fetch — no Spark job; the budget above bounds the fetch
     tables = searcher._term_tables(uniq, with_pos=True)
-    if any(g.num_rows == 0 for g in tables.values()):
-        return []  # some phrase term absent entirely
-    return _phrase_from_blocks(
-        tables, terms, uniq, dfs, searcher.n_docs, searcher.avgdl, searcher.deleted, k
+    return topk_sorted(
+        *_phrase_scores(tables, terms, uniq, dfs, n_docs, avgdl, searcher.deleted), k
     )
 
 
-def phrase_occurrence_pairs(searcher, uniq: "list[str]") -> DataFrame:
-    """(term, doc_id, pos, dl) — one row per stored occurrence of the
-    phrase's terms, decoded cluster-side from the pos-bearing pruned blocks
-    (``mapInPandas``, vectorized varbyte decode; tombstones dropped via the
-    broadcast live-docs array). Nothing ever visits the driver."""
-    import numpy as np
-    import pandas as pd
-
-    from ..index.codec import decode_doc_ids, decode_positions, decode_tfs
-    from .kernel import alive_mask
-
-    pruned = searcher._pruned_blocks(uniq).select("term", "doc_ids", "tfs", "dls", "pos")
-    dead_bc = searcher.spark.sparkContext.broadcast(searcher.deleted)
-
-    def expand(batches):
-        dead = dead_bc.value
-        for pdf in batches:
-            outs = []
-            for r in pdf.itertuples(index=False):
-                ids = decode_doc_ids(r.doc_ids)
-                tfs = decode_tfs(r.tfs)
-                dls = decode_tfs(r.dls)
-                pos = decode_positions(r.pos, tfs)
-                # flatten postings → one row per occurrence
-                doc_rep = np.repeat(ids, tfs)
-                dl_rep = np.repeat(dls, tfs)
-                if dead.size:
-                    alive = alive_mask(dead, doc_rep)
-                    doc_rep, dl_rep, pos = doc_rep[alive], dl_rep[alive], pos[alive]
-                if doc_rep.size == 0:
-                    continue
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "term": np.repeat(
-                                np.array([r.term], dtype=object), doc_rep.size
-                            ),
-                            "doc_id": doc_rep,
-                            "pos": pos,
-                            "dl": dl_rep.astype(np.int32),
-                        }
-                    )
-                )
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
-
-    return pruned.mapInPandas(
-        expand, schema="term string, doc_id long, pos long, dl int"
-    )
-
-
-def phrase_topk_positional_distributed(searcher, phrase: str, k: int = 10) -> DataFrame:
-    """Distributed positional phrase: occurrence relations per phrase slot,
-    adjacency as a chain of JVM shuffle joins on (doc_id, pos − j) —
-    Catalyst/AQE pick the physical join (broadcast for a rare slot, sorted
-    shuffle for two stop words), so the plan stays shuffle-bounded at any
-    term frequency; ``ptf = count per doc`` then BM25 with the summed-idf
-    weight and ``ORDER BY … LIMIT k`` (TakeOrderedAndProject). Semantics are
-    exactly ``_phrase_from_blocks``: duplicate phrase terms reuse the same
-    occurrence relation at their offset (Lucene PhraseQuery)."""
-    import math
-
-    terms = tokenize(phrase)
-    uniq = list(dict.fromkeys(terms))
-    spark = searcher.spark
-    empty = spark.createDataFrame([], "doc_id long, score double")
-    if not uniq:
-        return empty
-    if not searcher.meta.get("store_positions"):
-        raise ValueError("index was built without positions")
-    dfs = searcher._term_dfs(uniq)
-    if any(dfs.get(t, 0) <= 0 for t in uniq):
-        return empty
-
-    occ = phrase_occurrence_pairs(searcher, uniq)
-    if len(uniq) > 1:
-        # pre-prune: only docs containing ALL phrase terms can match, and
-        # that intersection (phrase_candidates — doc-id decode only, rows
-        # = Σ df, no positions) is far smaller than the occurrence stream
-        # (rows = Σ cf). Semi-joining each slot first is the relational
-        # spelling of Lucene's aligned-cursor intersection: for a
-        # rare-term + stop-word phrase the stop-word slot shrinks from its
-        # full posting list to the rare term's df before any position
-        # crosses a shuffle.
-        cand = phrase_candidates(searcher, uniq)
-        occ = occ.join(cand, "doc_id", "left_semi")
-    # slot 0 anchors the match at p0 = pos and carries dl for the scorer
-    matched = occ.where(F.col("term") == terms[0]).select(
-        "doc_id", F.col("pos").alias("p0"), "dl"
-    )
-    for j, t in enumerate(terms[1:], start=1):
-        occ_j = occ.where(F.col("term") == t).select(
-            "doc_id", (F.col("pos") - j).alias("p0")
-        )
-        matched = matched.join(occ_j, ["doc_id", "p0"])
-    ptf = matched.groupBy("doc_id", "dl").agg(F.count("*").alias("ptf"))
-
-    idf_sum = sum(
-        math.log(1.0 + (searcher.n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
-        for t in uniq
-    )
-    scored = ptf.withColumn(
-        "score",
-        F.lit(idf_sum)
-        * F.col("ptf")
-        / (
-            F.col("ptf")
-            + F.lit(K1)
-            * (F.lit(1.0) - F.lit(B) + F.lit(B) * F.col("dl") / F.lit(searcher.avgdl))
-        ),
-    ).select("doc_id", "score")
-    return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
+def _phrase_count(toks: "list[str]", terms: "list[str]") -> int:
+    """Occurrences of ``terms`` as a window of ``toks``, overlapping ones
+    included (as ``phrase_occurrences`` counts them)."""
+    n = len(terms)
+    return sum(toks[i : i + n] == terms for i in range(len(toks) - n + 1))
 
 
 def phrase_topk_indexed(searcher, phrase: str, k: int = 10) -> "list[tuple[int, float]]":
-    """Index-accelerated phrase top-k (IndexSearcher): the postings
-    intersection (distributed, see ``phrase_candidates``) prunes to docs
-    containing ALL phrase terms; adjacency is verified JVM-side on the
-    semi-joined docs-store subset; stats come from the index. The driver
-    sees exactly k rows — no candidate IN-list, no occurrence collect
-    (round-1 shapes flagged in VERDICT.md What's-wrong #3)."""
-    import math
+    """Index-accelerated phrase top-k for an index without positions: per
+    doc-id range, as one Spark job (``IndexSearcher._distributed``), the
+    decoded doc ids of the phrase's terms are intersected and tombstones
+    dropped; only those candidates' ``text``/``dl`` are read from the docs
+    store (pyarrow, filtered by ``doc_id``), re-tokenized and their phrase
+    windows counted. Stats come from the index; the driver sees at most k
+    rows per range — no candidate IN-list, no occurrence collect (round-1
+    shapes flagged in VERDICT.md What's-wrong #3)."""
+    from functools import reduce
+
+    from ..index.builder import docs_sources
 
     terms = tokenize(phrase)
     uniq = list(dict.fromkeys(terms))
@@ -428,29 +288,38 @@ def phrase_topk_indexed(searcher, phrase: str, k: int = 10) -> "list[tuple[int, 
     dfs = searcher._term_dfs(uniq)
     if any(dfs.get(t, 0) <= 0 for t in uniq):
         return []  # some phrase term absent entirely
-
-    cand = phrase_candidates(searcher, uniq)
-    docs = searcher._docs.join(cand, "doc_id", "left_semi")
-    occ = phrase_occurrences(docs, terms, ["doc_id"]).join(
-        docs.select("doc_id", "dl"), "doc_id"
-    )
-    idf_sum = sum(
-        math.log(1.0 + (searcher.n_docs - dfs[t] + 0.5) / (dfs[t] + 0.5))
-        for t in uniq
-    )
+    idf_sum = sum(idf(searcher.n_docs, dfs[t]) for t in uniq)
     avgdl = searcher.avgdl
-    scored = occ.withColumn(
-        "score",
-        F.lit(idf_sum)
-        * F.col("ptf")
-        / (
-            F.col("ptf")
-            + F.lit(K1) * (F.lit(1.0) - F.lit(B) + F.lit(B) * F.col("dl") / F.lit(avgdl))
-        ),
-    )
-    top = (
-        scored.orderBy(F.col("score").desc(), F.col("doc_id").asc())
-        .limit(k)  # TakeOrderedAndProject — only k rows reach the driver
-        .collect()
-    )
-    return [(int(r.doc_id), float(r.score)) for r in top]
+    docs = docs_sources(searcher.index_dir, searcher.meta)
+
+    def score(tables, dead):
+        import pyarrow as pa
+        import pyarrow.dataset as ds
+
+        if any(tables[t].num_rows == 0 for t in uniq):
+            return _EMPTY
+        ids = [decode_block_batch_arrow(tables[t], parallel=False)[0] for t in uniq]
+        cand = reduce(lambda a, b: np.intersect1d(a, b, assume_unique=True), ids)
+        cand = cand[alive_mask(dead, cand)]
+        if cand.size == 0:
+            return _EMPTY
+        where = ds.field("doc_id").isin(pa.array(cand))
+        tbl = pa.concat_tables(
+            [
+                ds.dataset(d).to_table(columns=["doc_id", "text", "dl"], filter=where)
+                for d in docs
+            ],
+            promote_options="permissive",
+        )
+        ptfs = np.array(
+            [_phrase_count(tokenize(t), terms) for t in tbl.column("text").to_pylist()],
+            dtype=np.int64,
+        )
+        hit = ptfs > 0
+        dl = tbl.column("dl").to_numpy().astype(np.float64)[hit]
+        return (
+            tbl.column("doc_id").to_numpy()[hit],
+            _phrase_bm25(idf_sum, ptfs[hit], dl, avgdl),
+        )
+
+    return searcher._distributed(uniq, BLOCK_COLS, score, k)

@@ -18,7 +18,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from .. import B, K1
 from ..index.codec import decode_block_batch_arrow
 from ..tokenize import tokenize
 from . import kernel
@@ -260,7 +259,7 @@ class ShardedSearcher:
         plus the candidates' occurrences (round 2) — a stop-word slot never
         ships its whole position list. Rank/score-identical to
         ``LocalSearcher.search_phrase`` on one node (tested)."""
-        from .phrase import _adjacency_ptfs
+        from .phrase import _adjacency_ptfs, _phrase_bm25
 
         terms = tokenize(phrase)
         uniq = list(dict.fromkeys(terms))
@@ -308,11 +307,9 @@ class ShardedSearcher:
         if any(dfs[t] <= 0 for t in uniq):
             return []
         idf_sum = sum(idf(node.n_docs, dfs[t]) for t in uniq)
-        dl = dl.astype(np.float64)
-        scores = idf_sum * ptfs / (
-            ptfs + K1 * (1.0 - B + B * dl / node.avgdl)
+        return topk_sorted(
+            cand, _phrase_bm25(idf_sum, ptfs, dl.astype(np.float64), node.avgdl), k
         )
-        return topk_sorted(cand, scores, k)
 
 
 class LocalSearcher:
@@ -506,7 +503,7 @@ class LocalSearcher:
         """match_phrase from the RAM-resident positional blocks — the ES
         serving-node execution (requires ``with_positions=True`` over an
         index built with ``store_positions=True``)."""
-        from .phrase import _phrase_from_blocks
+        from .phrase import _phrase_scores
 
         if not self._with_positions or not self.meta.get("store_positions"):
             raise ValueError(
@@ -523,8 +520,9 @@ class LocalSearcher:
         dfs = {t: self._df_of(t) for t in uniq}
         if any(dfs[t] <= 0 for t in uniq):
             return []
-        return _phrase_from_blocks(
-            tables, terms, uniq, dfs, self.n_docs, self.avgdl, self.deleted, k
+        return topk_sorted(
+            *_phrase_scores(tables, terms, uniq, dfs, self.n_docs, self.avgdl, self.deleted),
+            k,
         )
 
     def search(self, query: str, k: int = 10) -> "list[tuple[int, float]]":

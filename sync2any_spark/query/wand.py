@@ -1,21 +1,21 @@
-"""Top-k retrieval over the compressed index — driver and distributed paths.
+"""Top-k retrieval over the compressed index — one execution, two routes.
 
-Two physical strategies for the same logical operator (B6), mirroring how
-ES picks between query phases:
+``IndexSearcher`` plans every query the same way: its terms' buckets select
+the ``bucket=K`` dirs, and a per-(postings root, bucket) term directory held
+by the searcher names the row runs each term occupies in which files and
+row groups (``_fetch_plan``). Only those row groups are read (with cached
+footers), and each term's runs are zero-copy slices of them, so the fetch
+runs no ``is_in`` filter and no split by term. The BM25 kernel
+(``kernel.topk``) scores the per-term block tables. The routes differ only
+in where that runs:
 
-- ``IndexSearcher.search`` — low-latency path. The query's term list is tiny:
-  its terms' buckets select the ``bucket=K`` dirs, and a per-(postings root,
-  bucket) term directory held by the searcher names the row runs each term
-  occupies in which files and row groups. Only those row groups are read
-  (with cached footers), and each term's runs are zero-copy slices of
-  them, so the fetch runs no ``is_in`` filter and no split by term. The
-  per-term block tables are scored on the driver by the one BM25 kernel
-  (``kernel.topk``). This is the path a search tier would serve QPS from.
-- ``search_distributed`` — scale path for huge candidate sets: the Spark
-  ``bucket IN (…) AND term IN (…)`` pruned scan feeds ``mapInArrow``
-  (the kernel's per-doc partial sums of each Arrow batch) →
-  ``groupBy(doc_id).sum`` → ``ORDER BY score DESC LIMIT k``
-  (TakeOrderedAndProject — no global sort).
+- **driver** — the whole plan on the calling thread, no Spark job. This is
+  the path a search tier would serve QPS from.
+- **distributed** — for huge candidate sets: the same plan cut into doc-id
+  ranges, one ``builder.run_tasks`` job (one stage, no shuffle). Each task
+  reads the planned row groups whose doc span overlaps its range, keeps the
+  blocks that do, scores them with the same kernel and returns its local
+  top-k; the driver merges k × ranges rows (``_distributed``).
 
 Both return exactly the same ranking as the BM25 oracle: exact Lucene
 formula, float64, ties by doc_id ascending.
@@ -34,6 +34,9 @@ from . import kernel
 from .kernel import idf
 from ..tokenize import tokenize
 
+# the open upper end of the last doc-id range of a distributed query
+_OPEN = np.iinfo(np.int64).max
+
 
 def _load_deletes(dirs: "list[str]") -> np.ndarray:
     """Union of tombstone tables as one sorted int64 array (pyarrow read —
@@ -50,7 +53,7 @@ def _load_deletes(dirs: "list[str]") -> np.ndarray:
 
 
 # a query whose terms' summed live df exceeds this routes to the
-# distributed execution instead of reading pruned blocks driver-side
+# distributed execution instead of reading its blocks driver-side
 # (round-2 What's-wrong #1: a stop-word term's postings are TBs at 10^12
 # docs — the driver path is only valid for selective terms). The number is
 # postings: 10^7 postings ≈ ~25 MB of compressed blocks — a bounded,
@@ -149,21 +152,56 @@ class _TermDirectory:
         return out
 
     def read(self, fid: int, groups: "dict[int, list]", cols: "list[str]"):
-        """[(term, its rows)] for every run of ``groups`` ({row group: runs},
-        as ``runs`` gives them) of one file: the row groups are read whole
-        in one call with the file's cached footer, and each run is a
-        zero-copy slice of them."""
-        import pyarrow.parquet as pq
+        """``_read_runs`` of one file, with its cached footer."""
+        return _read_runs(self.fs, self.files[fid], groups, cols, self.metas[fid])
 
-        rgs = sorted(groups)
+    def overlaps(self, fid: int, g: int, lo: int, hi: int) -> bool:
+        """Whether row group ``g`` of file ``fid`` may hold a block of a doc
+        in ``[lo, hi)``, by its footer ``min_doc``/``max_doc`` stats (a
+        row group without them may)."""
         md = self.metas[fid]
-        with self.fs.open_input_file(self.files[fid]) as src:
-            tbl = pq.ParquetFile(src, metadata=md).read_row_groups(rgs, columns=cols)
-        out, base = [], 0
-        for g in rgs:
-            out += [(term, tbl.slice(base + a, n)) for term, a, n in groups[g]]
-            base += md.row_group(g).num_rows
-        return out
+        rg, names = md.row_group(g), md.schema.names
+        a = rg.column(names.index("min_doc")).statistics
+        b = rg.column(names.index("max_doc")).statistics
+        if a is None or b is None or not (a.has_min_max and b.has_min_max):
+            return True
+        return b.max >= lo and a.min < hi
+
+
+def _read_runs(fs, path: str, groups: "dict[int, list]", cols: "list[str]", md=None):
+    """[(term, its rows)] for every run of ``groups`` ({row group: [(term,
+    first row, rows)]}, as ``_TermDirectory.runs`` gives them) of one file:
+    the row groups are read whole in one call (with ``md``, the file's
+    footer, when the caller holds it), and each run is a zero-copy slice of
+    them."""
+    import pyarrow.parquet as pq
+
+    rgs = sorted(groups)
+    with fs.open_input_file(path) as src:
+        pf = pq.ParquetFile(src, metadata=md)
+        tbl = pf.read_row_groups(rgs, columns=cols)
+    md = pf.metadata if md is None else md
+    out, base = [], 0
+    for g in rgs:
+        out += [(term, tbl.slice(base + a, n)) for term, a, n in groups[g]]
+        base += md.row_group(g).num_rows
+    return out
+
+
+def _per_term(parts: "dict[str, list]", cols: "list[str]") -> dict:
+    """{term: one table} of each term's pieces; a term without any gets an
+    empty table."""
+    import pyarrow as pa
+
+    out = {}
+    for t, p in parts.items():
+        if not p:
+            out[t] = pa.table({c: [] for c in cols})
+        elif len(p) == 1:
+            out[t] = p[0]
+        else:
+            out[t] = pa.concat_tables(p, promote_options="permissive")
+    return out
 
 
 class IndexSearcher:
@@ -175,10 +213,10 @@ class IndexSearcher:
     dictionary every search engine holds; ``buckets=[...]`` restricts a
     sharded node to its buckets' rows — see ``_term_dfs``). At or below
     ``route_budget`` postings the low-latency driver path runs (pyarrow
-    fetch → the BM25 kernel); above it the query routes to
-    ``search_distributed``, whose shuffle carries only (doc_id, score)
-    partials — so a hot-term query can never pull an unbounded posting list
-    across the driver (round-2 What's-wrong #1).
+    fetch → the BM25 kernel); above it the same plan and kernel run per
+    doc-id range as one Spark job (``_distributed``), and only k rows per
+    range reach the driver — so a hot-term query can never pull an
+    unbounded posting list across the driver (round-2 What's-wrong #1).
 
     The driver path issues ZERO Spark jobs, and opening the searcher starts
     none either: bucket list driver-side (md5, no job), df from the term
@@ -190,9 +228,8 @@ class IndexSearcher:
     read per file). Every fetch after that reads only the row groups that
     hold the query's terms, with their files' cached footers, and slices
     each term's runs out of them; between queries the searcher keeps its
-    term directories, not the blocks. The Spark relations
-    (``_postings_full``, ``_docs``) are built on first use by the
-    distributed route, the distributed phrase legs and ``fetch``.
+    term directories, not the blocks. The one Spark relation, ``_docs``,
+    is built on first use by ``fetch``.
     """
 
     def __init__(
@@ -243,32 +280,13 @@ class IndexSearcher:
         # membership is a binary search
         self.deleted = _load_deletes(deletes_sources(index_dir, self.meta))
 
-    # -- Spark relations (distributed route, phrase legs, fetch) -----------
-    def _union(self, dirs: "list[str]", empty_schema) -> DataFrame:
-        """Each segment dir is its own hive-partitioned table root — union
-        them (Spark refuses multi-root partition discovery). No dirs (an
-        all-empty corpus writes no files) → an empty relation."""
-        from functools import reduce
-
-        if not dirs:
-            return self.spark.createDataFrame([], empty_schema)
-        parts = [self.spark.read.parquet(d) for d in dirs]
-        return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-
-    @cached_property
-    def _postings_full(self) -> DataFrame:
-        """All postings columns: scoring and phrase reads project what they
-        need, so the pos column stays on disk unless a phrase query prunes
-        and reads it."""
-        from ..index.builder import BLOCK_SCHEMA
-
-        return self._union(self._pdirs, BLOCK_SCHEMA)
-
     @cached_property
     def _docs(self) -> DataFrame:
-        from ..index.builder import DOCS_SCHEMA, docs_sources
+        from ..index.builder import DOCS_SCHEMA, docs_sources, union_parquet
 
-        return self._union(docs_sources(self.index_dir, self.meta), DOCS_SCHEMA)
+        return union_parquet(
+            self.spark, docs_sources(self.index_dir, self.meta), DOCS_SCHEMA
+        )
 
     # -- helpers ---------------------------------------------------------
     def _qterms(self, query: str) -> list[str]:
@@ -299,14 +317,6 @@ class IndexSearcher:
             )
         m = self._df_map
         return {t: int(m.get(t, 0)) for t in terms}
-
-    def _pruned_blocks(self, qterms: list[str]) -> DataFrame:
-        from ..index.bucketing import bucket_of
-
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in qterms})
-        return self._postings_full.where(
-            F.col("bucket").isin(buckets) & F.col("term").isin(qterms)
-        )
 
     def _directory(self, root: int, bucket: int) -> _TermDirectory:
         # two threads racing on a first touch both build the same
@@ -345,24 +355,74 @@ class IndexSearcher:
         by term runs. Works against any pyarrow filesystem (local, S3,
         GCS). Bounded by the route budget: above it the query never takes
         this path."""
-        import pyarrow as pa
-
         cols = kernel.BLOCK_COLS + (["pos"] if with_pos else [])
         parts: "dict[str, list]" = {t: [] for t in qterms}
         for d, f, groups in self._fetch_plan(qterms):
             for term, rows in d.read(f, groups, cols):
                 parts[term].append(rows)
-        out = {}
-        for t, p in parts.items():
-            if not p:
-                out[t] = pa.table({c: [] for c in cols})
-            elif len(p) == 1:
-                out[t] = p[0]
-            else:
-                out[t] = pa.concat_tables(p, promote_options="permissive")
-        return out
+        return _per_term(parts, cols)
 
-    # -- low-latency path -------------------------------------------------
+    # -- distributed route -------------------------------------------------
+    def _ranges(self) -> "list[tuple[int, int]]":
+        """``TASK_PACK`` × ``defaultParallelism`` equal-width doc-id ranges
+        over ``[0, next_doc_id)`` — one ``run_tasks`` task per core. The
+        last range is open-ended, so no doc id can fall outside them."""
+        from ..index.builder import TASK_PACK
+
+        n = TASK_PACK * self.spark.sparkContext.defaultParallelism
+        width = max(1, -(-int(self.meta.get("next_doc_id", 0)) // n))
+        cuts = [i * width for i in range(n)] + [_OPEN]
+        return list(zip(cuts, cuts[1:]))
+
+    def _distributed(self, qterms: "list[str]", cols: "list[str]", score, k: int):
+        """Top-k → [(doc_id, score)] of ``score`` run per doc-id range as ONE
+        Spark job (``builder.run_tasks``: one stage, no shuffle).
+
+        The driver plans once (``_fetch_plan``). Each range's work item
+        carries its ``(lo, hi)``, the planned row groups whose footer doc
+        span overlaps it and its slice of the sorted tombstones. Its task
+        reads those row groups, slices each term's runs, keeps the blocks
+        with ``max_doc >= lo and min_doc < hi``, calls ``score(tables,
+        tombstones)`` → (unique doc ids, scores), masks the ids to
+        ``[lo, hi)`` and returns its local top-k; the driver merges at most
+        k × ranges rows. Exact: a doc's posting lies in a block with
+        ``min_doc <= doc <= max_doc``, so every block holding an in-range
+        doc is kept, and docs of straddling blocks outside the range are
+        masked off before the local top-k."""
+        from ..index.builder import run_tasks
+
+        plan, dead, work = self._fetch_plan(qterms), self.deleted, []
+        for lo, hi in self._ranges():
+            files = []
+            for d, f, groups in plan:
+                keep = {g: r for g, r in groups.items() if d.overlaps(f, g, lo, hi)}
+                if keep:
+                    files.append((d.fs, d.files[f], keep))
+            if files:
+                a, b = np.searchsorted(dead, [lo, hi])
+                work.append((lo, hi, dead[a:b], files))
+        if not work:
+            return []
+
+        def task(items):
+            for lo, hi, dead, files in items:
+                parts: "dict[str, list]" = {t: [] for t in qterms}
+                for fs, path, groups in files:
+                    for term, rows in _read_runs(fs, path, groups, cols):
+                        mn = rows.column("min_doc").to_numpy()
+                        mx = rows.column("max_doc").to_numpy()
+                        parts[term].append(rows.filter((mx >= lo) & (mn < hi)))
+                ids, scores = score(_per_term(parts, cols), dead)
+                inr = (ids >= lo) & (ids < hi)
+                yield from kernel.topk_sorted(ids[inr], scores[inr], k)
+
+        rows = run_tasks(self.spark, work, task)
+        if not rows:
+            return []
+        ids, scores = (np.array(c) for c in zip(*rows))
+        return kernel.topk_sorted(ids, scores, k)
+
+    # -- queries -------------------------------------------------------------
     def search(
         self, query: str, k: int = 10, route: str = "auto"
     ) -> list[tuple[int, float]]:
@@ -378,7 +438,9 @@ class IndexSearcher:
         The driver path reads only the row groups the term directories name
         (C++ reader, no Spark job — the budget-bounded fetch is a few MB),
         slices each term's runs out of them, and ``kernel.topk`` scores them
-        straight off the Arrow buffers (no Python bytes).
+        straight off the Arrow buffers (no Python bytes). The distributed
+        path runs the same fetch and ``kernel.partial_sums`` per doc-id
+        range (``_distributed``).
         """
         qterms = self._qterms(query)
         if not qterms:
@@ -387,58 +449,19 @@ class IndexSearcher:
         qterms = [t for t in qterms if dfs[t] > 0]
         if not qterms:
             return []
+        weights = [(t, idf(self.n_docs, dfs[t])) for t in qterms]
         if route == "distributed" or (
             route == "auto" and sum(dfs[t] for t in qterms) > self.route_budget
         ):
-            rows = self.search_distributed(query, k).collect()
-            return [(int(r.doc_id), float(r.score)) for r in rows]
+            avgdl = self.avgdl
+
+            def score(tables, dead):
+                return kernel.partial_sums([(w, tables[t]) for t, w in weights], dead, avgdl)
+
+            return self._distributed(qterms, kernel.BLOCK_COLS, score, k)
         tables = self._term_tables(qterms)
-        terms = [(idf(self.n_docs, dfs[t]), tables[t]) for t in qterms]
+        terms = [(w, tables[t]) for t, w in weights]
         return kernel.topk(terms, self.deleted, self.avgdl, k)
-
-    # -- distributed path --------------------------------------------------
-    def search_distributed(self, query: str, k: int = 10) -> DataFrame:
-        """Cluster-side scoring: pruned scan → per-batch partial sums
-        (``mapInArrow`` over ``kernel.partial_sums``) →
-        groupBy(doc_id).sum → TakeOrderedAndProject(k). Term weights come
-        from the driver term dictionary — the whole query is ONE job."""
-        qterms = self._qterms(query)
-        spark = self.spark
-        empty = spark.createDataFrame([], "doc_id long, score double")
-        if not qterms:
-            return empty
-        dfs = self._term_dfs(qterms)
-        qterms = [t for t in qterms if dfs.get(t, 0) > 0]
-        if not qterms:
-            return empty
-        avgdl = self.avgdl
-        weights = {t: idf(self.n_docs, dfs[t]) for t in qterms}
-        # tombstones ride a real Spark broadcast (one copy per executor,
-        # not per task closure)
-        dead_bc = spark.sparkContext.broadcast(self.deleted)
-
-        def score_blocks(batches):
-            import pyarrow as pa
-
-            for b in batches:
-                tables = kernel.split_terms(pa.Table.from_batches([b]), weights)
-                terms = [(w, tables[t]) for t, w in weights.items()]
-                ids, sums = kernel.partial_sums(terms, dead_bc.value, avgdl)
-                if ids.size:
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ids), pa.array(sums)], ["doc_id", "contrib"]
-                    )
-
-        # scoring needs 5 columns — projecting BEFORE the kernel keeps the
-        # pos column (comparable in bytes to the postings themselves on a
-        # positional index) and the block metadata out of the scan entirely
-        partials = (
-            self._pruned_blocks(qterms)
-            .select("term", "doc_ids", "tfs", "dls", "n_docs")
-            .mapInArrow(score_blocks, schema="doc_id long, contrib double")
-        )
-        scored = partials.groupBy("doc_id").agg(F.sum("contrib").alias("score"))
-        return scored.orderBy(F.col("score").desc(), F.col("doc_id").asc()).limit(k)
 
     def fetch(self, hits: list[tuple[int, float]]) -> DataFrame:
         """Resolve winners to their source rows (B8 doc-store get)."""

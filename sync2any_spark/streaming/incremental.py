@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..index.builder import (
+    DOCS_SCHEMA,
     IndexPaths,
     _range_sort,
     _source_files,
@@ -70,6 +71,7 @@ from ..index.builder import (
     docs_sources,
     read_index_meta,
     run_tasks,
+    union_parquet,
     write_postings_driver,
     write_stats_driver,
 )
@@ -91,37 +93,21 @@ _ARROW_ROW_BYTES = 5 * 4 + 4 + 8
 
 def all_docs(spark: SparkSession, index_dir: str, meta: "dict | None" = None) -> DataFrame:
     """Docs store including tombstoned rows (base + committed segments)."""
-    from ..index.builder import DOCS_SCHEMA
-
     meta = meta or read_index_meta(index_dir)
-    dirs = docs_sources(index_dir, meta)
-    if not dirs:
-        return spark.createDataFrame([], DOCS_SCHEMA)
-    from functools import reduce
-
-    parts = [spark.read.parquet(d) for d in dirs]
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return union_parquet(spark, docs_sources(index_dir, meta), DOCS_SCHEMA)
 
 
-def deleted_ids(spark: SparkSession, index_dir: str, meta: "dict | None" = None) -> "DataFrame | None":
+def deleted_ids(spark: SparkSession, index_dir: str, meta: "dict | None" = None) -> DataFrame:
+    """Tombstoned doc ids (base + committed segments)."""
     meta = meta or read_index_meta(index_dir)
-    dirs = deletes_sources(index_dir, meta)
-    if not dirs:
-        return None
-    from functools import reduce
-
-    parts = [spark.read.parquet(d) for d in dirs]
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
+    return union_parquet(spark, deletes_sources(index_dir, meta), "doc_id long")
 
 
 def live_docs(spark: SparkSession, index_dir: str) -> DataFrame:
     """Docs store minus tombstones (the queryable corpus)."""
     meta = read_index_meta(index_dir)
-    docs = all_docs(spark, index_dir, meta)
     dead = deleted_ids(spark, index_dir, meta)
-    if dead is not None:
-        docs = docs.join(dead, "doc_id", "left_anti")
-    return docs
+    return all_docs(spark, index_dir, meta).join(dead, "doc_id", "left_anti")
 
 
 def read_segment_changes(
@@ -140,10 +126,6 @@ def read_segment_changes(
     are immutable once committed, so a range read is a plain union of the
     in-range segment dirs with no visibility races.
     """
-    from functools import reduce
-
-    from ..index.builder import DOCS_SCHEMA
-
     meta = read_index_meta(index_dir)
     paths = IndexPaths(index_dir)
     segs = [
@@ -154,23 +136,10 @@ def read_segment_changes(
     del_dirs = [paths.deletes_seg(s) for s in segs]
     doc_dirs = [d for d in doc_dirs if os.path.isdir(d)]
     del_dirs = [d for d in del_dirs if os.path.isdir(d)]
-    added = (
-        reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            [spark.read.parquet(d) for d in doc_dirs],
-        )
-        if doc_dirs
-        else spark.createDataFrame([], DOCS_SCHEMA)
+    return (
+        union_parquet(spark, doc_dirs, DOCS_SCHEMA),
+        union_parquet(spark, del_dirs, "doc_id long"),
     )
-    removed = (
-        reduce(
-            lambda a, b: a.unionByName(b, allowMissingColumns=True),
-            [spark.read.parquet(d) for d in del_dirs],
-        )
-        if del_dirs
-        else spark.createDataFrame([], "doc_id long")
-    )
-    return added, removed
 
 
 # old terms tables at or below this row count (parquet footer metadata)

@@ -96,7 +96,7 @@ def test_distributed_after_increment(spark, base, applied):
     oracle = _merged_oracle(spark, base)
     searcher = IndexSearcher(spark, base)
     for q in ["freshterm", "ok w0000"]:
-        got = [(r.doc_id, r.score) for r in searcher.search_distributed(q, 10).collect()]
+        got = searcher.search(q, 10, route="distributed")
         want = oracle.topk(q, 10)
         assert [g[0] for g in got] == [w[0] for w in want], q
 

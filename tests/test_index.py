@@ -201,7 +201,7 @@ def test_distributed_matches_oracle(spark, index_dir, oracle):
     o, _ = oracle
     searcher = IndexSearcher(spark, index_dir)
     for qtext, k in [("ok", 10), ("w0001 w0002", 10), ("中 文", 5), ("zzzzmissing", 10)]:
-        got = [(r.doc_id, r.score) for r in searcher.search_distributed(qtext, k).collect()]
+        got = searcher.search(qtext, k, route="distributed")
         want = o.topk(qtext, k)
         assert [g[0] for g in got] == [w[0] for w in want], qtext
         for (_, gs), (_, ws) in zip(got, want):
@@ -309,11 +309,8 @@ def test_route_budget_boundary(spark, index_dir):
     for budget, expect_distributed in ((price, False), (price - 1, True)):
         s = IndexSearcher(spark, index_dir, route_budget=budget)
         hits: list[int] = []
-        orig = s.search_distributed
-        s.search_distributed = lambda q, kk, _h=hits, _o=orig: (
-            _h.append(1),
-            _o(q, kk),
-        )[1]
+        orig = s._distributed
+        s._distributed = lambda *a, _h=hits, _o=orig: (_h.append(1), _o(*a))[1]
         got = s.search(qtext, k)
         assert bool(hits) == expect_distributed, budget
         assert [g[0] for g in got] == [w[0] for w in want]

@@ -129,7 +129,10 @@ def test_positional_index_raises_without_positions(spark, index_dir):
 
 def test_phrase_positional_after_increment(spark, transcripts_sf0001, tmp_path_factory):
     """Delta segments inherit the positional index option: a phrase touching
-    freshly-appended docs resolves from delta-segment positions."""
+    freshly-appended docs resolves from delta-segment positions. A second
+    batch updates one of them, so a doc holding the phrase is tombstoned:
+    the driver route, the distributed route and the indexed (docs-store)
+    leg all skip it and score the new version as the algebra scorer does."""
     import datetime
 
     from sync2any_spark.query.phrase import phrase_topk, phrase_topk_positional
@@ -150,9 +153,23 @@ def test_phrase_positional_after_increment(spark, transcripts_sf0001, tmp_path_f
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, op string",
     )
     apply_increments(spark, d, inc)
+    upd = spark.createDataFrame(
+        [
+            (
+                "conv_pp000001", 1, "user", "uniquephrase anchor or uniquephrase anchor",
+                "", datetime.datetime(2026, 6, 3), "U",
+            ),
+        ],
+        inc.schema,
+    )
+    apply_increments(spark, d, upd)
     searcher = IndexSearcher(spark, d)
+    assert searcher.deleted.size  # the updated doc's old version
     got = phrase_topk_positional(searcher, "uniquephrase anchor", 10)
-    assert len(got) == 2  # both inserted docs match the phrase
+    assert len(got) == 2  # both live docs match the phrase, the dead one not
+    assert phrase_topk_positional(searcher, "uniquephrase anchor", 10, route="distributed") == got
+    indexed = phrase_topk_indexed(searcher, "uniquephrase anchor", 10)
+    assert [g[0] for g in indexed] == [g[0] for g in got]
     # scores agree with the algebra scorer over the live corpus
     live = live_docs(spark, d)
     want = {
@@ -163,7 +180,7 @@ def test_phrase_positional_after_increment(spark, transcripts_sf0001, tmp_path_f
     }
     docs = {r.doc_id: (r.conv_id, r.turn_idx)
             for r in live.select("doc_id", "conv_id", "turn_idx").collect()}
-    for doc_id, score in got:
+    for doc_id, score in got + indexed:
         assert score == pytest.approx(want[docs[doc_id]], rel=1e-9)
 
 
@@ -189,10 +206,9 @@ def test_serving_tier_phrase(corpus, pos_index_dir):
 def test_phrase_positional_distributed_matches_oracle(
     spark, corpus, phrases, pos_index_dir
 ):
-    """The fully distributed positional execution (occurrence relations +
-    adjacency joins, only k rows to the driver) is rank/score-identical to
-    the oracle and to the driver-side numpy core — the scale path a
-    stop-word phrase routes to."""
+    """The distributed positional execution (the driver core per doc-id
+    range task, k rows per range to the driver) is rank/score-identical to
+    the oracle — the scale path a stop-word phrase routes to."""
     from sync2any_spark.query.phrase import phrase_topk_positional
 
     _, oracle, key_of = corpus
@@ -268,3 +284,40 @@ def test_replicated_serving_phrase_failover(corpus, phrases, pos_index_dir):
         assert [g[0] for g in got] == [w[0] for w in want], phrase
         for (_, gs), (_, ws) in zip(got, want):
             assert gs == pytest.approx(ws, rel=1e-12), phrase
+
+
+def test_distributed_legs_run_one_job_without_shuffle(spark, index_dir, pos_index_dir):
+    """Each distributed leg — BM25, positional phrase and indexed phrase —
+    is ONE Spark job of ONE stage (doc-id range tasks, no exchange), counted
+    under a job group set on the calling thread."""
+    import uuid
+
+    from sync2any_spark.query.phrase import phrase_topk_positional
+
+    sc = spark.sparkContext
+
+    def jobs_and_stages(leg):
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "distributed leg under test")
+        try:
+            out = leg()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        stages = [st for j in jobs for st in tracker.getJobInfo(j).stageIds]
+        assert all(tracker.getStageInfo(st).numTasks > 0 for st in stages)
+        return out, len(jobs), len(stages)
+
+    plain, pos = IndexSearcher(spark, index_dir), IndexSearcher(spark, pos_index_dir)
+    legs = {
+        "bm25": lambda: plain.search("ok w0000", 10, route="distributed"),
+        "positional phrase": lambda: phrase_topk_positional(
+            pos, "中 文", 10, route="distributed"
+        ),
+        "indexed phrase": lambda: phrase_topk_indexed(plain, "中 文", 10),
+    }
+    for name, leg in legs.items():
+        hits, n_jobs, n_stages = jobs_and_stages(leg)
+        assert hits, name
+        assert (n_jobs, n_stages) == (1, 1), name

@@ -119,3 +119,29 @@ def test_arrow_codes_fuzz_matches_or_falls_back(docs):
     fast = _fast_tokens(docs)
     if fast is not None:
         assert fast == tokenize_series(docs)
+
+
+def test_spimi_regex_fallback_rows_equal_fast_path(monkeypatch):
+    """A span the byte-level tokenizer declines is encoded by the same SPIMI
+    kernel from ``tokenize_series`` tokens: its chunk rows (positions
+    included) equal the fast path's, field by field."""
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    import sync2any_spark.tokenize as tok
+    from sync2any_spark.generator import ensure_transcripts
+    from sync2any_spark.index.builder import _spimi_rows_for_texts
+
+    texts = pq.read_table(ensure_transcripts("sf0.001"), columns=["text"])
+    texts = texts.column("text").to_pylist()[:400] + ["", None, "ok ok ok 中文"]
+    ids = np.arange(len(texts), dtype=np.int64) * 3 + 7
+    fast = _spimi_rows_for_texts(5, ids, texts, store_positions=True)
+    monkeypatch.setattr(tok, "tokenize_arrow_codes", lambda col: None)
+    slow = _spimi_rows_for_texts(5, ids, texts, store_positions=True)
+    assert fast[1] == slow[1] > 0
+    assert np.array_equal(fast[2], slow[2])
+    assert fast[0].keys() == slow[0].keys()
+    for col in fast[0]:
+        a, b = fast[0][col], slow[0][col]
+        assert len(a) == len(b), col
+        assert all(x == y for x, y in zip(a, b)), col
