@@ -13,9 +13,9 @@ in where that runs:
   the path a search tier would serve QPS from.
 - **distributed** — for huge candidate sets: the same plan cut into doc-id
   ranges, one ``builder.run_tasks`` job (one stage, no shuffle). Each task
-  reads the planned row groups whose doc span overlaps its range, keeps the
-  blocks that do, scores them with the same kernel and returns its local
-  top-k; the driver merges k × ranges rows (``_distributed``).
+  reads the planned row groups once; per range it keeps the blocks whose
+  doc span meets the range, scores them with the same kernel and returns
+  its local top-k; the driver merges k × ranges rows (``_distributed``).
 
 Both return exactly the same ranking as the BM25 oracle: exact Lucene
 formula, float64, ties by doc_id ascending.
@@ -154,18 +154,6 @@ class _TermDirectory:
     def read(self, fid: int, groups: "dict[int, list]", cols: "list[str]"):
         """``_read_runs`` of one file, with its cached footer."""
         return _read_runs(self.fs, self.files[fid], groups, cols, self.metas[fid])
-
-    def overlaps(self, fid: int, g: int, lo: int, hi: int) -> bool:
-        """Whether row group ``g`` of file ``fid`` may hold a block of a doc
-        in ``[lo, hi)``, by its footer ``min_doc``/``max_doc`` stats (a
-        row group without them may)."""
-        md = self.metas[fid]
-        rg, names = md.row_group(g), md.schema.names
-        a = rg.column(names.index("min_doc")).statistics
-        b = rg.column(names.index("max_doc")).statistics
-        if a is None or b is None or not (a.has_min_max and b.has_min_max):
-            return True
-        return b.max >= lo and a.min < hi
 
 
 def _read_runs(fs, path: str, groups: "dict[int, list]", cols: "list[str]", md=None):
@@ -378,40 +366,39 @@ class IndexSearcher:
         """Top-k → [(doc_id, score)] of ``score`` run per doc-id range as ONE
         Spark job (``builder.run_tasks``: one stage, no shuffle).
 
-        The driver plans once (``_fetch_plan``). Each range's work item
-        carries its ``(lo, hi)``, the planned row groups whose footer doc
-        span overlaps it and its slice of the sorted tombstones. Its task
-        reads those row groups, slices each term's runs, keeps the blocks
-        with ``max_doc >= lo and min_doc < hi``, calls ``score(tables,
-        tombstones)`` → (unique doc ids, scores), masks the ids to
-        ``[lo, hi)`` and returns its local top-k; the driver merges at most
-        k × ranges rows. Exact: a doc's posting lies in a block with
-        ``min_doc <= doc <= max_doc``, so every block holding an in-range
-        doc is kept, and docs of straddling blocks outside the range are
-        masked off before the local top-k."""
+        The driver plans once (``_fetch_plan``); every task gets the plan,
+        and each range's work item carries its ``(lo, hi)`` and its slice
+        of the sorted tombstones. A task reads each planned row group once
+        and slices each term's runs; per range it keeps the blocks with
+        ``max_doc >= lo and min_doc < hi``, calls ``score(tables,
+        tombstones)`` → (unique doc ids, scores), masks the ids to ``[lo,
+        hi)`` and returns its local top-k; the driver merges at most k ×
+        ranges rows. Exact: a doc's posting lies in a block with ``min_doc
+        <= doc <= max_doc``, so every block holding an in-range doc is kept,
+        and docs of straddling blocks outside the range are masked off
+        before the local top-k. The postings row groups are sorted by term,
+        so their doc spans cover the whole id space: each task reads every
+        planned row group, and the ranges split the decode and scoring, not
+        the reads."""
         from ..index.builder import run_tasks
 
-        plan, dead, work = self._fetch_plan(qterms), self.deleted, []
-        for lo, hi in self._ranges():
-            files = []
-            for d, f, groups in plan:
-                keep = {g: r for g, r in groups.items() if d.overlaps(f, g, lo, hi)}
-                if keep:
-                    files.append((d.fs, d.files[f], keep))
-            if files:
-                a, b = np.searchsorted(dead, [lo, hi])
-                work.append((lo, hi, dead[a:b], files))
-        if not work:
+        plan = [(d.fs, d.files[f], groups) for d, f, groups in self._fetch_plan(qterms)]
+        if not plan:
             return []
+        dead, work = self.deleted, []
+        for lo, hi in self._ranges():
+            a, b = np.searchsorted(dead, [lo, hi])
+            work.append((lo, hi, dead[a:b]))
 
         def task(items):
-            for lo, hi, dead, files in items:
+            runs = [r for fs, path, groups in plan for r in _read_runs(fs, path, groups, cols)]
+            spans = [
+                (r.column("min_doc").to_numpy(), r.column("max_doc").to_numpy()) for _, r in runs
+            ]
+            for lo, hi, dead in items:
                 parts: "dict[str, list]" = {t: [] for t in qterms}
-                for fs, path, groups in files:
-                    for term, rows in _read_runs(fs, path, groups, cols):
-                        mn = rows.column("min_doc").to_numpy()
-                        mx = rows.column("max_doc").to_numpy()
-                        parts[term].append(rows.filter((mx >= lo) & (mn < hi)))
+                for (term, rows), (mn, mx) in zip(runs, spans):
+                    parts[term].append(rows.filter((mx >= lo) & (mn < hi)))
                 ids, scores = score(_per_term(parts, cols), dead)
                 inr = (ids >= lo) & (ids < hi)
                 yield from kernel.topk_sorted(ids[inr], scores[inr], k)

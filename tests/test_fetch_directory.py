@@ -1,8 +1,7 @@
 """Driver-route fetch through the per-(postings root, bucket) term
 directories: a query reads only the files that hold its terms, and the
-answers stay identical to the oracle, as do the Spark-scan (distributed)
-route's — on an index
-with a committed delta segment plus deletes, through a ``file://`` root,
+answers stay identical to the oracle, as do the distributed route's
+doc-range tasks' — on an index with a committed delta segment plus deletes, through a ``file://`` root,
 and for positional phrase reads. Each
 term's rows are sliced out of its row runs, which the directory finds in
 unsorted row groups too, and concurrent queries on one searcher answer as
@@ -134,8 +133,8 @@ def test_fetch_opens_only_files_holding_terms(spark, index, queries):
 
 def test_directory_answers_match_oracle_and_spark_scan(spark, index, oracle, queries):
     """Delta-only, base-only and mixed queries: rank- and score-identical to
-    the oracle through the directory fetch, and through the Spark scan of
-    the distributed route."""
+    the oracle through the directory fetch, and through the doc-range
+    tasks of the distributed route."""
     s = IndexSearcher(spark, index, route_budget=1 << 60)
     qs = _all_queries(queries)
     _check_oracle(s, oracle, qs)

@@ -129,8 +129,7 @@ def _index_state(spark, base):
         ).collect()
     )
     n_docs = all_docs(spark, base).count()
-    dead = deleted_ids(spark, base)
-    n_dead = dead.count() if dead is not None else 0
+    n_dead = deleted_ids(spark, base).count()
     return terms, n_docs, n_dead, meta.get("segments", [])
 
 

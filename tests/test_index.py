@@ -491,8 +491,8 @@ def test_replicated_serving_failover(spark, index_dir):
 
 def test_pyarrow_scan_equals_spark_scan(spark, index_dir, oracle):
     """The driver route's direct pyarrow fetch (zero Spark jobs) and the
-    Spark scan of the distributed route both return the oracle's rankings
-    and scores for the full query set."""
+    doc-range tasks of the distributed route both return the oracle's
+    rankings and scores for the full query set."""
     o, _ = oracle
     searcher = IndexSearcher(spark, index_dir, route_budget=1 << 60)
     queries = pq.read_table(ensure_queries()).to_pandas()
