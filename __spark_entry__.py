@@ -546,7 +546,7 @@ def _contract_index(spark: SparkSession, sf_dir: str) -> str:
     no-op; the layout is a pure function of the corpus)."""
     import os
 
-    from sync2any_spark.index.builder import build_index
+    from sync2any_spark.index.builder import FORMAT_VERSION, build_index
 
     _ship_package(spark)
 
@@ -559,7 +559,12 @@ def _contract_index(spark: SparkSession, sf_dir: str) -> str:
         import json
 
         with open(meta_path) as f:
-            stale = not json.load(f).get("store_positions", False)
+            meta = json.load(f)
+        # a cached index of another on-disk format is rebuilt, not read
+        stale = (
+            not meta.get("store_positions", False)
+            or meta.get("format_version") != FORMAT_VERSION
+        )
     if stale:
         import shutil
 

@@ -88,6 +88,11 @@ MERGE_SUBSPLIT = 8
 TASK_PACK = 3
 
 
+# the on-disk layout ``meta.json`` declares and ``read_index_meta`` accepts:
+# 3 keeps corpus stats in meta.json and each apply's term deltas in
+# ``terms_segs/seg<N>``
+FORMAT_VERSION = 3
+
 # the fused pass's duplicate-key error prefix; the driver re-raises a
 # task's message under it as a plain ValueError
 _DUP_KEY = "duplicate (conv_id, turn_idx) key"
@@ -189,10 +194,6 @@ class IndexPaths:
         return os.path.join(self.root, "postings")
 
     @property
-    def stats(self) -> str:
-        return os.path.join(self.root, "stats")
-
-    @property
     def metrics(self) -> str:
         return os.path.join(self.root, "metrics")
 
@@ -222,11 +223,8 @@ class IndexPaths:
     def deletes_seg(self, n: int) -> str:
         return os.path.join(self.root, "deletes_segs", f"seg{n:05d}")
 
-    def terms_v(self, n: int) -> str:
-        return self.terms if n == 0 else os.path.join(self.root, f"terms_v{n:05d}")
-
-    def stats_v(self, n: int) -> str:
-        return self.stats if n == 0 else os.path.join(self.root, f"stats_v{n:05d}")
+    def terms_seg(self, n: int) -> str:
+        return os.path.join(self.root, "terms_segs", f"seg{n:05d}")
 
 
 def fs_and_path(uri: str):
@@ -260,35 +258,79 @@ def _has_parquet(d: str) -> bool:
 
 
 def read_index_meta(index_dir: str) -> dict:
+    """The committed ``meta.json``. An index of another ``format_version``
+    raises ``ValueError``: its on-disk layout is not the one readers
+    resolve (a version-2 index keeps its live term stats in whole-table
+    rewrites, which this code does not read)."""
     fs, path = fs_and_path(index_dir)
     with fs.open_input_stream(path.rstrip("/") + "/meta.json") as f:
-        return json.loads(f.read())
+        meta = json.loads(f.read())
+    if meta.get("format_version") != FORMAT_VERSION:
+        raise ValueError(
+            f"index {index_dir} has format_version "
+            f"{meta.get('format_version')!r}; this code reads version "
+            f"{FORMAT_VERSION} (rebuild the index)"
+        )
+    return meta
+
+
+def _committed_dirs(meta: dict, base: str, seg_dir) -> "list[str]":
+    """``base`` if it holds parquet, then ``seg_dir(n)`` of every COMMITTED
+    segment (``meta['segments']``) that does. Uncommitted staging dirs are
+    invisible by construction — crash-safety comes from readers resolving
+    strictly through the committed meta."""
+    dirs = [base] + [seg_dir(n) for n in meta.get("segments", [])]
+    return [d for d in dirs if _has_parquet(d)]
 
 
 def postings_sources(index_dir: str, meta: dict) -> "list[str]":
-    """Base postings dir + every COMMITTED delta segment (meta['segments']).
-    Uncommitted staging dirs are invisible by construction — crash-safety
-    comes from readers resolving strictly through the committed meta.
+    """Base postings dir + every committed delta segment's.
     ``meta['postings_dir']`` (written by ``force_merge_postings``) redirects
     the base to a read-optimized rewrite; absent → the build layout."""
-    p = IndexPaths(index_dir)
     base = os.path.join(index_dir, meta.get("postings_dir", "postings"))
-    out = [base] if _has_parquet(base) else []
-    for n in meta.get("segments", []):
-        d = p.postings_seg(n)
-        if _has_parquet(d):
-            out.append(d)
-    return out
+    return _committed_dirs(meta, base, IndexPaths(index_dir).postings_seg)
 
 
 def docs_sources(index_dir: str, meta: dict) -> "list[str]":
     p = IndexPaths(index_dir)
-    out = [p.docs] if _has_parquet(p.docs) else []
-    for n in meta.get("segments", []):
-        d = p.docs_seg(n)
-        if _has_parquet(d):
-            out.append(d)
-    return out
+    return _committed_dirs(meta, p.docs, p.docs_seg)
+
+
+def deletes_sources(index_dir: str, meta: dict) -> "list[str]":
+    p = IndexPaths(index_dir)
+    return _committed_dirs(meta, p.deletes, p.deletes_seg)
+
+
+def read_terms(index_dir: str, meta: dict, buckets: "list[int] | None" = None):
+    """The live terms table ``(term, df, cf, bucket)`` as one Arrow table:
+    the base ``terms`` table plus the signed per-term deltas each committed
+    apply wrote to ``terms_segs/seg<N>`` (a term's df sums over segments,
+    as Lucene sums a term's df over its segments). With ``buckets`` only
+    those buckets' rows are read. With no segment deltas the base table is
+    returned as it is (sorted by term); otherwise one Arrow group-by sums
+    df and cf per term and the terms left with ``df > 0`` are kept."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.dataset as ds
+
+    p = IndexPaths(index_dir)
+    flt = ds.field("bucket").isin(buckets) if buckets is not None else None
+    dirs = _committed_dirs(meta, p.terms, p.terms_seg)
+    parts = [
+        ds.dataset(d).to_table(columns=["term", "df", "cf", "bucket"], filter=flt)
+        for d in dirs
+    ]
+    if dirs == [p.terms]:
+        return parts[0]
+    tbl = (
+        pa.concat_tables(parts).group_by(["term", "bucket"])
+        .aggregate([("df", "sum"), ("cf", "sum")])
+    )
+    return (
+        tbl.filter(pc.greater(tbl["df_sum"], 0))
+        .select(["term", "df_sum", "cf_sum", "bucket"])
+        .rename_columns(["term", "df", "cf", "bucket"])
+    )
 
 
 def union_parquet(spark: SparkSession, dirs: "list[str]", empty_schema) -> DataFrame:
@@ -302,16 +344,6 @@ def union_parquet(spark: SparkSession, dirs: "list[str]", empty_schema) -> DataF
         return spark.createDataFrame([], empty_schema)
     parts = [spark.read.parquet(d) for d in dirs]
     return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), parts)
-
-
-def deletes_sources(index_dir: str, meta: dict) -> "list[str]":
-    p = IndexPaths(index_dir)
-    out = [p.deletes] if _has_parquet(p.deletes) else []
-    for n in meta.get("segments", []):
-        d = p.deletes_seg(n)
-        if _has_parquet(d):
-            out.append(d)
-    return out
 
 
 DOCS_SCHEMA = (
@@ -901,41 +933,6 @@ def build_term_stats_driver(
         count=len(agg),
     )
     return agg
-
-
-def write_stats_driver(
-    out_dir: str, n_docs: int, avgdl: float, total_tokens: int
-) -> None:
-    """Write the one-row corpus-stats table directly with pyarrow
-    (tmp→rename). The former one-row ``spark.createDataFrame(...).write``
-    cost a full Spark job (~0.4–0.9 s fixed floor per build at bench
-    scale); the relation served to readers is identical."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    path = os.path.join(out_dir, "part-00000.parquet")
-    tmp = path + f".tmp-{os.getpid()}"
-    pq.write_table(
-        pa.table(
-            {
-                "n_docs": pa.array([int(n_docs)], pa.int64()),
-                "avgdl": pa.array([float(avgdl)], pa.float64()),
-                "total_tokens": pa.array([int(total_tokens)], pa.int64()),
-            }
-        ),
-        tmp,
-        compression="zstd",
-    )
-    os.replace(tmp, path)
-    # drop any other data file from a previous layout of this dir
-    for n in os.listdir(out_dir):
-        full = os.path.join(out_dir, n)
-        if n.endswith(".parquet") and n != "part-00000.parquet":
-            try:
-                os.remove(full)
-            except OSError:
-                pass
 
 
 def append_metrics_driver(
@@ -1761,12 +1758,9 @@ def build_index(
                 raise ValueError(f"{_DUP_KEY} {dup!r} across spans")
         metrics.append(("spimi", "partitions_built", float(built)))
 
-        t1 = time.time()
         n_docs = sum(m["rows"] for m in mans)
         total_tokens = sum(m.get("sum_dl", 0) for m in mans)
         avgdl = float(total_tokens) / n_docs if n_docs else 0.0
-        write_stats_driver(paths.stats, n_docs, avgdl, total_tokens)
-        metrics.append(("stats", "wall_s", time.time() - t1))
 
         t3 = time.time()
         # terms stage: one driver pyarrow aggregate (no Spark job); the
@@ -1810,8 +1804,9 @@ def build_index(
         # maintains it per commit — no full-store max() scan prices ids.
         "next_doc_id": int(n_docs),
         "avgdl": avgdl,
+        "total_tokens": int(total_tokens),
         "store_positions": bool(store_positions),
-        "format_version": 2,
+        "format_version": FORMAT_VERSION,
     }
     commit_meta(index_dir, meta)
     shutil.rmtree(paths.sorted_src, ignore_errors=True)

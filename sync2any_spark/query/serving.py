@@ -338,20 +338,17 @@ class LocalSearcher:
         import pyarrow.dataset as ds
 
         from ..index.builder import (
-            IndexPaths,
             deletes_sources,
             postings_sources,
             read_index_meta,
+            read_terms,
         )
         from .wand import _load_deletes
 
         self.meta = read_index_meta(index_dir)
         self._index_dir = index_dir
-        paths = IndexPaths(index_dir)
-        tv = int(self.meta.get("terms_version", 0))
-        st = ds.dataset(paths.stats_v(tv)).to_table().to_pylist()[0]
-        self.n_docs = int(st["n_docs"])
-        self.avgdl = float(st["avgdl"])
+        self.n_docs = int(self.meta["n_docs"])
+        self.avgdl = float(self.meta["avgdl"])
         self.buckets = sorted(buckets) if buckets is not None else None
         # the serving node pins only the scoring columns unless it also
         # serves match_phrase (then the pos column loads too — Lucene's
@@ -389,9 +386,7 @@ class LocalSearcher:
         self.deleted = _load_deletes(deletes_sources(index_dir, self.meta))
         self._live_df: dict[str, int] | None = None
         if self.deleted.size:
-            tdf = ds.dataset(paths.terms_v(tv)).to_table(
-                columns=["term", "df"], filter=bucket_filter
-            )
+            tdf = read_terms(index_dir, self.meta, self.buckets)
             self._live_df = dict(
                 zip(tdf.column("term").to_pylist(), tdf.column("df").to_pylist())
             )

@@ -197,7 +197,7 @@ class IndexSearcher:
 
     **Self-dispatching planner**: every query's cost is known BEFORE any
     scan — Σ df of its terms, read from the driver-resident term dictionary
-    (the terms table, loaded once via pyarrow: the same in-memory term
+    (the live terms table, loaded once via pyarrow: the same in-memory term
     dictionary every search engine holds; ``buckets=[...]`` restricts a
     sharded node to its buckets' rows — see ``_term_dfs``). At or below
     ``route_budget`` postings the low-latency driver path runs (pyarrow
@@ -208,7 +208,7 @@ class IndexSearcher:
 
     The driver path issues ZERO Spark jobs, and opening the searcher starts
     none either: bucket list driver-side (md5, no job), df from the term
-    dictionary, N/avgdl read with pyarrow at open, and the pruned blocks
+    dictionary, N/avgdl from ``meta.json``, and the pruned blocks
     fetched by a direct pyarrow read (any pyarrow filesystem). The
     committed postings roots are resolved once at open — the searcher is a
     snapshot of that commit. The first query that touches a (root, bucket)
@@ -227,14 +227,11 @@ class IndexSearcher:
         route_budget: int = ROUTE_BUDGET,
         buckets: "list[int] | None" = None,
     ) -> None:
-        import pyarrow.dataset as ds
-
         from ..index.builder import (
             deletes_sources,
             fs_and_path,
             postings_sources,
             read_index_meta,
-            IndexPaths,
         )
 
         self.spark = spark
@@ -247,15 +244,11 @@ class IndexSearcher:
         # full vocabulary is 10^8-10^9 terms — tens of GB; a bucket's slice
         # is 1/n_buckets of that), mirroring ES's per-shard term dictionary
         self.buckets = sorted(buckets) if buckets is not None else None
-        paths = IndexPaths(index_dir)
-        tv = int(self.meta.get("terms_version", 0))
-        self._terms_path = paths.terms_v(tv)
         self._df_map: "pd.Series | None" = None  # lazy term dictionary
-        # live corpus stats from the committed stats version (increments
-        # commit a new version atomically via meta.json)
-        st = ds.dataset(paths.stats_v(tv)).to_table().to_pylist()[0]
-        self.n_docs = int(st["n_docs"])
-        self.avgdl = float(st["avgdl"])
+        # live corpus stats of the commit (every apply commits them in
+        # the same meta.json swap as its segment)
+        self.n_docs = int(self.meta["n_docs"])
+        self.avgdl = float(self.meta["avgdl"])
         # the committed postings roots, resolved once: the base plus every
         # committed delta segment (staging dirs are never listed)
         self._pdirs = postings_sources(index_dir, self.meta)
@@ -282,23 +275,16 @@ class IndexSearcher:
 
     def _term_dfs(self, terms: "list[str]") -> "dict[str, int]":
         """Exact LIVE df per term from the driver-resident term dictionary
-        (terms table, pyarrow-loaded once — no Spark job; the table is
-        maintained exactly across increments, so this is always the live
-        df). With ``buckets`` set, ONLY those buckets' rows load — the
+        (``builder.read_terms``: the base terms table plus the committed
+        segments' deltas, pyarrow-loaded once — no Spark job). With
+        ``buckets`` set, ONLY those buckets' rows load — the
         sharded-deployment memory bound (a term outside the shard's buckets
         maps to 0, same as an absent term: that shard never owns its
         postings). Absent terms map to 0."""
         if self._df_map is None:
-            import pyarrow.dataset as ds
+            from ..index.builder import read_terms
 
-            bucket_filter = (
-                ds.field("bucket").isin(self.buckets)
-                if self.buckets is not None
-                else None
-            )
-            tbl = ds.dataset(self._terms_path).to_table(
-                columns=["term", "df"], filter=bucket_filter
-            )
+            tbl = read_terms(self.index_dir, self.meta, self.buckets)
             self._df_map = pd.Series(
                 tbl.column("df").to_numpy(zero_copy_only=False).astype(np.int64),
                 index=tbl.column("term").to_numpy(zero_copy_only=False),

@@ -15,10 +15,14 @@ Lucene segment model:
 - new rows are tokenized into a delta segment whose postings land in a
   segment-owned dir: delta doc ids sort strictly after base ids, so every
   term's stream stays doc-ordered;
-- terms/stats tables are maintained *exactly* (old ± added ∓ removed, with
-  removed term counts recomputed from the tombstoned rows' stored text), so
-  BM25 over the live corpus stays rank-identical to a fresh build — unlike
-  Lucene, which lets df drift until merge;
+- term stats are kept *exactly* by additive deltas: each apply writes its
+  batch's signed per-term (added − removed) df and cf, with removed counts
+  recomputed from the tombstoned rows' stored text, as one more
+  segment-owned table, and readers sum the base terms table and the
+  committed deltas (``builder.read_terms``) — Lucene's per-segment term
+  stats, but with deletes counted, so BM25 over the live corpus stays
+  rank-identical to a fresh build; the corpus stats (``n_docs``,
+  ``avgdl``, ``total_tokens``) live in ``meta.json``;
 - ``compact()`` rebuilds the index from the live docs (force-merge analog),
   purging tombstones and re-densifying doc ids.
 
@@ -35,10 +39,10 @@ its route, its slice count and the reason it declined the one collect.
 Crash atomicity (the write-ahead shape the reference gets from ES bulk
 acks + Kafka offset commits, ``extract/KafkaMsgListener.java:312-330``):
 every artifact of segment N — postings_segs/segN, docs_segs/segN,
-deletes_segs/segN, terms_vN, stats_vN — is written with deterministic names
+deletes_segs/segN, terms_segs/segN — is written with deterministic names
 into a dir the apply wipes first (each slice adds its own part files), and
-readers resolve ONLY through ``meta.json`` (``segments`` +
-``terms_version``). The single atomic ``os.replace`` of meta.json is the
+readers resolve ONLY through ``meta.json`` (``segments`` and the corpus
+stats). The single atomic ``os.replace`` of meta.json is the
 commit point: a crash anywhere before it leaves the index exactly at the
 previous commit, and a retry of the same (or a different) batch rewrites
 the orphaned segment artifacts (no duplicate postings, no double counting
@@ -52,7 +56,6 @@ import os
 import time
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
@@ -73,8 +76,8 @@ from ..index.builder import (
     run_tasks,
     union_parquet,
     write_postings_driver,
-    write_stats_driver,
 )
+from ..index.bucketing import bucket_of
 from ..query.wand import _load_deletes
 
 
@@ -142,104 +145,11 @@ def read_segment_changes(
     )
 
 
-# old terms tables at or below this row count (parquet footer metadata)
-# update driver-side in pandas — one pyarrow read + merge instead of a
-# full-outer sort-merge join and a distributed rewrite whose cost grows
-# with the INDEX vocabulary, not the batch
-TERMS_UPDATE_DRIVER_ROWS = 5_000_000
-
-
-def _terms_table_rows(terms_dir: str) -> "int | None":
-    import pyarrow.dataset as ds
-    import pyarrow.parquet as pq
-
-    try:
-        return sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in ds.dataset(terms_dir).files
-        )
-    except Exception:
-        return None
-
-
-def _update_terms_driver(
-    old_dir: str, delta: pd.DataFrame, n_buckets: int, out_dir: str
-) -> bool:
-    """terms_v(segment) = old terms ± delta, computed driver-side. Returns
-    False when the old table exceeds the driver budget (callers fall back
-    to the distributed full-outer join)."""
-    import pyarrow.dataset as ds
-
-    from ..index.builder import write_terms_driver
-    from ..index.bucketing import bucket_of
-
-    rows = _terms_table_rows(old_dir)
-    if rows is None or rows > TERMS_UPDATE_DRIVER_ROWS:
-        return False
-    old = (
-        ds.dataset(old_dir)
-        .to_table(columns=["term", "df", "cf", "bucket"])
-        .to_pandas()
-    )
-    m = old.merge(delta, on="term", how="outer")
-    df = m["df"].fillna(0).astype(np.int64) + m["d_df"].fillna(0).astype(np.int64)
-    cf = m["cf"].fillna(0).astype(np.int64) + m["d_cf"].fillna(0).astype(np.int64)
-    keep = df > 0
-    out = pd.DataFrame(
-        {
-            "term": m["term"][keep],
-            "df": df[keep],
-            "cf": cf[keep],
-            "bucket": m["bucket"][keep],
-        }
-    )
-    new_mask = out["bucket"].isna()
-    if new_mask.any():
-        out.loc[new_mask, "bucket"] = [
-            bucket_of(t, n_buckets) for t in out.loc[new_mask, "term"]
-        ]
-    out["bucket"] = out["bucket"].astype(np.int32)
-    out = out.sort_values("term", kind="stable").reset_index(drop=True)
-    write_terms_driver(out, out_dir)
-    return True
-
-
-def _update_terms_spark(
-    spark: SparkSession, paths: IndexPaths, meta: dict, segment: int,
-    delta: DataFrame,
-) -> None:
-    """terms_v(segment) = old terms ± ``delta`` (term, d_df, d_cf) as a
-    distributed full-outer join — for old tables over the driver budget
-    and for backfill-scale batches."""
-    from ..index.bucketing import bucket_expr
-
-    old_terms = spark.read.parquet(paths.terms_v(meta.get("terms_version", 0)))
-    (
-        old_terms.select("term", "df", "cf")
-        .join(delta, "term", "full")
-        .select(
-            "term",
-            (
-                F.coalesce(F.col("df"), F.lit(0))
-                + F.coalesce(F.col("d_df"), F.lit(0))
-            ).alias("df"),
-            (
-                F.coalesce(F.col("cf"), F.lit(0))
-                + F.coalesce(F.col("d_cf"), F.lit(0))
-            ).alias("cf"),
-        )
-        .where(F.col("df") > 0)
-        .withColumn("bucket", bucket_expr("term", meta["n_buckets"]))
-        .write.mode("overwrite")
-        .parquet(paths.terms_v(segment))
-    )
-
-
 def _write_seg_table(out_dir: str, tbl, part: int) -> None:
-    """Write one slice's rows of a segment-owned table (docs or deletes) as
-    ``part-<part>.parquet``; an empty table writes nothing. The apply wipes
-    the dir before its first slice, so no part file of a crashed earlier
-    attempt survives."""
+    """Write one slice's rows of a segment-owned table (docs, deletes or
+    term deltas) as ``part-<part>.parquet``; an empty table writes nothing.
+    The apply wipes the dir before its first slice, so no part file of a
+    crashed earlier attempt survives."""
     import pyarrow.parquet as pq
 
     if tbl.num_rows:
@@ -248,14 +158,6 @@ def _write_seg_table(out_dir: str, tbl, part: int) -> None:
             tbl, os.path.join(out_dir, f"part-{part:05d}.parquet"),
             compression="zstd",
         )
-
-
-def _read_stats(paths: IndexPaths, meta: dict):
-    """The committed corpus-stats row (n_docs, avgdl, total_tokens)."""
-    import pyarrow.dataset as pads
-
-    tv = meta.get("terms_version", 0)
-    return pads.dataset(paths.stats_v(tv)).to_table().to_pandas().iloc[0]
 
 
 def _noop(route: str, decline: "str | None" = None,
@@ -270,7 +172,7 @@ def _noop(route: str, decline: "str | None" = None,
 
 def _commit_segment(
     index_dir: str, paths: IndexPaths, meta: dict, segment: int, *,
-    n_docs_live: int, avgdl: float, next_id: int, n_new: int,
+    n_docs_live: int, avgdl: float, total_tokens: int, next_id: int, n_new: int,
     n_tombstones: int, t0: float, laps: "dict[str, float]", route: str,
     decline: "str | None", store_rows_scanned: int, slices: int,
 ) -> dict:
@@ -280,10 +182,10 @@ def _commit_segment(
     store rows probed, the slice count and every stage lap
     (``<lap>_s``). Returns the apply summary."""
     meta["segments"] = meta.get("segments", []) + [segment]
-    meta["terms_version"] = segment
     meta["last_segment"] = segment
     meta["n_docs"] = n_docs_live
     meta["avgdl"] = avgdl
+    meta["total_tokens"] = total_tokens
     meta["next_doc_id"] = int(next_id) + int(n_new)
     commit_meta(index_dir, meta)
 
@@ -480,8 +382,9 @@ def apply_increments(
     run on from ``next_doc_id`` in key order across slices. Each slice
     writes its own part files of the segment's postings
     (``write_postings_driver``, scored with the avgdl after that slice),
-    docs and deletes; the summed term deltas and stats are written once,
-    and ``_commit_segment`` commits the segment with one meta.json swap and
+    docs and deletes; the summed term deltas are written once, as the
+    segment's ``terms_segs`` table, and ``_commit_segment`` commits the
+    segment and the corpus stats with one meta.json swap and
     records the route, the decline reason, the slice count and the stage
     laps (summed over slices) as ``increment`` metrics rows.
     """
@@ -556,14 +459,13 @@ def apply_increments(
         next_id = int(max_doc) + 1 if max_doc is not None else 0
     for d in (
         paths.postings_seg(segment), paths.docs_seg(segment),
-        paths.deletes_seg(segment),
+        paths.deletes_seg(segment), paths.terms_seg(segment),
     ):
         shutil.rmtree(d, ignore_errors=True)
     files = [f for d in docs_sources(index_dir, meta) for f in pds.dataset(d).files]
     dead = _load_deletes(deletes_sources(index_dir, meta))
-    st = _read_stats(paths, meta)
     store_positions = bool(meta.get("store_positions", False))
-    deltas: "list[pd.DataFrame]" = []
+    deltas: "list[pa.Table]" = []
     n_new = n_tombstones = d_tokens = scanned = n_slices = 0
     todo: deque = deque()
     for piece in slices:
@@ -617,16 +519,17 @@ def apply_increments(
             removed, _, _ = _spimi_rows_for_texts(
                 0, np.arange(gone.num_rows, dtype=np.int64), gone["text"]
             )
-            deltas.append(pd.DataFrame({
-                "term": np.concatenate([rows["term"], removed["term"]]),
-                "d_df": np.concatenate([rows["n_docs"], -removed["n_docs"]]),
-                "d_cf": np.concatenate([rows["cf"], -removed["cf"]]),
+            deltas.append(pa.table({
+                "term": pa.array(np.concatenate([rows["term"], removed["term"]]), pa.string()),
+                "df": pa.array(np.concatenate([rows["n_docs"], -removed["n_docs"]]), pa.int64()),
+                "cf": pa.array(np.concatenate([rows["cf"], -removed["cf"]]), pa.int64()),
             }))
             n_new += new.num_rows
             n_tombstones += gone.num_rows
             d_tokens += int(dls.sum()) - int(pc.sum(gone["dl"]).as_py() or 0)
-            n_live = int(st.n_docs) - n_tombstones + n_new
-            avgdl = (int(st.total_tokens) + d_tokens) / n_live if n_live else 0.0
+            n_live = int(meta["n_docs"]) - n_tombstones + n_new
+            total_tokens = int(meta["total_tokens"]) + d_tokens
+            avgdl = total_tokens / n_live if n_live else 0.0
             _lap("term_deltas_and_stats")
 
             write_postings_driver(
@@ -652,56 +555,47 @@ def apply_increments(
     if n_tombstones == 0 and n_new == 0:
         return _noop(route, decline, scanned, n_slices)
 
+    # the segment's term deltas: (added − removed) df and cf per term,
+    # signed; a term whose both sums are 0 is left out
     delta = (
-        pd.concat(deltas)
-        .astype({"d_df": np.int64, "d_cf": np.int64})
-        .groupby("term", sort=False, as_index=False)
-        .sum()
+        pa.concat_tables(deltas).group_by("term")
+        .aggregate([("df", "sum"), ("cf", "sum")]).sort_by("term")
     )
-    write_stats_driver(
-        paths.stats_v(segment), n_live, avgdl, int(st.total_tokens) + d_tokens
+    delta = delta.filter(
+        pc.or_(pc.not_equal(delta["df_sum"], 0), pc.not_equal(delta["cf_sum"], 0))
     )
-    if not _update_terms_driver(
-        paths.terms_v(meta.get("terms_version", 0)), delta,
-        meta["n_buckets"], paths.terms_v(segment),
-    ):
-        _update_terms_spark(
-            spark, paths, meta, segment,
-            spark.createDataFrame(delta, schema="term string, d_df long, d_cf long"),
-        )
+    buckets = [bucket_of(t, int(meta["n_buckets"])) for t in delta["term"].to_pylist()]
+    _write_seg_table(paths.terms_seg(segment), pa.table({
+        "term": delta["term"], "df": delta["df_sum"], "cf": delta["cf_sum"],
+        "bucket": pa.array(buckets, pa.int32()),
+    }), 0)
     _lap("term_deltas_and_stats")
 
     return _commit_segment(
         index_dir, paths, meta, segment, n_docs_live=n_live,
-        avgdl=avgdl, next_id=next_id, n_new=n_new,
+        avgdl=avgdl, total_tokens=total_tokens, next_id=next_id, n_new=n_new,
         n_tombstones=n_tombstones, t0=t0, laps=laps, route=route,
         decline=decline, store_rows_scanned=scanned, slices=n_slices,
     )
 
 
 def vacuum(index_dir: str) -> "list[str]":
-    """Remove artifacts no commit references: superseded terms_v/stats_v
-    versions, and the orphan segment dirs and batch staging dir of crashed
-    applies (the
-    Iceberg `expire_snapshots`/`remove_orphan_files` analog). Safe at any
-    time — readers resolve only through meta.json, and live artifacts are
-    exactly {terms_version} ∪ {committed segments}. Returns removed paths."""
+    """Remove artifacts no commit references: base-postings layouts a
+    force-merge superseded, and the orphan segment dirs and batch staging
+    dir of crashed applies (the Iceberg
+    `expire_snapshots`/`remove_orphan_files` analog). Safe at any time —
+    readers resolve only through meta.json, and the live segment
+    artifacts are exactly the committed segments'. Returns removed paths."""
     import shutil
 
     meta = read_index_meta(index_dir)
     paths = IndexPaths(index_dir)
-    keep_v = int(meta.get("terms_version", 0))
     committed = set(meta.get("segments", []))
     removed: list[str] = []
 
     for name in sorted(os.listdir(index_dir)):
         full = os.path.join(index_dir, name)
-        if name.startswith(("terms_v", "stats_v")):
-            v = int(name.split("_v")[1])
-            if v != keep_v:
-                shutil.rmtree(full, ignore_errors=True)
-                removed.append(full)
-        elif name == "postings" or name.startswith("postings_fm"):
+        if name == "postings" or name.startswith("postings_fm"):
             # base-postings layouts superseded by a force-merge commit
             # (meta['postings_dir'] names the ONE live base layout)
             if name != meta.get("postings_dir", "postings"):
@@ -710,27 +604,13 @@ def vacuum(index_dir: str) -> "list[str]":
         elif full == paths.apply_src:
             shutil.rmtree(full, ignore_errors=True)
             removed.append(full)
-        elif name in ("postings_segs", "docs_segs", "deletes_segs"):
+        elif name in ("postings_segs", "docs_segs", "deletes_segs", "terms_segs"):
             for seg in sorted(os.listdir(full)):
                 n = int(seg.replace("seg", ""))
                 if n not in committed:
                     p = os.path.join(full, seg)
                     shutil.rmtree(p, ignore_errors=True)
                     removed.append(p)
-
-    # orphan delta-segment CHUNK files (segNNN-part-*): the apply writes no
-    # chunks now, but a crashed apply of an older version left such files,
-    # which no commit references
-    import re
-
-    chunks_dir = paths.chunks
-    if os.path.isdir(chunks_dir):
-        for name in sorted(os.listdir(chunks_dir)):
-            m = re.match(r"seg(\d+)-", name)
-            if m and int(m.group(1)) not in committed:
-                p = os.path.join(chunks_dir, name)
-                os.remove(p)
-                removed.append(p)
     return removed
 
 

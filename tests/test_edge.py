@@ -206,10 +206,11 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
 
     import numpy as np
     import pandas as pd
+    import pyarrow.compute as pc
     import pyarrow.dataset as pds
 
     import sync2any_spark.streaming.incremental as inc
-    from sync2any_spark.index.builder import IndexPaths, read_index_meta
+    from sync2any_spark.index.builder import IndexPaths, read_index_meta, read_terms
     from sync2any_spark.query.serving import LocalSearcher
 
     SLICE_BYTES = 200
@@ -229,16 +230,14 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
         pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
         return pdf.sort_values("doc_id").reset_index(drop=True)
 
-    def state(d):
+    def terms_and_stats(d):
         meta = read_index_meta(d)
-        paths = IndexPaths(d)
-        tv = meta["terms_version"]
-        terms = (
-            pds.dataset(paths.terms_v(tv)).to_table(columns=["term", "df", "cf"])
-            .sort_by("term").to_pylist()
-        )
-        stats = pds.dataset(paths.stats_v(tv)).to_table().to_pylist()
-        return live(d), terms, stats, meta.get("last_segment")
+        terms = read_terms(d, meta).select(["term", "df", "cf"]).sort_by("term")
+        stats = {k: meta[k] for k in ("n_docs", "avgdl", "total_tokens")}
+        return terms.to_pylist(), stats
+
+    def state(d):
+        return (live(d), *terms_and_stats(d), read_index_meta(d).get("last_segment"))
 
     for round_i, positions in enumerate((False, True)):
         rows = {
@@ -302,6 +301,21 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
             }
             want = {k: [*v[:3], pd.Timestamp(v[3], tz="UTC")] for k, v in rows.items()}
             assert got == want, (round_i, batch_i)
+
+            # the base terms plus the stacked signed deltas equal a fresh
+            # build of the live rows; no summed df is left at or below 0
+            fresh = str(tmp_path_factory.mktemp(f"rand_cdc_fresh_{round_i}_{batch_i}"))
+            build_index(
+                spark,
+                spark.createDataFrame([(*k, *v) for k, v in rows.items()], SCHEMA),
+                fresh, n_partitions=4, n_buckets=4, n_salts=2, heavy_df_threshold=5,
+                store_positions=positions,
+            )
+            assert a[1:3] == terms_and_stats(fresh), (round_i, batch_i)
+            assert all(r["df"] > 0 for r in a[1]), (round_i, batch_i)
+            if batch_i == 1:  # it replaces the one text holding w0
+                delta = pds.dataset(IndexPaths(drv).terms_seg(s_drv["segment"])).to_table()
+                assert pc.min(delta["df"]).as_py() < 0, round_i
 
             again = inc.apply_increments(spark, drv, df)
             with monkeypatch.context() as m:

@@ -116,21 +116,29 @@ def test_local_searcher_after_increment(spark, base, applied):
             assert gs == pytest.approx(ws, rel=1e-9), q
 
 
+def _live_terms(idx, meta=None):
+    """The live (term, df, cf) rows of the committed index, in term order."""
+    from sync2any_spark.index.builder import read_index_meta, read_terms
+
+    tbl = read_terms(idx, meta or read_index_meta(idx))
+    return sorted(zip(*(tbl[c].to_pylist() for c in ("term", "df", "cf"))))
+
+
+def _corpus_stats(meta):
+    return {k: meta[k] for k in ("n_docs", "avgdl", "total_tokens")}
+
+
 def _index_state(spark, base):
-    from sync2any_spark.index.builder import IndexPaths, read_index_meta
+    from sync2any_spark.index.builder import read_index_meta
     from sync2any_spark.streaming.incremental import all_docs, deleted_ids
 
     meta = read_index_meta(base)
-    paths = IndexPaths(base)
-    terms = sorted(
-        (r.term, r.df, r.cf)
-        for r in spark.read.parquet(
-            paths.terms_v(meta.get("terms_version", 0))
-        ).collect()
-    )
     n_docs = all_docs(spark, base).count()
     n_dead = deleted_ids(spark, base).count()
-    return terms, n_docs, n_dead, meta.get("segments", [])
+    return (
+        _live_terms(base, meta), _corpus_stats(meta), n_docs, n_dead,
+        meta.get("segments", []),
+    )
 
 
 def test_idempotent_reapply(spark, base, increments, applied):
@@ -174,10 +182,12 @@ def test_crash_mid_apply_then_retry(
     assert _index_state(spark, crashed) == pre
     after_crash = IndexSearcher(spark, crashed)
     assert after_crash.search("ok", 10) == pre_top
-    # the staged segment's postings are on disk, but no searcher root and
-    # no term directory reaches them
+    # the staged segment's postings and term deltas are on disk, but no
+    # searcher root, no term directory and no live terms read reaches them
     from sync2any_spark.index.builder import IndexPaths, _has_parquet
 
+    assert _has_parquet(IndexPaths(crashed).terms_seg(1))
+    assert _live_terms(crashed) == pre[0]
     staged = IndexPaths(crashed).postings_seg(1)
     assert _has_parquet(staged)
     assert not any(d.startswith(staged) for d in after_crash._pdirs)
@@ -228,28 +238,17 @@ def _counting_jobs(spark, fn, *args):
 
 
 def _apply_state(spark, idx):
-    """(doc-id map, terms_v rows, stats_v rows) of the committed index."""
-    import pyarrow.dataset as pads
-
+    """(doc-id map, live terms rows, corpus stats) of the committed index."""
     import sync2any_spark.index.builder as builder
 
     meta = builder.read_index_meta(idx)
-    paths = builder.IndexPaths(idx)
     ids = {
         (r.conv_id, r.turn_idx): r.doc_id
         for r in live_docs(spark, idx)
         .select("conv_id", "turn_idx", "doc_id")
         .collect()
     }
-    tv = meta["terms_version"]
-    terms = (
-        pads.dataset(paths.terms_v(tv))
-        .to_table(columns=["term", "df", "cf"])
-        .sort_by("term")
-        .to_pylist()
-    )
-    stats = pads.dataset(paths.stats_v(tv)).to_table().to_pylist()
-    return ids, terms, stats
+    return ids, _live_terms(idx, meta), _corpus_stats(meta)
 
 
 def _check_oracle_identity(spark, idx, queries):
@@ -311,47 +310,41 @@ def test_sliced_apply_equals_one_collect_apply(
     _check_oracle_identity(spark, sliced, QUERIES)
 
 
-def test_terms_over_driver_budget_update_in_spark(
-    spark, pristine, increments, tmp_path_factory, monkeypatch
-):
-    """An old terms table over TERMS_UPDATE_DRIVER_ROWS (monkeypatched to
-    0) declines the driver rewrite to the Spark full-outer join, which
-    writes the driver path's terms table (compared in term order), and
-    the reference queries stay oracle-identical."""
-    import pyarrow.dataset as pads
+def test_apply_reads_no_base_terms(spark, pristine, increments, tmp_path_factory):
+    """The apply's work does not grow with the vocabulary: with the base
+    ``terms/`` dir renamed away for the whole apply it still commits, and
+    once the dir is back both searchers answer the reference queries
+    oracle-identically."""
+    import os
+
     import pyarrow.parquet as pq
 
-    import sync2any_spark.index.builder as builder
-    import sync2any_spark.streaming.incremental as inc_mod
     from sync2any_spark.generator import ensure_queries
+    from sync2any_spark.index.builder import IndexPaths
 
-    def terms_of(idx):
-        tv = builder.read_index_meta(idx)["terms_version"]
-        return (
-            pads.dataset(builder.IndexPaths(idx).terms_v(tv))
-            .to_table(columns=["term", "df", "cf", "bucket"])
-            .sort_by("term")
-            .to_pylist()
-        )
-
-    drv = _copy_index(pristine, tmp_path_factory, "idx_terms_driver")
-    spk = _copy_index(pristine, tmp_path_factory, "idx_terms_spark")
-    apply_increments(spark, drv, increments)
-    calls = []
-    spark_update = inc_mod._update_terms_spark
-
-    def counted(*a, **kw):
-        calls.append(1)
-        return spark_update(*a, **kw)
-
-    monkeypatch.setattr(inc_mod, "TERMS_UPDATE_DRIVER_ROWS", 0)
-    monkeypatch.setattr(inc_mod, "_update_terms_spark", counted)
-    apply_increments(spark, spk, increments)
-    assert calls == [1]
-    assert terms_of(spk) == terms_of(drv)
-    assert _apply_state(spark, spk) == _apply_state(spark, drv)
+    idx = _copy_index(pristine, tmp_path_factory, "idx_no_base_terms")
+    terms = IndexPaths(idx).terms
+    os.rename(terms, terms + "_away")
+    try:
+        s = apply_increments(spark, idx, increments)
+    finally:
+        os.rename(terms + "_away", terms)
+    assert s["segment"] == 1 and s["new_docs"] > 0 and s["tombstones"] > 0
     refs = pq.read_table(ensure_queries()).column("query_text").to_pylist()
-    _check_oracle_identity(spark, spk, refs)
+    _check_oracle_identity(spark, idx, refs)
+
+
+def test_meta_of_another_format_is_refused(tmp_path):
+    """An index of format_version 2 keeps its live term stats in
+    whole-table rewrites this code does not read: opening it raises,
+    naming the version, instead of answering from the base terms only."""
+    import json
+
+    from sync2any_spark.index.builder import read_index_meta
+
+    (tmp_path / "meta.json").write_text(json.dumps({"format_version": 2, "n_docs": 1}))
+    with pytest.raises(ValueError, match="format_version 2"):
+        read_index_meta(str(tmp_path))
 
 
 def test_stored_text_over_budget_splits_slices(
@@ -470,39 +463,50 @@ def test_segment_range_reads(spark, transcripts_sf0001, tmp_path_factory):
 
 def test_vacuum_removes_only_unreferenced(spark, transcripts_sf0001, increments,
                                           tmp_path_factory, monkeypatch):
-    """vacuum (expire_snapshots analog): after a crashed apply + retry +
-    second apply, only the live terms/stats version and committed segments
-    survive — and every query still answers identically."""
+    """vacuum (expire_snapshots analog): after a crashed apply and a second
+    apply, the crashed apply's orphan segment dirs (its term deltas
+    included) are removed, the committed segments survive, and every query
+    still answers identically."""
     import sync2any_spark.streaming.incremental as inc_mod
     from sync2any_spark.streaming.incremental import vacuum
 
     idx = str(tmp_path_factory.mktemp("idx_vac"))
     build_index(spark, transcripts_sf0001, idx, resume=False, **PARAMS)
 
+    import datetime
+    from sync2any_spark.index.builder import IndexPaths
+
+    def crash_then(batch):
+        real = inc_mod.commit_meta
+        monkeypatch.setattr(inc_mod, "commit_meta",
+                            lambda *a: (_ for _ in ()).throw(RuntimeError("boom")))
+        with pytest.raises(RuntimeError):
+            apply_increments(spark, idx, batch)
+        monkeypatch.setattr(inc_mod, "commit_meta", real)
+
     # crash one apply before commit → orphan seg-1 artifacts
-    real = inc_mod.commit_meta
-    monkeypatch.setattr(inc_mod, "commit_meta",
-                        lambda *a: (_ for _ in ()).throw(RuntimeError("boom")))
-    with pytest.raises(RuntimeError):
-        apply_increments(spark, idx, increments)
-    monkeypatch.setattr(inc_mod, "commit_meta", real)
+    crash_then(increments)
     apply_increments(spark, idx, increments)  # commit seg 1 (overwrites orphans)
 
-    import datetime
     ts = datetime.datetime(2026, 8, 1)
     b2 = spark.createDataFrame(
         [("conv_vc000001", 0, "user", "vacuum probe text", "", ts, "I")],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp, op string",
     )
-    apply_increments(spark, idx, b2)  # seg 2 → terms_v1 now superseded
+    crash_then(b2)  # orphan seg-2 artifacts, term deltas included
 
     before = IndexSearcher(spark, idx).search("ok", 10)
-    removed = vacuum(idx)
-    assert any("terms_v00001" in p for p in removed)  # superseded version gone
     state = _index_state(spark, idx)
-    assert state[3] == [1, 2]  # both committed segments intact
+    removed = vacuum(idx)
+    assert IndexPaths(idx).terms_seg(2) in removed  # the orphan delta is gone
+    assert IndexPaths(idx).terms_seg(1) not in removed
+    assert _index_state(spark, idx) == state
+    assert state[4] == [1]  # the committed segment intact
     assert IndexSearcher(spark, idx).search("ok", 10) == before
     assert vacuum(idx) == []  # idempotent
+    apply_increments(spark, idx, b2)
+    assert _index_state(spark, idx)[4] == [1, 2]
+    assert vacuum(idx) == []
 
 
 def test_crash_then_retry_with_different_batch(

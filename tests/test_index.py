@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from sync2any_spark import B, K1
 from sync2any_spark.generator import ensure_queries
-from sync2any_spark.index.builder import build_index
+from sync2any_spark.index.builder import build_index, read_index_meta
 from sync2any_spark.index.codec import decode_doc_ids, decode_tfs
 from sync2any_spark.oracle import BM25Oracle
 from sync2any_spark.query.wand import IndexSearcher
@@ -87,9 +87,10 @@ def test_dl_matches_oracle(spark, index_dir, oracle):
         for r in spark.read.parquet(f"{index_dir}/docs").select("doc_id", "dl").collect()
     }
     assert dls == o.dl
-    st = spark.read.parquet(f"{index_dir}/stats").first()
-    assert st.n_docs == o.n_docs
-    assert st.avgdl == pytest.approx(o.avgdl, rel=1e-12)
+    meta = read_index_meta(index_dir)
+    assert meta["n_docs"] == o.n_docs
+    assert meta["total_tokens"] == sum(o.dl.values())
+    assert meta["avgdl"] == pytest.approx(o.avgdl, rel=1e-12)
 
 
 def test_term_stats_match_oracle(spark, index_dir, oracle):

@@ -4,9 +4,9 @@
 Replays build_postings_direct (the ZERO-SHUFFLE merge) against an existing
 chunks dir and prints per-group wall_ms plus the stage wall, so N-vs-4N
 merge scaling can be decomposed into (task skew, substrate, overhead).
-The merge layout (n_buckets, n_salts, heavy_df_threshold) is read from the
-index's meta.json, which always matches the chunks' layout (the merge
-raises a ValueError naming the key when it does not).
+The merge layout (n_buckets, n_salts, heavy_df_threshold) and avgdl are
+read from the index's meta.json, which always matches the chunks' layout
+(the merge raises a ValueError naming the key when it does not).
 
 Usage: taskset -c 0-N python tools/merge_profile.py <index_dir> <cpus>
 """
@@ -26,7 +26,6 @@ def main():
         IndexPaths, build_postings_direct, build_term_stats_driver,
         read_index_meta,
     )
-    import pyarrow.dataset as ds
 
     meta = read_index_meta(idx)
     n_buckets = int(meta["n_buckets"])
@@ -35,8 +34,7 @@ def main():
 
     spark = get_spark(f"merge_prof_c{cpus}", cpus=cpus, shuffle_partitions=96)
     paths = IndexPaths(idx)
-    st = ds.dataset(paths.stats).to_table().to_pandas().iloc[0]
-    avgdl = float(st.avgdl)
+    avgdl = float(meta["avgdl"])
     terms_pdf = build_term_stats_driver(paths.chunks, n_buckets)
     out_dir = f"/dev/shm/merge_prof_c{cpus}"
     for rnd in range(2):

@@ -37,7 +37,7 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from sync2any_spark.generator import DATA_ROOT, ensure_transcripts
-from sync2any_spark.index.builder import build_index
+from sync2any_spark.index.builder import build_index, read_index_meta
 from sync2any_spark.query.wand import IndexSearcher
 from sync2any_spark.session import get_spark
 from sync2any_spark.streaming.incremental import apply_increments
@@ -118,7 +118,12 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     src = ensure_transcripts("sf0.01", args.mult)
     base = os.path.join(DATA_ROOT, "index", f"backfill-sf0.01x{args.mult}")
-    if not os.path.exists(os.path.join(base, "meta.json")):
+    try:
+        read_index_meta(base)
+        cached = True
+    except (OSError, ValueError):  # no index yet, or one of another format
+        cached = False
+    if not cached:
         shutil.rmtree(base, ignore_errors=True)
         build_index(
             spark, spark.read.parquet(src), base, source_path=src,
