@@ -344,7 +344,7 @@ class IndexSearcher:
         from ..index.builder import TASK_PACK
 
         n = TASK_PACK * self.spark.sparkContext.defaultParallelism
-        width = max(1, -(-int(self.meta.get("next_doc_id", 0)) // n))
+        width = max(1, -(-int(self.meta["next_doc_id"]) // n))
         cuts = [i * width for i in range(n)] + [_OPEN]
         return list(zip(cuts, cuts[1:]))
 

@@ -74,12 +74,13 @@ def test_identical_docs_tiebreak(spark, tmp_path):
 
 def test_increment_into_zero_doc_index(spark, tmp_path):
     """ADVICE: the first increment against an index built from an EMPTY
-    corpus must not crash (max(doc_id) is NULL → base id 0)."""
+    corpus must not crash, and takes base id 0. A compact of it (no base
+    rows), and one after that doc is deleted (no live rows), both work."""
     from sync2any_spark.query.wand import IndexSearcher
-    from sync2any_spark.streaming.incremental import apply_increments
+    from sync2any_spark.streaming.incremental import apply_increments, compact
 
     df = spark.createDataFrame([], SCHEMA)
-    d = str(tmp_path)
+    d = str(tmp_path / "idx")
     build_index(spark, df, d, n_partitions=2, n_buckets=2, n_salts=2,
                 heavy_df_threshold=10)
     inc = spark.createDataFrame(
@@ -90,6 +91,21 @@ def test_increment_into_zero_doc_index(spark, tmp_path):
     assert summary["new_docs"] == 1
     s = IndexSearcher(spark, d)
     assert [h[0] for h in s.search("first", 10)] == [0]  # base id 0
+
+    # compact with no base rows: the one splice task takes the whole delta
+    c1 = str(tmp_path / "c1")
+    compact(spark, d, c1)
+    assert [h[0] for h in IndexSearcher(spark, c1).search("first", 10)] == [0]
+
+    # delete the one doc: the live corpus is empty
+    dele = spark.createDataFrame(
+        [("c1", 0, "user", "first ever doc", "", TS, "D")], SCHEMA + ", op string"
+    )
+    assert apply_increments(spark, d, dele)["tombstones"] == 1
+    c2 = str(tmp_path / "c2")
+    assert compact(spark, d, c2)["n_docs"] == 0
+    s2 = IndexSearcher(spark, c2)
+    assert s2.n_docs == 0 and s2.search("first", 10) == []
 
 
 def test_null_text_upsert_not_dropped(spark, tmp_path):
@@ -200,8 +216,9 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
     whose stored text passes it is halved). Both must commit the
     expected live rows and the same doc ids, dl, terms and stats; a
     re-apply is a no-op on both; and both searchers on both copies return
-    the oracle's exact ranking over the live corpus. The second round
-    stores positions."""
+    the oracle's exact ranking over the live corpus. After each round's
+    last batch, a compact equals a fresh build of the live rows. The
+    second round stores positions."""
     import shutil
 
     import numpy as np
@@ -238,6 +255,13 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
 
     def state(d):
         return (live(d), *terms_and_stats(d), read_index_meta(d).get("last_segment"))
+
+    def store(d):
+        pdf = spark.read.parquet(d + "/docs").select("doc_id", *cols, "dl").toPandas()
+        pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
+        return pdf.sort_values("doc_id").reset_index(drop=True)
+
+    queries = ["ok", "w1 data", "中 文", "i stanbul", "qq x9", "한"]
 
     for round_i, positions in enumerate((False, True)):
         rows = {
@@ -328,13 +352,24 @@ def test_random_cdc_batches_match_oracle(spark, tmp_path_factory, monkeypatch):
             oracle = BM25Oracle(list(zip(a[0]["doc_id"], a[0]["text"])))
             for d in (drv, sliced):
                 for searcher in (IndexSearcher(spark, d), LocalSearcher(d)):
-                    for q in ["ok", "w1 data", "中 文", "i stanbul", "qq x9", "한"]:
+                    for q in queries:
                         got_q, want_q = searcher.search(q, 5), oracle.topk(q, 5)
                         assert [g[0] for g in got_q] == [w[0] for w in want_q], (
                             round_i, batch_i, d, q,
                         )
                         for (_, gs), (_, ws) in zip(got_q, want_q):
                             assert gs == pytest.approx(ws, rel=1e-9), (d, q)
+
+        # a compact after the round's last batch equals that batch's fresh
+        # build: docs store, terms, corpus stats and both searchers' answers
+        comp = str(tmp_path_factory.mktemp(f"rand_cdc_compact_{round_i}"))
+        inc.compact(spark, drv, comp)
+        assert store(comp).equals(store(fresh)), round_i
+        assert terms_and_stats(comp) == terms_and_stats(fresh), round_i
+        for mk in (lambda d: IndexSearcher(spark, d), LocalSearcher):
+            sc, sf = mk(comp), mk(fresh)
+            for q in queries:
+                assert sc.search(q, 5) == sf.search(q, 5), (round_i, q)
 
 
 def _sorted_file(tmp_path, keys, row_group_size):

@@ -643,7 +643,7 @@ def test_maybe_compact_policy(spark, transcripts_sf0001, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("idx_policy_out"))
     build_index(spark, transcripts_sf0001, idx, resume=False, **PARAMS)
 
-    st = compaction_stats(spark, idx)
+    st = compaction_stats(idx)
     assert st["n_deleted"] == 0 and st["n_segments"] == 0
     assert maybe_compact(spark, idx, out, max_deleted_ratio=0.001) is None
 
@@ -652,7 +652,7 @@ def test_maybe_compact_policy(spark, transcripts_sf0001, tmp_path_factory):
     h = F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(100))
     deletes = t.where(h < 5).withColumn("op", F.lit("D"))
     apply_increments(spark, idx, deletes)
-    st2 = compaction_stats(spark, idx)
+    st2 = compaction_stats(idx)
     assert st2["n_deleted"] > 0 and st2["deleted_ratio"] > 0.03
 
     summary = maybe_compact(spark, idx, out, max_deleted_ratio=0.03)
@@ -726,23 +726,24 @@ def test_increments_on_force_merged_base(
         assert [g[0] for g in got] == [w[0] for w in want], q
 
 
-def test_compact_splice_equals_shuffle_path(
-    spark, base, increments, applied, tmp_path_factory, monkeypatch
-):
-    """Round 6: the zero-shuffle LSM splice temp-corpus path must produce an
-    index identical to the re-sort path — same dense doc
-    ids (both key-sorted totals), same docs store, terms, and search results
+def test_compact_splice_equals_shuffle_path(spark, increments, tmp_path_factory):
+    """The zero-shuffle LSM splice must produce an index identical to a
+    build that range-sorts the live docs — same dense doc ids (both
+    key-sorted totals), same docs store, terms, and search results
     including score ties — with delta keys landing before the first and
-    after the last base key, mid-span updates, and tombstones in play."""
+    after the last base key, mid-span updates, and tombstones in play. A
+    copy whose base file names are swapped is spliced as-is (the files are
+    taken in first-key order); a copy whose two base files interleave keys
+    goes through build_index's re-sort; both answer like the reference."""
     import os
     import shutil
 
     import pandas as pd
-    import pyarrow.dataset as pads
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    import sync2any_spark.streaming.incremental as inc_mod
     from sync2any_spark.generator import ensure_transcripts
+    from sync2any_spark.index.builder import read_index_meta
 
     # the splice input: a fused-built docs store from a source file with
     # small row groups (lexical file order == key order)
@@ -770,32 +771,24 @@ def test_compact_splice_equals_shuffle_path(
 
     out_splice = str(tmp_path_factory.mktemp("idx_c_splice"))
     r1 = compact(spark, base2, out_splice)
-    assert r1["live_spliced"] is True, r1["splice_decline"]
-    assert r1["splice_decline"] is None
+    assert r1["live_spliced"] is True and r1["resort_reason"] is None
+    assert "splice_decline" not in r1
 
-    # a store whose lexical file order is not key order must decline to
-    # the re-sort path: swap the names of two base docs files of a copy
-    unordered = str(tmp_path_factory.mktemp("idx_unordered")) + "/idx"
-    shutil.copytree(base, unordered)
-    ddir = unordered + "/docs"
-    parts = sorted(f for f in os.listdir(ddir) if f.endswith(".parquet"))
-    first, last = (os.path.join(ddir, parts[i]) for i in (0, -1))
-    os.rename(first, first + ".swap")
-    os.rename(last, first)
-    os.rename(first + ".swap", last)
-    out_unordered = str(tmp_path_factory.mktemp("idx_c_unordered"))
-    r0 = compact(spark, unordered, out_unordered)
-    assert r0["live_spliced"] is False
-    assert r0["splice_decline"].startswith("file conv order violated")
-    m = pads.dataset(out_unordered + "/metrics").to_table().to_pandas()
-    assert list(m[m.stage == "splice_decline"].key) == [r0["splice_decline"]]
-    assert r0["resort_reason"] == "no source_path"
-
-    out_shuffle = str(tmp_path_factory.mktemp("idx_c_shuffle"))
-    monkeypatch.setattr(inc_mod, "DRIVER_APPLY_BYTES", 0)
-    r2 = compact(spark, base2, out_shuffle)
-    assert r2["live_spliced"] is False
-    assert r2["splice_decline"] == "delta+dead bytes over budget"
+    # the reference: the live docs range-sorted by build_index, with the
+    # index's own parameters
+    meta = read_index_meta(base2)
+    ref = str(tmp_path_factory.mktemp("idx_c_shuffle"))
+    r2 = build_index(
+        spark,
+        live_docs(spark, base2).select(
+            "conv_id", "turn_idx", "role", "text", "tool", "ts"
+        ),
+        ref,
+        n_partitions=meta["n_partitions"], n_buckets=meta["n_buckets"],
+        n_salts=meta["n_salts"], heavy_df_threshold=meta["heavy_df_threshold"],
+        resume=False,
+    )
+    assert r2["resort_reason"] == "no source_path"
 
     def docs_pdf(d):
         pdf = (
@@ -808,29 +801,71 @@ def test_compact_splice_equals_shuffle_path(
         pdf["ts"] = pd.to_datetime(pdf["ts"], utc=True)
         return pdf
 
-    a, b = docs_pdf(out_splice), docs_pdf(out_shuffle)
+    def terms_pdf(d):
+        return (
+            spark.read.parquet(d + "/terms")
+            .toPandas()
+            .sort_values("term")
+            .reset_index(drop=True)
+        )
+
     cols = ["doc_id", "conv_id", "turn_idx", "role", "text", "tool", "ts", "dl"]
-    assert len(a) == len(b)
-    assert a[cols].equals(b[cols])
+    b, tb = docs_pdf(ref), terms_pdf(ref)
+    sb = IndexSearcher(spark, ref)
 
-    ta = (
-        spark.read.parquet(out_splice + "/terms")
-        .toPandas()
-        .sort_values("term")
-        .reset_index(drop=True)
-    )
-    tb = (
-        spark.read.parquet(out_shuffle + "/terms")
-        .toPandas()
-        .sort_values("term")
-        .reset_index(drop=True)
-    )
-    assert ta[["term", "df", "cf"]].equals(tb[["term", "df", "cf"]])
+    def assert_like_reference(out):
+        a = docs_pdf(out)
+        assert len(a) == len(b)
+        assert a[cols].equals(b[cols])
+        ta = terms_pdf(out)
+        assert ta[["term", "df", "cf"]].equals(tb[["term", "df", "cf"]])
+        sa = IndexSearcher(spark, out)
+        for q in QUERIES + ["edgeterm"]:
+            assert sa.search(q, 10) == sb.search(q, 10), q
+        assert sa.search("edgeterm", 10)  # the boundary inserts are queryable
 
-    sa, sb = IndexSearcher(spark, out_splice), IndexSearcher(spark, out_shuffle)
-    for q in QUERIES + ["edgeterm"]:
-        assert sa.search(q, 10) == sb.search(q, 10), q
-    assert sa.search("edgeterm", 10)  # the boundary inserts are queryable
+    assert_like_reference(out_splice)
+
+    def copy_of_base2(name):
+        d = str(tmp_path_factory.mktemp(name)) + "/idx"
+        shutil.copytree(base2, d)
+        ddir = d + "/docs"
+        return d, [
+            os.path.join(ddir, f)
+            for f in sorted(os.listdir(ddir)) if f.endswith(".parquet")
+        ]
+
+    # swapped file names: lexical file order is not key order, and the
+    # splice takes the files in first-key order, so the copy is used as-is
+    swapped, files = copy_of_base2("idx_swapped")
+    first, last = files[0], files[-1]
+    os.rename(first, first + ".swap")
+    os.rename(last, first)
+    os.rename(first + ".swap", last)
+    out_swapped = str(tmp_path_factory.mktemp("idx_c_swapped"))
+    r0 = compact(spark, swapped, out_swapped)
+    assert r0["resort_reason"] is None and r0["live_spliced"] is True
+    assert_like_reference(out_swapped)
+
+    # two base files whose keys interleave: the spliced copy is out of key
+    # order, so build_index re-sorts it
+    mixed, files = copy_of_base2("idx_interleaved")
+    f1, f2 = next(
+        (x, y) for x, y in zip(files, files[1:])
+        if pq.ParquetFile(x).metadata.num_rows > 1
+        and pq.ParquetFile(y).metadata.num_rows > 1
+    )
+    both = pa.concat_tables([pq.read_table(f1), pq.read_table(f2)]).sort_by(
+        [("conv_id", "ascending"), ("turn_idx", "ascending")]
+    )
+    n = both.num_rows
+    pq.write_table(both.take(list(range(0, n, 2))), f1)
+    pq.write_table(both.take(list(range(1, n, 2))), f2)
+    out_mixed = str(tmp_path_factory.mktemp("idx_c_interleaved"))
+    r3 = compact(spark, mixed, out_mixed)
+    assert r3["resort_reason"] in ("footer conv order", "span key ranges overlap")
+    assert r3["live_spliced"] is False
+    assert_like_reference(out_mixed)
 
 
 def _metric_keys(index_dir, stage):
@@ -849,13 +884,13 @@ def _metric_value(index_dir, key):
     return m.value.iloc[-1]
 
 
-def test_long_text_delta_declines_splice_by_bytes(
+def test_long_text_delta_slices_apply_and_splices_compact(
     spark, pristine, tmp_path_factory
 ):
     """A few rows of long text are few rows but many bytes: the batch
-    itself passes DRIVER_APPLY_BYTES and is applied in slices, and
-    compact's delta pre-pass, which would hold that text on the driver,
-    declines by bytes before reading it."""
+    itself passes DRIVER_APPLY_BYTES and is applied in slices. Compact's
+    tasks read the delta rows where they lie, so the driver holds none of
+    that text and the live copy is used as-is."""
     idx = _copy_index(pristine, tmp_path_factory, "idx_long_text")
     ts = datetime.datetime(2026, 6, 3)
     # ~3 MB per row, distinct rows (no dictionary page collapses them)
@@ -875,9 +910,8 @@ def test_long_text_delta_declines_splice_by_bytes(
 
     out = str(tmp_path_factory.mktemp("idx_long_text_c"))
     r = compact(spark, idx, out)
-    assert r["live_spliced"] is False
-    assert r["splice_decline"] == "delta+dead bytes over budget"
-    assert _metric_keys(out, "splice_decline") == ["delta+dead bytes over budget"]
+    assert r["live_spliced"] is True and r["resort_reason"] is None
+    assert _metric_keys(out, "splice_decline") == []
     assert len(IndexSearcher(spark, out).search("longterm", 10)) == 3
 
 
@@ -907,12 +941,12 @@ def test_null_text_delete_batch_declines_by_total_bytes(
     assert f"decline={s['decline']}" in _metric_keys(idx, "increment")
 
 
-def test_splice_declines_unsorted_base_file_up_front(
+def test_compact_uses_reversed_base_file_as_is(
     spark, pristine, tmp_path_factory
 ):
-    """A base docs file whose row groups are out of key order declines the
-    splice before any work, naming the file — not after a fused pass whose
-    span check fails and a re-sort retry."""
+    """A base docs file rewritten in reverse key order, in small row
+    groups: its splice task sorts it, so the live copy is used as-is, and
+    the compact answers like a compact of the untouched index."""
     import os
 
     import pyarrow.parquet as pq
@@ -930,7 +964,15 @@ def test_splice_declines_unsorted_base_file_up_front(
     )
     out = str(tmp_path_factory.mktemp("idx_unsorted_file_c"))
     r = compact(spark, idx, out)
-    assert r["live_spliced"] is False
-    assert r["splice_decline"] == f"row-group conv order violated at {bad}"
-    assert "span key ranges overlap" not in _metric_keys(out, "resort")
-    assert r["resort_reason"] == "no source_path"
+    assert r["live_spliced"] is True and r["resort_reason"] is None
+    ref = str(tmp_path_factory.mktemp("idx_unsorted_file_ref"))
+    compact(spark, pristine, ref)
+    a, b = IndexSearcher(spark, out), IndexSearcher(spark, ref)
+    for q in QUERIES:
+        assert a.search(q, 10) == b.search(q, 10), q
+    assert (
+        spark.read.parquet(out + "/docs").select("doc_id", "conv_id", "turn_idx")
+        .exceptAll(
+            spark.read.parquet(ref + "/docs").select("doc_id", "conv_id", "turn_idx")
+        ).count()
+    ) == 0

@@ -6,8 +6,9 @@ Usage: python tools/capture_plans.py <out_dir> <suffix>
 
 Captures, into files named with <suffix>:
   - compact_docs: the plan that moves the text corpus when compact()'s
-    splice declines (build_index's re-sort, one repartitionByRange +
-    sortWithinPartitions write)
+    live copy (``live_src``) is out of key order: build_index's re-sort of
+    that copy, one repartitionByRange + sortWithinPartitions write. A copy
+    in key order is built as-is and runs no such plan
   - bm25_topk_distributed_transcripts: the declared distributed query
     (plan shape must be unchanged — included as the no-regression proof)
 
@@ -28,9 +29,12 @@ import numpy as np
 import pyarrow.parquet as pq
 
 from sync2any_spark.generator import ensure_transcripts
-from sync2any_spark.index.builder import build_index
+from sync2any_spark.index.builder import build_index, read_index_meta
 from sync2any_spark.session import get_spark
-from sync2any_spark.streaming.incremental import apply_increments, live_docs
+from sync2any_spark.streaming.incremental import (
+    _splice_live_sorted,
+    apply_increments,
+)
 
 
 def explain_str(df) -> str:
@@ -51,7 +55,7 @@ def main() -> None:
         spark, None, idx, n_partitions=8, n_buckets=4,
         resume=False, source_path=src, span_mb=4,
     )
-    # an I/U/D batch so live_docs has tombstones (the compact shape)
+    # an I/U/D batch so the live copy drops tombstones (the compact shape)
     head = pq.read_table(src).slice(0, 3000).to_pandas()
     m = len(head)
     third = m // 3
@@ -66,12 +70,15 @@ def main() -> None:
     )
     apply_increments(spark, idx, batch)
 
-    # 1. the corpus-moving plan of compact()
-    lv = live_docs(spark, idx).select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    )
-    plan_df = lv.repartitionByRange(32, "conv_id").sortWithinPartitions(
-        "conv_id", "turn_idx"
+    # 1. the corpus-moving plan of compact(): build_index's re-sort of the
+    # spliced live copy
+    meta = read_index_meta(idx)
+    live_src = idx + "_live_src"
+    _splice_live_sorted(spark, idx, meta, live_src)
+    plan_df = (
+        spark.read.parquet(live_src)
+        .repartitionByRange(meta["n_partitions"], "conv_id")
+        .sortWithinPartitions("conv_id", "turn_idx")
     )
     with open(os.path.join(out_dir, f"compact_docs_{suffix}.txt"), "w") as f:
         f.write(explain_str(plan_df))
@@ -86,6 +93,7 @@ def main() -> None:
     ) as f:
         f.write(explain_str(q(spark, "/root/testdata/sf0.001")))
     shutil.rmtree(idx, ignore_errors=True)
+    shutil.rmtree(live_src, ignore_errors=True)
     spark.stop()
     print("plans written to", out_dir, "suffix", suffix)
 
